@@ -83,6 +83,15 @@ object Bench {
     val chain = scala.collection.mutable.ArrayBuffer[Double]()
     canary += canarySample() // start: cold JVM — reflects box + startup
     chain += chainSample()
+    // Every failure is recorded per query (first message kept) and
+    // printed; a failed run never contributes a timing sample.
+    val failures = scala.collection.mutable.LinkedHashMap[String, (Int, String)]()
+    def failed(name: String, at: String, e: Throwable): Unit = {
+      val msg = String.valueOf(e.getMessage).linesIterator.nextOption().getOrElse("")
+      System.err.println(s"[bench] $name failed ($at): $msg")
+      val (n, first) = failures.getOrElse(name, (0, msg))
+      failures(name) = (n + 1, first)
+    }
     // Warm-up pass at sfDir ITSELF (r13 verdict Next #1b; previously
     // sf0.001): JIT + codegen + shuffle infra dominate first execution
     // of each query shape, and — the part a small-sf warm-up cannot
@@ -92,28 +101,32 @@ object Bench {
     // (official r13 spreads: graph_bowtie [0.17, 25.87],
     // graph_mst_boruvka [0.05, 15.56]). One untimed pass at sfDir puts
     // every timed pass at steady state.
-    queries.foreach { case (_, fn) =>
-      try fn(spark, sfDir).count() catch { case _: Throwable => () }
+    queries.foreach { case (name, fn) =>
+      try fn(spark, sfDir).count() catch { case e: Throwable => failed(name, "warm-up", e) }
     }
     canary += canarySample() // mid: warm JVM, before the timed window
     chain += chainSample()
-    def timedPass(): Map[String, Double] = queries.map { case (name, fn) =>
+    def timedPass(pass: Int): Map[String, Double] = queries.flatMap { case (name, fn) =>
       val t0 = System.nanoTime()
-      try { fn(spark, sfDir).count() } catch { case _: Throwable => -1L }
-      name -> (System.nanoTime() - t0) / 1e9
+      val ok = try { fn(spark, sfDir).count(); true }
+        catch { case e: Throwable => failed(name, s"pass $pass", e); false }
+      if (ok) Some(name -> (System.nanoTime() - t0) / 1e9) else None
     }
     // N full passes (not N back-to-back runs per query: interleaving
     // keeps each query's repeats spread across the wall-clock window,
     // so a transient contention spike cannot poison all of them)
-    val passes = (1 to repeat).map(_ => timedPass())
+    val passes = (1 to repeat).map(timedPass)
     canary += canarySample() // end: warm JVM, after the timed window
     chain += chainSample()
     def median(xs: Seq[Double]): Double = {
       val s = xs.sorted
       if (s.size % 2 == 1) s(s.size / 2) else (s(s.size / 2 - 1) + s(s.size / 2)) / 2
     }
-    val results: Map[String, Double] =
-      passes.head.keys.map(k => k -> median(passes.map(_(k)))).toMap
+    // samples of the passes a query succeeded in; a query that failed
+    // every timed pass has none and is absent from the timing maps
+    val samples: Map[String, Seq[Double]] =
+      queries.keys.map(k => k -> passes.flatMap(_.get(k))).filter(_._2.nonEmpty).toMap
+    val results: Map[String, Double] = samples.map { case (k, xs) => k -> median(xs) }
     // Per-query spread across the passes (r10 verdict next #3): the
     // interleaved passes all share the same machine, so a loaded box
     // inflates ALL THREE samples and the median happily reports a
@@ -121,10 +134,8 @@ object Bench {
     // a query's floor can only be its true cost — so the regression
     // gate below compares MINs, and [min,max] is persisted per query
     // so the judge can see the contention band without re-measuring.
-    val qmin: Map[String, Double] =
-      passes.head.keys.map(k => k -> passes.map(_(k)).min).toMap
-    val qmax: Map[String, Double] =
-      passes.head.keys.map(k => k -> passes.map(_(k)).max).toMap
+    val qmin: Map[String, Double] = samples.map { case (k, xs) => k -> xs.min }
+    val qmax: Map[String, Double] = samples.map { case (k, xs) => k -> xs.max }
     val qs = results.map { case (k, v) => s"\"" + k + "\":" + v }
       .mkString("{", ",", "}")
     // spread values are JSON ARRAYS ([min,max]) on purpose: the prev-
@@ -134,6 +145,16 @@ object Bench {
       s"\"" + k + "\":[" + qmin(k) + "," + qmax(k) + "]"
     }.mkString("{", ",", "}")
     val total = if (results.nonEmpty) results.values.sum else 0.0
+    // Per-query status: "ok", or "failed k/n" over the warm-up and the
+    // timed passes, with the first error message under "errors". Both
+    // maps hold strings, so the prev-file regex below (name:decimal)
+    // never reads them as timings.
+    val status = queries.keys.map { k =>
+      Verify.jsonString(k) + ":" +
+        Verify.jsonString(failures.get(k).fold("ok") { case (n, _) => s"failed $n/${repeat + 1}" })
+    }.mkString("{", ",", "}")
+    val errors = failures.map { case (k, (_, msg)) => Verify.jsonString(k) + ":" + Verify.jsonString(msg) }
+      .mkString("{", ",", "}")
     val stat = if (repeat > 1) s""","stat":"median_of_$repeat"""" else ""
     // Two lines with DISTINCT metric names (r10, ADVICE): the ~10 kB
     // per-query line is "total_detail" so no line-scanner for
@@ -143,7 +164,7 @@ object Bench {
     // numbers live in the detail line + PERF_data/bench_last.json.
     val canaryJson = canary.mkString("[", ",", "]")
     val chainJson = chain.mkString("[", ",", "]")
-    val line = s"""{"metric":"total_detail","value":$total,"unit":"sec","queries":$qs,"spread":$spread,"canary_s":$canaryJson,"canary_chain_s":$chainJson,"sf":"$sfDir"$stat}"""
+    val line = s"""{"metric":"total_detail","value":$total,"unit":"sec","queries":$qs,"spread":$spread,"canary_s":$canaryJson,"canary_chain_s":$chainJson,"sf":"$sfDir"$stat,"status":$status,"errors":$errors}"""
     println(line)
     // Round-over-round regression gate (r10, VERDICT next #2): diff
     // this run against the previous round's persisted file and print
@@ -215,7 +236,7 @@ object Bench {
     // Compare total_min across rounds; the median "value" stays for
     // continuity with r1-r12 history.
     val totalMin = if (qmin.nonEmpty) qmin.values.sum else 0.0
-    println(s"""{"metric":"total","value":$total,"total_min":$totalMin,"unit":"sec","canary_s":$canaryJson,"canary_chain_s":$chainJson,"sf":"$sfDir"$stat,"n_queries":${results.size},"full":"PERF_data/bench_last.json"}""")
+    println(s"""{"metric":"total","value":$total,"total_min":$totalMin,"unit":"sec","canary_s":$canaryJson,"canary_chain_s":$chainJson,"sf":"$sfDir"$stat,"n_queries":${results.size},"n_errors":${failures.size},"full":"PERF_data/bench_last.json"}""")
     // The driver keeps only a ~2 kB tail of stdout, which truncates the
     // per-query map past ~60 queries — persist the complete line so the
     // full history is committable every round (VERDICT r4 item 5).
@@ -231,7 +252,9 @@ object Bench {
         sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "PERF_data/bench_last.json"))
       if (out.getParent != null) java.nio.file.Files.createDirectories(out.getParent)
       java.nio.file.Files.writeString(out, line + "\n")
-      if (!sys.env.contains("SPARK_GRAFT_BENCH_OUT")) {
+      // a full-surface run keeps its per-core copy wherever it writes;
+      // a subset run never does
+      if (only.isEmpty) {
         val byCpus = out.resolveSibling(s"bench_last_c$cpus.json")
         java.nio.file.Files.writeString(byCpus, line + "\n")
       }

@@ -2,21 +2,78 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Loaders for the driver fixtures (TESTDATA.md / FIXTURES.md).
   *
   * Scale notes (100 TB mandate): every loader is a plain parquet scan —
   * Spark's vectorized columnar reader + Catalyst pushdown means filters
-  * and projections applied downstream reach the scan. No caching, no
-  * collect; loaders are cheap to call per query.
+  * and projections applied downstream reach the scan. No data is cached
+  * and nothing is collected.
+  *
+  * Schemas are memoized ([[parquetSchema]]): `spark.read.parquet(path)`
+  * without a schema runs a schema-inference Spark job on every call,
+  * one scheduler round-trip per load. The memo keys a path's inferred
+  * schema by
+  *  - the absolute path,
+  *  - [[Fixtures.fingerprint]] of it (the repo's one staleness rule: a
+  *    rewritten file is seen once the fingerprint's TTL lapses, or at
+  *    once after [[Fixtures.invalidate]]),
+  *  - every `spark.sql.parquet.*` / `spark.sql.legacy.parquet.*` conf
+  *    set on the session (`nanosAsLong`, which [[events]] flips, changes
+  *    the schema of the same file).
+  * It holds at most [[SchemaMemoBound]] schemas, least recently used
+  * first out. A schema, not a DataFrame: every load still builds a
+  * fresh relation with fresh attribute ids, so a self-join of two loads
+  * of one table stays unambiguous.
   */
 object Tables {
   val names: Seq[String] = Seq(
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
-  def table(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+  /** A parquet scan of `<dir>/<name>.parquet` with its schema from
+    * [[parquetSchema]]: the first load of a key infers it with one
+    * Spark job, later loads run none.
+    */
+  def table(spark: SparkSession, dir: String, name: String): DataFrame = {
+    val path = s"$dir/$name.parquet"
+    spark.read.schema(parquetSchema(spark, path)).parquet(path)
+  }
+
+  /** The memoized inferred schema of a parquet path (key, bound and
+    * staleness rule in the object doc). For fixture inputs only: a file
+    * rewritten on every call would only miss. Inference runs outside
+    * the lock; two racing misses both infer and store the same schema,
+    * which is harmless.
+    */
+  def parquetSchema(spark: SparkSession, path: String): StructType = {
+    val abs = new java.io.File(path).getAbsolutePath
+    val confs = spark.conf.getAll.toSeq.filter { case (k, _) =>
+      k.startsWith("spark.sql.parquet.") || k.startsWith("spark.sql.legacy.parquet.")
+    }.sorted
+    val key = (abs, Fixtures.fingerprint(abs), confs)
+    Option(schemaMemo.synchronized(schemaMemo.get(key))).getOrElse {
+      val inferred = spark.read.parquet(path).schema
+      schemaMemo.synchronized(schemaMemo.put(key, inferred))
+      inferred
+    }
+  }
+
+  /** Most schemas the memo holds: ten fixture tables, each under a few
+    * conf variants, across a few fixture directories.
+    */
+  val SchemaMemoBound = 64
+
+  private type SchemaKey = (String, String, Seq[(String, String)])
+
+  private val schemaMemo =
+    new java.util.LinkedHashMap[SchemaKey, StructType](16, 0.75f, true) {
+      override def removeEldestEntry(e: java.util.Map.Entry[SchemaKey, StructType]): Boolean =
+        size > SchemaMemoBound
+    }
+
+  private[graft] def schemaMemoSize: Int = schemaMemo.synchronized(schemaMemo.size)
 
   /** Balance a CPU-heavy derivation over an under-split scan (guide
     * §2.5 "input skew": one huge unsplittable file → repartition right

@@ -478,7 +478,7 @@ object Scans {
         // explicit schema: inference would have to read every footer,
         // and the garbage file has none — exactly what a production
         // job with a declared schema never depends on
-        val sch = s.read.parquet(s"$d/customer.parquet").schema
+        val sch = Tables.parquetSchema(s, s"$d/customer.parquet")
         val prev = s.conf.get("spark.sql.files.ignoreCorruptFiles", "false")
         s.conf.set("spark.sql.files.ignoreCorruptFiles", "true")
         try {

@@ -118,7 +118,7 @@ object Streams {
   @volatile var lastProgressHook: org.apache.spark.sql.streaming.StreamingQueryProgress => Unit = null
 
   // ts physical type varies by fixture version (ns-long vs µs NTZ);
-  // eventsStream infers it from the staged file via a batch read.
+  // eventsStream reads it from the staged file's schema.
 
   /** The file stream source requires a DIRECTORY of files; stage the
     * events fixture into a per-sfDir temp dir once (idempotent copy) —
@@ -164,14 +164,14 @@ object Streams {
 
   /** events as a streaming source with ts normalized to a µs timestamp.
     * The file stream source needs a static schema upfront, so the
-    * actual physical schema is inferred with a one-footer batch read of
-    * the staged copy; Tables.normalizeEventsTs then adapts ts whatever
-    * that schema says (ns-long or µs NTZ fixture).
+    * actual physical schema of the staged copy comes from the
+    * Tables.parquetSchema memo; Tables.normalizeEventsTs then adapts ts
+    * whatever that schema says (ns-long or µs NTZ fixture).
     */
   private def eventsStream(s: SparkSession, d: String): DataFrame = {
     s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val dir = stageEventsDir(d)
-    val physical = s.read.parquet(dir).schema
+    val physical = graft.Tables.parquetSchema(s, dir)
     graft.Tables.normalizeEventsTs(s.readStream.schema(physical).parquet(dir))
   }
 
@@ -403,7 +403,7 @@ object Streams {
     // dim would be broadcast on a cluster.
     Q("stream_static_join",
       (s, d) => {
-        val cust = s.read.parquet(s"$d/customer.parquet")
+        val cust = graft.Tables.customer(s, d)
           .select(col("c_custkey"), col("c_name"), col("c_mktsegment"))
         val joined = eventsStream(s, d)
           .join(cust, col("user_id") === col("c_custkey"))
@@ -1319,7 +1319,7 @@ object Streams {
         // changed — the top-level-only key would serve a stale index.
         val fpNow = graft.operators.Llm.docsFingerprint(d)
         if (streamIdxMemo.get("graft_stream_idx.corpus") != fpNow) {
-          val corpus = s.read.parquet(s"$d/documents.parquet")
+          val corpus = graft.Tables.documents(s, d)
             .filter(col("doc_id") % 10 >= 2)
           graft.api.Dedup.writeBandIndex(corpus, "doc_id", "text",
             table = "graft_stream_idx.corpus")
