@@ -1,9 +1,8 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val cpus = GraftSession.harnessCpus
     // Repeat count (env SPARK_GRAFT_BENCH_REPEAT or first arg). DEFAULT
     // IS 3 — the bench self-medians without any env var. Three rounds
     // running, the driver's no-env single-pass number carried 2-4×
@@ -22,11 +21,7 @@ object Bench {
       sys.env.get("SPARK_GRAFT_BENCH_ONLY").map(_.split(",").toSet)
     val queries = SparkEntry.queries
       .filter { case (name, _) => only.forall(_.contains(name)) }
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.harness(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // Machine-speed canary (r14 verdict Next #1): the last two rounds
     // each burned hours hand-adjudicating shared-box degradation (r14:

@@ -12,7 +12,7 @@ import org.apache.spark.sql.functions._
   */
 object Graph {
 
-  /** localCheckpoint with a STATS RESET (r13, measured via StatsProbe):
+  /** localCheckpoint with a STATS RESET (PERF.md, "Dev probes retired"):
     * `Dataset.localCheckpoint` copies the ORIGIN plan's statistics into
     * the resulting LogicalRDD, and join sizeInBytes estimates MULTIPLY
     * across children — so in an iterative loop whose round plan joins

@@ -2,7 +2,7 @@ package graft.api
 
 import java.security.MessageDigest
 
-import graft.functions.{CosineSim, SqL2}
+import graft.GraftSession
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
@@ -17,15 +17,14 @@ import org.apache.spark.sql.functions._
   * `bruteForceTopK` is the exact small-n baseline (broadcast of one
   * query vector, linear scan). `signLshBuckets` + `bucketedNeighbors`
   * are the scale path: 2^planes buckets collapse the pairwise term from
-  * n² to Σ bucket². Both use the native codegen'd [[CosineSim]]
+  * n² to Σ bucket². Both use the native codegen'd [[graft.functions.CosineSim]]
   * expression in the hot loop.
   */
 object Similarity {
 
   /** Vector column normalized to array<double> + precomputed L2 norm. */
   def prepare(embs: DataFrame, idCol: String, vecCol: String): DataFrame = {
-    CosineSim.register(embs.sparkSession)
-    SqL2.register(embs.sparkSession)
+    GraftSession.install(embs.sparkSession)
     embs.withColumn("__v", transform(col(vecCol), x => x.cast("double")))
       .withColumn("__nrm",
         sqrt(aggregate(zip_with(col("__v"), col("__v"), (x, y) => x * y),
@@ -74,7 +73,7 @@ object Similarity {
     * `spark.graft.similarity.autoApprox.enabled=true` (STRICTLY opt-in:
     * the swap changes exact→approximate semantics, so it must never be
     * a silent default). Works on sessions without GraftExtensions too —
-    * the rule self-installs into `spark.experimental.extraOptimizations`.
+    * `GraftSession.install` adds the rule.
     */
   def topKAuto(embs: DataFrame, idCol: String, vecCol: String,
       queryId: Long, topK: Int = 10): DataFrame =
@@ -233,7 +232,7 @@ object Similarity {
       }
     }.mkString(";")
 
-  /** IVF cell-count rule, measured (AnnStressProbe / PERF.md): the
+  /** IVF cell-count rule, measured (PERF.md, rounds 5 and 7): the
     * within-cell pairwise term is n²/k, so cells must GROW with the
     * corpus — cells ≈ √n holds per-cell cost flat, and since
     * [[graft.functions.NearestCells]] the assignment cost is
@@ -255,7 +254,7 @@ object Similarity {
     // pass (each PQ query trains 1 coarse + M subspace codebooks; the
     // tuning sweep alone adds ~17), so a 32-entry wholesale reset
     // thrashed mid-pass and the ANN family retrained every bench pass
-    // (CensusProbe: ann_pq_adc/ann_ivfpq_adc ran 31 jobs at steady
+    // (OPTIMIZATION_r16.md: ann_pq_adc/ann_ivfpq_adc ran 31 jobs at steady
     // state — pure Lloyd retraining). 256 entries of k×dims doubles is
     // ≤ a few MB — still driver-trivial; the wholesale-reset semantics
     // are unchanged, the bound just exceeds the live working set.
@@ -270,7 +269,7 @@ object Similarity {
     * bit-identical BY CONSTRUCTION (the native one sums the same
     * decimal-rounded elements as exact 128-bit integers — associative
     * and merge-order-free; KMeansAggSpec asserts element equality,
-    * AnnStressProbe prints cross-JVM codebook fingerprints), so the
+    * PERF.md records matching cross-JVM codebook fingerprints), so the
     * default is the fast path and no oracle changes.
     */
   val KmeansNativeAggKey = "spark.graft.kmeans.nativeAgg"
@@ -349,7 +348,7 @@ object Similarity {
     * independent of k. (History: the HOF `transform(cb, aggregate(...))`
     * form paid interpreted lambda dispatch; the k-SqL2-literal-columns
     * form that replaced it fell off the JIT cliff at k≥64 — 50 s→353 s
-    * training for 4× k at 100k vectors, AnnStressProbe/PERF.md.)
+    * training for 4× k at 100k vectors, PERF.md round 5.)
     * Numerics and tie-break unchanged: index-order (x-y)² fold,
     * first-min = lowest cell id.
     */
@@ -488,7 +487,7 @@ object Similarity {
     // degenerates to exactly the home-cell-only shape. Cost multiplies
     // the pairwise term by ≤probes² in the worst case; the declared
     // llm_semdedup query stays probes=1 — the dial is the library
-    // surface, measured in AnnStressProbe's semdedup sweep.
+    // surface, measured in the PERF.md round-8 SemDeDup probe sweep.
     val candSide =
       if (probes <= 1) assigned
       else probeCells(base, codebook, probes)
@@ -706,7 +705,7 @@ object Similarity {
     */
   def ivfIndexDrift(spark: SparkSession, table: String,
       codebook: Array[Array[Double]]): DataFrame = {
-    SqL2.register(spark)
+    GraftSession.install(spark)
     val postings = spark.table(table)
     val m = postings
       .select(col("cell"), posexplode(col("v")).as(Seq("pos", "x")))

@@ -32,8 +32,8 @@ import org.apache.spark.sql.expressions.Aggregator
   * vectors contribute nothing (posexplode emitted no rows for them).
   *
   * KMeansAggSpec asserts codebook equality of the two paths
-  * element-for-element; AnnStressProbe measures the wall-clock and
-  * prints a codebook fingerprint for cross-JVM comparison.
+  * element-for-element; PERF.md round 6 records the wall-clock and
+  * the cross-JVM codebook fingerprints.
   */
 object CellVectorSums {
 

@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -118,14 +117,4 @@ case class CosineSim(left: Expression, right: Expression,
   // failOnError participates in equality (two CosineSims in different
   // ANSI modes are different expressions) but must not break the
   // 2-child contract — BinaryExpression's children stay (left, right).
-}
-
-object CosineSim {
-  /** Register `cosine_sim(a, b)` for SQL/expr use on this session —
-    * idempotent; the registration path a SparkSessionExtensions
-    * `injectFunction` would use (see GraftExtensions).
-    */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "cosine_sim", exprs => CosineSim(exprs(0), exprs(1)), "scala_udf")
 }

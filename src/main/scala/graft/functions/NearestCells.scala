@@ -13,7 +13,7 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, IntegerType}
   * Why not k `sq_l2` columns (the previous shape): the codebook is
   * embedded as k×dims LITERALS there, so generated code grows linearly
   * in k — measured falling off the JIT cliff at k=64 (k-means training
-  * 50 s → 353 s for 4× k at 100k vectors; AnnStressProbe, PERF.md).
+  * 50 s → 353 s for 4× k at 100k vectors; PERF.md round 5).
   * Here the codebook rides along as ONE referenced object
   * (`ctx.addReferenceObj`) and the generated code is a single call into
   * [[nearestEval]] — a tight, JIT-compiled primitive-array loop whose

@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -85,13 +84,4 @@ case class SqL2(left: Expression, right: Expression) extends BinaryExpression {
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): Expression =
     copy(left = newLeft, right = newRight)
-}
-
-object SqL2 {
-  /** Register `sq_l2(a, b)` for SQL/expr use on this session —
-    * idempotent; same registration path as [[CosineSim.register]].
-    */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "sq_l2", exprs => SqL2(exprs(0), exprs(1)), "scala_udf")
 }

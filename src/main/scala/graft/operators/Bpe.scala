@@ -86,12 +86,12 @@ object Bpe {
   }
 
   /** The merge-round loop over an arbitrary (word, freq, toks)
-    * histogram — split out so probes can drive it at synthetic vocab
-    * scales the fixture corpus can't produce (BpeProbe).
+    * histogram — split out so it can be driven at synthetic vocab
+    * scales the fixture corpus can't produce (PERF.md round 8).
     */
   private[graft] def trainOnWords(hist: DataFrame): (Seq[MergeRow], DataFrame) = {
     {
-      // localCheckpoint, NOT cache (r13, found by ScanProbe): cache
+      // localCheckpoint, NOT cache (PERF.md round 13 scan census): cache
       // keeps the full lineage, so 12 rounds of nested cached plans
       // print 2^13 FileScans and every analyzer/stats traversal walks
       // the exponential tree — the same iterative-loop hazard the

@@ -648,7 +648,7 @@ object DataOps {
   // 13-query family was ~10 min of the driver's oracle sweep at
   // ITERS=5 (measured locally, r12). The declared-query variants train
   // 2 rounds (training-quality EVIDENCE lives in KMeansIvfSpec /
-  // IvfPqProbe at full depth, not in the oracle); `ann_ivf_trained`
+  // PERF.md round 8 at full depth, not in the oracle); `ann_ivf_trained`
   // alone keeps the full 5-round chain as the cross-engine determinism
   // witness. Both engines change in lockstep — correctness is
   // unaffected, only the DuckDB bill.

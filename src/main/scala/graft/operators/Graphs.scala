@@ -67,7 +67,7 @@ object Graphs {
     */
   /** Per-(session, fixture) memo of the derived pair graph (r12): the
     * 2-shuffle cellPairs build is the shared FIXED COST of all 32
-    * graph queries (~2.6 s at sf0.1, measured by KtrussProbe — the
+    * graph queries (~2.6 s at sf0.1, PERF.md round 12 — the
     * dominant term of graph_ktruss's official cost), and every query
     * re-ran it. The memoized value is the localCheckpoint'd (u < v)
     * pair list — |E| longs, 207k rows at sf0.1. This is exactly what
@@ -138,7 +138,7 @@ object Graphs {
     * in the per-pair path: the original nested `transform(…, slice(…))`
     * HOF form evaluated interpreted per element (PERF.md round-10
     * lesson #2) and measured 9.0 s first-run / 0.7 s steady at sf0.1
-    * vs 2.0 / 0.5 for this form (PairsProbe, 3 reps, identical
+    * vs 2.0 / 0.5 for this form (PERF.md round 11, 3 reps, identical
     * output). The one remaining transform runs over ≤ S-element
     * arrays, one per CELL (not per pair). */
   private[operators] def cellPairs(rows: DataFrame): DataFrame =

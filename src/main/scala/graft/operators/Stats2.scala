@@ -2191,7 +2191,7 @@ object Stats2 {
           .withColumn("nw", count(lit(1)).over(Window.partitionBy("wd")))
           .filter(col("rn") === floor((col("nw") + 1) / 2.0).cast("int"))
           .select(col("wd"), col("c").as("med"))
-        // day-sized residual table, localCheckpoint'd (r13, ScanProbe):
+        // day-sized residual table, localCheckpoint'd (PERF.md scan census):
         // every ESD round references its candidate set three times
         // (moment row + deviation join + survivor anti-join), so the
         // un-truncated chain re-derived the events rollup ~52× in the

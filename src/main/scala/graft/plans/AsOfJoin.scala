@@ -17,8 +17,8 @@ import org.apache.spark.sql.execution.{BinaryExecNode, SparkPlan, SparkStrategy}
   * Architecture (the full custom-operator stack):
   *  - [[AsOfJoin]]: resolved logical node.
   *  - [[AsOfJoinStrategy]]: plans it to the physical operator
-  *    (injected via `spark.experimental.extraStrategies` by [[AsOf]],
-  *    or through `GraftExtensions`).
+  *    (installed by `GraftSession.install`, which [[AsOf]] calls, or
+  *    through `GraftExtensions`).
   *  - [[AsOfJoinExec]]: declares ClusteredDistribution on the key and
   *    (key, ts) child ordering — Catalyst's EnsureRequirements inserts
   *    the exchanges and sorts (exactly how SortMergeJoinExec gets its
@@ -132,10 +132,7 @@ object AsOf {
   def join(left: DataFrame, right: DataFrame, key: String,
       leftTs: String, rightTs: String): DataFrame = {
     val spark = left.sparkSession
-    if (!spark.experimental.extraStrategies.contains(AsOfJoinStrategy)) {
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ AsOfJoinStrategy
-    }
+    graft.GraftSession.install(spark)
     // rename the right key so the joined output has no duplicate name
     val r2 = right.withColumnRenamed(key, "__asof_key")
     val lPlan = left.queryExecution.analyzed

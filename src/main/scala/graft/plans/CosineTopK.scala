@@ -56,22 +56,17 @@ object CosineTopK {
     */
   val PlanesKey = "spark.graft.similarity.autoApprox.planes"
 
-  /** Build the DataFrame around a fresh node, self-installing the
-    * resolution rule for sessions constructed without GraftExtensions
-    * (`experimental.extraOptimizations` is the public post-creation
-    * injection point; the extension-injected copy, when present, wins
-    * by running earlier — the node is gone before the optimizer).
+  /** Build the DataFrame around a fresh node. `GraftSession.install`
+    * adds the resolution rule for sessions constructed without
+    * GraftExtensions (`experimental.extraOptimizations` is the public
+    * post-creation injection point; the extension-injected copy, when
+    * present, wins by running earlier — the node is gone before the
+    * optimizer).
     */
   def dataframe(embs: DataFrame, idCol: String, vecCol: String,
       queryId: Long, topK: Int): DataFrame = {
     val spark = embs.sparkSession
-    // read-check-append under a lock: two threads planting nodes on the
-    // same session must not double-install (or lose) the rule
-    spark.experimental.synchronized {
-      if (!spark.experimental.extraOptimizations.exists(_.isInstanceOf[ResolveCosineTopK]))
-        spark.experimental.extraOptimizations =
-          spark.experimental.extraOptimizations :+ ResolveCosineTopK(spark)
-    }
+    graft.GraftSession.install(spark)
     val child = embs.queryExecution.analyzed
     val idAttr = child.output.find(_.name == idCol).getOrElse(
       throw new IllegalArgumentException(s"column $idCol not in ${child.output.map(_.name)}"))

@@ -1,28 +1,21 @@
 package graft.plans
 
-import graft.functions.{CosineSim, SqL2}
+import graft.GraftSession
 import org.apache.spark.sql.SparkSessionExtensions
-import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
-/** Session-extension wiring for the engine's native functions.
+/** Session-extension wiring for the engine's native functions, the
+  * as-of join strategy and the cosine rules.
   *
   * Usage: `SparkSession.builder().withExtensions(new GraftExtensions)`
   * or `--conf spark.sql.extensions=graft.plans.GraftExtensions`.
-  * Query fns that need `cosine_sim` also call `CosineSim.register`
-  * directly so they work on the driver-built session, which is
-  * constructed without extensions.
+  * Sessions constructed without extensions (the harness ones) get the
+  * functions, the strategy and the CosineTopK rule from
+  * `GraftSession.install`; the AccelerateCosine/AccelerateSqL2
+  * rewrites are extension-only.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(e: SparkSessionExtensions): Unit = {
-    e.injectFunction((
-      FunctionIdentifier("cosine_sim"),
-      new ExpressionInfo(classOf[CosineSim].getName, "cosine_sim"),
-      (exprs: Seq[Expression]) => CosineSim(exprs.head, exprs(1))))
-    e.injectFunction((
-      FunctionIdentifier("sq_l2"),
-      new ExpressionInfo(classOf[SqL2].getName, "sq_l2"),
-      (exprs: Seq[Expression]) => SqL2(exprs.head, exprs(1))))
+    GraftSession.nativeFunctions.foreach(e.injectFunction)
     e.injectPlannerStrategy(_ => AsOfJoinStrategy)
     e.injectOptimizerRule(_ => AccelerateCosine)
     e.injectOptimizerRule(_ => AccelerateSqL2)

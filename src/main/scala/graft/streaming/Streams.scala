@@ -112,11 +112,6 @@ object Streams {
     */
   private val runLock = new Object
 
-  /** Diagnostic hook (StreamProbe): invoked with every micro-batch's
-    * StreamingQueryProgress after a query drains. Null when unused.
-    */
-  @volatile var lastProgressHook: org.apache.spark.sql.streaming.StreamingQueryProgress => Unit = null
-
   // ts physical type varies by fixture version (ns-long vs µs NTZ);
   // eventsStream reads it from the staged file's schema.
 
@@ -217,7 +212,8 @@ object Streams {
     * Stateful-operator cost per micro-batch scales with shuffle
     * partitions × state stores (a stream-stream join keeps 4 stores per
     * partition, and EVERY batch — including the no-data watermark-flush
-    * batch — commits every store). Measured with StreamProbe at sf0.1:
+    * batch — commits every store). Measured at sf0.1 (PERF.md,
+    * "stream_stream_join: measured breakdown"):
     * 32 partitions → 6.1 s, 8 partitions → 2.8 s for the same join, the
     * difference being pure store-commit overhead. Streaming queries
     * here therefore run with a small partition count sized to the
@@ -249,36 +245,19 @@ object Streams {
     // state volume (cores×2 on a real cluster), not to the default.
     s.conf.set("spark.sql.shuffle.partitions",
       s.conf.get("spark.graft.stream.shufflePartitions", "4"))
-    // Dev-only A/B knob (r13 verdict Next #5): GRAFT_STREAM_ROCKSDB=1
-    // flips the state store to the in-box RocksDBStateStoreProvider so
-    // the bench can measure it against the default HDFS-backed map on
-    // the stream-stream floors. MEASURED at sf0.1 (see PERF.md r14):
-    // RocksDB lost on every stateful query at fixture scale — JNI +
-    // per-batch snapshot overhead dwarfs the tiny state — so the
-    // default stays; at cluster scale with state ≫ executor memory the
-    // trade flips, which is a one-conf deployment decision, not a code
-    // change.
-    val provKey = "spark.sql.streaming.stateStore.providerClass"
-    val prevProv = s.conf.getOption(provKey)
-    if (sys.env.get("GRAFT_STREAM_ROCKSDB").contains("1"))
-      s.conf.set(provKey, "org.apache.spark.sql.execution.streaming." +
-        "state.RocksDBStateStoreProvider")
+    // The state store stays the default HDFS-backed map: RocksDB lost on
+    // every stateful query at fixture scale (PERF.md r14 — JNI +
+    // per-batch snapshot overhead dwarfs the tiny state). At cluster
+    // scale with state ≫ executor memory the trade flips; a deployment
+    // sets `spark.sql.streaming.stateStore.providerClass` itself.
     try {
       val name = s"graft_stream_${nameCounter.incrementAndGet()}"
       val q = df.writeStream.format("memory").queryName(name)
         .outputMode(mode).start()
       q.processAllAvailable()
-      val hook = lastProgressHook
-      if (hook != null) q.recentProgress.foreach(hook)
       q.stop()
       s.table(name)
-    } finally {
-      s.conf.set("spark.sql.shuffle.partitions", prev)
-      prevProv match {
-        case Some(p) => s.conf.set(provKey, p)
-        case None => s.conf.unset(provKey)
-      }
-    }
+    } finally s.conf.set("spark.sql.shuffle.partitions", prev)
   }
 
   private def tsStr(c: String): org.apache.spark.sql.Column =

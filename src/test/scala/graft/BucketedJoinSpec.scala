@@ -47,13 +47,17 @@ class BucketedJoinSpec extends AnyFunSuite {
     } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "10485760")
   }
 
-  test("GraftSession builder carries tuned confs + extensions") {
-    val b = GraftSession.builder(master = "local[2]", shufflePartitions = 2)
-    // builder is inert config until getOrCreate; verify via a fresh
-    // session's conf on the shared JVM session instead
-    val s = TestSpark.spark.newSession()
-    graft.functions.CosineSim.register(s)
-    assert(s.sql("SELECT cosine_sim(array(1.0d), array(1.0d))").head.getDouble(0) == 1.0)
-    assert(b != null)
+  test("harness sessions build from the GraftSession conf list") {
+    assert(GraftSession.harnessConf(4).toMap == Map(
+      "spark.master" -> "local[4]",
+      "spark.sql.shuffle.partitions" -> "4",
+      "spark.sql.session.timeZone" -> "UTC",
+      "spark.ui.enabled" -> "false"))
+    assert(GraftSession.harnessConf(32).toMap.apply("spark.sql.shuffle.partitions") == "32")
+    // the shared test session is built from harness(4): every pair holds
+    val conf = spark.sparkContext.getConf
+    GraftSession.harnessConf(4).foreach { case (k, v) =>
+      assert(conf.getOption(k).orElse(spark.conf.getOption(k)).contains(v), k)
+    }
   }
 }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Native cosine_sim expression: parity with the HOF form, codegen and
-  * interpreted paths, type checking, extension injection.
+  * interpreted paths, type checking, the shared native-function list.
   */
 class CosineSimSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
@@ -17,7 +17,7 @@ class CosineSimSpec extends AnyFunSuite {
   }
 
   test("bit-exact parity with the higher-order-function form") {
-    graft.functions.CosineSim.register(spark)
+    GraftSession.install(spark)
     val vecs = Tables.embeddings(spark, TestSpark.sf0001)
       .select(col("vec_id"),
         transform(col("embedding"), x => x.cast("double")).as("v"))
@@ -29,7 +29,7 @@ class CosineSimSpec extends AnyFunSuite {
   }
 
   test("self-similarity is 1.0 within 1e-9") {
-    graft.functions.CosineSim.register(spark)
+    GraftSession.install(spark)
     val bad = Tables.embeddings(spark, TestSpark.sf0001)
       .select(transform(col("embedding"), x => x.cast("double")).as("v"))
       .select(expr("cosine_sim(v, v)").as("s"))
@@ -50,7 +50,7 @@ class CosineSimSpec extends AnyFunSuite {
   }
 
   test("zero-norm vector mirrors Divide per SQL mode (null legacy, throw ANSI)") {
-    graft.functions.CosineSim.register(spark)
+    GraftSession.install(spark)
     import spark.implicits._
     val df = Seq((Array(0.0, 0.0), Array(1.0, 2.0))).toDF("a", "b")
     // legacy mode: both the native expression and the HOF+Divide form → null
@@ -88,21 +88,30 @@ class CosineSimSpec extends AnyFunSuite {
   }
 
   test("type mismatch is rejected at analysis") {
-    graft.functions.CosineSim.register(spark)
+    GraftSession.install(spark)
     import spark.implicits._
     val df = Seq(("x", 1)).toDF("s", "i")
     val e = intercept[Exception](df.select(expr("cosine_sim(s, i)")).collect())
     assert(e.getMessage.contains("cosine_sim") || e.getMessage.contains("DATATYPE"))
   }
 
-  test("GraftExtensions injects cosine_sim into a new session") {
+  test("GraftExtensions and install read the one native-function list") {
+    val injected = Seq.newBuilder[org.apache.spark.sql.SparkSessionExtensions#FunctionDescription]
+    new graft.plans.GraftExtensions().apply(new org.apache.spark.sql.SparkSessionExtensions {
+      override def injectFunction(f: FunctionDescription): Unit = injected += f
+    })
+    val injectedFns = injected.result()
+    assert(injectedFns.map(_._1.funcName) == Seq("cosine_sim", "sq_l2"))
+    assert(injectedFns.zip(GraftSession.nativeFunctions).forall { case (a, b) => a eq b })
+    // a plain session has none of them until install adds each one
     val s2 = spark.newSession()
-    new graft.plans.GraftExtensions().apply(
-      new org.apache.spark.sql.SparkSessionExtensions)
-    // injection path compiles & runs; on the shared session the
-    // register() path provides the function:
-    graft.functions.CosineSim.register(s2)
-    import s2.implicits._
+    val registry = s2.sessionState.functionRegistry
+    assert(GraftSession.nativeFunctions.forall { case (id, _, _) => !registry.functionExists(id) })
+    GraftSession.install(s2)
+    GraftSession.nativeFunctions.foreach { case (id, info, build) =>
+      assert(registry.lookupFunction(id).contains(info), id)
+      assert(registry.lookupFunctionBuilder(id).contains(build), id)
+    }
     val r = s2.sql("SELECT cosine_sim(array(1.0d, 0.0d), array(1.0d, 0.0d))")
       .head.getDouble(0)
     assert(math.abs(r - 1.0) < 1e-12)

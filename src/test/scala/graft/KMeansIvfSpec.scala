@@ -1,6 +1,5 @@
 package graft
 
-import graft.functions.CosineSim
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -21,7 +20,7 @@ class KMeansIvfSpec extends AnyFunSuite {
     * at sf0.001 — test-scale only, this is the ground truth oracle).
     */
   private lazy val groundTruth: Map[Long, Long] = {
-    CosineSim.register(spark)
+    GraftSession.install(spark)
     val e = graft.api.Similarity.prepare(embs, "vec_id", "embedding")
       .select(col("vec_id"), col("__v"))
     val w = Window.partitionBy("a_id").orderBy(col("cos_sim").desc, col("b_id"))

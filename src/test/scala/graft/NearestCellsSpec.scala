@@ -9,7 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
 /** The native IVF cell-assignment expression (functions/NearestCells):
   * correctness of the distance/tie-break contract, null semantics, and
   * codegen/eval agreement. The at-scale motivation (k-independent
-  * generated code) is measured in AnnStressProbe / PERF.md.
+  * generated code) is measured in PERF.md round 5.
   */
 class NearestCellsSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark

@@ -1,0 +1,55 @@
+package graft
+
+import java.nio.file.{Files, Path, Paths}
+
+import scala.jdk.CollectionConverters._
+
+import org.scalatest.funsuite.AnyFunSuite
+
+/** Source scan over `src/main/scala`: sessions are built, native
+  * functions registered and `experimental.extra*` lists written only in
+  * GraftSession and GraftExtensions, and ExplainProbe is the one dev
+  * probe main.
+  */
+class SourceGuardSpec extends AnyFunSuite {
+  private val root = Paths.get("src/main/scala")
+  private val owners = Set("GraftSession.scala", "GraftExtensions.scala")
+
+  private lazy val sources: Seq[(Path, Seq[String])] = {
+    assert(Files.isDirectory(root), s"${root.toAbsolutePath} not found")
+    Files.walk(root).iterator().asScala
+      .filter(_.toString.endsWith(".scala")).toSeq.sorted
+      .map(p => p -> Files.readAllLines(p).asScala.toSeq)
+  }
+
+  private def hits(pattern: String, allowed: Path => Boolean): Seq[String] = {
+    val re = pattern.r
+    for {
+      (p, lines) <- sources if !allowed(p)
+      (line, i) <- lines.zipWithIndex if re.findFirstIn(line).isDefined
+    } yield s"$p:${i + 1}: ${line.trim}"
+  }
+
+  private def isOwner(p: Path) = owners.contains(p.getFileName.toString)
+
+  test("SparkSession.builder() only in GraftSession/GraftExtensions") {
+    assert(sources.nonEmpty)
+    val found = hits("""SparkSession\.builder\(\)""", isOwner)
+    assert(found.isEmpty, found.mkString("\n"))
+  }
+
+  test("function registration only in GraftSession/GraftExtensions") {
+    val found = hits("""createOrReplaceTempFunction|registerFunction\(|injectFunction""", isOwner)
+    assert(found.isEmpty, found.mkString("\n"))
+  }
+
+  test("experimental.extra* writes only in GraftSession/GraftExtensions") {
+    val found = hits("""\.extra(Strategies|Optimizations)\s*=(?!=)""", isOwner)
+    assert(found.isEmpty, found.mkString("\n"))
+  }
+
+  test("ExplainProbe is the only probe main") {
+    val found = hits("""\bobject\s+\w+Probe\b""", _ => false)
+    assert(found.size == 1 && found.head.contains("object ExplainProbe"), found.mkString("\n"))
+  }
+}

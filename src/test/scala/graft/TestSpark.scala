@@ -8,11 +8,7 @@ import org.apache.spark.sql.SparkSession
 object TestSpark {
   lazy val spark: SparkSession = {
     val tmp = java.nio.file.Files.createTempDirectory("graft_test")
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
+    val s = GraftSession.harness(4)
       .config("spark.sql.warehouse.dir", tmp.resolve("wh").toString)
       .config("javax.jdo.option.ConnectionURL",
         s"jdbc:derby:;databaseName=${tmp.resolve("metastore")};create=true")
