@@ -43,21 +43,14 @@ object Tables {
 
   /** The memoized inferred schema of a parquet path (key, bound and
     * staleness rule in the object doc). For fixture inputs only: a file
-    * rewritten on every call would only miss. Inference runs outside
-    * the lock; two racing misses both infer and store the same schema,
-    * which is harmless.
+    * rewritten on every call would only miss.
     */
   def parquetSchema(spark: SparkSession, path: String): StructType = {
     val abs = new java.io.File(path).getAbsolutePath
     val confs = spark.conf.getAll.toSeq.filter { case (k, _) =>
       k.startsWith("spark.sql.parquet.") || k.startsWith("spark.sql.legacy.parquet.")
     }.sorted
-    val key = (abs, Fixtures.fingerprint(abs), confs)
-    Option(schemaMemo.synchronized(schemaMemo.get(key))).getOrElse {
-      val inferred = spark.read.parquet(path).schema
-      schemaMemo.synchronized(schemaMemo.put(key, inferred))
-      inferred
-    }
+    schemaMemo((abs, Fixtures.fingerprint(abs), confs))(spark.read.parquet(path).schema)
   }
 
   /** Most schemas the memo holds: ten fixture tables, each under a few
@@ -65,15 +58,10 @@ object Tables {
     */
   val SchemaMemoBound = 64
 
-  private type SchemaKey = (String, String, Seq[(String, String)])
-
   private val schemaMemo =
-    new java.util.LinkedHashMap[SchemaKey, StructType](16, 0.75f, true) {
-      override def removeEldestEntry(e: java.util.Map.Entry[SchemaKey, StructType]): Boolean =
-        size > SchemaMemoBound
-    }
+    Memo[(String, String, Seq[(String, String)]), StructType](SchemaMemoBound)
 
-  private[graft] def schemaMemoSize: Int = schemaMemo.synchronized(schemaMemo.size)
+  private[graft] def schemaMemoSize: Int = schemaMemo.size
 
   /** Balance a CPU-heavy derivation over an under-split scan (guide
     * §2.5 "input skew": one huge unsplittable file → repartition right
@@ -105,12 +93,18 @@ object Tables {
     * is under-split, the balancing exchange is additionally cut behind
     * a LAZY localCheckpoint so every consumer reads the repartitioned
     * blocks instead of re-executing the RoundRobin subtree per branch
-    * (r16 verdict #1: a bare balanced frame consumed four times
-    * stamped four full-fact exchanges into stat_spearman's plan). On a
-    * well-split source this returns the scan untouched — NO
-    * checkpoint, so a 100 TB fact is never materialized just to be
-    * re-read; consumers re-scan the column-pruned parquet, which is
-    * the cheaper move at any scale.
+    * (a bare balanced frame consumed four times stamped four full-fact
+    * exchanges into stat_spearman's plan). On a well-split source this
+    * returns the scan untouched — no checkpoint; consumers re-scan the
+    * column-pruned parquet, the cheaper move at any scale.
+    *
+    * Use it only on a domain- or projection-bounded frame (a few
+    * narrow columns, or a small table): an under-split but LARGE
+    * source — a single gzip landing file — would be pinned whole in
+    * block-manager memory/disk by the checkpoint. And a local
+    * checkpoint is not reliable storage: its blocks live on the
+    * executors that computed them and its lineage is cut, so losing an
+    * executor fails the consumers instead of recomputing.
     */
   def balancedShared(df: DataFrame): DataFrame = {
     val p = df.sparkSession.sparkContext.defaultParallelism

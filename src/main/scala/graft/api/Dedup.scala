@@ -170,14 +170,14 @@ object Dedup {
     * near-dup detection and mirrored exactly by the oracle.
     */
   /** Memo for the verified-pairs table, keyed like [[nearDupComponents]]'
-    * compCache (r12, VERDICT next #6 — the last of the cache-phasing
-    * class): whether a verify-family query found the transient shingle /
-    * candidate caches warm used to depend on bench ORDER (a sibling's
-    * persist being alive), making costs phase-of-moon. The memo pins the
+    * compCache: whether a verify-family query found the transient
+    * shingle / candidate caches warm used to depend on bench ORDER (a
+    * sibling's persist being alive). The memo pins the
     * localCheckpoint'd verified table — |pairs| rows, KBs at any sane
     * near-dup rate — per (session, plan, fingerprint, params), so every
-    * later call is order-independent. The chain's transient persists are
-    * still released by nearDupComponents' terminal unpersist.
+    * later call is order-independent. The chain's transient persists
+    * are still released by nearDupComponents' terminal unpersist.
+    * Session-bound, at most 16 entries.
     */
   private case class VerifyKey(
       session: org.apache.spark.sql.SparkSession,
@@ -185,8 +185,7 @@ object Dedup {
       sourceFp: String, idCol: String, textCol: String,
       threshold: Double, k: Int, bands: Int)
   private val verifyCache =
-    new java.util.concurrent.ConcurrentHashMap[VerifyKey, DataFrame]
-  private[graft] def clearVerifyCache(): Unit = verifyCache.clear()
+    graft.Memo.sessionBound[VerifyKey, DataFrame](bound = 16)(identity)
 
   def jaccardVerify(docs: DataFrame, idCol: String, textCol: String,
       threshold: Double = 0.6, k: Int = 16, bands: Int = 4): DataFrame = {
@@ -195,33 +194,9 @@ object Dedup {
     val key = VerifyKey(docs.sparkSession, analyzed.canonicalized,
       Similarity.sourceFingerprint(analyzed), idCol, textCol,
       threshold, k, bands)
-    val it = verifyCache.entrySet().iterator()
-    while (it.hasNext)
-      if (it.next().getValue.sparkSession.sparkContext.isStopped) it.remove()
-    if (verifyCache.size > 16) verifyCache.clear()
-    getOrBuild(verifyCache, key)(
+    verifyCache(key)(
       jaccardFromShingles(persistedShingles(docs, idCol, textCol),
         threshold, k, bands).localCheckpoint())
-  }
-
-  /** get-or-build WITHOUT holding the CHM bin lock for the duration of
-    * the Spark jobs (r12 ADVICE): computeIfAbsent would run the full
-    * shingle/LSH pipeline + eager localCheckpoint inside the bin lock,
-    * blocking any concurrent caller that hashes to the same bin. A
-    * race loser's duplicate build is released best-effort and the
-    * winner's value returned, so all callers still observe one value.
-    */
-  private def getOrBuild[K](
-      cache: java.util.concurrent.ConcurrentHashMap[K, DataFrame],
-      key: K)(build: => DataFrame): DataFrame = {
-    val hit = cache.get(key)
-    if (hit != null) hit
-    else {
-      val built = build
-      val prev = cache.putIfAbsent(key, built)
-      if (prev == null) built
-      else { Similarity.releaseCheckpoint(built); prev }
-    }
   }
 
   /** Incremental (batch-vs-corpus) near-dup flagging: each NEW doc
@@ -343,7 +318,7 @@ object Dedup {
         .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
         .bucketBy(nb, keys.head, keys.tail: _*).sortBy(keys.head, keys.tail: _*)
         .saveAsTable(s"$target$suffix")
-      graft.api.Similarity.releaseCheckpoint(snap)
+      graft.Memo.releaseCheckpoint(snap)
     }
     half("_bands", Seq("band", "bhash"))
     half("_sets", Seq("doc_id"))
@@ -389,7 +364,7 @@ object Dedup {
       .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
       .bucketBy(nbSets, "doc_id").sortBy("doc_id")
       .saveAsTable(s"${target}_sets")
-    graft.api.Similarity.releaseCheckpoint(sets)
+    graft.Memo.releaseCheckpoint(sets)
   }
 
   /** [[incrementalNearDups]] against the PERSISTED band index — the
@@ -530,16 +505,16 @@ object Dedup {
     */
   /** Memo for the component labels, keyed like Similarity's k-means
     * codebook cache: canonicalized analyzed plan (exprId-free) + a
-    * (path, length, mtime) fingerprint of every file-source leaf, so
-    * a regenerated fixture invalidates the entry. The cached value is
-    * the final localCheckpoint'd label table — model-sized (only docs
-    * with a near-dup edge). Rationale (round-11 session-2 bench): the
-    * chain costs ~2.5 s uncached and THREE queries run it
-    * (llm_neardup_components / llm_dedup_keep_best /
-    * llm_dupcluster_sources); whether any of them rode another's
-    * transient shingle cache depended on hash-map bench ORDER, which
-    * made costs phase-of-moon (the one r11 min-gate hit). The memo
-    * makes the reuse explicit and order-independent.
+    * (path, length, mtime) fingerprint of every file-source leaf, so a
+    * regenerated fixture invalidates the entry, + the owning session
+    * (reference equality): the value is a localCheckpoint'd DataFrame
+    * pinned to the SparkContext that created it, so a plan-only key
+    * would serve a dead-context entry to a NEW session in the same JVM.
+    * The value is the final label table — model-sized (only docs with a
+    * near-dup edge). The chain costs ~2.5 s uncached and THREE queries
+    * run it (llm_neardup_components / llm_dedup_keep_best /
+    * llm_dupcluster_sources); the memo makes the reuse explicit and
+    * order-independent. Session-bound, at most 16 entries.
     */
   private case class CompKey(
       session: org.apache.spark.sql.SparkSession, // reference identity
@@ -547,28 +522,17 @@ object Dedup {
       sourceFp: String, idCol: String, textCol: String,
       threshold: Double, k: Int, bands: Int, maxIters: Int)
   private val compCache =
-    new java.util.concurrent.ConcurrentHashMap[CompKey, DataFrame]
-  private[graft] def clearComponentsCache(): Unit = compCache.clear()
+    graft.Memo.sessionBound[CompKey, DataFrame](bound = 16)(identity)
 
   def nearDupComponents(docs: DataFrame, idCol: String, textCol: String,
       threshold: Double = 0.6, k: Int = 16, bands: Int = 4,
       maxIters: Int = 25): DataFrame = {
     val analyzed =
       docs.select(col(idCol), col(textCol)).queryExecution.analyzed
-    // The owning session is part of the key (r12 ADVICE): the cached
-    // value is a localCheckpoint'd DataFrame whose RDDs are pinned to
-    // the SparkContext that created it — a plan-only key would serve a
-    // dead-context entry to a NEW session in the same JVM (SparkSession
-    // uses reference equality, which is exactly the ownership test).
-    // Belt and braces: also purge entries whose context has stopped.
     val key = CompKey(docs.sparkSession, analyzed.canonicalized,
       Similarity.sourceFingerprint(analyzed), idCol, textCol,
       threshold, k, bands, maxIters)
-    val it = compCache.entrySet().iterator()
-    while (it.hasNext)
-      if (it.next().getValue.sparkSession.sparkContext.isStopped) it.remove()
-    if (compCache.size > 16) compCache.clear()
-    getOrBuild(compCache, key)(
+    compCache(key)(
       computeNearDupComponents(docs, idCol, textCol, threshold, k,
         bands, maxIters))
   }

@@ -175,46 +175,28 @@ object Similarity {
     */
   /** Trained codebooks memoized per (input plan, source files, k,
     * iters): training is deterministic, so re-deriving it for every
-    * query over the same corpus (e.g. the probe-1 and multi-probe
-    * declared queries) would repeat 5 Lloyd rounds for bit-identical
-    * output. Entries are k×dims doubles — driver-trivial.
+    * query over the same corpus would repeat the Lloyd rounds for
+    * bit-identical output. Entries are k×dims doubles — driver-trivial.
     *
     * Key = the CANONICALIZED logical plan itself (structural equality —
     * the same match rule Spark's CacheManager uses, so a 32-bit hash
     * collision between distinct corpora cannot alias entries) plus a
     * (path, size, mtime) fingerprint of every file-source leaf, so
     * regenerating a fixture in place invalidates the entry.
+    *
+    * At most 256 codebooks: the full query surface trains well over 32
+    * distinct (plan, k, iters) keys per pass (each PQ query trains 1
+    * coarse + M subspace codebooks; the tuning sweep adds ~17), and an
+    * evicted codebook is only retrained.
     */
   private case class CodebookKey(plan: LogicalPlan, sourceFp: String, k: Int, iters: Int)
-  private val codebookCache =
-    new java.util.concurrent.ConcurrentHashMap[CodebookKey, Array[Array[Double]]]()
+  private val codebookCache = graft.Memo[CodebookKey, Array[Array[Double]]](bound = 256)
 
-  /** Invalidation contract: entries key on the canonicalized input plan
-    * AND a size+mtime fingerprint of its file-source leaves, so both
-    * "different corpus" and "same path, regenerated file" retrain
-    * automatically; call this only to force retraining of an UNCHANGED
-    * corpus (KMeansIvfSpec proves two trainings agree, which
-    * memoization would otherwise make vacuous). The map is bounded:
-    * past 32 corpora it resets wholesale (entries are k×dims doubles —
-    * retraining is the only cost of an eviction).
+  /** Force retraining of an UNCHANGED corpus (KMeansIvfSpec proves two
+    * trainings agree, which memoization would otherwise make vacuous).
+    * A changed corpus needs no call: its key differs.
     */
   private[graft] def clearCodebookCache(): Unit = codebookCache.clear()
-
-  /** Best-effort block release for an evicted/orphaned localCheckpoint'd
-    * DataFrame (r12 ADVICE): the checkpoint blocks belong to the
-    * LogicalRDD's rdd, which plain df.unpersist() does not reach (the
-    * df was never CacheManager-cached), so they would otherwise wait
-    * for GC/ContextCleaner. Skips dead contexts — their blocks died
-    * with the context.
-    */
-  private[graft] def releaseCheckpoint(df: DataFrame): Unit =
-    try if (!df.sparkSession.sparkContext.isStopped)
-      df.queryExecution.analyzed.collectLeaves().foreach {
-        case lr: org.apache.spark.sql.execution.LogicalRDD =>
-          lr.rdd.unpersist(blocking = false)
-        case _ => ()
-      }
-    catch { case _: Throwable => () }
 
   /** (path, length, mtime) of every file behind file-source leaves —
     * cheap (the FileIndex has already listed) and exactly the staleness
@@ -249,18 +231,7 @@ object Similarity {
       k: Int = 16, iters: Int = 5): Array[Array[Double]] = {
     val analyzed = embs.select(col(idCol), col(vecCol)).queryExecution.analyzed
     val key = CodebookKey(analyzed.canonicalized, sourceFingerprint(analyzed), k, iters)
-    // Bound raised 32 → 256 (r16 optimization): the full 588-query
-    // surface trains WELL over 32 distinct (plan, k, iters) keys per
-    // pass (each PQ query trains 1 coarse + M subspace codebooks; the
-    // tuning sweep alone adds ~17), so a 32-entry wholesale reset
-    // thrashed mid-pass and the ANN family retrained every bench pass
-    // (OPTIMIZATION_r16.md: ann_pq_adc/ann_ivfpq_adc ran 31 jobs at steady
-    // state — pure Lloyd retraining). 256 entries of k×dims doubles is
-    // ≤ a few MB — still driver-trivial; the wholesale-reset semantics
-    // are unchanged, the bound just exceeds the live working set.
-    if (codebookCache.size > 256) codebookCache.clear()
-    codebookCache.computeIfAbsent(key, _ =>
-      trainCodebook(embs, idCol, vecCol, k, iters))
+    codebookCache(key)(trainCodebook(embs, idCol, vecCol, k, iters))
   }
 
   /** Opt-out flag for the native Lloyd-round aggregate
@@ -777,7 +748,7 @@ object Similarity {
       .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
       .bucketBy(nb, "cell").sortBy("cell")
       .saveAsTable(target)
-    releaseCheckpoint(snap)
+    graft.Memo.releaseCheckpoint(snap)
   }
 
   /** Retrain the persisted IVF index — the decision [[ivfIndexDrift]]

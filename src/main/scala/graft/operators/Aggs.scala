@@ -1181,8 +1181,7 @@ object Aggs {
     Q("agg_incremental_rollup", {
       val SPLIT = "2024-01-21"
       (s, d) => {
-        val src = new java.io.File(s"$d/events.parquet")
-        val key = s"${d.replaceAll("[^A-Za-z0-9._-]", "_")}_${graft.Fixtures.fingerprint(src)}"
+        val key = graft.Fixtures.key(d, "events")
         val tmp = s"${sys.props("java.io.tmpdir")}/graft_rollup_partials_$key"
         val partial = (df: org.apache.spark.sql.DataFrame) => df
           .groupBy(col("event_type"), date_trunc("day", col("ts")).as("day"))

@@ -73,17 +73,17 @@ object Bpe {
         lit(" " + EOW)))
 
   /** Trained state: the merge table with per-round stats plus the final
-    * word→symbols table (for tokenization). Memoized per (session, dir)
-    * so `llm_bpe_train` and `llm_bpe_tokenize` share one training run.
+    * word→symbols table (for tokenization). Memoized per (session,
+    * documents [[graft.Fixtures.key]]) so `llm_bpe_train` and
+    * `llm_bpe_tokenize` share one training run, a rewritten corpus
+    * retrains, and a later session is never served a stopped one's
+    * checkpoint. At most 8 entries.
     */
-  private val memo = new java.util.concurrent.ConcurrentHashMap[
-    (Int, String), (Seq[MergeRow], DataFrame)]()
+  private val memo = graft.Memo.sessionBound[
+    (SparkSession, String), (Seq[MergeRow], DataFrame)](bound = 8)(_._2)
 
-  private[graft] def train(s: SparkSession, d: String): (Seq[MergeRow], DataFrame) = {
-    if (memo.size > 8) memo.clear()
-    memo.computeIfAbsent((System.identityHashCode(s), d), _ =>
-      trainOnWords(symbolized(s, d)))
-  }
+  private[graft] def train(s: SparkSession, d: String): (Seq[MergeRow], DataFrame) =
+    memo((s, graft.Fixtures.key(d, "documents")))(trainOnWords(symbolized(s, d)))
 
   /** The merge-round loop over an arbitrary (word, freq, toks)
     * histogram — split out so it can be driven at synthetic vocab
@@ -131,12 +131,12 @@ object Bpe {
           .agg(countDistinct("sym"), sum("freq")).head()
         val vocab = statsRow.getLong(0)
         val corpusToks = statsRow.getLong(1)
-        // release the superseded round's checkpoint blocks NOW (r13
-        // ADVICE): waiting for GC + ContextCleaner lets up to N_MERGES
-        // corpus-scale block sets pile up in the block manager
+        // release the superseded round's checkpoint blocks NOW: waiting
+        // for GC + ContextCleaner lets up to N_MERGES corpus-scale block
+        // sets pile up in the block manager
         val prev = words
         words = next
-        graft.api.Similarity.releaseCheckpoint(prev)
+        graft.Memo.releaseCheckpoint(prev)
         merges += MergeRow(r.toLong, a, b, a + b, n, vocab, corpusToks)
         }
       }

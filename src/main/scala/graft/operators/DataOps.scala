@@ -2149,8 +2149,36 @@ object DataOps {
     */
   private lazy val annIdxLocation =
     java.nio.file.Files.createTempDirectory("graft_ann_idx").toString
-  private val annIdxCodebooks =
-    new java.util.concurrent.ConcurrentHashMap[String, Array[Array[Double]]]()
+  /** Artifact name (`ivf_`/`app_`/`retr_` + embeddings
+    * [[graft.Fixtures.tableKey]]) → its codebook, once the artifact is
+    * written. At most 64 artifacts; an evicted one is rebuilt.
+    */
+  private val annIdxCodebooks = graft.Memo[String, Array[Array[Double]]](bound = 64)
+
+  /** The grown IVF artifact `ann_index_append`/`drift`/`compact`/
+    * `retrain` all read: train + write on the initial cohort
+    * (vec_id % 3 ≠ 0), append the delivery (vec_id % 3 = 0) against the
+    * frozen codebook. Whichever query runs first pays the one build.
+    * Returns (table, frozen codebook).
+    */
+  private def ensureIvfAppendIndex(s: SparkSession, d: String, k: Int,
+      iters: Int): (String, Array[Array[Double]]) = {
+    val key = graft.Fixtures.tableKey(d, "embeddings")
+    val table = s"graft_ann_idx.ivfapp_$key"
+    val embs = Tables.embeddings(s, d)
+    val codebook = annIdxCodebooks(s"app_$key") {
+      s.sql("CREATE DATABASE IF NOT EXISTS graft_ann_idx LOCATION " +
+        s"'$annIdxLocation'")
+      val cb = graft.api.Similarity.writeIvfIndex(
+        embs.filter(col("vec_id") % 3 =!= 0), "vec_id", "embedding",
+        table, k, iters)
+      graft.api.Similarity.appendToIvfIndex(
+        embs.filter(col("vec_id") % 3 === 0), "vec_id", "embedding",
+        table, cb)
+      cb
+    }
+    (table, codebook)
+  }
 
   /** The SERVED IVF path: train + persist the index ONCE
     * ([[graft.api.Similarity.writeIvfIndex]] — bucketed postings,
@@ -2165,15 +2193,14 @@ object DataOps {
   private def annIndexPersistedQuery: Q = {
     val K = 16; val ITERS = ORACLE_ITERS; val TOPK = 2; val PROBES = 2
     def fn(s: SparkSession, d: String): DataFrame = {
-      val src = new java.io.File(s"$d/embeddings.parquet")
-      val key = s"${d.replaceAll("[^A-Za-z0-9_]", "_")}_${graft.Fixtures.fingerprint(src)}"
+      val key = graft.Fixtures.tableKey(d, "embeddings")
       val table = s"graft_ann_idx.ivf_$key"
-      val codebook = annIdxCodebooks.computeIfAbsent(key, _ => {
+      val codebook = annIdxCodebooks(s"ivf_$key") {
         s.sql("CREATE DATABASE IF NOT EXISTS graft_ann_idx LOCATION " +
           s"'$annIdxLocation'")
         graft.api.Similarity.writeIvfIndex(
           Tables.embeddings(s, d), "vec_id", "embedding", table, K, ITERS)
-      })
+      }
       val batch = Tables.embeddings(s, d).filter(col("vec_id") % 97 === 0)
       graft.api.Similarity
         .ivfQueryIndexed(batch, "vec_id", "embedding", table, codebook,
@@ -2197,8 +2224,8 @@ object DataOps {
     Q("ann_index_persisted", fn, Some(sql))
   }
 
-  /** The INCREMENTAL-INGESTION IVF path (r12, VERDICT missing #4 — the
-    * ANN twin of dedup's appendToBandIndex): train + persist the index
+  /** The INCREMENTAL-INGESTION IVF path (the ANN twin of dedup's
+    * appendToBandIndex): train + persist the index
     * on the INITIAL corpus only (vec_id % 3 ≠ 0), then commit a new
     * embedding delivery (vec_id % 3 = 0) via
     * [[graft.api.Similarity.appendToIvfIndex]] — assigned against the
@@ -2215,22 +2242,8 @@ object DataOps {
   private def annIndexAppendQuery: Q = {
     val K = 16; val ITERS = ORACLE_ITERS; val TOPK = 2; val PROBES = 2
     def fn(s: SparkSession, d: String): DataFrame = {
-      val src = new java.io.File(s"$d/embeddings.parquet")
-      val key = s"${d.replaceAll("[^A-Za-z0-9_]", "_")}_${graft.Fixtures.fingerprint(src)}"
-      val table = s"graft_ann_idx.ivfapp_$key"
-      val embs = Tables.embeddings(s, d)
-      val codebook = annIdxCodebooks.computeIfAbsent(s"app_$key", _ => {
-        s.sql("CREATE DATABASE IF NOT EXISTS graft_ann_idx LOCATION " +
-          s"'$annIdxLocation'")
-        val cb = graft.api.Similarity.writeIvfIndex(
-          embs.filter(col("vec_id") % 3 =!= 0), "vec_id", "embedding",
-          table, K, ITERS)
-        graft.api.Similarity.appendToIvfIndex(
-          embs.filter(col("vec_id") % 3 === 0), "vec_id", "embedding",
-          table, cb)
-        cb
-      })
-      val batch = embs.filter(col("vec_id") % 97 === 5)
+      val (table, codebook) = ensureIvfAppendIndex(s, d, K, ITERS)
+      val batch = Tables.embeddings(s, d).filter(col("vec_id") % 97 === 5)
       graft.api.Similarity
         .ivfQueryIndexed(batch, "vec_id", "embedding", table, codebook,
           TOPK, PROBES)
@@ -2258,9 +2271,9 @@ object DataOps {
     Q("ann_index_append", fn, Some(sql))
   }
 
-  /** The retrain-decision audit closing the IVF index lifecycle (r13,
-    * VERDICT next-round #5): after [[graft.api.Similarity
-    * .appendToIvfIndex]] batches accrete against the FROZEN codebook
+  /** The retrain-decision audit closing the IVF index lifecycle: after
+    * [[graft.api.Similarity.appendToIvfIndex]] batches accrete against
+    * the FROZEN codebook
     * (same artifact + memo as ann_index_append, so whichever query runs
     * first pays the one build), report per cell the fill factor and the
     * centroid drift — the squared-L2 distance between the frozen
@@ -2308,21 +2321,7 @@ object DataOps {
   private def annIndexDriftQuery: Q = {
     val K = 16; val ITERS = ORACLE_ITERS
     def fn(s: SparkSession, d: String): DataFrame = {
-      val src = new java.io.File(s"$d/embeddings.parquet")
-      val key = s"${d.replaceAll("[^A-Za-z0-9_]", "_")}_${graft.Fixtures.fingerprint(src)}"
-      val table = s"graft_ann_idx.ivfapp_$key"
-      val embs = Tables.embeddings(s, d)
-      val codebook = annIdxCodebooks.computeIfAbsent(s"app_$key", _ => {
-        s.sql("CREATE DATABASE IF NOT EXISTS graft_ann_idx LOCATION " +
-          s"'$annIdxLocation'")
-        val cb = graft.api.Similarity.writeIvfIndex(
-          embs.filter(col("vec_id") % 3 =!= 0), "vec_id", "embedding",
-          table, K, ITERS)
-        graft.api.Similarity.appendToIvfIndex(
-          embs.filter(col("vec_id") % 3 === 0), "vec_id", "embedding",
-          table, cb)
-        cb
-      })
+      val (table, codebook) = ensureIvfAppendIndex(s, d, K, ITERS)
       graft.api.Similarity.ivfIndexDrift(s, table, codebook)
         .select(col("cell").cast("long").as("cell"), col("n_vecs"),
           col("fill_factor"), col("drift"))
@@ -2331,14 +2330,14 @@ object DataOps {
     Q("ann_index_drift", fn, Some(annDriftOracleSql))
   }
 
-  /** fixture key → compaction-done marker for ann_index_compact (the
-    * rewrite is a once-per-fixture maintenance action, like the index
-    * build it compacts).
+  /** Artifact key → it is compacted, for ann_index_compact and
+    * ann_ivfpq_compact (the rewrite is a once-per-fixture maintenance
+    * action, like the index build it compacts). At most 64 artifacts;
+    * an evicted one is compacted again.
     */
-  private val annIdxCompacted =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Boolean]()
+  private val annIdxCompacted = graft.Memo[String, Unit](bound = 64)
 
-  /** IVF index COMPACTION (r13 — the maintenance leg completing the
+  /** IVF index COMPACTION (the maintenance leg completing the
     * lifecycle: build → serve → append → drift-audit → compact →
     * retrain): [[graft.api.Similarity.compactIvfIndex]] rewrites the
     * append-fragmented postings (one small file per delivery per
@@ -2356,26 +2355,12 @@ object DataOps {
   private def annIndexCompactQuery: Q = {
     val K = 16; val ITERS = ORACLE_ITERS
     def fn(s: SparkSession, d: String): DataFrame = {
-      val src = new java.io.File(s"$d/embeddings.parquet")
-      val key = s"${d.replaceAll("[^A-Za-z0-9_]", "_")}_${graft.Fixtures.fingerprint(src)}"
-      val table = s"graft_ann_idx.ivfapp_$key"
+      val key = graft.Fixtures.tableKey(d, "embeddings")
+      val (table, _) = ensureIvfAppendIndex(s, d, K, ITERS)
       val cmp = s"graft_ann_idx.ivfcmp_$key"
-      val embs = Tables.embeddings(s, d)
-      annIdxCodebooks.computeIfAbsent(s"app_$key", _ => {
-        s.sql("CREATE DATABASE IF NOT EXISTS graft_ann_idx LOCATION " +
-          s"'$annIdxLocation'")
-        val cb = graft.api.Similarity.writeIvfIndex(
-          embs.filter(col("vec_id") % 3 =!= 0), "vec_id", "embedding",
-          table, K, ITERS)
-        graft.api.Similarity.appendToIvfIndex(
-          embs.filter(col("vec_id") % 3 === 0), "vec_id", "embedding",
-          table, cb)
-        cb
-      })
-      annIdxCompacted.computeIfAbsent(key, _ => {
+      annIdxCompacted(key) {
         graft.api.Similarity.compactIvfIndex(s, table, cmp)
-        java.lang.Boolean.TRUE
-      })
+      }
       val postings = s.table(cmp)
       val cnt = postings.groupBy("cell").agg(count(lit(1)).as("n_vecs"))
       val sq = postings
@@ -2408,7 +2393,7 @@ object DataOps {
   }
 
   /** IVF index RETRAIN — the decision [[annIndexDriftQuery]] informs,
-    * EXECUTED (r13 verdict Next #2, closing the lifecycle: build →
+    * EXECUTED (closing the lifecycle: build →
     * serve → append → drift-audit → compact → retrain): rebuild the
     * codebook FROM THE CURRENT POSTINGS (initial + appended —
     * [[graft.api.Similarity.writeIvfIndex]] runs its deterministic
@@ -2427,30 +2412,18 @@ object DataOps {
   private def annIndexRetrainQuery: Q = {
     val K = 16; val ITERS = ORACLE_ITERS
     def fn(s: SparkSession, d: String): DataFrame = {
-      val src = new java.io.File(s"$d/embeddings.parquet")
-      val key = s"${d.replaceAll("[^A-Za-z0-9_]", "_")}_${graft.Fixtures.fingerprint(src)}"
-      val table = s"graft_ann_idx.ivfapp_$key"
+      val key = graft.Fixtures.tableKey(d, "embeddings")
+      val (table, cb) = ensureIvfAppendIndex(s, d, K, ITERS)
       val retr = s"graft_ann_idx.ivfretr_$key"
-      val embs = Tables.embeddings(s, d)
-      val cb = annIdxCodebooks.computeIfAbsent(s"app_$key", _ => {
-        s.sql("CREATE DATABASE IF NOT EXISTS graft_ann_idx LOCATION " +
-          s"'$annIdxLocation'")
-        val cb0 = graft.api.Similarity.writeIvfIndex(
-          embs.filter(col("vec_id") % 3 =!= 0), "vec_id", "embedding",
-          table, K, ITERS)
-        graft.api.Similarity.appendToIvfIndex(
-          embs.filter(col("vec_id") % 3 === 0), "vec_id", "embedding",
-          table, cb0)
-        cb0
-      })
       // the retrain maintenance action itself, once per fixture: train
       // on the postings (NOT the source table — a deployment retrains
       // from what the index actually holds) and rewrite the artifact;
       // the bucket count is derived from the source artifact's own
-      // catalog spec (r14 ADVICE — never silently re-bucket)
-      val cb2 = annIdxCodebooks.computeIfAbsent(s"retr_$key", _ =>
+      // catalog spec (never silently re-bucket)
+      val cb2 = annIdxCodebooks(s"retr_$key") {
         graft.api.Similarity.retrainIvfIndex(s, table, retr, "vec_id",
-          K, ITERS))
+          K, ITERS)
+      }
       val before = graft.api.Similarity.ivfIndexDrift(s, table, cb)
         .select(col("cell"), col("n_vecs").as("n_before"),
           col("drift").as("drift_before"))
@@ -2499,8 +2472,8 @@ object DataOps {
     Q("ann_index_retrain", fn, Some(sql))
   }
 
-  /** The PQ-CODED persisted index, built and SERVED (r14 verdict Next
-    * #2 — upgrades the persisted-index scale story from raw-vector
+  /** The PQ-CODED persisted index, built and SERVED (upgrades the
+    * persisted-index scale story from raw-vector
     * postings to coded postings): [[graft.api.Similarity
     * .writeIvfPqIndex]] trains the coarse IVF codebook + M=4 residual
     * PQ codebooks ONCE per fixture and persists (vec_id, cell, codes)
@@ -2520,36 +2493,37 @@ object DataOps {
     * artifact intentionally does not store raw vectors; rerank is a
     * separate source-table fetch in a deployment).
     */
-  private val annIvfPqModels = new java.util.concurrent.ConcurrentHashMap[
-    String, (Array[Array[Double]], Array[Array[Array[Double]]])]()
-
   /** Build-once-per-(fixture, hyper-parameters) memo for the coded
     * artifact — shared by `ann_ivfpq_persisted` (serving),
     * `ann_ivfpq_recall` / `ann_ivfpq_rerank` (the audits of that
     * serving) and `ann_ivfpq_tuning`'s sweep points: whichever runs
-    * first pays the one build. The key (and table suffix) folds
-    * (cells, m, pqk, iters) in alongside the fixture fingerprint (r15
-    * ADVICE: a path-only key would silently share one artifact across
-    * callers with different hyper-parameters — exactly what the
-    * tuning sweep now exercises).
+    * first pays the one build. Key: [[ivfPqKey]], prefixed `app_` /
+    * `retr_` for the grown and retrained artifacts. At most 64
+    * artifacts; an evicted one is rebuilt.
+    */
+  private val annIvfPqModels =
+    graft.Memo[String, (Array[Array[Double]], Array[Array[Array[Double]]])](bound = 64)
+
+  /** Embeddings [[graft.Fixtures.tableKey]] plus (cells, m, pqk, iters):
+    * a fixture-only key would share one artifact across callers with
+    * different hyper-parameters, which the tuning sweep exercises.
     */
   private def ivfPqKey(d: String, cells: Int, m: Int, pqk: Int,
       iters: Int): String =
-    s"${d.replaceAll("[^A-Za-z0-9_]", "_")}_${graft.Fixtures.fingerprint(
-      new java.io.File(s"$d/embeddings.parquet"))}_c${cells}m${m}k${pqk}i$iters"
+    s"${graft.Fixtures.tableKey(d, "embeddings")}_c${cells}m${m}k${pqk}i$iters"
 
   private def ensureIvfPqIndex(s: SparkSession, d: String, cells: Int,
       m: Int, pqk: Int, iters: Int)
       : (String, (Array[Array[Double]], Array[Array[Array[Double]]])) = {
     val key = ivfPqKey(d, cells, m, pqk, iters)
     val table = s"graft_ann_idx.ivfpq_$key"
-    val model = annIvfPqModels.computeIfAbsent(key, _ => {
+    val model = annIvfPqModels(key) {
       s.sql("CREATE DATABASE IF NOT EXISTS graft_ann_idx LOCATION " +
         s"'$annIdxLocation'")
       graft.api.Similarity.writeIvfPqIndex(
         Tables.embeddings(s, d), "vec_id", "embedding", table,
         cells, m, pqk, iters)
-    })
+    }
     (table, model)
   }
 
@@ -2557,8 +2531,7 @@ object DataOps {
     * artifact `ann_ivfpq_append`/`drift`/`compact` all audit: train +
     * write on the initial cohort (vec_id % 3 ≠ 0), append the
     * delivery (vec_id % 3 = 0) against the frozen codebooks. One memo,
-    * whichever of the three queries runs first pays the one build
-    * (previously the same block inlined three times).
+    * whichever of the three queries runs first pays the one build.
     */
   private def ensureIvfPqAppendIndex(s: SparkSession, d: String,
       cells: Int, m: Int, pqk: Int, iters: Int)
@@ -2566,7 +2539,7 @@ object DataOps {
     val key = ivfPqKey(d, cells, m, pqk, iters)
     val table = s"graft_ann_idx.ivfpqapp_$key"
     val embs = Tables.embeddings(s, d)
-    val model = annIvfPqModels.computeIfAbsent(s"app_$key", _ => {
+    val model = annIvfPqModels(s"app_$key") {
       s.sql("CREATE DATABASE IF NOT EXISTS graft_ann_idx LOCATION " +
         s"'$annIdxLocation'")
       val (coarse, pq) = graft.api.Similarity.writeIvfPqIndex(
@@ -2576,7 +2549,7 @@ object DataOps {
         embs.filter(col("vec_id") % 3 === 0), "vec_id", "embedding",
         table, coarse, pq)
       (coarse, pq)
-    })
+    }
     (table, model)
   }
 
@@ -3162,9 +3135,10 @@ object DataOps {
       // the retrain maintenance action itself, once per fixture: train
       // fresh codebooks on the FULL source cohort and rewrite a fresh
       // coded artifact under the old table's catalog bucket spec
-      val model2 = annIvfPqModels.computeIfAbsent(s"retr_$key", _ =>
+      val model2 = annIvfPqModels(s"retr_$key") {
         graft.api.Similarity.retrainIvfPqIndex(s, embs, "vec_id",
-          "embedding", table, retr, CELLS, M, PQK, ITERS))
+          "embedding", table, retr, CELLS, M, PQK, ITERS)
+      }
       val before = graft.api.Similarity.ivfPqDistortion(s, table, embs,
           "vec_id", "embedding", model._1, model._2)
         .select(col("cell"), col("n_vecs").as("n_before"),
@@ -3221,7 +3195,7 @@ object DataOps {
     Q("ann_ivfpq_retrain", fn, Some(sql))
   }
 
-  /** The coded index's INGEST leg (r15 — completing the PQ artifact's
+  /** The coded index's INGEST leg (completing the PQ artifact's
     * lifecycle through append, the coded twin of `ann_index_append`):
     * train + persist the coded index on the INITIAL cohort only
     * (vec_id % 3 ≠ 0), commit a new delivery (vec_id % 3 = 0) via
@@ -3266,7 +3240,7 @@ object DataOps {
     Q("ann_ivfpq_append", fn, Some(sql))
   }
 
-  /** Drift audit of the CODED artifact (r15 — the monitoring leg the
+  /** Drift audit of the CODED artifact (the monitoring leg the
     * coded lifecycle still lacked, the codes-domain analog of
     * `ann_index_drift`): after deliveries accrete against the FROZEN
     * codebooks, report per cell
@@ -3403,7 +3377,7 @@ object DataOps {
     Q("ann_ivfpq_drift", fn, Some(ivfPqDriftOracleSql))
   }
 
-  /** Compaction of the CODED artifact (r15 — the coded lifecycle's
+  /** Compaction of the CODED artifact (the coded lifecycle's
     * maintenance leg, completing build → append → COMPACT → serve →
     * recall; retrain stays source-side by design): the
     * `ann_ivfpq_append` artifact's delivery fragments are rewritten
@@ -3427,10 +3401,9 @@ object DataOps {
       val (table, model) = ensureIvfPqAppendIndex(s, d, CELLS, M, PQK, ITERS)
       val key = ivfPqKey(d, CELLS, M, PQK, ITERS)
       val cmp = s"graft_ann_idx.ivfpqcmp_$key"
-      annIdxCompacted.computeIfAbsent(s"pq_$key", _ => {
+      annIdxCompacted(s"pq_$key") {
         graft.api.Similarity.compactIvfIndex(s, table, cmp)
-        java.lang.Boolean.TRUE
-      })
+      }
       val batch = Tables.embeddings(s, d).filter(col("vec_id") % 97 === 5)
       graft.api.Similarity
         .ivfPqQueryIndexed(batch, "vec_id", "embedding", cmp,
@@ -3455,7 +3428,7 @@ object DataOps {
     Q("ann_ivfpq_compact", fn, Some(sql))
   }
 
-  /** Empirical ANN RECALL audit (r12 — the trained-IVF twin of
+  /** Empirical ANN RECALL audit (the trained-IVF twin of
     * llm_lsh_recall_audit): on a 1-in-20 vector slice, exact all-pairs
     * cosine top-k (the ground truth IVF is supposed to find —
     * quadratic, which is exactly why it runs on the CAPPED slice and

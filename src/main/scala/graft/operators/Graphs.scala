@@ -65,36 +65,20 @@ object Graphs {
     * fan-in cell (≫10⁶ users) were possible upstream, reintroduce a
     * count pre-pass before collecting.
     */
-  /** Per-(session, fixture) memo of the derived pair graph (r12): the
-    * 2-shuffle cellPairs build is the shared FIXED COST of all 32
-    * graph queries (~2.6 s at sf0.1, PERF.md round 12 — the
-    * dominant term of graph_ktruss's official cost), and every query
-    * re-ran it. The memoized value is the localCheckpoint'd (u < v)
-    * pair list — |E| longs, 207k rows at sf0.1. This is exactly what
-    * a production deployment does: materialize the edge derivation
-    * once, run the analytics suite against the artifact. Same
-    * dead-context purge rule as the other memos.
+  /** Per-(session, events [[graft.Fixtures.key]], tag) memo of the
+    * derived pair graph: the 2-shuffle cellPairs build is the shared
+    * FIXED COST of all the graph queries (~2.6 s at sf0.1, PERF.md
+    * round 12), and every query re-ran it. The memoized value is the
+    * localCheckpoint'd (u < v) pair list — |E| longs, 207k rows at
+    * sf0.1. This is exactly what a production deployment does:
+    * materialize the edge derivation once, run the analytics suite
+    * against the artifact. Session-bound, at most 16 entries.
     */
-  private val pairsMemo = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), DataFrame]
-  // Evictions release their localCheckpoint blocks via
-  // graft.api.Similarity.releaseCheckpoint (r12 ADVICE): wholesale
-  // clear() used to leave them to GC/ContextCleaner.
-  private def releaseCheckpoint(df: DataFrame): Unit =
-    graft.api.Similarity.releaseCheckpoint(df)
+  private val pairsMemo = graft.Memo.sessionBound[
+    (SparkSession, String, String), DataFrame](bound = 16)(identity)
   private def memoPairs(s: SparkSession, d: String, tag: String)(
-      build: => DataFrame): DataFrame = {
-    val f = new java.io.File(s"$d/events.parquet")
-    val key = (s, s"${tag}_${d}_${graft.Fixtures.fingerprint(f)}")
-    val it = pairsMemo.entrySet().iterator()
-    while (it.hasNext)
-      if (it.next().getValue.sparkSession.sparkContext.isStopped) it.remove()
-    if (pairsMemo.size > 16) {
-      pairsMemo.values().forEach(releaseCheckpoint(_))
-      pairsMemo.clear()
-    }
-    pairsMemo.computeIfAbsent(key, _ => build.localCheckpoint())
-  }
+      build: => DataFrame): DataFrame =
+    pairsMemo((s, graft.Fixtures.key(d, "events"), tag))(build.localCheckpoint())
   private[graft] def pairs(s: SparkSession, d: String): DataFrame =
     memoPairs(s, d, "hour")(
       cellPairs(Tables.events(s, d)
@@ -1378,29 +1362,19 @@ object Graphs {
     * every round: claim (MATERIALIZED), contract (a recursive
     * walk per round — the graph_components device), relabel.
     */
-  /** Per-(session, fixture) memo for the finished Borůvka forest
-    * (r13): the MST is a fixed artifact of the corpus exactly like the
-    * SCC label table — every bench pass re-ran the ~8-round
-    * claim/contract loop (9.5 s at sf0.1 on the r13 sampled graph)
-    * for a bit-identical 149-row tree. Same dead-context purge +
-    * eviction-release rules as sccMemo.
+  /** Per-(session, events [[graft.Fixtures.key]]) memo for the finished
+    * Borůvka forest: the MST is a fixed artifact of the corpus exactly
+    * like the SCC label table — every bench pass re-ran the ~8-round
+    * claim/contract loop (9.5 s at sf0.1) for a bit-identical 149-row
+    * tree. Session-bound, at most 16 entries.
     */
-  private val mstMemo = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), DataFrame]
+  private val mstMemo = graft.Memo.sessionBound[
+    (SparkSession, String), DataFrame](bound = 16)(identity)
 
   private def mstQuery: Q = {
     val ROUNDS = 12
     def fn(s: SparkSession, d: String): DataFrame = {
-      val fKey = new java.io.File(s"$d/events.parquet")
-      val memoKey = (s, s"${d}_${graft.Fixtures.fingerprint(fKey)}")
-      val it = mstMemo.entrySet().iterator()
-      while (it.hasNext)
-        if (it.next().getValue.sparkSession.sparkContext.isStopped) it.remove()
-      if (mstMemo.size > 16) {
-        mstMemo.values().forEach(releaseCheckpoint(_))
-        mstMemo.clear()
-      }
-      mstMemo.computeIfAbsent(memoKey, _ => computeMst(s, d))
+      mstMemo((s, graft.Fixtures.key(d, "events")))(computeMst(s, d))
         .orderBy("u", "v")
     }
     def computeMst(s: SparkSession, d: String): DataFrame = {
@@ -2166,27 +2140,17 @@ object Graphs {
        |  FROM dnodes n LEFT JOIN mutual m ON m.mv = n.node
        |  GROUP BY n.node)""".stripMargin
 
-  /** Per-(session, fixture) memo for the SCC label table: THREE
-    * declared queries (graph_scc / graph_condensation / graph_bowtie)
-    * ride the same iterative peel loop; the memoized value is the
-    * final localCheckpoint'd (node, scc_id) table — model-sized. Same
-    * dead-context purge rule as the dedup memos.
+  /** Per-(session, events [[graft.Fixtures.key]]) memo for the SCC
+    * label table: THREE declared queries (graph_scc /
+    * graph_condensation / graph_bowtie) ride the same iterative peel
+    * loop; the memoized value is the final localCheckpoint'd (node,
+    * scc_id) table — model-sized. Session-bound, at most 16 entries.
     */
-  private val sccMemo = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), DataFrame]
-  private def sccLabels(s: SparkSession, d: String): DataFrame = {
-    val f = new java.io.File(s"$d/events.parquet")
-    val key = (s, s"${d}_${graft.Fixtures.fingerprint(f)}")
-    val it = sccMemo.entrySet().iterator()
-    while (it.hasNext)
-      if (it.next().getValue.sparkSession.sparkContext.isStopped) it.remove()
-    if (sccMemo.size > 16) {
-      sccMemo.values().forEach(releaseCheckpoint(_))
-      sccMemo.clear()
-    }
-    sccMemo.computeIfAbsent(key, _ => graft.api.Graph
+  private val sccMemo = graft.Memo.sessionBound[
+    (SparkSession, String), DataFrame](bound = 16)(identity)
+  private def sccLabels(s: SparkSession, d: String): DataFrame =
+    sccMemo((s, graft.Fixtures.key(d, "events")))(graft.api.Graph
       .stronglyConnectedComponents(directedEdges(s, d), "du", "dv"))
-  }
 
   /** Strongly connected components of the coin-directed co-activity
     * graph ([[graft.api.Graph.stronglyConnectedComponents]] — the
@@ -2298,14 +2262,14 @@ object Graphs {
     * [[sccQuery]]'s machinery with two multi-source BFS passes; the
     * oracle classifies from the same recursive closure.
     */
-  /** Per-(session, fixture) memo for the bow-tie (node, category)
-    * classification: like [[sccLabels]], the two multi-source BFS
-    * fixpoints are a derived per-dataset artifact — computed once,
-    * re-aggregated cheaply by every later invocation. Same
-    * dead-context purge + eviction-release rules as sccMemo.
+  /** Per-(session, events [[graft.Fixtures.key]]) memo for the bow-tie
+    * (node, category) classification: like [[sccLabels]], the two
+    * multi-source BFS fixpoints are a derived per-dataset artifact —
+    * computed once, re-aggregated cheaply by every later invocation.
+    * Session-bound, at most 16 entries.
     */
-  private val bowtieMemo = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), DataFrame]
+  private val bowtieMemo = graft.Memo.sessionBound[
+    (SparkSession, String), DataFrame](bound = 16)(identity)
 
   private def bowtieQuery: Q = {
     def classify(s: SparkSession, d: String): DataFrame = {
@@ -2328,16 +2292,7 @@ object Graphs {
         .localCheckpoint()
     }
     def fn(s: SparkSession, d: String): DataFrame = {
-      val f = new java.io.File(s"$d/events.parquet")
-      val key = (s, s"${d}_${graft.Fixtures.fingerprint(f)}")
-      val it = bowtieMemo.entrySet().iterator()
-      while (it.hasNext)
-        if (it.next().getValue.sparkSession.sparkContext.isStopped) it.remove()
-      if (bowtieMemo.size > 16) {
-        bowtieMemo.values().forEach(releaseCheckpoint(_))
-        bowtieMemo.clear()
-      }
-      val cls = bowtieMemo.computeIfAbsent(key, _ => classify(s, d))
+      val cls = bowtieMemo((s, graft.Fixtures.key(d, "events")))(classify(s, d))
       val tot = cls.count().toDouble
       cls.groupBy("category").agg(count(lit(1)).as("n_nodes"))
         .withColumn("share",

@@ -518,11 +518,8 @@ object Joins {
     // fingerprint so repeated harness runs pay the layout once.
     Q("join_bucketed_colocated",
       (s, d) => {
-        val src = new java.io.File(s"$d/lineitem.parquet")
-        // table-identifier-safe key: dots (sf0.01) are NOT allowed in
-        // table names, unlike the path-keyed staging dirs elsewhere
-        val key = s"${d.replaceAll("[^A-Za-z0-9_]", "_")}_${graft.Fixtures.fingerprint(src)}"
-        bktTables.computeIfAbsent(key, _ => {
+        val key = graft.Fixtures.tableKey(d, "lineitem")
+        bktTables((key, graft.Fixtures.fingerprint(s"$d/orders.parquet"))) {
           s.sql("CREATE DATABASE IF NOT EXISTS graft_bkt LOCATION " +
             s"'$bktLocation'")
           Tables.lineitem(s, d)
@@ -536,8 +533,7 @@ object Joins {
             .write.mode("overwrite")
             .bucketBy(8, "o_orderkey").sortBy("o_orderkey")
             .saveAsTable(s"graft_bkt.orders_$key")
-          key
-        })
+        }
         val li = s.table(s"graft_bkt.lineitem_$key")
         val ord = s.table(s"graft_bkt.orders_$key")
         li.hint("MERGE")
@@ -679,8 +675,7 @@ object Joins {
     // fingerprint-keyed.
     Q("join_dpp_prune",
       (s, d) => {
-        val src = new java.io.File(s"$d/orders.parquet")
-        val key = s"${d.replaceAll("[^A-Za-z0-9._-]", "_")}_${graft.Fixtures.fingerprint(src)}"
+        val key = graft.Fixtures.key(d, "orders")
         val factTmp = s"${sys.props("java.io.tmpdir")}/graft_part_orders_$key"
         if (!new java.io.File(s"$factTmp/_SUCCESS").exists()) {
           Tables.orders(s, d).write.mode("overwrite")
@@ -790,6 +785,9 @@ object Joins {
   /** Per-JVM home for join_bucketed_colocated's bucketed tables. */
   private lazy val bktLocation =
     java.nio.file.Files.createTempDirectory("graft_bkt").toString
-  private val bktTables =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+  /** (lineitem [[graft.Fixtures.tableKey]], orders fingerprint) → both
+    * bucketed tables are written. At most 64 fixtures; an evicted key
+    * only rewrites them.
+    */
+  private val bktTables = graft.Memo[(String, String), Unit](bound = 64)
 }

@@ -25,23 +25,39 @@ object Llm {
   private lazy val dedupIdxLocation =
     java.nio.file.Files.createTempDirectory("graft_dedup_idx").toString
 
-  /** Band-index build memo, keyed like the k-means codebook cache
-    * (r11, VERDICT #6): the persisted index is the artifact of the
-    * continuous-ingestion story — build once per corpus, serve every
-    * batch — but the query previously re-ran writeBandIndex on every
-    * invocation, so the bench's 3 passes + warm-up measured FOUR index
-    * builds (the r10 1.55 → 2.11 s "drift" was build-cost variance,
-    * not the serve path). Key = fixture dir + (name, size, mtime) of
-    * every file under documents.parquet, so a regenerated fixture
-    * rebuilds automatically.
+  /** Band-index artifact table → it is built. The persisted index is
+    * the artifact of the continuous-ingestion story: build once per
+    * corpus, serve every batch. Every table lives in [[dedupIdxDb]],
+    * named by the documents' [[graft.Fixtures.tableKey]], so a
+    * rewritten corpus builds into a fresh database instead of being
+    * served the old tables. At most 64 tables; an evicted one is only
+    * rebuilt.
     */
-  private val bandIndexMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private[graft] def docsFingerprint(d: String): String = {
-    // delegates to the repo-wide convention (graft.Fixtures, r15): a
-    // recursive (name, length, mtime) walk collapsed to an MD5 digest
-    val f = new java.io.File(s"$d/documents.parquet")
-    if (f.exists) graft.Fixtures.fingerprint(f) else d
+  private val bandIndexMemo = graft.Memo[String, Unit](bound = 64)
+
+  /** The band-index database of fixture `d`, created on first use under
+    * the per-JVM home: a FIXED path would collide across JVMs (catalog
+    * metadata does not outlive the session, so a later JVM's CREATE
+    * TABLE finds the previous run's orphaned directory →
+    * LOCATION_ALREADY_EXISTS).
+    */
+  private def dedupIdxDb(s: SparkSession, d: String): String = {
+    val db = s"graft_dedup_idx_${graft.Fixtures.tableKey(d, "documents")}"
+    s.sql(s"CREATE DATABASE IF NOT EXISTS $db LOCATION '$dedupIdxLocation/$db'")
+    db
+  }
+
+  /** The standing corpus band index (doc_id % 10 >= 2) of fixture `d`,
+    * built once; the dedup_index_* queries serve batches against it.
+    */
+  private def corpusIndex(s: SparkSession, d: String): String = {
+    val corpus = s"${dedupIdxDb(s, d)}.corpus"
+    bandIndexMemo(corpus) {
+      graft.api.Dedup.writeBandIndex(
+        Tables.documents(s, d).filter(col("doc_id") % 10 >= 2), "doc_id",
+        "text", corpus, K, BANDS)
+    }
+    corpus
   }
 
   /** DuckDB twin of the exploded unigram token stream (Spark side lives
@@ -340,28 +356,15 @@ object Llm {
     Q("dedup_index_incremental",
       (s, d) => {
         val docs = Tables.documents(s, d)
-        // explicit per-JVM tmp location: not a cwd-relative warehouse
-        // the invoking process may not own, and unique per process —
-        // a FIXED path collides across JVMs (catalog metadata does not
-        // outlive the session, so a later JVM's CREATE TABLE finds the
-        // previous run's orphaned directory → LOCATION_ALREADY_EXISTS)
-        s.sql("CREATE DATABASE IF NOT EXISTS graft_dedup_idx LOCATION " +
-          s"'$dedupIdxLocation'")
-        val fpNow = docsFingerprint(d)
-        if (bandIndexMemo.get("graft_dedup_idx.corpus") != fpNow) {
-          graft.api.Dedup.writeBandIndex(
-            docs.filter(col("doc_id") % 10 >= 2), "doc_id", "text",
-            "graft_dedup_idx.corpus", K, BANDS)
-          bandIndexMemo.put("graft_dedup_idx.corpus", fpNow)
-        }
+        val corpus = corpusIndex(s, d)
         graft.api.Dedup.incrementalNearDupsIndexed(
           docs.filter(col("doc_id") % 10 < 2), "doc_id", "text",
-          "graft_dedup_idx.corpus", 0.6, K, BANDS)
+          corpus, 0.6, K, BANDS)
           .orderBy("doc_id")
       },
       Some(SQL_INCREMENTAL)),
 
-    // Band-index COMPACTION (r13 verdict Next #3 — the dedup twin of
+    // Band-index COMPACTION (the dedup twin of
     // ann_index_compact, completing the band artifact's lifecycle:
     // build → serve batches → append deliveries → compact): the same
     // corpus content as dedup_index_incremental's artifact is built
@@ -381,12 +384,10 @@ object Llm {
     Q("dedup_index_compact",
       (s, d) => {
         val docs = Tables.documents(s, d)
-        s.sql("CREATE DATABASE IF NOT EXISTS graft_dedup_idx LOCATION " +
-          s"'$dedupIdxLocation'")
-        val fpNow = docsFingerprint(d)
-        val src = "graft_dedup_idx.cmpsrc"
-        val dst = "graft_dedup_idx.cmpdst"
-        if (bandIndexMemo.get(dst) != fpNow) {
+        val db = dedupIdxDb(s, d)
+        val src = s"$db.cmpsrc"
+        val dst = s"$db.cmpdst"
+        bandIndexMemo(dst) {
           val m10 = col("doc_id") % 10
           graft.api.Dedup.writeBandIndex(
             docs.filter(m10.isin(2, 3, 4)), "doc_id", "text", src, K, BANDS)
@@ -394,13 +395,12 @@ object Llm {
             graft.api.Dedup.appendToBandIndex(
               docs.filter(m10.isin(del: _*)), "doc_id", "text", src, K, BANDS))
           graft.api.Dedup.compactBandIndex(s, src, dst)
-          bandIndexMemo.put(dst, fpNow)
         }
         bandIndexAudit(s, dst)
       },
       Some(SQL_BAND_AUDIT)),
 
-    // Band-index DRIFT audit (r14 — the dedup twin of ann_index_drift,
+    // Band-index DRIFT audit (the dedup twin of ann_index_drift,
     // making the two persisted-index lifecycles symmetric: build →
     // serve → append → compact → DRIFT): per band, the standing
     // corpus index's bucket census (bucket count, rows, max bucket —
@@ -419,16 +419,7 @@ object Llm {
     Q("dedup_index_drift",
       (s, d) => {
         val docs = Tables.documents(s, d)
-        s.sql("CREATE DATABASE IF NOT EXISTS graft_dedup_idx LOCATION " +
-          s"'$dedupIdxLocation'")
-        val fpNow = docsFingerprint(d)
-        if (bandIndexMemo.get("graft_dedup_idx.corpus") != fpNow) {
-          graft.api.Dedup.writeBandIndex(
-            docs.filter(col("doc_id") % 10 >= 2), "doc_id", "text",
-            "graft_dedup_idx.corpus", K, BANDS)
-          bandIndexMemo.put("graft_dedup_idx.corpus", fpNow)
-        }
-        val cb = s.table("graft_dedup_idx.corpus_bands")
+        val cb = s.table(s"${corpusIndex(s, d)}_bands")
         val corpusStats = cb.groupBy("band", "bhash")
           .agg(count(lit(1)).as("sz"))
           .groupBy("band")
@@ -500,20 +491,10 @@ object Llm {
       (s, d) => {
         val BANDS2 = 2
         val docs = Tables.documents(s, d)
-        s.sql("CREATE DATABASE IF NOT EXISTS graft_dedup_idx LOCATION " +
-          s"'$dedupIdxLocation'")
-        val fpNow = docsFingerprint(d)
-        if (bandIndexMemo.get("graft_dedup_idx.corpus") != fpNow) {
-          graft.api.Dedup.writeBandIndex(
-            docs.filter(col("doc_id") % 10 >= 2), "doc_id", "text",
-            "graft_dedup_idx.corpus", K, BANDS)
-          bandIndexMemo.put("graft_dedup_idx.corpus", fpNow)
-        }
-        val retr = "graft_dedup_idx.retr"
-        if (bandIndexMemo.get(retr) != fpNow) {
-          graft.api.Dedup.retrainBandIndex(
-            s, "graft_dedup_idx.corpus", retr, K, BANDS2)
-          bandIndexMemo.put(retr, fpNow)
+        val corpus = corpusIndex(s, d)
+        val retr = s"${dedupIdxDb(s, d)}.retr"
+        bandIndexMemo(retr) {
+          graft.api.Dedup.retrainBandIndex(s, corpus, retr, K, BANDS2)
         }
         def census(table: String, batchBands: Int): DataFrame = {
           val cb = s.table(s"${table}_bands")
@@ -537,7 +518,7 @@ object Llm {
               round(coalesce(col("n_batch_hits"), lit(0L)).cast("double")
                 / col("n_batch_rows"), 4).as("hit_rate"))
         }
-        val before = census("graft_dedup_idx.corpus", BANDS)
+        val before = census(corpus, BANDS)
           .select(col("band"), col("n_buckets").as("nb_before"),
             col("n_rows").as("rows_before"),
             col("max_bucket").as("maxb_before"),

@@ -52,32 +52,22 @@ object Pipeline {
     transform(sequence(lit(1), size(t) - 7),
       i => concat_ws(" ", (0 to 7).map(o => element_at(t, i + o)): _*))
 
-  /** Per-(session, fixture, query) memo for the export_txn_* family
-    * (r12, VERDICT next #5): each leg stages its commit-log scenario
-    * (3-5 parquet writes + a JSON log) into a fresh temp dir on EVERY
-    * invocation — an honest first-run cost (1.4-2.7 s each, ~8-10 s of
-    * the official 3-pass bench) but pure re-staging of identical bytes
-    * after the first. The staged scenario is a pure function of the
-    * fixture, so the final localCheckpoint'd MODEL-SIZED result (3-10
-    * rows) is cached per (session, fixture fingerprint, query), the
-    * codec-roundtrip/dedup-index convention. The session is part of the
-    * key and dead-context entries are purged (the compCache rule —
-    * checkpointed RDDs die with their SparkContext).
+  /** Per-(session, orders [[graft.Fixtures.key]], query) memo for the
+    * export_txn_* family: each leg stages its commit-log scenario (3-5
+    * parquet writes + a JSON log) into a fresh temp dir — an honest
+    * first-run cost, but pure re-staging of identical bytes after the
+    * first. The staged scenario is a pure function of the fixture, so
+    * the final localCheckpoint'd MODEL-SIZED result (3-10 rows) is
+    * memoized. Session-bound: checkpointed RDDs die with their
+    * SparkContext. At most 32 entries.
     */
-  private val txnMemo = new java.util.concurrent.ConcurrentHashMap[
+  private val txnMemo = graft.Memo.sessionBound[
     (org.apache.spark.sql.SparkSession, String, String),
-    org.apache.spark.sql.DataFrame]
+    org.apache.spark.sql.DataFrame](bound = 32)(identity)
   private def memoTxn(s: org.apache.spark.sql.SparkSession, d: String,
       name: String)(
-      build: => org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
-    val f = new java.io.File(s"$d/orders.parquet")
-    val key = (s, s"${d}_${graft.Fixtures.fingerprint(f)}", name)
-    val it = txnMemo.entrySet().iterator()
-    while (it.hasNext)
-      if (it.next().getValue.sparkSession.sparkContext.isStopped) it.remove()
-    if (txnMemo.size > 32) txnMemo.clear()
-    txnMemo.computeIfAbsent(key, _ => build)
-  }
+      build: => org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
+    txnMemo((s, graft.Fixtures.key(d, "orders"), name))(build)
 
   val queries: Seq[Q] = Seq(
 
@@ -1047,8 +1037,7 @@ object Pipeline {
       (s, d) => {
         import java.nio.file.{Files, Paths}
         import scala.jdk.CollectionConverters._
-        val src = new java.io.File(s"$d/events.parquet")
-        val key = s"${d.replaceAll("[^A-Za-z0-9._-]", "_")}_${graft.Fixtures.fingerprint(src)}"
+        val key = graft.Fixtures.key(d, "events")
         val root = s"${sys.props("java.io.tmpdir")}/graft_snap_$key"
         val dataDir = s"$root/data"
         def partFiles(): Seq[String] =

@@ -55,8 +55,7 @@ object Scans {
         // fingerprint (size + mtime): a regenerated fixture invalidates
         // the cached partitioned copy instead of being silently shadowed
         // by it, and distinct dataset paths can never collide.
-        val src = new java.io.File(s"$d/orders.parquet")
-        val key = s"${d.replaceAll("[^A-Za-z0-9._-]", "_")}_${graft.Fixtures.fingerprint(src)}"
+        val key = graft.Fixtures.key(d, "orders")
         val tmp = s"${sys.props("java.io.tmpdir")}/graft_part_orders_$key"
         if (!new java.io.File(s"$tmp/_SUCCESS").exists()) {
           Tables.orders(s, d).write.mode("overwrite")
@@ -81,8 +80,7 @@ object Scans {
     // normalized to BIGINT on both sides.
     Q("scan_csv_roundtrip",
       (s, d) => {
-        val src = new java.io.File(s"$d/nation.parquet")
-        val key = s"${d.replaceAll("[^A-Za-z0-9._-]", "_")}_${graft.Fixtures.fingerprint(src)}"
+        val key = graft.Fixtures.key(d, "nation")
         val tmp = s"${sys.props("java.io.tmpdir")}/graft_csv_nation_$key"
         if (!new java.io.File(s"$tmp/_SUCCESS").exists()) {
           Tables.nation(s, d).write.mode("overwrite")
@@ -102,8 +100,7 @@ object Scans {
     // natural JSON widths — so the aggregate mirrors directly.
     Q("scan_json_roundtrip",
       (s, d) => {
-        val src = new java.io.File(s"$d/customer.parquet")
-        val key = s"${d.replaceAll("[^A-Za-z0-9._-]", "_")}_${graft.Fixtures.fingerprint(src)}"
+        val key = graft.Fixtures.key(d, "customer")
         val tmp = s"${sys.props("java.io.tmpdir")}/graft_json_customer_$key"
         if (!new java.io.File(s"$tmp/_SUCCESS").exists()) {
           Tables.customer(s, d)
@@ -126,8 +123,7 @@ object Scans {
     // write→read path preserves values exactly).
     Q("scan_orc_roundtrip",
       (s, d) => {
-        val src = new java.io.File(s"$d/supplier.parquet")
-        val key = s"${d.replaceAll("[^A-Za-z0-9._-]", "_")}_${graft.Fixtures.fingerprint(src)}"
+        val key = graft.Fixtures.key(d, "supplier")
         val tmp = s"${sys.props("java.io.tmpdir")}/graft_orc_supplier_$key"
         if (!new java.io.File(s"$tmp/_SUCCESS").exists()) {
           Tables.supplier(s, d).write.mode("overwrite").orc(tmp)
@@ -153,8 +149,7 @@ object Scans {
     // fixture like every staged-artifact query.
     Q("scan_codec_roundtrip",
       (s, d) => {
-        val src = new java.io.File(s"$d/supplier.parquet")
-        val key = s"${d.replaceAll("[^A-Za-z0-9._-]", "_")}_${graft.Fixtures.fingerprint(src)}"
+        val key = graft.Fixtures.key(d, "supplier")
         val codecs = Seq("snappy", "gzip", "zstd")
         codecs.map { c =>
           val tmp =
@@ -175,7 +170,7 @@ object Scans {
               |  c(codec)
               |GROUP BY codec ORDER BY codec""".stripMargin)),
 
-    // PARQUET BLOOM-FILTER write knob (r14) — the point-lookup axis
+    // PARQUET BLOOM-FILTER write knob — the point-lookup axis
     // footer min/max stats cannot serve: o_custkey is high-cardinality
     // and UNSORTED within the table, so every row group's [min, max]
     // range covers any probe key and zone-map skipping degenerates to
@@ -192,8 +187,7 @@ object Scans {
     // PushedFilters.
     Q("scan_parquet_bloom",
       (s, d) => {
-        val src = new java.io.File(s"$d/orders.parquet")
-        val key = s"${d.replaceAll("[^A-Za-z0-9._-]", "_")}_${graft.Fixtures.fingerprint(src)}"
+        val key = graft.Fixtures.key(d, "orders")
         val tmp = s"${sys.props("java.io.tmpdir")}/graft_bloom_orders_$key"
         if (!new java.io.File(s"$tmp/_SUCCESS").exists()) {
           // dictionary encoding is disabled for the bloom column:
@@ -230,8 +224,7 @@ object Scans {
     // not file metadata. Oracle recomputes from the original parquet.
     Q("scan_text_roundtrip",
       (s, d) => {
-        val src = new java.io.File(s"$d/region.parquet")
-        val key = s"${d.replaceAll("[^A-Za-z0-9._-]", "_")}_${graft.Fixtures.fingerprint(src)}"
+        val key = graft.Fixtures.key(d, "region")
         val tmp = s"${sys.props("java.io.tmpdir")}/graft_text_region_$key"
         if (!new java.io.File(s"$tmp/_SUCCESS").exists()) {
           Tables.region(s, d)
@@ -255,8 +248,7 @@ object Scans {
     // original un-partitioned parquet by the same key.
     Q("catalog_partition_skew",
       (s, d) => {
-        val src = new java.io.File(s"$d/orders.parquet")
-        val key = s"${d.replaceAll("[^A-Za-z0-9._-]", "_")}_${graft.Fixtures.fingerprint(src)}"
+        val key = graft.Fixtures.key(d, "orders")
         val tmp = s"${sys.props("java.io.tmpdir")}/graft_part_orders_$key"
         if (!new java.io.File(s"$tmp/_SUCCESS").exists()) {
           Tables.orders(s, d).write.mode("overwrite")
@@ -285,8 +277,7 @@ object Scans {
     // query proves the avro write→read path preserves values exactly.
     Q("scan_avro_roundtrip",
       (s, d) => {
-        val src = new java.io.File(s"$d/part.parquet")
-        val key = s"${d.replaceAll("[^A-Za-z0-9._-]", "_")}_${graft.Fixtures.fingerprint(src)}"
+        val key = graft.Fixtures.key(d, "part")
         val tmp = s"${sys.props("java.io.tmpdir")}/graft_avro_part_$key"
         if (!new java.io.File(s"$tmp/_SUCCESS").exists()) {
           Tables.part(s, d).write.mode("overwrite").format("org.apache.spark.sql.avro.AvroFileFormat").save(tmp)
@@ -312,8 +303,7 @@ object Scans {
     // 4.6 s at sf0.1, within sight of the 5 s red line).
     Q("scan_xml_roundtrip",
       (s, d) => {
-        val src = new java.io.File(s"$d/customer.parquet")
-        val key = s"${d.replaceAll("[^A-Za-z0-9._-]", "_")}_${graft.Fixtures.fingerprint(src)}"
+        val key = graft.Fixtures.key(d, "customer")
         val tmp = s"${sys.props("java.io.tmpdir")}/graft_xml_customer_$key"
         if (!new java.io.File(s"$tmp/_SUCCESS").exists()) {
           Tables.customer(s, d)
@@ -341,8 +331,7 @@ object Scans {
     // union from the original table.
     Q("scan_schema_evolution",
       (s, d) => {
-        val src = new java.io.File(s"$d/nation.parquet")
-        val key = s"${d.replaceAll("[^A-Za-z0-9._-]", "_")}_${graft.Fixtures.fingerprint(src)}"
+        val key = graft.Fixtures.key(d, "nation")
         val tmp = s"${sys.props("java.io.tmpdir")}/graft_evolve_nation_$key"
         if (!new java.io.File(s"$tmp/gen2/_SUCCESS").exists()) {
           Tables.nation(s, d).select(lit(1L).as("gen"), col("n_nationkey"),
@@ -375,8 +364,7 @@ object Scans {
     Q("scan_json_corrupt",
       (s, d) => {
         import org.apache.spark.sql.types._
-        val src = new java.io.File(s"$d/nation.parquet")
-        val key = s"${d.replaceAll("[^A-Za-z0-9._-]", "_")}_${graft.Fixtures.fingerprint(src)}"
+        val key = graft.Fixtures.key(d, "nation")
         val tmp = s"${sys.props("java.io.tmpdir")}/graft_json_corrupt_$key"
         if (!new java.io.File(s"$tmp/_SUCCESS").exists()) {
           import s.implicits._
@@ -459,8 +447,7 @@ object Scans {
     // restored afterwards so no other query inherits silent skipping.
     Q("scan_corrupt_recovery",
       (s, d) => {
-        val src = new java.io.File(s"$d/customer.parquet")
-        val key = s"${d.replaceAll("[^A-Za-z0-9._-]", "_")}_${graft.Fixtures.fingerprint(src)}"
+        val key = graft.Fixtures.key(d, "customer")
         val tmp = s"${sys.props("java.io.tmpdir")}/graft_corrupt_file_$key"
         val dir = new java.io.File(tmp)
         if (!new java.io.File(s"$tmp/.staged").exists()) {
@@ -750,8 +737,7 @@ object Scans {
     // packing of small blobs into tasks.
     Q("scan_binary_files",
       (s, d) => {
-        val src = new java.io.File(s"$d/documents.parquet")
-        val key = s"${d.replaceAll("[^A-Za-z0-9._-]", "_")}_${graft.Fixtures.fingerprint(src)}"
+        val key = graft.Fixtures.key(d, "documents")
         val tmp = new java.io.File(
           s"${sys.props("java.io.tmpdir")}/graft_bin_$key")
         if (!new java.io.File(tmp, "_STAGED").exists()) {
@@ -882,8 +868,7 @@ object Scans {
     // roundtrip must lose nothing.
     Q("scan_glob_options",
       (s, d) => {
-        val src = new java.io.File(s"$d/events.parquet")
-        val key = s"${d.replaceAll("[^A-Za-z0-9._-]", "_")}_${graft.Fixtures.fingerprint(src)}"
+        val key = graft.Fixtures.key(d, "events")
         val tmp = s"${sys.props("java.io.tmpdir")}/graft_glob_events_$key"
         if (!new java.io.File(s"$tmp/_STAGED").exists()) {
           Tables.events(s, d).write.mode("overwrite")
@@ -1002,20 +987,18 @@ object Scans {
     // this JVM's tmpdir.
     Q("scan_jdbc_roundtrip",
       (s, d) => {
-        val src = new java.io.File(s"$d/supplier.parquet")
-        val key = s"${d.replaceAll("[^A-Za-z0-9_]", "_")}_${graft.Fixtures.fingerprint(src)}"
+        val key = graft.Fixtures.tableKey(d, "supplier")
         val db = s"${sys.props("java.io.tmpdir")}/graft_derby_$key"
         val url = s"jdbc:derby:$db;create=true"
         val props = new java.util.Properties()
         props.setProperty("driver", "org.apache.derby.jdbc.EmbeddedDriver")
         val table = s"supplier_$key"
-        staged.computeIfAbsent(table, _ => {
+        staged(table) {
           Tables.supplier(s, d)
             .select(col("s_suppkey"), col("s_name"), col("s_nationkey"),
               col("s_acctbal"))
             .write.mode("overwrite").jdbc(url, table, props)
-          table
-        })
+        }
         val b = Tables.supplier(s, d)
           .agg(min(col("s_suppkey").cast("long")),
             max(col("s_suppkey").cast("long"))).head()
@@ -1048,11 +1031,10 @@ object Scans {
     // table; the DESCRIBE readback is catalog-metadata-only.
     Q("catalog_hive_stats",
       (s, d) => {
-        val src = new java.io.File(s"$d/nation.parquet")
-        val key = s"${d.replaceAll("[^A-Za-z0-9_]", "_")}_${graft.Fixtures.fingerprint(src)}"
+        val key = graft.Fixtures.tableKey(d, "nation")
         val tbl = s"nation_stats_$key"
         val statCols = Seq("n_name", "n_nationkey", "n_regionkey")
-        staged.computeIfAbsent(s"stats_$tbl", _ => {
+        staged(s"stats_$tbl") {
           // per-JVM db LOCATION (the join_bucketed_colocated device):
           // the default warehouse dir persists across JVMs, and a
           // fresh catalog refuses to create a table over a leftover
@@ -1063,8 +1045,7 @@ object Scans {
             .saveAsTable(s"graft_stats.$tbl")
           s.sql(s"ANALYZE TABLE graft_stats.$tbl COMPUTE STATISTICS " +
             s"FOR COLUMNS ${statCols.mkString(", ")}")
-          tbl
-        })
+        }
         // "Statistics" row reads "<bytes> bytes, <n> rows"
         val statLine = s.sql(s"DESCRIBE EXTENDED graft_stats.$tbl")
           .filter(col("col_name") === "Statistics")
@@ -1306,8 +1287,11 @@ object Scans {
       })
   ) :+ viewChainQuery
 
-  private val staged =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+  /** Staged table (named by its fixture's [[graft.Fixtures.tableKey]])
+    * → it is written, for scan_jdbc_roundtrip and catalog_hive_stats.
+    * At most 64 tables; an evicted one is rewritten.
+    */
+  private val staged = graft.Memo[String, Unit](bound = 64)
   private lazy val statsDbLocation =
     java.nio.file.Files.createTempDirectory("graft_stats").toString
 

@@ -93,18 +93,22 @@ object Streams {
   private lazy val streamIdxLocation =
     java.nio.file.Files.createTempDirectory("graft_stream_idx").toString
 
-  /** table → source fingerprint for the standing corpus index (the
-    * Llm.bandIndexMemo convention): rebuild only when the fixture
-    * changes, not on every invocation.
+  /** Artifact table → it is built. Each table name carries the
+    * documents' [[graft.Fixtures.tableKey]], so a rewritten corpus
+    * builds a new table instead of being served the old one. At most
+    * 64 tables; an evicted one is only rebuilt.
     */
-  private val streamIdxMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+  private val streamIdxMemo = graft.Memo[String, Unit](bound = 64)
 
-  /** One entry per staged-source fingerprint; computeIfAbsent serializes
-    * concurrent stagers of the same fixture (the map value is just a
-    * completion token — the staged path itself is derived from the key).
+  /** Staging key → staged directory. The memo serializes concurrent
+    * stagers of one fixture: the second waits for the first's copy. At
+    * most 64 staged sources; an evicted key finds its copy on disk.
     */
-  private val stagedDirs = new java.util.concurrent.ConcurrentHashMap[String, String]()
+  private val stagedDirs = graft.Memo[String, String](bound = 64)
+
+  /** stream_dedup_index's standing corpus band index for fixture `d`. */
+  private[graft] def corpusIndex(d: String): String =
+    s"graft_stream_idx.corpus_${graft.Fixtures.tableKey(d, "documents")}"
 
   /** Serializes the shuffle-partition conf flip in [[runToMemory]] so two
     * overlapping streaming queries cannot interleave set/restore and leak
@@ -127,18 +131,16 @@ object Streams {
 
   private def stageDir(d: String, tbl: String): String = {
     import java.nio.file.{Files, Paths, StandardCopyOption}
-    val f = new java.io.File(s"$d/$tbl.parquet")
-    val key =
-      s"${tbl}_${d.replaceAll("[^A-Za-z0-9._-]", "_")}_${graft.Fixtures.fingerprint(f)}"
-    // computeIfAbsent both memoizes and SERIALIZES staging per key: a
-    // second caller blocks until the first finishes, so nobody reads a
+    val key = s"${tbl}_${graft.Fixtures.key(d, tbl)}"
+    // The memo both memoizes and SERIALIZES staging per key: a second
+    // caller blocks until the first finishes, so nobody reads a
     // half-staged file. The copy lands under a temp name and is
     // ATOMIC_MOVE'd into place — a crash mid-copy leaves only the temp
     // file, never a truncated events.parquet that would pass the
     // exists() check on the next run (the fingerprint key is unchanged
     // after a crash, so a truncated final file would poison every later
     // streaming query, including persistent AvailableNow checkpoints).
-    stagedDirs.computeIfAbsent(key, _ => {
+    stagedDirs(key) {
       val target = Paths.get(s"${sys.props("java.io.tmpdir")}/graft_stream_$key")
       val dest = target.resolve(s"$tbl.parquet")
       if (!Files.exists(dest)) {
@@ -154,7 +156,7 @@ object Streams {
         }
       }
       target.toString
-    })
+    }
   }
 
   /** events as a streaming source with ts normalized to a µs timestamp.
@@ -193,18 +195,19 @@ object Streams {
   private def embeddingsStream(s: SparkSession, d: String): DataFrame =
     s.readStream.schema(embeddingsSchema).parquet(stageDir(d, "embeddings"))
 
-  /** fixture key → frozen codebook for stream_ann_append's persisted
-    * IVF artifact (build + stream-drain run once per fixture, the
-    * streamIdxMemo convention).
+  /** Embeddings [[graft.Fixtures.tableKey]] → frozen codebook of
+    * stream_ann_append's persisted IVF artifact (build + stream drain
+    * run once per fixture). At most 64 fixtures; an evicted key
+    * rebuilds the artifact.
     */
-  private val streamAnnMemo = new java.util.concurrent.ConcurrentHashMap[
-    String, Array[Array[Double]]]()
+  private val streamAnnMemo = graft.Memo[String, Array[Array[Double]]](bound = 64)
 
-  /** fixture key → frozen (coarse, pq) codebooks for
-    * stream_ivfpq_append's persisted CODED artifact (same convention).
+  /** Embeddings [[graft.Fixtures.tableKey]] → frozen (coarse, pq)
+    * codebooks of stream_ivfpq_append's persisted CODED artifact (same
+    * key, bound and rebuild rule).
     */
-  private val streamPqMemo = new java.util.concurrent.ConcurrentHashMap[
-    String, (Array[Array[Double]], Array[Array[Array[Double]]])]()
+  private val streamPqMemo =
+    graft.Memo[String, (Array[Array[Double]], Array[Array[Array[Double]]])](bound = 64)
 
   /** Run a streaming DataFrame to completion into a memory sink and
     * return its final contents.
@@ -275,7 +278,7 @@ object Streams {
           .orderBy("w_start", "event_type")
       },
       // complete mode: the last micro-batch overwrite IS the full batch
-      // aggregate, whatever the batch split — direct oracle (r13)
+      // aggregate, whatever the batch split — direct oracle
       Some("""SELECT strftime(time_bucket(INTERVAL 1 HOUR, ts),
              |    '%Y-%m-%d %H:%M:%S') AS w_start,
              |  event_type, COUNT(*) AS n
@@ -308,7 +311,7 @@ object Streams {
             tsStr("session_window.end").as("sess_end"), col("n_events"))
           .orderBy("user_id", "sess_start")
       },
-      // direct oracle (r13): the stream_session_catchup island device,
+      // direct oracle: the stream_session_catchup island device,
       // here returning the per-session rows themselves (start = first
       // event, end = last event + 30 min, finalized when end ≤ the
       // final watermark = max event time − 10 min)
@@ -351,7 +354,7 @@ object Streams {
           .select(tsStr("window.start").as("w_start"), col("n"))
           .orderBy("w_start")
       },
-      // direct oracle (r13): stream_late_catchup's finalization device —
+      // direct oracle: stream_late_catchup's finalization device —
       // single staged file ⇒ one data batch ⇒ nothing is ever late, and
       // append emits exactly the windows whose end ≤ final watermark
       Some("""WITH wm AS (
@@ -371,7 +374,7 @@ object Streams {
           .select(col("event_id"), col("user_id"), col("event_type"))
         runToMemory(deduped, "append").orderBy("event_id")
       },
-      // direct oracle (r13): event_id is unique in the fixture, so the
+      // direct oracle: event_id is unique in the fixture, so the
       // dedup must be a NO-OP — the oracle pins exactly-once delivery
       // and no-false-drops (real duplicate handling is pinned by
       // stream_dedup_catchup + StreamingSpec's MemoryStream case)
@@ -389,7 +392,7 @@ object Streams {
           .select(col("event_id"), col("user_id"), col("c_name"), col("c_mktsegment"))
         runToMemory(joined, "append").orderBy("event_id")
       },
-      // direct oracle (r13): stateless exactly-once append ⇒ the sink
+      // direct oracle: stateless exactly-once append ⇒ the sink
       // is the batch inner join, whatever the micro-batch split
       Some("""SELECT e.event_id, e.user_id, c.c_name, c.c_mktsegment
              |FROM events e JOIN customer c ON e.user_id = c.c_custkey
@@ -416,7 +419,7 @@ object Streams {
           .select(col("p_id"), col("c_id"), col("p_user"))
         runToMemory(joined, "append").orderBy("p_id", "c_id")
       },
-      // direct oracle (r13): inner stream-stream matches emit as found;
+      // direct oracle: inner stream-stream matches emit as found;
       // single staged file ⇒ both sides fully present in batch one ⇒
       // the sink is the complete batch interval join
       Some("""SELECT p.event_id AS p_id, c.event_id AS c_id,
@@ -456,7 +459,7 @@ object Streams {
             col("c_id").isNull.as("unattributed"))
         runToMemory(joined, "append").orderBy("p_id", "c_id")
       },
-      // direct oracle (r13): matches emit as found (both sides in batch
+      // direct oracle: matches emit as found (both sides in batch
       // one); unmatched purchases null-emit on state EVICTION, which
       // happens once the final watermark — min(max purchase ts, max
       // click ts) − 1 h, ms-truncated — passes p_ts (the latest click
@@ -501,7 +504,7 @@ object Streams {
           .toDF("user_id", "running_count")
         runToMemory(counted, "update").orderBy("user_id")
       },
-      // direct oracle (r13): single staged file ⇒ one data batch ⇒ each
+      // direct oracle: single staged file ⇒ one data batch ⇒ each
       // user emits exactly once, with its full count (the multi-batch
       // recovery variant is stream_fmgws_catchup's max-count device)
       Some("""SELECT user_id, COUNT(*) AS running_count
@@ -544,8 +547,7 @@ object Streams {
     Q("stream_availablenow_catchup",
       (s, d) => {
         import org.apache.spark.sql.streaming.Trigger
-        val f = new java.io.File(s"$d/events.parquet")
-        val key = s"${d.replaceAll("[^A-Za-z0-9._-]", "_")}_${graft.Fixtures.fingerprint(f)}"
+        val key = graft.Fixtures.key(d, "events")
         // v3: keyed alongside the STABLE staged source path (a
         // checkpoint written against a since-deleted random staging dir
         // must not be resumed). Bumped v2→v3 when stageDir generalized
@@ -586,8 +588,7 @@ object Streams {
     Q("stream_dedup_catchup",
       (s, d) => {
         import org.apache.spark.sql.streaming.Trigger
-        val f = new java.io.File(s"$d/documents.parquet")
-        val key = s"${d.replaceAll("[^A-Za-z0-9._-]", "_")}_${graft.Fixtures.fingerprint(f)}"
+        val key = graft.Fixtures.key(d, "documents")
         val root = s"${sys.props("java.io.tmpdir")}/graft_dedupnow_v1_$key"
         val q = documentsStream(s, d)
           .select(col("source"), md5(col("text")).as("h"),
@@ -613,7 +614,7 @@ object Streams {
              |  CAST(SUM(n_chars) AS BIGINT) AS total_chars
              |FROM u GROUP BY source ORDER BY source""".stripMargin)),
 
-    // Fifth ORACLED streaming query (r11, VERDICT #9): session windows
+    // Fifth ORACLED streaming query: session windows
     // under Trigger.AvailableNow with a parquet sink. Append mode emits
     // ONLY sessions finalized by the final watermark (the no-data
     // catch-up batch sets wm = max event time − 10 min, ms-truncated —
@@ -630,8 +631,7 @@ object Streams {
     Q("stream_session_catchup",
       (s, d) => {
         import org.apache.spark.sql.streaming.Trigger
-        val f = new java.io.File(s"$d/events.parquet")
-        val key = s"${d.replaceAll("[^A-Za-z0-9._-]", "_")}_${graft.Fixtures.fingerprint(f)}"
+        val key = graft.Fixtures.key(d, "events")
         val root = s"${sys.props("java.io.tmpdir")}/graft_sessnow_v1_$key"
         val q = eventsStream(s, d)
           .withWatermark("ts", "10 minutes")
@@ -690,8 +690,7 @@ object Streams {
     Q("stream_sliding_catchup",
       (s, d) => {
         import org.apache.spark.sql.streaming.Trigger
-        val f = new java.io.File(s"$d/events.parquet")
-        val key = s"${d.replaceAll("[^A-Za-z0-9._-]", "_")}_${graft.Fixtures.fingerprint(f)}"
+        val key = graft.Fixtures.key(d, "events")
         val root = s"${sys.props("java.io.tmpdir")}/graft_slidenow_v1_$key"
         val agg = eventsStream(s, d)
           .withColumn("cents",
@@ -736,13 +735,12 @@ object Streams {
     Q("stream_tws_catchup",
       (s, d) => {
         import org.apache.spark.sql.streaming.Trigger
-        val f = new java.io.File(s"$d/events.parquet")
-        val key = s"${d.replaceAll("[^A-Za-z0-9._-]", "_")}_${graft.Fixtures.fingerprint(f)}"
+        val key = graft.Fixtures.key(d, "events")
         val root = s"${sys.props("java.io.tmpdir")}/graft_twsnow_v1_$key"
         // TransformWithState requires the RocksDB provider; the session
         // is SHARED across the whole bench/verify sweep, so capture the
-        // prior value and restore it after the query terminates (r12
-        // ADVICE) — otherwise every streaming query that runs later
+        // prior value and restore it after the query terminates —
+        // otherwise every streaming query that runs later
         // silently inherits a different state-store provider depending
         // on execution order.
         val providerKey = "spark.sql.streaming.stateStore.providerClass"
@@ -804,8 +802,7 @@ object Streams {
     Q("stream_join_catchup",
       (s, d) => {
         import org.apache.spark.sql.streaming.Trigger
-        val f = new java.io.File(s"$d/events.parquet")
-        val key = s"${d.replaceAll("[^A-Za-z0-9._-]", "_")}_${graft.Fixtures.fingerprint(f)}"
+        val key = graft.Fixtures.key(d, "events")
         val root = s"${sys.props("java.io.tmpdir")}/graft_joinnow_v2_$key"
         val src = eventsStream(s, d)
         val left = src
@@ -824,7 +821,7 @@ object Streams {
           col("user_id") === col("r_user") &&
             col("r_ts") >= col("l_ts") &&
             col("r_ts") <= col("l_ts") + expr("INTERVAL 5 MINUTES"))
-        // IDEMPOTENT sink (r12 ADVICE): foreachBatch is at-least-once,
+        // IDEMPOTENT sink: foreachBatch is at-least-once,
         // so a batch REPLAYED after a mid-run failure (or a killed
         // re-run resuming this fixture-keyed checkpoint) must replace,
         // not duplicate — plain mode("append") to one directory would
@@ -874,8 +871,7 @@ object Streams {
     Q("stream_enrich_catchup",
       (s, d) => {
         import org.apache.spark.sql.streaming.Trigger
-        val f = new java.io.File(s"$d/events.parquet")
-        val key = s"${d.replaceAll("[^A-Za-z0-9._-]", "_")}_${graft.Fixtures.fingerprint(f)}"
+        val key = graft.Fixtures.key(d, "events")
         val root = s"${sys.props("java.io.tmpdir")}/graft_enrichnow_v1_$key"
         val dim = graft.Tables.nation(s, d)
           .select(col("n_nationkey"), col("n_name"))
@@ -921,8 +917,7 @@ object Streams {
     Q("stream_agg_catchup",
       (s, d) => {
         import org.apache.spark.sql.streaming.Trigger
-        val f = new java.io.File(s"$d/events.parquet")
-        val key = s"${d.replaceAll("[^A-Za-z0-9._-]", "_")}_${graft.Fixtures.fingerprint(f)}"
+        val key = graft.Fixtures.key(d, "events")
         val root = s"${sys.props("java.io.tmpdir")}/graft_aggnow_v1_$key"
         val agg = eventsStream(s, d)
           .withColumn("cents",
@@ -948,7 +943,7 @@ object Streams {
              |    AS DOUBLE) / 100.0 AS total_value
              |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin)),
 
-    // Ninth ORACLED streaming query (r12) — complete-mode EVENT-TIME
+    // Ninth ORACLED streaming query — complete-mode EVENT-TIME
     // WINDOWED aggregation + post-rank: per UTC day, the top event
     // type by count (ties → lexicographic type). Complete mode over a
     // (day × type)-bounded key space re-emits the whole table per
@@ -961,8 +956,7 @@ object Streams {
     Q("stream_topn_catchup",
       (s, d) => {
         import org.apache.spark.sql.streaming.Trigger
-        val f = new java.io.File(s"$d/events.parquet")
-        val key = s"${d.replaceAll("[^A-Za-z0-9._-]", "_")}_${graft.Fixtures.fingerprint(f)}"
+        val key = graft.Fixtures.key(d, "events")
         val root = s"${sys.props("java.io.tmpdir")}/graft_topnnow_v1_$key"
         val agg = eventsStream(s, d)
           .groupBy(window(col("ts"), "1 day"), col("event_type"))
@@ -1000,7 +994,7 @@ object Streams {
 
     // foreachBatch sink: every micro-batch lands as parquet; read the
     // result back — the batch-sink integration surface.
-    // Tenth ORACLED streaming query (r13, verdict Next #7): APPEND-mode
+    // Tenth ORACLED streaming query: APPEND-mode
     // tumbling windows with watermark FINALIZATION — the late-data
     // semantics surface stream_late_data exercises with a memory sink,
     // here pinned against DuckDB. Append emits a window only once the
@@ -1014,8 +1008,7 @@ object Streams {
     Q("stream_late_catchup",
       (s, d) => {
         import org.apache.spark.sql.streaming.Trigger
-        val f = new java.io.File(s"$d/events.parquet")
-        val key = s"${d.replaceAll("[^A-Za-z0-9._-]", "_")}_${graft.Fixtures.fingerprint(f)}"
+        val key = graft.Fixtures.key(d, "events")
         val root = s"${sys.props("java.io.tmpdir")}/graft_latenow_v1_$key"
         val q = eventsStream(s, d)
           .withWatermark("ts", "10 minutes")
@@ -1051,7 +1044,7 @@ object Streams {
              |FROM b, wm WHERE epoch_us(w_start + INTERVAL 1 HOUR) <= w
              |ORDER BY w_start""".stripMargin)),
 
-    // Eleventh ORACLED streaming query (r13): flatMapGroupsWithState —
+    // Eleventh ORACLED streaming query: flatMapGroupsWithState —
     // the PRE-Spark-4 arbitrary-state API (stream_stateful_count's
     // shape) — pinned with the stream_tws_catchup recovery argument:
     // the Append-mode processor emits a cumulative (count, cents) row
@@ -1062,8 +1055,7 @@ object Streams {
     Q("stream_fmgws_catchup",
       (s, d) => {
         import org.apache.spark.sql.streaming.Trigger
-        val f = new java.io.File(s"$d/events.parquet")
-        val key = s"${d.replaceAll("[^A-Za-z0-9._-]", "_")}_${graft.Fixtures.fingerprint(f)}"
+        val key = graft.Fixtures.key(d, "events")
         val root = s"${sys.props("java.io.tmpdir")}/graft_fmgwsnow_v1_$key"
         implicit val longEnc = Encoders.scalaLong
         implicit val inEnc = Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong)
@@ -1108,7 +1100,7 @@ object Streams {
              |    AS BIGINT)) AS DOUBLE) / 100.0 AS total_value
              |FROM events GROUP BY user_id ORDER BY user_id""".stripMargin)),
 
-    // Twelfth ORACLED streaming query (r13): LEFT-OUTER stream-stream
+    // Twelfth ORACLED streaming query: LEFT-OUTER stream-stream
     // join under AvailableNow. Inner matches emit as found (single
     // staged file ⇒ both sides fully in state in batch one), and the
     // catch-up no-data batch advances the watermark to max event time
@@ -1122,8 +1114,7 @@ object Streams {
     Q("stream_outer_catchup",
       (s, d) => {
         import org.apache.spark.sql.streaming.Trigger
-        val f = new java.io.File(s"$d/events.parquet")
-        val key = s"${d.replaceAll("[^A-Za-z0-9._-]", "_")}_${graft.Fixtures.fingerprint(f)}"
+        val key = graft.Fixtures.key(d, "events")
         val root = s"${sys.props("java.io.tmpdir")}/graft_outernow_v1_$key"
         val src = eventsStream(s, d)
         val left = src.filter(col("event_id") % 2 === 0)
@@ -1191,7 +1182,7 @@ object Streams {
              |    AS sum_cents
              |FROM fin GROUP BY 1 ORDER BY 1""".stripMargin)),
 
-    // Thirteenth ORACLED streaming query (r13): the MULTI-SINK
+    // Thirteenth ORACLED streaming query: the MULTI-SINK
     // foreachBatch shape (the canonical reason foreachBatch exists —
     // one micro-batch fanned to several sinks atomically per batch id),
     // catch-up form: each batch writes BOTH a raw-rows sink and a
@@ -1203,8 +1194,7 @@ object Streams {
     Q("stream_multisink_catchup",
       (s, d) => {
         import org.apache.spark.sql.streaming.Trigger
-        val f = new java.io.File(s"$d/events.parquet")
-        val key = s"${d.replaceAll("[^A-Za-z0-9._-]", "_")}_${graft.Fixtures.fingerprint(f)}"
+        val key = graft.Fixtures.key(d, "events")
         val root = s"${sys.props("java.io.tmpdir")}/graft_msinknow_v1_$key"
         val q = eventsStream(s, d)
           .select(col("event_id"), col("event_type"),
@@ -1264,7 +1254,7 @@ object Streams {
         q.stop()
         s.read.parquet(outDir).orderBy("event_id")
       },
-      // direct oracle (r13): stateless pass-through under exactly-once
+      // direct oracle: stateless pass-through under exactly-once
       // foreachBatch append — the sink is the source, whatever the
       // batch split (no arithmetic, so `value` stays bit-identical)
       Some("""SELECT event_id, user_id, event_type, value FROM events
@@ -1289,20 +1279,13 @@ object Streams {
         // next JVM)
         s.sql("CREATE DATABASE IF NOT EXISTS graft_stream_idx LOCATION " +
           s"'$streamIdxLocation'")
-        // build the corpus index ONCE per fixture (the bandIndexMemo
-        // convention of dedup_index_incremental — the standing index is
-        // the artifact; only the arriving batches are per-run work).
-        // Fingerprint via Llm.docsFingerprint (r13 ADVICE): it recurses
-        // into the directory's part files, because a regenerated fixture
-        // can keep identical top-level length/mtime while its parts
-        // changed — the top-level-only key would serve a stale index.
-        val fpNow = graft.operators.Llm.docsFingerprint(d)
-        if (streamIdxMemo.get("graft_stream_idx.corpus") != fpNow) {
-          val corpus = graft.Tables.documents(s, d)
-            .filter(col("doc_id") % 10 >= 2)
-          graft.api.Dedup.writeBandIndex(corpus, "doc_id", "text",
-            table = "graft_stream_idx.corpus")
-          streamIdxMemo.put("graft_stream_idx.corpus", fpNow)
+        // the standing corpus index is built once per fixture; only the
+        // arriving batches are per-run work
+        val corpus = corpusIndex(d)
+        streamIdxMemo(corpus) {
+          graft.api.Dedup.writeBandIndex(
+            graft.Tables.documents(s, d).filter(col("doc_id") % 10 >= 2),
+            "doc_id", "text", table = corpus)
         }
         val outDir = java.nio.file.Files
           .createTempDirectory("graft_stream_dedup").toString
@@ -1312,7 +1295,7 @@ object Streams {
           .foreachBatch { (batch: DataFrame, _: Long) =>
             graft.api.Dedup
               .incrementalNearDupsIndexed(batch, "doc_id", "text",
-                "graft_stream_idx.corpus")
+                corpus)
               .write.mode("append").parquet(outDir)
           }
           .start()
@@ -1320,7 +1303,7 @@ object Streams {
         q.stop()
         s.read.parquet(outDir).orderBy("doc_id")
       },
-      // direct oracle (r13): each arriving doc's verdict is computed
+      // direct oracle: each arriving doc's verdict is computed
       // against the SAME frozen corpus index independently of its
       // batch, so the streamed union equals the one-shot batch check —
       // byte-identical to llm_incremental_dedup/dedup_index_incremental
@@ -1342,12 +1325,11 @@ object Streams {
     // stream-grown ≡ batch-grown row-for-row).
     Q("stream_ann_append",
       (s, d) => {
-        val f = new java.io.File(s"$d/embeddings.parquet")
-        val tkey = s"${d.replaceAll("[^A-Za-z0-9_]", "_")}_${graft.Fixtures.fingerprint(f)}"
+        val tkey = graft.Fixtures.tableKey(d, "embeddings")
         val table = s"graft_stream_idx.annstream_$tkey"
         s.sql("CREATE DATABASE IF NOT EXISTS graft_stream_idx LOCATION " +
           s"'$streamIdxLocation'")
-        val cb = streamAnnMemo.computeIfAbsent(tkey, _ => {
+        val cb = streamAnnMemo(tkey) {
           val cb0 = graft.api.Similarity.writeIvfIndex(
             graft.Tables.embeddings(s, d).filter(col("vec_id") % 3 =!= 0),
             "vec_id", "embedding", table, 16,
@@ -1363,7 +1345,7 @@ object Streams {
           q.processAllAvailable()
           q.stop()
           cb0
-        })
+        }
         graft.api.Similarity.ivfIndexDrift(s, table, cb)
           .select(col("cell").cast("long").as("cell"), col("n_vecs"),
             col("fill_factor"), col("drift"))
@@ -1371,7 +1353,7 @@ object Streams {
       },
       Some(graft.operators.DataOps.annDriftOracleSql)),
 
-    // Streaming delivery into the CODED index (r16 — the coded twin of
+    // Streaming delivery into the CODED index (the coded twin of
     // stream_ann_append, closing the PQ lifecycle's ingest leg: a
     // continuous pipeline ingests into the artifact it SERVES from,
     // which since the coded index landed is the PQ one). The coded
@@ -1391,12 +1373,11 @@ object Streams {
     // batch-grown row-for-row).
     Q("stream_ivfpq_append",
       (s, d) => {
-        val f = new java.io.File(s"$d/embeddings.parquet")
-        val tkey = s"${d.replaceAll("[^A-Za-z0-9_]", "_")}_${graft.Fixtures.fingerprint(f)}"
+        val tkey = graft.Fixtures.tableKey(d, "embeddings")
         val table = s"graft_stream_idx.pqstream_$tkey"
         s.sql("CREATE DATABASE IF NOT EXISTS graft_stream_idx LOCATION " +
           s"'$streamIdxLocation'")
-        streamPqMemo.computeIfAbsent(tkey, _ => {
+        streamPqMemo(tkey) {
           val model = graft.api.Similarity.writeIvfPqIndex(
             graft.Tables.embeddings(s, d).filter(col("vec_id") % 3 =!= 0),
             "vec_id", "embedding", table, 16, 4, 16,
@@ -1412,14 +1393,14 @@ object Streams {
           q.processAllAvailable()
           q.stop()
           model
-        })
+        }
         graft.operators.DataOps.ivfPqDriftAudit(s, table)
       },
       Some(graft.operators.DataOps.ivfPqDriftOracleSql)),
 
     // Streaming deliveries → fragmented band index → COMPACTION — the
-    // maintenance leg under the INGEST path (r14, tying this round's
-    // dedup_index_compact into streaming): three AvailableNow runs
+    // maintenance leg under the INGEST path (dedup_index_compact's
+    // twin fed by streaming): three AvailableNow runs
     // model three scheduled ingest deliveries, each appending its
     // micro-batches' postings to BOTH halves of the artifact
     // (foreachBatch → Dedup.appendToBandIndex — exactly the
@@ -1435,10 +1416,10 @@ object Streams {
         import org.apache.spark.sql.streaming.Trigger
         s.sql("CREATE DATABASE IF NOT EXISTS graft_stream_idx LOCATION " +
           s"'$streamIdxLocation'")
-        val fpNow = graft.operators.Llm.docsFingerprint(d)
-        val src = "graft_stream_idx.cmpsrc"
-        val dst = "graft_stream_idx.cmpdst"
-        if (streamIdxMemo.get(dst) != fpNow) {
+        val tkey = graft.Fixtures.tableKey(d, "documents")
+        val src = s"graft_stream_idx.cmpsrc_$tkey"
+        val dst = s"graft_stream_idx.cmpdst_$tkey"
+        streamIdxMemo(dst) {
           Seq("_bands", "_sets").foreach { sfx =>
             s.sql(s"DROP TABLE IF EXISTS $src$sfx")
             s.sql(s"DROP TABLE IF EXISTS $dst$sfx")
@@ -1460,7 +1441,6 @@ object Streams {
             q.awaitTermination()
           }
           graft.api.Dedup.compactBandIndex(s, src, dst)
-          streamIdxMemo.put(dst, fpNow)
         }
         graft.operators.Llm.bandIndexAudit(s, dst)
       },

@@ -11,18 +11,23 @@ import org.scalatest.funsuite.AnyFunSuite
 class BpeSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
 
-  private lazy val dir: String = {
+  /** Writes `texts` as `<dir>/documents.parquet`. */
+  private def writeCorpus(dir: String, texts: Seq[String]): Unit = {
     import spark.implicits._
-    val tmp = java.nio.file.Files.createTempDirectory("graft_bpe").toString
-    val docs = Seq(
-      (0L, "low low low low low"),
-      (1L, "lower lower"),
-      (2L, "newest newest newest newest newest newest"),
-      (3L, "widest widest widest"))
+    texts.zipWithIndex.map { case (t, i) => (i.toLong, t) }
       .toDF("doc_id", "text")
       .withColumn("lang", lit("en")).withColumn("source", lit("t"))
       .withColumn("n_chars", length(col("text")).cast("long"))
-    docs.coalesce(1).write.mode("overwrite").parquet(s"$tmp/documents.parquet")
+      .coalesce(1).write.mode("overwrite").parquet(s"$dir/documents.parquet")
+  }
+
+  private lazy val dir: String = {
+    val tmp = java.nio.file.Files.createTempDirectory("graft_bpe").toString
+    writeCorpus(tmp, Seq(
+      "low low low low low",
+      "lower lower",
+      "newest newest newest newest newest newest",
+      "widest widest widest"))
     tmp
   }
 
@@ -58,5 +63,18 @@ class BpeSpec extends AnyFunSuite {
       assert(syms.mkString("") == w + "</w>", s"$w → $syms")
     }
     assert(fin("newest").length < 7 && fin("low").length < 4)
+  }
+
+  test("a corpus rewritten in the same directory retrains") {
+    val d = java.nio.file.Files.createTempDirectory("graft_bpe_stale").toString
+    writeCorpus(d, Seq("low low low low low", "lower lower"))
+    val (before, _) = graft.operators.Bpe.train(spark, d)
+    assert(graft.operators.Bpe.train(spark, d)._1 == before, "same corpus: memoized")
+    writeCorpus(d, Seq("zzyq zzyq zzyq", "qqvz qqvz"))
+    Fixtures.invalidate()
+    val (after, _) = graft.operators.Bpe.train(spark, d)
+    assert(after.nonEmpty && after != before)
+    assert(after.forall(m => (m.lhs + m.rhs).forall("zyqv</w>".contains(_))),
+      s"merges must come from the rewritten corpus: $after")
   }
 }

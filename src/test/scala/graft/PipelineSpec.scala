@@ -160,8 +160,7 @@ class PipelineSpec extends AnyFunSuite {
 
   test("export_snapshot_read: append-only commits — v1 manifest nests in v2") {
     run("export_snapshot_read").collect() // stages the log if needed
-    val src = new java.io.File(s"$sf/events.parquet")
-    val key = s"${sf.replaceAll("[^A-Za-z0-9._-]", "_")}_${graft.Fixtures.fingerprint(src)}"
+    val key = graft.Fixtures.key(sf, "events")
     val log = java.nio.file.Paths.get(
       s"${sys.props("java.io.tmpdir")}/graft_snap_$key/log")
     def files(v: Int): Set[String] = {

@@ -8,8 +8,8 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Source scan over `src/main/scala`: sessions are built, native
   * functions registered and `experimental.extra*` lists written only in
-  * GraftSession and GraftExtensions, and ExplainProbe is the one dev
-  * probe main.
+  * GraftSession and GraftExtensions, ExplainProbe is the one dev probe
+  * main, and memos and fixture keys are built only by Memo and Fixtures.
   */
 class SourceGuardSpec extends AnyFunSuite {
   private val root = Paths.get("src/main/scala")
@@ -51,5 +51,14 @@ class SourceGuardSpec extends AnyFunSuite {
   test("ExplainProbe is the only probe main") {
     val found = hits("""\bobject\s+\w+Probe\b""", _ => false)
     assert(found.size == 1 && found.head.contains("object ExplainProbe"), found.mkString("\n"))
+  }
+
+  test("memo maps and fixture keys only in Memo/Fixtures") {
+    val memoOwners = Set("Memo.scala", "Fixtures.scala")
+    val found = hits(
+      """new (java\.util\.concurrent\.)?ConcurrentHashMap|new (java\.util\.)?LinkedHashMap""" +
+        """|replaceAll\("\[\^A-Za-z0-9|isStopped\) it\.remove\(\)""",
+      p => memoOwners.contains(p.getFileName.toString))
+    assert(found.isEmpty, found.mkString("\n"))
   }
 }

@@ -218,7 +218,7 @@ class StreamingSpec extends AnyFunSuite {
       .filter(col("doc_id") % 10 < 2)
     val oneShot = graft.api.Dedup
       .incrementalNearDupsIndexed(batch, "doc_id", "text",
-        "graft_stream_idx.corpus")
+        graft.streaming.Streams.corpusIndex(TestSpark.sf0001))
       .orderBy("doc_id").collect().toSeq
     assert(streamed == oneShot)
   }

@@ -36,8 +36,7 @@ class Wave57Spec extends AnyFunSuite {
     assert(rows.nonEmpty && rows.map(_.getLong(1)).sum >= 1L)
     // the artifact's parquet footers: bloom offsets must be present
     // for o_custkey column chunks and ABSENT for un-bloomed columns
-    val src = new java.io.File(s"${TestSpark.sf0001}/orders.parquet")
-    val key = s"${TestSpark.sf0001.replaceAll("[^A-Za-z0-9._-]", "_")}_${graft.Fixtures.fingerprint(src)}"
+    val key = graft.Fixtures.key(TestSpark.sf0001, "orders")
     val tmp = new java.io.File(
       s"${sys.props("java.io.tmpdir")}/graft_bloom_orders_$key")
     val part = tmp.listFiles().filter(_.getName.endsWith(".parquet")).head
