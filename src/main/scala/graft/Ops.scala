@@ -28,6 +28,12 @@ object Ops {
   def avg46(c: Column): Column = round(dsum6(c) / count(lit(1)), 4)
   def SQL_AVG46(x: String): String = s"ROUND(${SQL_DSUM6(x)} / COUNT(*), 4)"
 
+  /** A money/value column as exact integer cents (decimal domain first,
+    * so both engines round alike); sums of it are exact longs.
+    */
+  def cents(c: Column): Column = (c.cast("decimal(18,2)") * 100).cast("long")
+  def SQL_CENTS(x: String): String = s"CAST(CAST($x AS DECIMAL(18,2)) * 100 AS BIGINT)"
+
   /** Per-row revenue expression (no accumulation: bit-exact both engines).
     * Safe to OUTPUT as a double column; NOT safe to cast to decimal and
     * sum — Spark rounds the double's shortest decimal repr (HALF_UP),

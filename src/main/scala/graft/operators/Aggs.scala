@@ -1181,16 +1181,12 @@ object Aggs {
     Q("agg_incremental_rollup", {
       val SPLIT = "2024-01-21"
       (s, d) => {
-        val key = graft.Fixtures.key(d, "events")
-        val tmp = s"${sys.props("java.io.tmpdir")}/graft_rollup_partials_$key"
         val partial = (df: org.apache.spark.sql.DataFrame) => df
           .groupBy(col("event_type"), date_trunc("day", col("ts")).as("day"))
-          .agg(count(lit(1)).as("n"),
-            sum((col("value").cast("decimal(18,2)") * 100).cast("long"))
-              .as("cents"))
-        if (!new java.io.File(s"$tmp/_SUCCESS").exists()) {
+          .agg(count(lit(1)).as("n"), sum(cents(col("value"))).as("cents"))
+        val tmp = graft.Artifacts.staged("rollup_partials", d, "events") { p =>
           partial(Tables.events(s, d).filter(col("ts") < lit(SPLIT)))
-            .write.mode("overwrite").parquet(tmp)
+            .write.mode("overwrite").parquet(p)
         }
         val history = s.read.parquet(tmp)
         val fresh = partial(Tables.events(s, d)
@@ -1203,8 +1199,8 @@ object Aggs {
           .orderBy("event_type")
       }
     },
-      Some("""SELECT event_type, COUNT(*) AS n_events,
-             |  CAST(SUM(CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT)) AS DOUBLE)
+      Some(s"""SELECT event_type, COUNT(*) AS n_events,
+             |  CAST(SUM(${SQL_CENTS("value")}) AS DOUBLE)
              |    / 100.0 AS total_value
              |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin)),
 
@@ -2674,8 +2670,7 @@ object Aggs {
       (s, d) => {
         val m = Tables.events(s, d)
           .filter(col("event_type").isin("click", "purchase"))
-          .withColumn("cents",
-            (col("value").cast("decimal(18,2)") * 100).cast("long"))
+          .withColumn("cents", cents(col("value")))
           .groupBy("event_type")
           .agg(count(lit(1)).as("n"), sum("cents").as("sc"),
             sum(col("cents") * col("cents")).as("qc"))
@@ -2706,13 +2701,13 @@ object Aggs {
               .as("mean_purchase"),
             col("t_stat"), col("df_welch"))
       },
-      Some("""WITH m AS (
+      Some(s"""WITH m AS (
              |  SELECT event_type, CAST(COUNT(*) AS BIGINT) AS n,
              |    CAST(SUM(cents) AS BIGINT) AS s,
              |    CAST(SUM(cents * cents) AS BIGINT) AS q
              |  FROM (
              |    SELECT event_type,
-             |      CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT) AS cents
+             |      ${SQL_CENTS("value")} AS cents
              |    FROM events WHERE event_type IN ('click', 'purchase')) x
              |  GROUP BY event_type),
              |ab AS (
@@ -3309,8 +3304,7 @@ object Aggs {
     Q("stat_lorenz_curve",
       (s, d) => {
         val users = Tables.events(s, d)
-          .withColumn("cents",
-            (col("value").cast("decimal(18,2)") * 100).cast("long"))
+          .withColumn("cents", cents(col("value")))
           .groupBy("user_id").agg(sum("cents").as("spend"))
         val ranked = graft.api.Ranking.ntileExact(users.localCheckpoint(eager = false),
           10, Seq(col("spend"), col("user_id")), tileCol = "decile")
@@ -3328,10 +3322,10 @@ object Aggs {
               .as("cum_share"))
           .orderBy("decile")
       },
-      Some("""WITH users AS (
+      Some(s"""WITH users AS (
              |  SELECT user_id, CAST(SUM(cents) AS BIGINT) AS spend
              |  FROM (SELECT user_id,
-             |      CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT)
+             |      ${SQL_CENTS("value")}
              |        AS cents
              |    FROM events) x
              |  GROUP BY user_id),
@@ -3946,8 +3940,7 @@ object Aggs {
       (s, d) => {
         val m = Tables.events(s, d)
           .filter(col("event_type").isin("click", "purchase"))
-          .withColumn("cents",
-            (col("value").cast("decimal(18,2)") * 100).cast("long"))
+          .withColumn("cents", cents(col("value")))
           .groupBy("event_type")
           .agg(count(lit(1)).as("n"), sum("cents").as("sc"),
             sum(col("cents") * col("cents")).as("qc"))
@@ -3975,13 +3968,13 @@ object Aggs {
             round(col("dd"), 6).as("cohens_d"),
             round(col("dd") * col("j"), 6).as("hedges_g"))
       },
-      Some("""WITH m AS (
+      Some(s"""WITH m AS (
              |  SELECT event_type, CAST(COUNT(*) AS BIGINT) AS n,
              |    CAST(SUM(cents) AS BIGINT) AS s,
              |    CAST(SUM(cents * cents) AS BIGINT) AS q
              |  FROM (
              |    SELECT event_type,
-             |      CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT) AS cents
+             |      ${SQL_CENTS("value")} AS cents
              |    FROM events WHERE event_type IN ('click', 'purchase')) x
              |  GROUP BY event_type),
              |ab AS (
@@ -5564,8 +5557,7 @@ object Aggs {
       (s, d) => {
         val base = Tables.events(s, d)
           .filter(col("event_type").isin("click", "view"))
-          .withColumn("cents",
-            (col("value").cast("decimal(18,2)") * 100).cast("long"))
+          .withColumn("cents", cents(col("value")))
         val m = base.groupBy("event_type")
           .agg(count(lit(1)).as("n"), sum("cents").as("sc"),
             sum(col("cents") * col("cents")).as("qc"))
@@ -5611,9 +5603,9 @@ object Aggs {
               .cast("double") / (col("n1") * col("n2")).cast("double"), 6)
               .as("cliffs_delta"))
       },
-      Some("""WITH x AS (
+      Some(s"""WITH x AS (
              |  SELECT event_type, value,
-             |    CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT) AS cents
+             |    ${SQL_CENTS("value")} AS cents
              |  FROM events WHERE event_type IN ('click', 'view')),
              |m AS (
              |  SELECT event_type, CAST(COUNT(*) AS BIGINT) AS n,
@@ -5733,8 +5725,7 @@ object Aggs {
           .filter(col("o_orderpriority").isin("1-URGENT", "5-LOW"))
           .withColumn("yr", year(col("o_orderdate")))
           .withColumn("t", col("o_orderpriority") === "1-URGENT")
-          .withColumn("cents",
-            (col("o_totalprice").cast("decimal(18,2)") * 100).cast("long"))
+          .withColumn("cents", cents(col("o_totalprice")))
         val strata = o.groupBy("yr").agg(
             sum(when(col("t"), 1L).otherwise(0L)).as("nt"),
             sum(when(col("t"), col("cents")).otherwise(0L)).as("st"),
@@ -5760,10 +5751,10 @@ object Aggs {
               when(col("n_used") > 0, col("n_used")).cast("double") /
               100.0, 4).as("ate_stratified"))
       },
-      Some("""WITH o AS (
+      Some(s"""WITH o AS (
              |  SELECT CAST(year(o_orderdate) AS INT) AS yr,
              |    o_orderpriority = '1-URGENT' AS t,
-             |    CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT)
+             |    ${SQL_CENTS("o_totalprice")}
              |      AS cents
              |  FROM orders
              |  WHERE o_orderpriority IN ('1-URGENT', '5-LOW')),
@@ -5811,8 +5802,7 @@ object Aggs {
       (s, d) => {
         val cut = lit("2024-01-16").cast("timestamp")
         val u = Tables.events(s, d)
-          .withColumn("cents",
-            (col("value").cast("decimal(18,2)") * 100).cast("long"))
+          .withColumn("cents", cents(col("value")))
           .groupBy("user_id")
           .agg(sum(when(col("ts") < cut, col("cents")).otherwise(0L))
             .as("x"),
@@ -5862,7 +5852,7 @@ object Aggs {
              |    CAST(SUM(CASE WHEN ts >= TIMESTAMP '2024-01-16' THEN cents
              |      ELSE 0 END) AS BIGINT) AS y
              |  FROM (SELECT user_id, ts,
-             |      CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT)
+             |      ${SQL_CENTS("value")}
              |        AS cents FROM events) e
              |  GROUP BY user_id),
              |ut AS (
@@ -5929,8 +5919,7 @@ object Aggs {
           .filter(col("o_orderpriority").isin("1-URGENT", "5-LOW"))
           .withColumn("yr", year(col("o_orderdate")))
           .withColumn("t", col("o_orderpriority") === "1-URGENT")
-          .withColumn("cents",
-            (col("o_totalprice").cast("decimal(18,2)") * 100).cast("long"))
+          .withColumn("cents", cents(col("o_totalprice")))
         val strata = o.groupBy("yr").agg(
             sum(when(col("t"), 1L).otherwise(0L)).as("nt"),
             sum(when(col("t"), col("cents")).otherwise(0L)).as("st"),
@@ -5966,10 +5955,10 @@ object Aggs {
             (q - (col("k") - 1).cast("double")) / when(q > 0, q)), 6)
             .as("i2"))
       },
-      Some("""WITH o AS (
+      Some(s"""WITH o AS (
              |  SELECT CAST(year(o_orderdate) AS INT) AS yr,
              |    o_orderpriority = '1-URGENT' AS t,
-             |    CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT)
+             |    ${SQL_CENTS("o_totalprice")}
              |      AS cents
              |  FROM orders
              |  WHERE o_orderpriority IN ('1-URGENT', '5-LOW')),

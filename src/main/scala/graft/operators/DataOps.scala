@@ -2144,11 +2144,6 @@ object DataOps {
     Q("llm_embedding_outliers", fn, Some(sql))
   }
 
-  /** Per-JVM home + per-fixture memo for ann_index_persisted's bucketed
-    * postings artifact (the dedup_index_incremental convention).
-    */
-  private lazy val annIdxLocation =
-    java.nio.file.Files.createTempDirectory("graft_ann_idx").toString
   /** Artifact name (`ivf_`/`app_`/`retr_` + embeddings
     * [[graft.Fixtures.tableKey]]) → its codebook, once the artifact is
     * written. At most 64 artifacts; an evicted one is rebuilt.
@@ -2167,8 +2162,7 @@ object DataOps {
     val table = s"graft_ann_idx.ivfapp_$key"
     val embs = Tables.embeddings(s, d)
     val codebook = annIdxCodebooks(s"app_$key") {
-      s.sql("CREATE DATABASE IF NOT EXISTS graft_ann_idx LOCATION " +
-        s"'$annIdxLocation'")
+      graft.Artifacts.database(s, "graft_ann_idx")
       val cb = graft.api.Similarity.writeIvfIndex(
         embs.filter(col("vec_id") % 3 =!= 0), "vec_id", "embedding",
         table, k, iters)
@@ -2196,8 +2190,7 @@ object DataOps {
       val key = graft.Fixtures.tableKey(d, "embeddings")
       val table = s"graft_ann_idx.ivf_$key"
       val codebook = annIdxCodebooks(s"ivf_$key") {
-        s.sql("CREATE DATABASE IF NOT EXISTS graft_ann_idx LOCATION " +
-          s"'$annIdxLocation'")
+        graft.Artifacts.database(s, "graft_ann_idx")
         graft.api.Similarity.writeIvfIndex(
           Tables.embeddings(s, d), "vec_id", "embedding", table, K, ITERS)
       }
@@ -2518,8 +2511,7 @@ object DataOps {
     val key = ivfPqKey(d, cells, m, pqk, iters)
     val table = s"graft_ann_idx.ivfpq_$key"
     val model = annIvfPqModels(key) {
-      s.sql("CREATE DATABASE IF NOT EXISTS graft_ann_idx LOCATION " +
-        s"'$annIdxLocation'")
+      graft.Artifacts.database(s, "graft_ann_idx")
       graft.api.Similarity.writeIvfPqIndex(
         Tables.embeddings(s, d), "vec_id", "embedding", table,
         cells, m, pqk, iters)
@@ -2540,8 +2532,7 @@ object DataOps {
     val table = s"graft_ann_idx.ivfpqapp_$key"
     val embs = Tables.embeddings(s, d)
     val model = annIvfPqModels(s"app_$key") {
-      s.sql("CREATE DATABASE IF NOT EXISTS graft_ann_idx LOCATION " +
-        s"'$annIdxLocation'")
+      graft.Artifacts.database(s, "graft_ann_idx")
       val (coarse, pq) = graft.api.Similarity.writeIvfPqIndex(
         embs.filter(col("vec_id") % 3 =!= 0), "vec_id", "embedding",
         table, cells, m, pqk, iters)

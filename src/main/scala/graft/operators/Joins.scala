@@ -520,8 +520,7 @@ object Joins {
       (s, d) => {
         val key = graft.Fixtures.tableKey(d, "lineitem")
         bktTables((key, graft.Fixtures.fingerprint(s"$d/orders.parquet"))) {
-          s.sql("CREATE DATABASE IF NOT EXISTS graft_bkt LOCATION " +
-            s"'$bktLocation'")
+          graft.Artifacts.database(s, "graft_bkt")
           Tables.lineitem(s, d)
             .select(col("l_orderkey"), col("l_extendedprice"),
               col("l_discount"))
@@ -675,20 +674,13 @@ object Joins {
     // fingerprint-keyed.
     Q("join_dpp_prune",
       (s, d) => {
-        val key = graft.Fixtures.key(d, "orders")
-        val factTmp = s"${sys.props("java.io.tmpdir")}/graft_part_orders_$key"
-        if (!new java.io.File(s"$factTmp/_SUCCESS").exists()) {
-          Tables.orders(s, d).write.mode("overwrite")
-            .partitionBy("o_orderstatus").parquet(factTmp)
-        }
-        val dimTmp = s"${sys.props("java.io.tmpdir")}/graft_dim_status_$key"
-        if (!new java.io.File(s"$dimTmp/_SUCCESS").exists()) {
+        val dimTmp = graft.Artifacts.staged("dim_status", d, "orders") { p =>
           import s.implicits._
           Seq(("F", "closed"), ("O", "open"), ("P", "pending"))
             .toDF("o_orderstatus", "label")
-            .coalesce(1).write.mode("overwrite").parquet(dimTmp)
+            .coalesce(1).write.mode("overwrite").parquet(p)
         }
-        val fact = s.read.parquet(factTmp)
+        val fact = s.read.parquet(Scans.ordersByStatus(s, d))
         val dim = s.read.parquet(dimTmp).filter(col("label") === "closed")
         fact.join(dim, "o_orderstatus")
           .groupBy("o_orderstatus", "label")
@@ -782,9 +774,6 @@ object Joins {
       })
   )
 
-  /** Per-JVM home for join_bucketed_colocated's bucketed tables. */
-  private lazy val bktLocation =
-    java.nio.file.Files.createTempDirectory("graft_bkt").toString
   /** (lineitem [[graft.Fixtures.tableKey]], orders fingerprint) → both
     * bucketed tables are written. At most 64 fixtures; an evicted key
     * only rewrites them.

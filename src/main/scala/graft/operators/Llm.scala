@@ -21,10 +21,6 @@ object Llm {
   private val K = 16 // minhash signature length
   private val BANDS = 4 // LSH bands (rows per band = K / BANDS = 4)
 
-  /** Per-JVM home for dedup_index_incremental's bucketed artifact. */
-  private lazy val dedupIdxLocation =
-    java.nio.file.Files.createTempDirectory("graft_dedup_idx").toString
-
   /** Band-index artifact table → it is built. The persisted index is
     * the artifact of the continuous-ingestion story: build once per
     * corpus, serve every batch. Every table lives in [[dedupIdxDb]],
@@ -35,17 +31,15 @@ object Llm {
     */
   private val bandIndexMemo = graft.Memo[String, Unit](bound = 64)
 
-  /** The band-index database of fixture `d`, created on first use under
-    * the per-JVM home: a FIXED path would collide across JVMs (catalog
-    * metadata does not outlive the session, so a later JVM's CREATE
-    * TABLE finds the previous run's orphaned directory →
+  /** The band-index database of fixture `d`, created on first use in
+    * [[graft.Artifacts.home]]: a FIXED path would collide across JVMs
+    * (catalog metadata does not outlive the session, so a later JVM's
+    * CREATE TABLE finds the previous run's orphaned directory →
     * LOCATION_ALREADY_EXISTS).
     */
-  private def dedupIdxDb(s: SparkSession, d: String): String = {
-    val db = s"graft_dedup_idx_${graft.Fixtures.tableKey(d, "documents")}"
-    s.sql(s"CREATE DATABASE IF NOT EXISTS $db LOCATION '$dedupIdxLocation/$db'")
-    db
-  }
+  private def dedupIdxDb(s: SparkSession, d: String): String =
+    graft.Artifacts.database(s,
+      s"graft_dedup_idx_${graft.Fixtures.tableKey(d, "documents")}")
 
   /** The standing corpus band index (doc_id % 10 >= 2) of fixture `d`,
     * built once; the dedup_index_* queries serve batches against it.

@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.{Q, Tables}
-import graft.Ops.{dsum, SQL_DSUM}
+import graft.Ops.{cents, dsum, SQL_CENTS, SQL_DSUM}
 import graft.functions.TextUdfs
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.expressions.Window
@@ -86,8 +86,7 @@ object Pipeline {
     // dropping P) hash-fails.
     Q("export_txn_log_snapshot",
       (s, d) => memoTxn(s, d, "export_txn_log_snapshot") {
-        val tmp = java.nio.file.Files
-          .createTempDirectory("graft_txnlog").toString
+        val tmp = graft.Artifacts.scratch("txnlog")
         val o = Tables.orders(s, d)
           .select(col("o_orderkey"), col("o_orderstatus"), col("o_totalprice"))
         Seq("F", "O", "P").foreach { st =>
@@ -133,8 +132,7 @@ object Pipeline {
     // sized log scan; no data file is read twice.
     Q("export_txn_time_travel",
       (s, d) => memoTxn(s, d, "export_txn_time_travel") {
-        val tmp = java.nio.file.Files
-          .createTempDirectory("graft_txntt").toString
+        val tmp = graft.Artifacts.scratch("txntt")
         val o = Tables.orders(s, d)
           .select(col("o_orderkey"), col("o_orderstatus"), col("o_totalprice"))
         Seq("F", "O").foreach { st =>
@@ -201,8 +199,7 @@ object Pipeline {
     // data terms (CASE update + UNION insert) over the source table.
     Q("export_txn_merge_upsert",
       (s, d) => memoTxn(s, d, "export_txn_merge_upsert") {
-        val tmp = java.nio.file.Files
-          .createTempDirectory("graft_txnmerge").toString
+        val tmp = graft.Artifacts.scratch("txnmerge")
         val o = Tables.orders(s, d)
           .select(col("o_orderkey"), col("o_orderstatus"),
             col("o_totalprice").cast("decimal(18,2)").as("price"))
@@ -297,8 +294,7 @@ object Pipeline {
     // the bucketed-layout variant).
     Q("export_change_data_feed",
       (s, d) => memoTxn(s, d, "export_change_data_feed") {
-        val tmp = java.nio.file.Files
-          .createTempDirectory("graft_cdf").toString
+        val tmp = graft.Artifacts.scratch("cdf")
         val o = Tables.orders(s, d)
           .select(col("o_orderkey"), col("o_orderstatus"),
             col("o_totalprice").cast("decimal(18,2)").as("price"))
@@ -396,8 +392,7 @@ object Pipeline {
     // cardinality.
     Q("export_vacuum_orphans",
       (s, d) => memoTxn(s, d, "export_vacuum_orphans") {
-        val tmp = java.nio.file.Files
-          .createTempDirectory("graft_vacuum").toString
+        val tmp = graft.Artifacts.scratch("vacuum")
         val o = Tables.orders(s, d)
           .select(col("o_orderkey"), col("o_orderstatus"), col("o_totalprice"))
         Seq("F", "O").foreach { st =>
@@ -460,8 +455,7 @@ object Pipeline {
     // files: the pre-compaction P plus the insert).
     Q("export_txn_branch",
       (s, d) => memoTxn(s, d, "export_txn_branch") {
-        val tmp = java.nio.file.Files
-          .createTempDirectory("graft_txnbranch").toString
+        val tmp = graft.Artifacts.scratch("txnbranch")
         val o = Tables.orders(s, d)
           .select(col("o_orderkey"), col("o_orderstatus"),
             col("o_totalprice").cast("decimal(18,2)").as("price"))
@@ -1037,36 +1031,30 @@ object Pipeline {
       (s, d) => {
         import java.nio.file.{Files, Paths}
         import scala.jdk.CollectionConverters._
-        val key = graft.Fixtures.key(d, "events")
-        val root = s"${sys.props("java.io.tmpdir")}/graft_snap_$key"
-        val dataDir = s"$root/data"
-        def partFiles(): Seq[String] =
-          new java.io.File(dataDir).listFiles()
-            .filter(f => f.getName.endsWith(".parquet"))
-            .map(_.getAbsolutePath).toSeq.sorted
-        if (!Files.exists(Paths.get(s"$root/_committed_v2"))) {
+        val root = graft.Artifacts.staged("snap", d, "events") { p =>
+          // manifests name files relative to the snapshot root, so the
+          // published directory reads the same after its rename
+          def commit(v: Int): Unit = Files.write(Paths.get(s"$p/log/v$v.manifest"),
+            new java.io.File(s"$p/data").list()
+              .filter(_.endsWith(".parquet")).sorted
+              .map(f => s"data/$f").mkString("\n").getBytes("UTF-8"))
           val ev = Tables.events(s, d)
             .select(col("event_id"), col("ts"), col("event_type"),
               col("value"))
           ev.filter(col("ts") < lit(SPLIT))
-            .write.mode("overwrite").parquet(dataDir)
-          Files.createDirectories(Paths.get(s"$root/log"))
-          Files.write(Paths.get(s"$root/log/v1.manifest"),
-            partFiles().mkString("\n").getBytes("UTF-8"))
+            .write.mode("overwrite").parquet(s"$p/data")
+          Files.createDirectories(Paths.get(s"$p/log"))
+          commit(1)
           ev.filter(col("ts") >= lit(SPLIT))
-            .write.mode("append").parquet(dataDir)
-          Files.write(Paths.get(s"$root/log/v2.manifest"),
-            partFiles().mkString("\n").getBytes("UTF-8"))
-          Files.write(Paths.get(s"$root/_committed_v2"), Array.empty[Byte])
+            .write.mode("append").parquet(s"$p/data")
+          commit(2)
         }
         def asOf(v: Int): org.apache.spark.sql.DataFrame = {
           val files = Files.readAllLines(
             Paths.get(s"$root/log/v$v.manifest")).asScala.toSeq
-          s.read.parquet(files: _*)
+          s.read.parquet(files.map(f => s"$root/$f"): _*)
             .groupBy("event_type")
-            .agg(count(lit(1)).as("n_rows"),
-              sum((col("value").cast("decimal(18,2)") * 100).cast("long"))
-                .as("cents"))
+            .agg(count(lit(1)).as("n_rows"), sum(cents(col("value"))).as("cents"))
             .select(lit(v.toLong).as("version"), col("event_type"),
               col("n_rows"),
               (col("cents").cast("double") / 100.0).as("total_value"))
@@ -1074,15 +1062,15 @@ object Pipeline {
         asOf(1).unionByName(asOf(2)).orderBy("version", "event_type")
       }
     },
-      Some("""SELECT CAST(1 AS BIGINT) AS version, event_type,
+      Some(s"""SELECT CAST(1 AS BIGINT) AS version, event_type,
              |  COUNT(*) AS n_rows,
-             |  CAST(SUM(CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT)) AS DOUBLE)
+             |  CAST(SUM(${SQL_CENTS("value")}) AS DOUBLE)
              |    / 100.0 AS total_value
              |FROM events WHERE ts < TIMESTAMP '2024-01-15 00:00:00'
              |GROUP BY event_type
              |UNION ALL
              |SELECT CAST(2 AS BIGINT), event_type, COUNT(*),
-             |  CAST(SUM(CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT)) AS DOUBLE)
+             |  CAST(SUM(${SQL_CENTS("value")}) AS DOUBLE)
              |    / 100.0
              |FROM events GROUP BY event_type
              |ORDER BY version, event_type""".stripMargin)),

@@ -51,17 +51,7 @@ object Scans {
     // aggregate over the original un-partitioned parquet.
     Q("scan_partition_pruned",
       (s, d) => {
-        // Cache dir keyed on the sanitized source path PLUS a source
-        // fingerprint (size + mtime): a regenerated fixture invalidates
-        // the cached partitioned copy instead of being silently shadowed
-        // by it, and distinct dataset paths can never collide.
-        val key = graft.Fixtures.key(d, "orders")
-        val tmp = s"${sys.props("java.io.tmpdir")}/graft_part_orders_$key"
-        if (!new java.io.File(s"$tmp/_SUCCESS").exists()) {
-          Tables.orders(s, d).write.mode("overwrite")
-            .partitionBy("o_orderstatus").parquet(tmp)
-        }
-        s.read.parquet(tmp)
+        s.read.parquet(ordersByStatus(s, d))
           .filter(col("o_orderstatus") === "F")
           .groupBy("o_orderpriority")
           .agg(count(lit(1)).as("n_orders"),
@@ -80,11 +70,9 @@ object Scans {
     // normalized to BIGINT on both sides.
     Q("scan_csv_roundtrip",
       (s, d) => {
-        val key = graft.Fixtures.key(d, "nation")
-        val tmp = s"${sys.props("java.io.tmpdir")}/graft_csv_nation_$key"
-        if (!new java.io.File(s"$tmp/_SUCCESS").exists()) {
+        val tmp = graft.Artifacts.staged("csv_nation", d, "nation") { p =>
           Tables.nation(s, d).write.mode("overwrite")
-            .option("header", "true").csv(tmp)
+            .option("header", "true").csv(p)
         }
         s.read.option("header", "true").option("inferSchema", "true").csv(tmp)
           .groupBy(col("n_regionkey").cast("long").as("n_regionkey"))
@@ -100,12 +88,10 @@ object Scans {
     // natural JSON widths — so the aggregate mirrors directly.
     Q("scan_json_roundtrip",
       (s, d) => {
-        val key = graft.Fixtures.key(d, "customer")
-        val tmp = s"${sys.props("java.io.tmpdir")}/graft_json_customer_$key"
-        if (!new java.io.File(s"$tmp/_SUCCESS").exists()) {
+        val tmp = graft.Artifacts.staged("json_customer", d, "customer") { p =>
           Tables.customer(s, d)
             .select("c_custkey", "c_name", "c_mktsegment", "c_acctbal")
-            .write.mode("overwrite").json(tmp)
+            .write.mode("overwrite").json(p)
         }
         s.read.json(tmp)
           .groupBy("c_mktsegment")
@@ -123,10 +109,8 @@ object Scans {
     // write→read path preserves values exactly).
     Q("scan_orc_roundtrip",
       (s, d) => {
-        val key = graft.Fixtures.key(d, "supplier")
-        val tmp = s"${sys.props("java.io.tmpdir")}/graft_orc_supplier_$key"
-        if (!new java.io.File(s"$tmp/_SUCCESS").exists()) {
-          Tables.supplier(s, d).write.mode("overwrite").orc(tmp)
+        val tmp = graft.Artifacts.staged("orc_supplier", d, "supplier") { p =>
+          Tables.supplier(s, d).write.mode("overwrite").orc(p)
         }
         s.read.orc(tmp)
           .groupBy(col("s_nationkey").cast("long").as("s_nationkey"))
@@ -149,14 +133,11 @@ object Scans {
     // fixture like every staged-artifact query.
     Q("scan_codec_roundtrip",
       (s, d) => {
-        val key = graft.Fixtures.key(d, "supplier")
         val codecs = Seq("snappy", "gzip", "zstd")
         codecs.map { c =>
-          val tmp =
-            s"${sys.props("java.io.tmpdir")}/graft_codec_${c}_$key"
-          if (!new java.io.File(s"$tmp/_SUCCESS").exists()) {
+          val tmp = graft.Artifacts.staged(s"codec_$c", d, "supplier") { p =>
             Tables.supplier(s, d).write.mode("overwrite")
-              .option("compression", c).parquet(tmp)
+              .option("compression", c).parquet(p)
           }
           s.read.parquet(tmp)
             .agg(count(lit(1)).as("n_rows"),
@@ -187,9 +168,7 @@ object Scans {
     // PushedFilters.
     Q("scan_parquet_bloom",
       (s, d) => {
-        val key = graft.Fixtures.key(d, "orders")
-        val tmp = s"${sys.props("java.io.tmpdir")}/graft_bloom_orders_$key"
-        if (!new java.io.File(s"$tmp/_SUCCESS").exists()) {
+        val tmp = graft.Artifacts.staged("bloom_orders", d, "orders") { p =>
           // dictionary encoding is disabled for the bloom column:
           // parquet-mr SKIPS the bloom when a chunk stays fully
           // dictionary-encoded (the dictionary already answers exact
@@ -200,7 +179,7 @@ object Scans {
             .option("parquet.bloom.filter.enabled#o_custkey", "true")
             .option("parquet.bloom.filter.expected.ndv#o_custkey", "100000")
             .option("parquet.enable.dictionary#o_custkey", "false")
-            .parquet(tmp)
+            .parquet(p)
         }
         val o = s.read.parquet(tmp)
         val probe = o.agg(min("o_custkey")).head().getLong(0)
@@ -224,13 +203,11 @@ object Scans {
     // not file metadata. Oracle recomputes from the original parquet.
     Q("scan_text_roundtrip",
       (s, d) => {
-        val key = graft.Fixtures.key(d, "region")
-        val tmp = s"${sys.props("java.io.tmpdir")}/graft_text_region_$key"
-        if (!new java.io.File(s"$tmp/_SUCCESS").exists()) {
+        val tmp = graft.Artifacts.staged("text_region", d, "region") { p =>
           Tables.region(s, d)
             .select(concat_ws("|", col("r_regionkey"), col("r_name"))
               .as("value"))
-            .write.mode("overwrite").text(tmp)
+            .write.mode("overwrite").text(p)
         }
         s.read.text(tmp)
           .select(split(col("value"), "\\|").as("f"))
@@ -248,13 +225,7 @@ object Scans {
     // original un-partitioned parquet by the same key.
     Q("catalog_partition_skew",
       (s, d) => {
-        val key = graft.Fixtures.key(d, "orders")
-        val tmp = s"${sys.props("java.io.tmpdir")}/graft_part_orders_$key"
-        if (!new java.io.File(s"$tmp/_SUCCESS").exists()) {
-          Tables.orders(s, d).write.mode("overwrite")
-            .partitionBy("o_orderstatus").parquet(tmp)
-        }
-        val perPart = s.read.parquet(tmp)
+        val perPart = s.read.parquet(ordersByStatus(s, d))
           .groupBy("o_orderstatus").agg(count(lit(1)).as("n_rows"))
         val w = org.apache.spark.sql.expressions.Window.partitionBy()
         perPart
@@ -277,10 +248,8 @@ object Scans {
     // query proves the avro write→read path preserves values exactly.
     Q("scan_avro_roundtrip",
       (s, d) => {
-        val key = graft.Fixtures.key(d, "part")
-        val tmp = s"${sys.props("java.io.tmpdir")}/graft_avro_part_$key"
-        if (!new java.io.File(s"$tmp/_SUCCESS").exists()) {
-          Tables.part(s, d).write.mode("overwrite").format("org.apache.spark.sql.avro.AvroFileFormat").save(tmp)
+        val tmp = graft.Artifacts.staged("avro_part", d, "part") { p =>
+          Tables.part(s, d).write.mode("overwrite").format("org.apache.spark.sql.avro.AvroFileFormat").save(p)
         }
         s.read.format("org.apache.spark.sql.avro.AvroFileFormat").load(tmp)
           .groupBy("p_brand")
@@ -303,13 +272,11 @@ object Scans {
     // 4.6 s at sf0.1, within sight of the 5 s red line).
     Q("scan_xml_roundtrip",
       (s, d) => {
-        val key = graft.Fixtures.key(d, "customer")
-        val tmp = s"${sys.props("java.io.tmpdir")}/graft_xml_customer_$key"
-        if (!new java.io.File(s"$tmp/_SUCCESS").exists()) {
+        val tmp = graft.Artifacts.staged("xml_customer", d, "customer") { p =>
           Tables.customer(s, d)
             .select("c_custkey", "c_nationkey", "c_acctbal")
             .write.mode("overwrite").format("xml")
-            .option("rowTag", "customer").save(tmp)
+            .option("rowTag", "customer").save(p)
         }
         s.read.format("xml").option("rowTag", "customer").load(tmp)
           .groupBy(col("c_nationkey").cast("long").as("c_nationkey"))
@@ -331,15 +298,13 @@ object Scans {
     // union from the original table.
     Q("scan_schema_evolution",
       (s, d) => {
-        val key = graft.Fixtures.key(d, "nation")
-        val tmp = s"${sys.props("java.io.tmpdir")}/graft_evolve_nation_$key"
-        if (!new java.io.File(s"$tmp/gen2/_SUCCESS").exists()) {
+        val tmp = graft.Artifacts.staged("evolve_nation", d, "nation") { p =>
           Tables.nation(s, d).select(lit(1L).as("gen"), col("n_nationkey"),
               col("n_name"))
-            .write.mode("overwrite").parquet(s"$tmp/gen1")
+            .write.mode("overwrite").parquet(s"$p/gen1")
           Tables.nation(s, d).select(lit(2L).as("gen"), col("n_nationkey"),
               col("n_name"), col("n_regionkey"))
-            .write.mode("overwrite").parquet(s"$tmp/gen2")
+            .write.mode("overwrite").parquet(s"$p/gen2")
         }
         s.read.option("mergeSchema", "true")
           .parquet(s"$tmp/gen1", s"$tmp/gen2")
@@ -364,16 +329,14 @@ object Scans {
     Q("scan_json_corrupt",
       (s, d) => {
         import org.apache.spark.sql.types._
-        val key = graft.Fixtures.key(d, "nation")
-        val tmp = s"${sys.props("java.io.tmpdir")}/graft_json_corrupt_$key"
-        if (!new java.io.File(s"$tmp/_SUCCESS").exists()) {
+        val tmp = graft.Artifacts.staged("json_corrupt", d, "nation") { p =>
           import s.implicits._
           val good = Tables.nation(s, d).toJSON
           val bad = s.createDataset(Seq(
             "{\"n_nationkey\": 99, \"n_name\": \"TRUNCATED",
             "not json at all",
             "{]"))
-          good.union(bad).repartition(1).write.mode("overwrite").text(tmp)
+          good.union(bad).repartition(1).write.mode("overwrite").text(p)
         }
         val schema = StructType(Seq(
           StructField("n_nationkey", IntegerType),
@@ -406,8 +369,7 @@ object Scans {
     // everything else intact); conf restored in finally.
     Q("scan_dynamic_overwrite",
       (s, d) => {
-        val tmp = java.nio.file.Files
-          .createTempDirectory("graft_dynover").toString
+        val tmp = graft.Artifacts.scratch("dynover")
         val ev = Tables.events(s, d)
           .select(col("event_id"), col("user_id"), col("event_type"),
             col("value"))
@@ -447,20 +409,13 @@ object Scans {
     // restored afterwards so no other query inherits silent skipping.
     Q("scan_corrupt_recovery",
       (s, d) => {
-        val key = graft.Fixtures.key(d, "customer")
-        val tmp = s"${sys.props("java.io.tmpdir")}/graft_corrupt_file_$key"
-        val dir = new java.io.File(tmp)
-        if (!new java.io.File(s"$tmp/.staged").exists()) {
-          dir.mkdirs()
+        val tmp = graft.Artifacts.staged("corrupt_file", d, "customer") { p =>
           java.nio.file.Files.copy(
             java.nio.file.Paths.get(s"$d/customer.parquet"),
-            java.nio.file.Paths.get(s"$tmp/good.parquet"),
-            java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+            java.nio.file.Paths.get(s"$p/good.parquet"))
           java.nio.file.Files.write(
-            java.nio.file.Paths.get(s"$tmp/broken.parquet"),
+            java.nio.file.Paths.get(s"$p/broken.parquet"),
             "this is not a parquet file, merely named like one".getBytes)
-          java.nio.file.Files.write(
-            java.nio.file.Paths.get(s"$tmp/.staged"), Array.empty[Byte])
         }
         // explicit schema: inference would have to read every footer,
         // and the garbage file has none — exactly what a production
@@ -737,22 +692,17 @@ object Scans {
     // packing of small blobs into tasks.
     Q("scan_binary_files",
       (s, d) => {
-        val key = graft.Fixtures.key(d, "documents")
-        val tmp = new java.io.File(
-          s"${sys.props("java.io.tmpdir")}/graft_bin_$key")
-        if (!new java.io.File(tmp, "_STAGED").exists()) {
-          tmp.mkdirs()
+        val tmp = graft.Artifacts.staged("bin", d, "documents") { p =>
           Tables.documents(s, d).filter(col("doc_id") < 8)
             .select("doc_id", "text").collect().foreach { r =>
               java.nio.file.Files.write(
-                tmp.toPath.resolve(f"doc_${r.getLong(0)}%03d.bin"),
+                java.nio.file.Paths.get(p, f"doc_${r.getLong(0)}%03d.bin"),
                 r.getString(1).getBytes("UTF-8"))
             }
-          new java.io.File(tmp, "_STAGED").createNewFile()
         }
         s.read.format("binaryFile")
           .option("pathGlobFilter", "*.bin")
-          .load(tmp.toString)
+          .load(tmp)
           .select(
             regexp_extract(col("path"), "[^/]+$", 0).as("file_name"),
             col("length"), md5(col("content")).as("content_md5"))
@@ -868,18 +818,14 @@ object Scans {
     // roundtrip must lose nothing.
     Q("scan_glob_options",
       (s, d) => {
-        val key = graft.Fixtures.key(d, "events")
-        val tmp = s"${sys.props("java.io.tmpdir")}/graft_glob_events_$key"
-        if (!new java.io.File(s"$tmp/_STAGED").exists()) {
+        val tmp = graft.Artifacts.staged("glob_events", d, "events") { p =>
           Tables.events(s, d).write.mode("overwrite")
-            .partitionBy("event_type").parquet(tmp)
+            .partitionBy("event_type").parquet(p)
           java.nio.file.Files.writeString(
-            java.nio.file.Paths.get(s"$tmp/README.txt"), "decoy\n")
+            java.nio.file.Paths.get(s"$p/README.txt"), "decoy\n")
           java.nio.file.Files.writeString(
-            java.nio.file.Paths.get(s"$tmp/event_type=click/notes.json"),
+            java.nio.file.Paths.get(s"$p/event_type=click/notes.json"),
             "{\"decoy\": true}\n")
-          java.nio.file.Files.writeString(
-            java.nio.file.Paths.get(s"$tmp/_STAGED"), "ok\n")
         }
         s.read
           .option("recursiveFileLookup", "true")
@@ -912,8 +858,7 @@ object Scans {
         import s.implicits._
         val obs = org.apache.spark.sql.Observation("ingest_gate")
         val observed = Tables.events(s, d)
-          .withColumn("cents",
-            (col("value").cast("decimal(18,2)") * 100).cast("long"))
+          .withColumn("cents", cents(col("value")))
           .observe(obs,
             count(lit(1)).as("n_rows"),
             sum(when(col("value").isNull, 1L).otherwise(0L))
@@ -928,18 +873,17 @@ object Scans {
         def getL(name: String): Long = m(name).asInstanceOf[Long]
         val nRows = getL("n_rows")
         val nNull = getL("n_null_value")
-        val cents = getL("cents_sum")
+        val sumCents = getL("cents_sum")
         val spanH = (getL("max_us") - getL("min_us")) / 3600000000L
-        Seq((nRows, nNull, cents.toDouble / 100.0, spanH,
+        Seq((nRows, nNull, sumCents.toDouble / 100.0, spanH,
           nRows >= 1000L && nNull == 0L && spanH >= 24L))
           .toDF("n_rows", "n_null_value", "sum_value", "span_hours",
             "gate_pass")
       },
-      Some("""SELECT CAST(COUNT(*) AS BIGINT) AS n_rows,
+      Some(s"""SELECT CAST(COUNT(*) AS BIGINT) AS n_rows,
              |  CAST(SUM(CASE WHEN value IS NULL THEN 1 ELSE 0 END)
              |    AS BIGINT) AS n_null_value,
-             |  CAST(CAST(SUM(CAST(CAST(value AS DECIMAL(18,2)) * 100
-             |    AS BIGINT)) AS BIGINT) AS DOUBLE) / 100.0 AS sum_value,
+             |  CAST(CAST(SUM(${SQL_CENTS("value")}) AS BIGINT) AS DOUBLE) / 100.0 AS sum_value,
              |  (epoch_us(MAX(ts)) - epoch_us(MIN(ts))) // 3600000000
              |    AS span_hours,
              |  COUNT(*) >= 1000
@@ -983,12 +927,12 @@ object Scans {
     // of a single-connection stream; bounds come from one min/max
     // aggregate on the source, the standard two-query ingest pattern.
     // Write memoized per (JVM, fixture) like every staged-artifact
-    // query; embedded Derby is single-JVM, so the db path lives under
-    // this JVM's tmpdir.
+    // query; embedded Derby is single-JVM, so the db lives in
+    // [[graft.Artifacts.home]].
     Q("scan_jdbc_roundtrip",
       (s, d) => {
         val key = graft.Fixtures.tableKey(d, "supplier")
-        val db = s"${sys.props("java.io.tmpdir")}/graft_derby_$key"
+        val db = s"${graft.Artifacts.home}/derby_$key"
         val url = s"jdbc:derby:$db;create=true"
         val props = new java.util.Properties()
         props.setProperty("driver", "org.apache.derby.jdbc.EmbeddedDriver")
@@ -1035,12 +979,10 @@ object Scans {
         val tbl = s"nation_stats_$key"
         val statCols = Seq("n_name", "n_nationkey", "n_regionkey")
         staged(s"stats_$tbl") {
-          // per-JVM db LOCATION (the join_bucketed_colocated device):
-          // the default warehouse dir persists across JVMs, and a
-          // fresh catalog refuses to create a table over a leftover
-          // location (LOCATION_ALREADY_EXISTS)
-          s.sql("CREATE DATABASE IF NOT EXISTS graft_stats " +
-            s"LOCATION '$statsDbLocation'")
+          // per-JVM database: the default warehouse dir persists
+          // across JVMs, and a fresh catalog refuses to create a table
+          // over a leftover location (LOCATION_ALREADY_EXISTS)
+          graft.Artifacts.database(s, "graft_stats")
           Tables.nation(s, d).write.mode("overwrite")
             .saveAsTable(s"graft_stats.$tbl")
           s.sql(s"ANALYZE TABLE graft_stats.$tbl COMPUTE STATISTICS " +
@@ -1292,8 +1234,17 @@ object Scans {
     * At most 64 tables; an evicted one is rewritten.
     */
   private val staged = graft.Memo[String, Unit](bound = 64)
-  private lazy val statsDbLocation =
-    java.nio.file.Files.createTempDirectory("graft_stats").toString
+
+  /** The hive-style `o_orderstatus=X` copy of orders, staged once per
+    * fixture: scan_partition_pruned, catalog_partition_skew and
+    * join_dpp_prune read it.
+    */
+  private[operators] def ordersByStatus(s: org.apache.spark.sql.SparkSession,
+      d: String): String =
+    graft.Artifacts.staged("part_orders", d, "orders") { p =>
+      Tables.orders(s, d).write.mode("overwrite")
+        .partitionBy("o_orderstatus").parquet(p)
+    }
 
   /** Appended via `queries ++ extra` below to keep the main Seq under
     * the compiler's method-size comfort zone.

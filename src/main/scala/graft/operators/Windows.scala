@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.{Q, Tables}
+import graft.Ops.{cents, SQL_CENTS}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -620,7 +621,7 @@ object Windows {
       (s, d) => {
         val ev = Tables.events(s, d)
           .select(col("event_type"), hour(col("ts")).as("hod"),
-            (col("value").cast("decimal(18,2)") * 100).cast("long").as("c"))
+            cents(col("value")).as("c"))
         val cells = ev.groupBy("event_type", "hod")
           .agg(count(lit(1)).as("n_c"), sum("c").as("s_c"),
             sum(col("c") * col("c")).as("ss_c"))
@@ -636,9 +637,9 @@ object Windows {
                   col("n").cast("double")), 6).as("seasonality_strength"))
           .orderBy("event_type")
       },
-      Some("""WITH ev AS (
+      Some(s"""WITH ev AS (
              |  SELECT event_type, hour(ts) AS hod,
-             |    CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT) AS c
+             |    ${SQL_CENTS("value")} AS c
              |  FROM events),
              |cells AS (
              |  SELECT event_type, hod, COUNT(*) AS n_c,
@@ -2542,8 +2543,7 @@ object Windows {
     Q("ts_diff_in_diff",
       (s, d) => {
         val cells = Tables.events(s, d)
-          .withColumn("cents",
-            (col("value").cast("decimal(18,2)") * 100).cast("long"))
+          .withColumn("cents", cents(col("value")))
           .withColumn("arm_a", (col("user_id") % 2 === 0).cast("long"))
           .withColumn("post", (dayofmonth(col("ts")) > 15).cast("long"))
           .groupBy("arm_a", "post")
@@ -2577,14 +2577,14 @@ object Windows {
             varOverN("n_b1", "s_b1", "q_b1") +
             varOverN("n_b0", "s_b0", "q_b0")).as("se"))
       },
-      Some("""WITH cells AS (
+      Some(s"""WITH cells AS (
              |  SELECT CASE WHEN user_id % 2 = 0 THEN 1 ELSE 0 END AS arm_a,
              |    CASE WHEN dayofmonth(ts) > 15 THEN 1 ELSE 0 END AS post,
              |    CAST(COUNT(*) AS BIGINT) AS n,
              |    CAST(SUM(cents) AS BIGINT) AS s,
              |    CAST(SUM(cents * cents) AS BIGINT) AS q
              |  FROM (SELECT user_id, ts,
-             |      CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT)
+             |      ${SQL_CENTS("value")}
              |        AS cents FROM events) x
              |  GROUP BY 1, 2),
              |w AS (
@@ -2957,7 +2957,7 @@ object Windows {
         val users = ev
           .withColumn("cents",
             when(col("event_type") === "purchase",
-              (col("value").cast("decimal(18,2)") * 100).cast("long"))
+              cents(col("value")))
               .otherwise(0L))
           .groupBy("user_id")
           .agg(max(to_date(col("ts"))).as("last_day"),
@@ -2986,13 +2986,13 @@ object Windows {
             (sum("cents").cast("double") / 100.0).as("revenue"))
           .orderBy("r_score", "f_score", "m_score")
       },
-      Some("""WITH mx AS (
+      Some(s"""WITH mx AS (
              |  SELECT MAX(CAST(ts AS DATE)) AS mx FROM events),
              |u AS (
              |  SELECT user_id, MAX(CAST(ts AS DATE)) AS last_day,
              |    CAST(COUNT(*) AS BIGINT) AS freq,
              |    CAST(SUM(CASE WHEN event_type = 'purchase'
-             |      THEN CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT)
+             |      THEN ${SQL_CENTS("value")}
              |      ELSE 0 END) AS BIGINT) AS cents
              |  FROM events GROUP BY user_id),
              |scored AS (
@@ -3022,7 +3022,7 @@ object Windows {
         val p = Tables.events(s, d)
           .filter(col("event_type") === "purchase")
           .select(col("user_id"), to_date(col("ts")).as("day"),
-            (col("value").cast("decimal(18,2)") * 100).cast("long")
+            cents(col("value"))
               .as("cents"))
         val firstp = p.groupBy("user_id")
           .agg(date_trunc("week", min(col("day"))).cast("date").as("cohort"))
@@ -3041,9 +3041,9 @@ object Windows {
               col("cohort_users"), 4).as("ltv_per_user"))
           .orderBy("cohort", "age_weeks")
       },
-      Some("""WITH p AS (
+      Some(s"""WITH p AS (
              |  SELECT user_id, CAST(ts AS DATE) AS day,
-             |    CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT) AS cents
+             |    ${SQL_CENTS("value")} AS cents
              |  FROM events WHERE event_type = 'purchase'),
              |firstp AS (
              |  SELECT user_id,
@@ -3085,8 +3085,7 @@ object Windows {
       (s, d) => {
         val ev = Tables.events(s, d)
           .withColumn("us", unix_micros(col("ts")))
-          .withColumn("cents",
-            (col("value").cast("decimal(18,2)") * 100).cast("long"))
+          .withColumn("cents", cents(col("value")))
         val w1 = Window.partitionBy("user_id").orderBy("us")
           .rangeBetween(-3600000000L, 0)
         val w24 = Window.partitionBy("user_id").orderBy("us")
@@ -3098,9 +3097,9 @@ object Windows {
             (col("cents_24h").cast("double") / 100.0).as("spend_24h"))
           .orderBy("event_id")
       },
-      Some("""WITH ev AS (
+      Some(s"""WITH ev AS (
              |  SELECT event_id, user_id, event_type, epoch_us(ts) AS us,
-             |    CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT) AS cents
+             |    ${SQL_CENTS("value")} AS cents
              |  FROM events),
              |f AS (
              |  SELECT event_id, user_id, event_type,
@@ -3639,8 +3638,7 @@ private object Wave30Q {
     (s, d) => {
       val ev = graft.Tables.events(s, d)
         .withColumn("us", unix_micros(col("ts")))
-        .withColumn("cents",
-          (col("value").cast("decimal(18,2)") * 100).cast("long"))
+        .withColumn("cents", cents(col("value")))
       val H = 3600000000L
       val wPre = Window.partitionBy("user_id").orderBy("us")
         .rangeBetween(-H, -1)
@@ -3676,9 +3674,9 @@ private object Wave30Q {
             when(col("n_with_both") > 0, col("n_with_both"))
               .cast("double") / 100.0, 6).as("mean_uplift"))
     },
-    Some("""WITH ev AS (
+    Some(s"""WITH ev AS (
            |  SELECT user_id, event_type, epoch_us(ts) AS us,
-           |    CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT) AS cents
+           |    ${SQL_CENTS("value")} AS cents
            |  FROM events),
            |w AS (
            |  SELECT user_id, event_type,

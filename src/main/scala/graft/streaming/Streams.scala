@@ -3,9 +3,10 @@ package graft.streaming
 import java.util.concurrent.atomic.AtomicInteger
 
 import graft.Q
-import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
+import graft.Ops.{cents, SQL_CENTS}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout, OutputMode, Trigger}
 import org.apache.spark.sql.types._
 
 /** Spark 4 StatefulProcessor: per-user running sum in a ValueState. */
@@ -89,22 +90,12 @@ object Streams {
 
   private val nameCounter = new AtomicInteger(0)
 
-  /** Per-JVM home for stream_dedup_index's bucketed artifact. */
-  private lazy val streamIdxLocation =
-    java.nio.file.Files.createTempDirectory("graft_stream_idx").toString
-
   /** Artifact table → it is built. Each table name carries the
     * documents' [[graft.Fixtures.tableKey]], so a rewritten corpus
     * builds a new table instead of being served the old one. At most
     * 64 tables; an evicted one is only rebuilt.
     */
   private val streamIdxMemo = graft.Memo[String, Unit](bound = 64)
-
-  /** Staging key → staged directory. The memo serializes concurrent
-    * stagers of one fixture: the second waits for the first's copy. At
-    * most 64 staged sources; an evicted key finds its copy on disk.
-    */
-  private val stagedDirs = graft.Memo[String, String](bound = 64)
 
   /** stream_dedup_index's standing corpus band index for fixture `d`. */
   private[graft] def corpusIndex(d: String): String =
@@ -116,48 +107,33 @@ object Streams {
     */
   private val runLock = new Object
 
-  // ts physical type varies by fixture version (ns-long vs µs NTZ);
-  // eventsStream reads it from the staged file's schema.
-
-  /** The file stream source requires a DIRECTORY of files; stage the
-    * events fixture into a per-sfDir temp dir once (idempotent copy) —
-    * this also models the real deployment shape (files arriving in a
-    * watched directory). The dir is keyed by the source fingerprint,
-    * NOT a random temp name: persistent checkpoints
-    * (stream_availablenow_catchup) record the source path in their
-    * offset log, so the staged path must be stable across JVM runs.
+  /** The file stream source requires a DIRECTORY of files: fixture
+    * table `tbl` copied alone into a staged directory (the deployment
+    * shape: files arriving in a watched directory). The path is stable
+    * across JVMs, because the catch-up checkpoints record it in their
+    * offset logs.
     */
-  private def stageEventsDir(d: String): String = stageDir(d, "events")
-
-  private def stageDir(d: String, tbl: String): String = {
-    import java.nio.file.{Files, Paths, StandardCopyOption}
-    val key = s"${tbl}_${graft.Fixtures.key(d, tbl)}"
-    // The memo both memoizes and SERIALIZES staging per key: a second
-    // caller blocks until the first finishes, so nobody reads a
-    // half-staged file. The copy lands under a temp name and is
-    // ATOMIC_MOVE'd into place — a crash mid-copy leaves only the temp
-    // file, never a truncated events.parquet that would pass the
-    // exists() check on the next run (the fingerprint key is unchanged
-    // after a crash, so a truncated final file would poison every later
-    // streaming query, including persistent AvailableNow checkpoints).
-    stagedDirs(key) {
-      val target = Paths.get(s"${sys.props("java.io.tmpdir")}/graft_stream_$key")
-      val dest = target.resolve(s"$tbl.parquet")
-      if (!Files.exists(dest)) {
-        Files.createDirectories(target)
-        val tmp = Files.createTempFile(target, ".staging_", ".parquet")
-        Files.copy(Paths.get(s"$d/$tbl.parquet"), tmp,
-          StandardCopyOption.REPLACE_EXISTING)
-        try Files.move(tmp, dest, StandardCopyOption.ATOMIC_MOVE)
-        catch {
-          // another JVM won the race between our exists() and move —
-          // its completed copy is equally valid; discard ours
-          case _: java.nio.file.FileAlreadyExistsException => Files.deleteIfExists(tmp)
-        }
-      }
-      target.toString
+  private def stageDir(d: String, tbl: String): String =
+    graft.Artifacts.staged(s"stream_$tbl", d, tbl) { p =>
+      java.nio.file.Files.copy(java.nio.file.Paths.get(s"$d/$tbl.parquet"),
+        java.nio.file.Paths.get(p, s"$tbl.parquet"))
     }
-  }
+
+  /** Run one AvailableNow catch-up: checkpoint at `root/cp`, drain what
+    * the checkpoint has not seen, wait. `root` comes from
+    * [[graft.Artifacts.path]] (or a scratch directory for a one-shot
+    * run); `sink` is the query's frame and sink shape.
+    */
+  private def catchUp(root: String)(sink: DataStreamWriter[Row]): Unit =
+    sink.option("checkpointLocation", s"$root/cp")
+      .trigger(Trigger.AvailableNow())
+      .start()
+      .awaitTermination()
+
+  /** The plain append-mode parquet sink at `root/sink`. */
+  private def parquetSink(df: DataFrame, root: String): DataStreamWriter[Row] =
+    df.writeStream.format("parquet").option("path", s"$root/sink")
+      .outputMode("append")
 
   /** events as a streaming source with ts normalized to a µs timestamp.
     * The file stream source needs a static schema upfront, so the
@@ -167,7 +143,7 @@ object Streams {
     */
   private def eventsStream(s: SparkSession, d: String): DataFrame = {
     s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val dir = stageEventsDir(d)
+    val dir = stageDir(d, "events")
     val physical = graft.Tables.parquetSchema(s, dir)
     graft.Tables.normalizeEventsTs(s.readStream.schema(physical).parquet(dir))
   }
@@ -546,24 +522,9 @@ object Streams {
     // interrupted run are invisible.)
     Q("stream_availablenow_catchup",
       (s, d) => {
-        import org.apache.spark.sql.streaming.Trigger
-        val key = graft.Fixtures.key(d, "events")
-        // v3: keyed alongside the STABLE staged source path (a
-        // checkpoint written against a since-deleted random staging dir
-        // must not be resumed). Bumped v2→v3 when stageDir generalized
-        // to per-table staging and the staged path changed — a v2
-        // checkpoint's offset log records the OLD source path and must
-        // not be resumed against the new one.
-        val root = s"${sys.props("java.io.tmpdir")}/graft_avnow_v3_$key"
-        val q = eventsStream(s, d)
-          .select(col("event_id"), col("event_type"), col("value"))
-          .writeStream.format("parquet")
-          .option("path", s"$root/sink")
-          .option("checkpointLocation", s"$root/cp")
-          .outputMode("append")
-          .trigger(Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
+        val root = graft.Artifacts.path("avnow", d, "events")
+        catchUp(root)(parquetSink(eventsStream(s, d)
+          .select(col("event_id"), col("event_type"), col("value")), root))
         s.read.parquet(s"$root/sink")
           .groupBy("event_type")
           .agg(count(lit(1)).as("n"),
@@ -587,20 +548,11 @@ object Streams {
     // oracle, raising the oracled streaming surface to two.
     Q("stream_dedup_catchup",
       (s, d) => {
-        import org.apache.spark.sql.streaming.Trigger
-        val key = graft.Fixtures.key(d, "documents")
-        val root = s"${sys.props("java.io.tmpdir")}/graft_dedupnow_v1_$key"
-        val q = documentsStream(s, d)
+        val root = graft.Artifacts.path("dedupnow", d, "documents")
+        catchUp(root)(parquetSink(documentsStream(s, d)
           .select(col("source"), md5(col("text")).as("h"),
             col("n_chars"))
-          .dropDuplicates("source", "h")
-          .writeStream.format("parquet")
-          .option("path", s"$root/sink")
-          .option("checkpointLocation", s"$root/cp")
-          .outputMode("append")
-          .trigger(Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
+          .dropDuplicates("source", "h"), root))
         s.read.parquet(s"$root/sink")
           .groupBy("source")
           .agg(count(lit(1)).as("n_unique"),
@@ -630,22 +582,13 @@ object Streams {
     // emit nothing new.
     Q("stream_session_catchup",
       (s, d) => {
-        import org.apache.spark.sql.streaming.Trigger
-        val key = graft.Fixtures.key(d, "events")
-        val root = s"${sys.props("java.io.tmpdir")}/graft_sessnow_v1_$key"
-        val q = eventsStream(s, d)
+        val root = graft.Artifacts.path("sessnow", d, "events")
+        catchUp(root)(parquetSink(eventsStream(s, d)
           .withWatermark("ts", "10 minutes")
           .groupBy(session_window(col("ts"), "30 minutes"), col("user_id"))
           .agg(count(lit(1)).as("n_events"))
           .select(col("user_id"), col("session_window.end").as("s_end"),
-            col("n_events"))
-          .writeStream.format("parquet")
-          .option("path", s"$root/sink")
-          .option("checkpointLocation", s"$root/cp")
-          .outputMode("append")
-          .trigger(Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
+            col("n_events")), root))
         s.read.parquet(s"$root/sink")
           .groupBy("user_id")
           .agg(count(lit(1)).as("n_sessions"),
@@ -689,33 +632,24 @@ object Streams {
     // epoch-aligned window/slide semantics, not just the totals.
     Q("stream_sliding_catchup",
       (s, d) => {
-        import org.apache.spark.sql.streaming.Trigger
-        val key = graft.Fixtures.key(d, "events")
-        val root = s"${sys.props("java.io.tmpdir")}/graft_slidenow_v1_$key"
+        val root = graft.Artifacts.path("slidenow", d, "events")
         val agg = eventsStream(s, d)
-          .withColumn("cents",
-            (col("value").cast("decimal(18,2)") * 100).cast("long"))
+          .withColumn("cents", cents(col("value")))
           .groupBy(window(col("ts"), "1 hour", "15 minutes"))
           .agg(count(lit(1)).as("n_events"), sum("cents").as("cents"))
-        val q = agg.writeStream
-          .outputMode("complete")
+        catchUp(root)(agg.writeStream.outputMode("complete")
           .foreachBatch { (batch: DataFrame, _: Long) =>
             batch.write.mode("overwrite").parquet(s"$root/sink")
-          }
-          .option("checkpointLocation", s"$root/cp")
-          .trigger(Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
+          })
         s.read.parquet(s"$root/sink")
           .select(tsStr("window.start").as("w_start"), col("n_events"),
             (col("cents").cast("double") / 100.0).as("total_value"))
           .orderBy("w_start")
       },
-      Some("""WITH w AS (
+      Some(s"""WITH w AS (
              |  SELECT time_bucket(INTERVAL 15 MINUTE, ts)
              |      - (INTERVAL 15 MINUTE) * k AS w_start,
-             |    CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT)
-             |      AS cents
+             |    ${SQL_CENTS("value")} AS cents
              |  FROM events, (SELECT unnest([0, 1, 2, 3]) AS k) ks)
              |SELECT strftime(w_start, '%Y-%m-%d %H:%M:%S') AS w_start,
              |  COUNT(*) AS n_events,
@@ -734,9 +668,7 @@ object Streams {
     // cannot make, which is why that one is sanctioned no-oracle.
     Q("stream_tws_catchup",
       (s, d) => {
-        import org.apache.spark.sql.streaming.Trigger
-        val key = graft.Fixtures.key(d, "events")
-        val root = s"${sys.props("java.io.tmpdir")}/graft_twsnow_v1_$key"
+        val root = graft.Artifacts.path("twsnow", d, "events")
         // TransformWithState requires the RocksDB provider; the session
         // is SHARED across the whole bench/verify sweep, so capture the
         // prior value and restore it after the query terminates —
@@ -752,25 +684,18 @@ object Streams {
         implicit val outEnc = Encoders.tuple(Encoders.scalaLong,
           Encoders.scalaLong, Encoders.scalaLong)
         val pairs = eventsStream(s, d)
-          .select(col("user_id"),
-            (col("value").cast("decimal(18,2)") * 100).cast("long")
-              .as("cents"))
+          .select(col("user_id"), cents(col("value")).as("cents"))
           .as[(Long, Long)](inEnc)
         val out = pairs.groupByKey(_._1)(longEnc)
           .transformWithState(new RunningCountCents(),
             org.apache.spark.sql.streaming.TimeMode.None(),
             org.apache.spark.sql.streaming.OutputMode.Update())(outEnc)
           .toDF("user_id", "n_events", "cents")
-        try {
-          val q = out.writeStream
-            .foreachBatch { (batch: DataFrame, _: Long) =>
-              batch.write.mode("append").parquet(s"$root/sink")
-            }
-            .option("checkpointLocation", s"$root/cp")
-            .trigger(Trigger.AvailableNow())
-            .start()
-          q.awaitTermination()
-        } finally priorProvider match {
+        try catchUp(root)(out.writeStream
+          .foreachBatch { (batch: DataFrame, _: Long) =>
+            batch.write.mode("append").parquet(s"$root/sink")
+          })
+        finally priorProvider match {
           case Some(v) => s.conf.set(providerKey, v)
           case None    => s.conf.unset(providerKey)
         }
@@ -782,9 +707,8 @@ object Streams {
             (col("cents").cast("double") / 100.0).as("total_value"))
           .orderBy("user_id")
       },
-      Some("""SELECT user_id, COUNT(*) AS n_events,
-             |  CAST(SUM(CAST(CAST(value AS DECIMAL(18,2)) * 100
-             |    AS BIGINT)) AS DOUBLE) / 100.0 AS total_value
+      Some(s"""SELECT user_id, COUNT(*) AS n_events,
+             |  CAST(SUM(${SQL_CENTS("value")}) AS DOUBLE) / 100.0 AS total_value
              |FROM events GROUP BY user_id ORDER BY user_id""".stripMargin)),
 
     // Seventh ORACLED streaming query: STREAM-STREAM inner join under
@@ -801,21 +725,17 @@ object Streams {
     // user-bucket rollup with exact decimal cents.
     Q("stream_join_catchup",
       (s, d) => {
-        import org.apache.spark.sql.streaming.Trigger
-        val key = graft.Fixtures.key(d, "events")
-        val root = s"${sys.props("java.io.tmpdir")}/graft_joinnow_v2_$key"
+        val root = graft.Artifacts.path("joinnow", d, "events")
         val src = eventsStream(s, d)
         val left = src
           .filter(col("event_id") % 2 === 0)
           .select(col("user_id"), col("ts").as("l_ts"),
-            (col("value").cast("decimal(18,2)") * 100).cast("long")
-              .as("l_cents"))
+            cents(col("value")).as("l_cents"))
           .withWatermark("l_ts", "40 days")
         val right = src
           .filter(col("event_id") % 2 === 1)
           .select(col("user_id").as("r_user"), col("ts").as("r_ts"),
-            (col("value").cast("decimal(18,2)") * 100).cast("long")
-              .as("r_cents"))
+            cents(col("value")).as("r_cents"))
           .withWatermark("r_ts", "40 days")
         val joined = left.join(right,
           col("user_id") === col("r_user") &&
@@ -828,14 +748,10 @@ object Streams {
         // permanently inflate n_pairs/sum_cents and fail the oracle on
         // every later run. Each batch overwrites its own batchId-named
         // subdirectory; the read globs them back together.
-        val q = joined.writeStream
+        catchUp(root)(joined.writeStream
           .foreachBatch { (batch: DataFrame, batchId: Long) =>
             batch.write.mode("overwrite").parquet(s"$root/sink/b=$batchId")
-          }
-          .option("checkpointLocation", s"$root/cp")
-          .trigger(Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
+          })
         s.read.parquet(s"$root/sink/b=*")
           .groupBy((col("user_id") % 10).as("user_bucket"))
           .agg(count(lit(1)).as("n_pairs"),
@@ -843,15 +759,12 @@ object Streams {
               .as("sum_cents"))
           .orderBy("user_bucket")
       },
-      Some("""SELECT user_id % 10 AS user_bucket,
+      Some(s"""SELECT user_id % 10 AS user_bucket,
              |  COUNT(*) AS n_pairs,
              |  CAST(SUM(l_cents + r_cents) AS BIGINT) AS sum_cents
              |FROM (
-             |  SELECT l.user_id,
-             |    CAST(CAST(l.value AS DECIMAL(18,2)) * 100 AS BIGINT)
-             |      AS l_cents,
-             |    CAST(CAST(r.value AS DECIMAL(18,2)) * 100 AS BIGINT)
-             |      AS r_cents
+             |  SELECT l.user_id, ${SQL_CENTS("l.value")} AS l_cents,
+             |    ${SQL_CENTS("r.value")} AS r_cents
              |  FROM (SELECT * FROM events WHERE event_id % 2 = 0) l
              |  JOIN (SELECT * FROM events WHERE event_id % 2 = 1) r
              |    ON l.user_id = r.user_id
@@ -870,23 +783,14 @@ object Streams {
     // carries no FK.
     Q("stream_enrich_catchup",
       (s, d) => {
-        import org.apache.spark.sql.streaming.Trigger
-        val key = graft.Fixtures.key(d, "events")
-        val root = s"${sys.props("java.io.tmpdir")}/graft_enrichnow_v1_$key"
+        val root = graft.Artifacts.path("enrichnow", d, "events")
         val dim = graft.Tables.nation(s, d)
           .select(col("n_nationkey"), col("n_name"))
-        val q = eventsStream(s, d)
+        catchUp(root)(parquetSink(eventsStream(s, d)
           .select(col("event_id"), col("user_id"), col("value"))
           .withColumn("nk", (col("user_id") % 25).cast("int"))
           .join(broadcast(dim), col("nk") === col("n_nationkey"))
-          .select(col("event_id"), col("n_name"), col("value"))
-          .writeStream.format("parquet")
-          .option("path", s"$root/sink")
-          .option("checkpointLocation", s"$root/cp")
-          .outputMode("append")
-          .trigger(Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
+          .select(col("event_id"), col("n_name"), col("value")), root))
         s.read.parquet(s"$root/sink")
           .groupBy("n_name")
           .agg(count(lit(1)).as("n_events"),
@@ -916,30 +820,22 @@ object Streams {
     // belongs in append/update mode instead (documented trade).
     Q("stream_agg_catchup",
       (s, d) => {
-        import org.apache.spark.sql.streaming.Trigger
-        val key = graft.Fixtures.key(d, "events")
-        val root = s"${sys.props("java.io.tmpdir")}/graft_aggnow_v1_$key"
+        val root = graft.Artifacts.path("aggnow", d, "events")
         val agg = eventsStream(s, d)
-          .withColumn("cents",
-            (col("value").cast("decimal(18,2)") * 100).cast("long"))
+          .withColumn("cents", cents(col("value")))
           .groupBy("event_type")
           .agg(count(lit(1)).as("n_events"), sum("cents").as("cents"))
-        val q = agg.writeStream
-          .outputMode("complete")
+        catchUp(root)(agg.writeStream.outputMode("complete")
           .foreachBatch { (batch: DataFrame, _: Long) =>
             batch.write.mode("overwrite").parquet(s"$root/sink")
-          }
-          .option("checkpointLocation", s"$root/cp")
-          .trigger(Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
+          })
         s.read.parquet(s"$root/sink")
           .select(col("event_type"), col("n_events"),
             (col("cents").cast("double") / 100.0).as("total_value"))
           .orderBy("event_type")
       },
-      Some("""SELECT event_type, COUNT(*) AS n_events,
-             |  CAST(SUM(CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT))
+      Some(s"""SELECT event_type, COUNT(*) AS n_events,
+             |  CAST(SUM(${SQL_CENTS("value")})
              |    AS DOUBLE) / 100.0 AS total_value
              |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin)),
 
@@ -955,21 +851,14 @@ object Streams {
     // dashboard table, the serving layer ranks, the standard split.
     Q("stream_topn_catchup",
       (s, d) => {
-        import org.apache.spark.sql.streaming.Trigger
-        val key = graft.Fixtures.key(d, "events")
-        val root = s"${sys.props("java.io.tmpdir")}/graft_topnnow_v1_$key"
+        val root = graft.Artifacts.path("topnnow", d, "events")
         val agg = eventsStream(s, d)
           .groupBy(window(col("ts"), "1 day"), col("event_type"))
           .agg(count(lit(1)).as("n"))
-        val q = agg.writeStream
-          .outputMode("complete")
+        catchUp(root)(agg.writeStream.outputMode("complete")
           .foreachBatch { (batch: DataFrame, _: Long) =>
             batch.write.mode("overwrite").parquet(s"$root/sink")
-          }
-          .option("checkpointLocation", s"$root/cp")
-          .trigger(Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
+          })
         val w = org.apache.spark.sql.expressions.Window.partitionBy("day")
           .orderBy(col("n").desc, col("event_type"))
         s.read.parquet(s"$root/sink")
@@ -1007,37 +896,25 @@ object Streams {
     // nothing new.
     Q("stream_late_catchup",
       (s, d) => {
-        import org.apache.spark.sql.streaming.Trigger
-        val key = graft.Fixtures.key(d, "events")
-        val root = s"${sys.props("java.io.tmpdir")}/graft_latenow_v1_$key"
-        val q = eventsStream(s, d)
+        val root = graft.Artifacts.path("latenow", d, "events")
+        catchUp(root)(parquetSink(eventsStream(s, d)
           .withWatermark("ts", "10 minutes")
           .groupBy(window(col("ts"), "1 hour"))
-          .agg(count(lit(1)).as("n_events"),
-            sum((col("value").cast("decimal(18,2)") * 100).cast("long"))
-              .as("cents"))
+          .agg(count(lit(1)).as("n_events"), sum(cents(col("value"))).as("cents"))
           .select(col("window.start").as("w_start_ts"), col("n_events"),
-            col("cents"))
-          .writeStream.format("parquet")
-          .option("path", s"$root/sink")
-          .option("checkpointLocation", s"$root/cp")
-          .outputMode("append")
-          .trigger(Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
+            col("cents")), root))
         s.read.parquet(s"$root/sink")
           .select(date_format(col("w_start_ts"), "yyyy-MM-dd HH:mm:ss")
               .as("w_start"), col("n_events"),
             (col("cents").cast("double") / 100.0).as("total_value"))
           .orderBy("w_start")
       },
-      Some("""WITH wm AS (
+      Some(s"""WITH wm AS (
              |  SELECT (epoch_ms(max(ts)) - 600000) * 1000 AS w FROM events),
              |b AS (
              |  SELECT time_bucket(INTERVAL 1 HOUR, ts) AS w_start,
              |    COUNT(*) AS n_events,
-             |    CAST(SUM(CAST(CAST(value AS DECIMAL(18,2)) * 100
-             |      AS BIGINT)) AS BIGINT) AS cents
+             |    CAST(SUM(${SQL_CENTS("value")}) AS BIGINT) AS cents
              |  FROM events GROUP BY 1)
              |SELECT strftime(w_start, '%Y-%m-%d %H:%M:%S') AS w_start,
              |  n_events, CAST(cents AS DOUBLE) / 100.0 AS total_value
@@ -1054,18 +931,14 @@ object Streams {
     // make the recovered totals equal the batch GROUP BY.
     Q("stream_fmgws_catchup",
       (s, d) => {
-        import org.apache.spark.sql.streaming.Trigger
-        val key = graft.Fixtures.key(d, "events")
-        val root = s"${sys.props("java.io.tmpdir")}/graft_fmgwsnow_v1_$key"
+        val root = graft.Artifacts.path("fmgwsnow", d, "events")
         implicit val longEnc = Encoders.scalaLong
         implicit val inEnc = Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong)
         implicit val stEnc = Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong)
         implicit val outEnc = Encoders.tuple(Encoders.scalaLong,
           Encoders.scalaLong, Encoders.scalaLong)
         val pairs = eventsStream(s, d)
-          .select(col("user_id"),
-            (col("value").cast("decimal(18,2)") * 100).cast("long")
-              .as("cents"))
+          .select(col("user_id"), cents(col("value")).as("cents"))
           .as[(Long, Long)](inEnc)
         val out = pairs.groupByKey(_._1)(longEnc)
           .flatMapGroupsWithState[(Long, Long), (Long, Long, Long)](
@@ -1079,14 +952,10 @@ object Streams {
               Iterator((user, n, c))
           }(stEnc, outEnc)
           .toDF("user_id", "n_events", "cents")
-        val q = out.writeStream
+        catchUp(root)(out.writeStream
           .foreachBatch { (batch: DataFrame, batchId: Long) =>
             batch.write.mode("overwrite").parquet(s"$root/sink/b=$batchId")
-          }
-          .option("checkpointLocation", s"$root/cp")
-          .trigger(Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
+          })
         s.read.parquet(s"$root/sink/b=*")
           .groupBy("user_id")
           .agg(max("n_events").as("n_events"),
@@ -1095,9 +964,8 @@ object Streams {
             (col("cents").cast("double") / 100.0).as("total_value"))
           .orderBy("user_id")
       },
-      Some("""SELECT user_id, COUNT(*) AS n_events,
-             |  CAST(SUM(CAST(CAST(value AS DECIMAL(18,2)) * 100
-             |    AS BIGINT)) AS DOUBLE) / 100.0 AS total_value
+      Some(s"""SELECT user_id, COUNT(*) AS n_events,
+             |  CAST(SUM(${SQL_CENTS("value")}) AS DOUBLE) / 100.0 AS total_value
              |FROM events GROUP BY user_id ORDER BY user_id""".stripMargin)),
 
     // Twelfth ORACLED streaming query: LEFT-OUTER stream-stream
@@ -1113,33 +981,25 @@ object Streams {
     // semantics, not an artifact).
     Q("stream_outer_catchup",
       (s, d) => {
-        import org.apache.spark.sql.streaming.Trigger
-        val key = graft.Fixtures.key(d, "events")
-        val root = s"${sys.props("java.io.tmpdir")}/graft_outernow_v1_$key"
+        val root = graft.Artifacts.path("outernow", d, "events")
         val src = eventsStream(s, d)
         val left = src.filter(col("event_id") % 2 === 0)
           .select(col("user_id"), col("ts").as("l_ts"),
-            (col("value").cast("decimal(18,2)") * 100).cast("long")
-              .as("l_cents"))
+            cents(col("value")).as("l_cents"))
           .withWatermark("l_ts", "10 minutes")
         val right = src.filter(col("event_id") % 2 === 1)
           .select(col("user_id").as("r_user"), col("ts").as("r_ts"),
-            (col("value").cast("decimal(18,2)") * 100).cast("long")
-              .as("r_cents"))
+            cents(col("value")).as("r_cents"))
           .withWatermark("r_ts", "10 minutes")
         val joined = left.join(right,
           col("user_id") === col("r_user") &&
             col("r_ts") >= col("l_ts") &&
             col("r_ts") <= col("l_ts") + expr("INTERVAL 5 MINUTES"),
           "left_outer")
-        val q = joined.writeStream
+        catchUp(root)(joined.writeStream
           .foreachBatch { (batch: DataFrame, batchId: Long) =>
             batch.write.mode("overwrite").parquet(s"$root/sink/b=$batchId")
-          }
-          .option("checkpointLocation", s"$root/cp")
-          .trigger(Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
+          })
         s.read.parquet(s"$root/sink/b=*")
           .groupBy((col("user_id") % 10).as("user_bucket"))
           .agg(count(col("r_cents")).as("n_matched"),
@@ -1153,17 +1013,16 @@ object Streams {
       // watermark is their MIN (multipleWatermarkPolicy default) — a
       // global max(ts) here overstates the watermark by the gap between
       // the two sides' maxima and mis-finalizes boundary rows (caught
-      // by the r13 full sweep: one bucket-5 row at sf0.01)
-      Some("""WITH wm AS (
+      // (one bucket-5 row at sf0.01)
+      Some(s"""WITH wm AS (
              |  SELECT (epoch_ms(LEAST(
              |    (SELECT max(ts) FROM events WHERE event_id % 2 = 0),
              |    (SELECT max(ts) FROM events WHERE event_id % 2 = 1)))
              |    - 600000) * 1000 AS w),
-             |l AS (SELECT user_id, ts AS l_ts,
-             |    CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT) AS l_cents
+             |l AS (SELECT user_id, ts AS l_ts, ${SQL_CENTS("value")} AS l_cents
              |  FROM events WHERE event_id % 2 = 0),
              |r AS (SELECT user_id AS r_user, ts AS r_ts,
-             |    CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT) AS r_cents
+             |    ${SQL_CENTS("value")} AS r_cents
              |  FROM events WHERE event_id % 2 = 1),
              |j AS (
              |  SELECT l.user_id, l.l_ts, l.l_cents, r.r_cents
@@ -1193,13 +1052,10 @@ object Streams {
     // so a divergence in either sink fails the gate.
     Q("stream_multisink_catchup",
       (s, d) => {
-        import org.apache.spark.sql.streaming.Trigger
-        val key = graft.Fixtures.key(d, "events")
-        val root = s"${sys.props("java.io.tmpdir")}/graft_msinknow_v1_$key"
-        val q = eventsStream(s, d)
+        val root = graft.Artifacts.path("msinknow", d, "events")
+        catchUp(root)(eventsStream(s, d)
           .select(col("event_id"), col("event_type"),
-            (col("value").cast("decimal(18,2)") * 100).cast("long")
-              .as("cents"))
+            cents(col("value")).as("cents"))
           .writeStream
           .foreachBatch { (batch: DataFrame, batchId: Long) =>
             batch.persist()
@@ -1211,11 +1067,7 @@ object Streams {
               .parquet(s"$root/agg/b=$batchId")
             batch.unpersist()
             ()
-          }
-          .option("checkpointLocation", s"$root/cp")
-          .trigger(Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
+          })
         val fromRaw = s.read.parquet(s"$root/raw/b=*")
           .groupBy("event_type")
           .agg(count(lit(1)).as("n_raw"),
@@ -1230,19 +1082,16 @@ object Streams {
             (col("cents_agg").cast("double") / 100.0).as("value_agg"))
           .orderBy("event_type")
       },
-      Some("""SELECT event_type,
+      Some(s"""SELECT event_type,
              |  COUNT(*) AS n_raw, COUNT(*) AS n_agg,
-             |  CAST(SUM(CAST(CAST(value AS DECIMAL(18,2)) * 100
-             |    AS BIGINT)) AS DOUBLE) / 100.0 AS value_raw,
-             |  CAST(SUM(CAST(CAST(value AS DECIMAL(18,2)) * 100
-             |    AS BIGINT)) AS DOUBLE) / 100.0 AS value_agg
+             |  CAST(SUM(${SQL_CENTS("value")}) AS DOUBLE) / 100.0 AS value_raw,
+             |  CAST(SUM(${SQL_CENTS("value")}) AS DOUBLE) / 100.0 AS value_agg
              |FROM events GROUP BY event_type
              |ORDER BY event_type""".stripMargin)),
 
     Q("stream_foreachbatch",
       (s, d) => {
-        val outDir = java.nio.file.Files
-          .createTempDirectory("graft_foreachbatch").toString
+        val outDir = graft.Artifacts.scratch("foreachbatch")
         val q = eventsStream(s, d)
           .select(col("event_id"), col("user_id"), col("event_type"), col("value"))
           .writeStream
@@ -1273,12 +1122,7 @@ object Streams {
     // the fixture split mirrors llm_incremental_dedup's).
     Q("stream_dedup_index",
       (s, d) => {
-        // per-JVM tmp database location — the dedup_index_incremental
-        // pattern (a fixed cwd-relative warehouse dir outlives the
-        // session's catalog metadata → LOCATION_ALREADY_EXISTS on the
-        // next JVM)
-        s.sql("CREATE DATABASE IF NOT EXISTS graft_stream_idx LOCATION " +
-          s"'$streamIdxLocation'")
+        graft.Artifacts.database(s, "graft_stream_idx")
         // the standing corpus index is built once per fixture; only the
         // arriving batches are per-run work
         val corpus = corpusIndex(d)
@@ -1287,8 +1131,7 @@ object Streams {
             graft.Tables.documents(s, d).filter(col("doc_id") % 10 >= 2),
             "doc_id", "text", table = corpus)
         }
-        val outDir = java.nio.file.Files
-          .createTempDirectory("graft_stream_dedup").toString
+        val outDir = graft.Artifacts.scratch("stream_dedup")
         val q = documentsStream(s, d)
           .filter(col("doc_id") % 10 < 2)
           .writeStream
@@ -1327,8 +1170,7 @@ object Streams {
       (s, d) => {
         val tkey = graft.Fixtures.tableKey(d, "embeddings")
         val table = s"graft_stream_idx.annstream_$tkey"
-        s.sql("CREATE DATABASE IF NOT EXISTS graft_stream_idx LOCATION " +
-          s"'$streamIdxLocation'")
+        graft.Artifacts.database(s, "graft_stream_idx")
         val cb = streamAnnMemo(tkey) {
           val cb0 = graft.api.Similarity.writeIvfIndex(
             graft.Tables.embeddings(s, d).filter(col("vec_id") % 3 =!= 0),
@@ -1375,8 +1217,7 @@ object Streams {
       (s, d) => {
         val tkey = graft.Fixtures.tableKey(d, "embeddings")
         val table = s"graft_stream_idx.pqstream_$tkey"
-        s.sql("CREATE DATABASE IF NOT EXISTS graft_stream_idx LOCATION " +
-          s"'$streamIdxLocation'")
+        graft.Artifacts.database(s, "graft_stream_idx")
         streamPqMemo(tkey) {
           val model = graft.api.Similarity.writeIvfPqIndex(
             graft.Tables.embeddings(s, d).filter(col("vec_id") % 3 =!= 0),
@@ -1413,9 +1254,7 @@ object Streams {
     // stream-built artifact's audit ≡ the batch-built one's.
     Q("stream_compact_catchup",
       (s, d) => {
-        import org.apache.spark.sql.streaming.Trigger
-        s.sql("CREATE DATABASE IF NOT EXISTS graft_stream_idx LOCATION " +
-          s"'$streamIdxLocation'")
+        graft.Artifacts.database(s, "graft_stream_idx")
         val tkey = graft.Fixtures.tableKey(d, "documents")
         val src = s"graft_stream_idx.cmpsrc_$tkey"
         val dst = s"graft_stream_idx.cmpdst_$tkey"
@@ -1425,20 +1264,13 @@ object Streams {
             s.sql(s"DROP TABLE IF EXISTS $dst$sfx")
           }
           Seq(Seq(2L, 3L, 4L), Seq(5L, 6L, 7L), Seq(8L, 9L)).foreach { del =>
-            val cp = java.nio.file.Files
-              .createTempDirectory("graft_stream_cmp").toString
-            val q = documentsStream(s, d)
+            catchUp(graft.Artifacts.scratch("stream_cmp"))(documentsStream(s, d)
               .filter((col("doc_id") % 10).isin(del: _*))
               .writeStream
               .foreachBatch { (batch: DataFrame, _: Long) =>
                 if (!batch.isEmpty)
-                  graft.api.Dedup.appendToBandIndex(
-                    batch, "doc_id", "text", src)
-              }
-              .option("checkpointLocation", cp)
-              .trigger(Trigger.AvailableNow())
-              .start()
-            q.awaitTermination()
+                  graft.api.Dedup.appendToBandIndex(batch, "doc_id", "text", src)
+              })
           }
           graft.api.Dedup.compactBandIndex(s, src, dst)
         }

@@ -160,9 +160,8 @@ class PipelineSpec extends AnyFunSuite {
 
   test("export_snapshot_read: append-only commits — v1 manifest nests in v2") {
     run("export_snapshot_read").collect() // stages the log if needed
-    val key = graft.Fixtures.key(sf, "events")
-    val log = java.nio.file.Paths.get(
-      s"${sys.props("java.io.tmpdir")}/graft_snap_$key/log")
+    val root = java.nio.file.Paths.get(Artifacts.path("snap", sf, "events"))
+    val log = root.resolve("log")
     def files(v: Int): Set[String] = {
       import scala.jdk.CollectionConverters._
       java.nio.file.Files.readAllLines(log.resolve(s"v$v.manifest"))
@@ -172,7 +171,7 @@ class PipelineSpec extends AnyFunSuite {
     assert(v1.nonEmpty && v1.subsetOf(v2), "v1 files must survive the append")
     assert((v2 -- v1).nonEmpty, "the v2 commit must add new files")
     // every v1 file still exists on disk — append never rewrites history
-    assert(v1.forall(f => new java.io.File(f).exists()))
+    assert(v1.forall(f => root.resolve(f).toFile.exists()))
   }
 
   test("Dedup.releaseCaches drops exactly the chain's cache entries") {

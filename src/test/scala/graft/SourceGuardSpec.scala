@@ -9,7 +9,8 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Source scan over `src/main/scala`: sessions are built, native
   * functions registered and `experimental.extra*` lists written only in
   * GraftSession and GraftExtensions, ExplainProbe is the one dev probe
-  * main, and memos and fixture keys are built only by Memo and Fixtures.
+  * main, memos and fixture keys are built only by Memo and Fixtures, and
+  * on-disk paths and catalog databases only by Artifacts.
   */
 class SourceGuardSpec extends AnyFunSuite {
   private val root = Paths.get("src/main/scala")
@@ -59,6 +60,12 @@ class SourceGuardSpec extends AnyFunSuite {
       """new (java\.util\.concurrent\.)?ConcurrentHashMap|new (java\.util\.)?LinkedHashMap""" +
         """|replaceAll\("\[\^A-Za-z0-9|isStopped\) it\.remove\(\)""",
       p => memoOwners.contains(p.getFileName.toString))
+    assert(found.isEmpty, found.mkString("\n"))
+  }
+
+  test("on-disk paths and catalog databases only in Artifacts") {
+    val found = hits("""java\.io\.tmpdir|createTempDirectory|createTempFile|CREATE DATABASE""",
+      _.getFileName.toString == "Artifacts.scala")
     assert(found.isEmpty, found.mkString("\n"))
   }
 }

@@ -36,9 +36,8 @@ class Wave57Spec extends AnyFunSuite {
     assert(rows.nonEmpty && rows.map(_.getLong(1)).sum >= 1L)
     // the artifact's parquet footers: bloom offsets must be present
     // for o_custkey column chunks and ABSENT for un-bloomed columns
-    val key = graft.Fixtures.key(TestSpark.sf0001, "orders")
     val tmp = new java.io.File(
-      s"${sys.props("java.io.tmpdir")}/graft_bloom_orders_$key")
+      Artifacts.path("bloom_orders", TestSpark.sf0001, "orders"))
     val part = tmp.listFiles().filter(_.getName.endsWith(".parquet")).head
     val conf = spark.sessionState.newHadoopConf()
     val rdr = org.apache.parquet.hadoop.ParquetFileReader.open(
