@@ -156,10 +156,9 @@ class dedup:
             s._jsparkSession, table, target, k, bands, buckets)
 
     @staticmethod
-    def release_caches(docs, id_col, text_col, threshold=0.6, k=16, bands=4,
-                       max_bucket=1000):
-        _jvm().graft.api.Dedup.releaseCaches(
-            docs._jdf, id_col, text_col, threshold, k, bands, max_bucket)
+    def release_caches(docs, id_col, text_col):
+        """Free the memoized sketches of ``docs`` (every k) at once."""
+        _jvm().graft.api.Dedup.releaseCaches(docs._jdf, id_col, text_col)
 
 
 class similarity:

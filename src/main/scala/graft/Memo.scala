@@ -68,6 +68,23 @@ final class Memo[K, V] private (bound: Int, frame: Option[V => DataFrame]) {
     done
   })
 
+  /** Drop every finished entry whose key satisfies `p`, releasing
+    * session-bound values; builds in flight stay.
+    */
+  def removeIf(p: K => Boolean): Unit = release(synchronized {
+    val out = Seq.newBuilder[V]
+    val it = entries.entrySet.iterator
+    while (it.hasNext) {
+      val e = it.next()
+      val c = e.getValue
+      if (c.isDone && p(e.getKey)) {
+        it.remove()
+        if (!c.isCompletedExceptionally) out += c.join()
+      }
+    }
+    out.result()
+  })
+
   /** Entries held, builds in flight included. */
   def size: Int = synchronized(entries.size)
 

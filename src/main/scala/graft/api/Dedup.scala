@@ -1,7 +1,9 @@
 package graft.api
 
-import graft.functions.TextUdfs
-import org.apache.spark.sql.{Column, DataFrame}
+import graft.functions.{ShingleHashes, TextUdfs}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, LogicalPlan}
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
@@ -13,6 +15,37 @@ import org.apache.spark.storage.StorageLevel
   * on doc id then band hash; SimHash is one grouped pass. Hashes are
   * md5-of-string on purpose — portable across engines and stable across
   * runs, so results are reproducible cluster-wide.
+  *
+  * The minhash family — signatures, bands, candidate pairs, Jaccard
+  * verification, components, both incremental checks and the band
+  * index — reads ONE per-document [[sketch]] (doc_id, k signatures,
+  * sorted distinct shingle-hash set), built in one pass by the native
+  * [[graft.functions.ShingleHashes]] kernel and one groupBy.
+  *
+  * Memo (the reuse across an analysis session):
+  *   - Key: the session, the canonicalized `select(id, text)` plan, the
+  *     id and text columns, [[Similarity.sourceFingerprint]] of the
+  *     input's files, and the derivation's parameters (k for a sketch).
+  *   - Bound: at most 8 sketches, least recently used out, their
+  *     checkpoint blocks released; candidate pairs, verified pairs and
+  *     component labels share a second memo of 48.
+  *   - Staleness: a file rewritten in place changes the fingerprint, so
+  *     the next call misses and rebuilds.
+  *   - Guard: only a deterministic plan whose leaves are all file
+  *     relations or `LocalRelation`s is memoized; anything else (an RDD,
+  *     a catalog table, a streaming micro-batch over them, `rand()`)
+  *     builds per call and pins nothing.
+  *   - Scale bound: one sketch entry holds the input's distinct shingle
+  *     hashes plus k longs per doc — the size of the band index's `_sets`
+  *     half (~1.2 MB of longs for 2,000 docs of ~60 shingles). It is held
+  *     by a default `localCheckpoint` (memory, spilling to disk): on
+  *     `llm_pipeline` the live heap after a warm pass went down, not up,
+  *     against the persisted streams it replaced. Should an entry ever
+  *     show there, `localCheckpoint(eager, StorageLevel.DISK_ONLY)` keeps
+  *     it off the heap.
+  *
+  * Nothing here registers with the CacheManager: no persist, no
+  * unpersist, except the gram stream inside [[exactSubstringSpans]].
   */
 object Dedup {
 
@@ -58,18 +91,6 @@ object Dedup {
     docs.select(col(idCol).as("doc_id"), TextUdfs.tokenizeCol(col(textCol)).as("__t"))
       .select(col("doc_id"), explode(TextUdfs.shinglesFromTokens(col("__t"))).as("token"))
 
-  /** One row per (id, 60-bit shingle hash): `h` is the first 15 hex
-    * nibbles of the shingle's md5 as a LONG — the ONE cryptographic
-    * hash the whole minhash/LSH/Jaccard chain computes per shingle
-    * (seeds are mixed in arithmetically, see [[minhashSeeds]]), and a
-    * long-domain stream so every downstream aggregate is a
-    * HashAggregate, never a string SortAggregate.
-    */
-  def shingleHashRows(docs: DataFrame, idCol: String, textCol: String): DataFrame =
-    shingleRows(docs, idCol, textCol)
-      .select(col("doc_id"),
-        conv(substring(md5(col("token")), 1, 15), 16, 10).cast("long").as("h"))
-
   private def md5hex(s: String): String =
     java.security.MessageDigest.getInstance("MD5").digest(s.getBytes("UTF-8"))
       .map("%02x".format(_)).mkString
@@ -81,72 +102,123 @@ object Dedup {
   def minhashSeeds(k: Int): IndexedSeq[Long] =
     (0 until k).map(i => java.lang.Long.parseLong(md5hex(s"seed:$i").substring(0, 15), 16))
 
-  /** k portable minhash signatures per doc (columns sig_0..sig_{k-1}).
+  /** The per-document sketch every minhash/LSH/Jaccard call reads: one
+    * row per distinct id — `doc_id`, `sig_0..sig_{k-1}`, `toks`.
     *
-    * sig_i = min over the doc's shingles of `h XOR seed_i`: ONE md5 per
-    * shingle total, then k cheap bitwise mixes — measured 16 md5/shingle
-    * → 1 cut the signature stage ~5× at sf0.1 (xor with independent
-    * random 60-bit constants re-orders the hash space per seed; the
-    * estimator-quality bound lives in PureProps against this exact
-    * construction). min(long) is hash-aggregable, so the shingle stream
-    * gets a partial HashAggregate — a linear pass, not a sort, at 100 TB.
+    *   - `toks` is the sorted, distinct set of the doc's 60-bit shingle
+    *     hashes ([[graft.functions.ShingleHashes]]: the first 15 hex
+    *     digits of each 3-token shingle's md5 — the ONE cryptographic
+    *     hash the chain computes per shingle). Set identity is the hash:
+    *     a 2⁻⁶⁰-rate collision would merge two shingles; acceptable for
+    *     near-dup detection and mirrored exactly by the oracle.
+    *   - `sig_i` = min over `toks` of `h XOR seed_i` ([[minhashSeeds]]):
+    *     one md5 per shingle, then k cheap bitwise mixes (xor with
+    *     independent random 60-bit constants re-orders the hash space
+    *     per seed; the estimator-quality bound lives in PureProps
+    *     against this exact construction).
+    *
+    * Built in one pass: the kernel hashes each input row's shingles
+    * into one array, and ONE `groupBy(doc_id)` over those per-row
+    * arrays unions them — an id on two rows gets the union of their
+    * shingles, exactly as the per-shingle form did. Memoized as the
+    * object doc describes; [[releaseCaches]] drops an input's entries.
     */
+  private[graft] def sketch(docs: DataFrame, idCol: String, textCol: String,
+      k: Int = 16): DataFrame =
+    memoized(sketches, docs, idCol, textCol, ("sketch", k))(withSignatures(docs
+      .select(col(idCol).as("doc_id"),
+        ShingleHashes(TextUdfs.tokenizeCol(col(textCol))).as("hs"))
+      .groupBy("doc_id")
+      .agg(array_sort(array_distinct(flatten(collect_list(col("hs"))))).as("toks")), k))
+
+  /** (doc_id, sig_0..sig_{k-1}, toks) from a (doc_id, toks) set table. */
+  private def withSignatures(sets: DataFrame, k: Int): DataFrame = {
+    val sigs = minhashSeeds(k).zipWithIndex.map { case (seed, i) =>
+      array_min(transform(col("toks"), h => h.bitwiseXOR(lit(seed)))).as(s"sig_$i")
+    }
+    sets.select(col("doc_id") +: sigs :+ col("toks"): _*)
+  }
+
+  /** One input: the owning session (reference identity — a
+    * localCheckpoint'd value is pinned to its SparkContext), the
+    * canonicalized (exprId-free) plan of the `select(id, text)`
+    * projection, and the two column names.
+    */
+  private case class Input(session: SparkSession, plan: LogicalPlan,
+      idCol: String, textCol: String)
+  /** A memo key: the input, its source files' fingerprint, and what was
+    * derived from it with which parameters.
+    */
+  private case class Key(in: Input, sourceFp: String, what: Product)
+
+  private val sketches = graft.Memo.sessionBound[Key, DataFrame](bound = 8)(identity)
+  /** Pair-sized results: candidate pairs, verified pairs, component labels. */
+  private val results = graft.Memo.sessionBound[Key, DataFrame](bound = 48)(identity)
+
+  /** `build`, memoized in `memo` (pinned by `pin`) when `docs` can key
+    * a memo: a deterministic plan whose leaves are all file relations or
+    * `LocalRelation`s. An RDD or a catalog table may change under an
+    * equal plan with no fingerprint to notice it, so anything else gets
+    * a fresh, unpinned build per call.
+    */
+  private def memoized(memo: graft.Memo[Key, DataFrame], docs: DataFrame,
+      idCol: String, textCol: String, what: Product,
+      pin: DataFrame => DataFrame = _.localCheckpoint())(build: => DataFrame): DataFrame =
+    memoInput(docs, idCol, textCol).fold(build) { case (in, fp) =>
+      memo(Key(in, fp, what))(pin(build))
+    }
+
+  private def memoInput(docs: DataFrame, idCol: String,
+      textCol: String): Option[(Input, String)] = {
+    val analyzed = docs.select(col(idCol), col(textCol)).queryExecution.analyzed
+    val keyable = analyzed.deterministic && analyzed.collectLeaves().forall {
+      case l: LogicalRelation => l.relation.isInstanceOf[HadoopFsRelation]
+      case _: LocalRelation => true
+      case _ => false
+    }
+    if (!keyable) None
+    else Some((Input(docs.sparkSession, analyzed.canonicalized, idCol, textCol),
+      Similarity.sourceFingerprint(analyzed)))
+  }
+
+  /** k portable minhash signatures per doc (columns sig_0..sig_{k-1}). */
   def minhashSignatures(docs: DataFrame, idCol: String, textCol: String,
       k: Int = 16): DataFrame =
-    signaturesFromShingles(shingleHashRows(docs, idCol, textCol), k)
-
-  private def signaturesFromShingles(shingles: DataFrame, k: Int): DataFrame = {
-    val seeds = minhashSeeds(k)
-    val aggs = (0 until k).map(i =>
-      min(col("h").bitwiseXOR(lit(seeds(i)))).as(s"sig_$i"))
-    shingles.groupBy("doc_id").agg(aggs.head, aggs.tail: _*)
-  }
+    sketch(docs, idCol, textCol, k).drop("toks")
 
   /** LSH banding of the signatures → (doc_id, band, bhash). */
   def lshBanded(docs: DataFrame, idCol: String, textCol: String,
       k: Int = 16, bands: Int = 4): DataFrame =
-    bandedFromShingles(shingleHashRows(docs, idCol, textCol), k, bands)
+    banded(sketch(docs, idCol, textCol, k), k, bands)
 
-  private def bandedFromShingles(shingles: DataFrame, k: Int, bands: Int): DataFrame = {
+  private def banded(sk: DataFrame, k: Int, bands: Int): DataFrame = {
     require(k % bands == 0, s"k=$k must be divisible by bands=$bands")
     val rows = k / bands
     val bandCols: Seq[Column] = (0 until bands).map { b =>
       md5(concat_ws("|",
         (0 until rows).map(r => col(s"sig_${b * rows + r}").cast("string")): _*))
     }
-    signaturesFromShingles(shingles, k)
-      .select(col("doc_id"), posexplode(array(bandCols: _*)).as(Seq("band", "bhash")))
+    sk.select(col("doc_id"), posexplode(array(bandCols: _*)).as(Seq("band", "bhash")))
   }
 
   /** Near-dup candidate pairs (doc_a < doc_b) by grouping per LSH
     * bucket and expanding pairs from the collected id list. Versus a
-    * banded self-join this computes the shingle→minhash pipeline ONCE
-    * (Spark does not reuse the exchange across self-join sides —
-    * measured: the whole signature subtree ran twice) and turns the
-    * join into a groupBy whose state is one id list per bucket.
+    * banded self-join this turns the join into a groupBy whose state is
+    * one id list per bucket.
     *
     * `maxBucket` caps the per-bucket list: buckets larger than the cap
     * contribute only their first `maxBucket` (sorted) ids — an explicit
     * skew guard for pathological corpora; with shingle-based signatures
     * real buckets stay in the single digits.
+    *
+    * The pairs — |pairs| rows, KBs at any sane near-dup rate — are
+    * memoized like the [[sketch]], per input and (k, bands, maxBucket),
+    * in the memo of pair-sized results (at most 48 entries).
     */
   def lshCandidatePairs(docs: DataFrame, idCol: String, textCol: String,
       k: Int = 16, bands: Int = 4, maxBucket: Int = 1000): DataFrame =
-    pairsFromShingles(shingleHashRows(docs, idCol, textCol), k, bands, maxBucket)
-
-  /** The candidate-pair and verified-pair results are persisted too:
-    * they are tiny (|pairs| rows — KBs at any sane near-dup rate) and
-    * shared across the whole declared dedup chain
-    * (llm_lsh_candidate_pairs → llm_jaccard_verify →
-    * llm_dedup_pipeline → llm_neardup_components) via the
-    * CacheManager's canonicalized-plan matching, so the md5-heavy
-    * minhash→LSH segment runs ONCE per corpus instead of four times.
-    * [[nearDupComponents]] (the chain's terminal stage) unpersists all
-    * of them.
-    */
-  private def pairsFromShingles(shingles: DataFrame, k: Int, bands: Int,
-      maxBucket: Int): DataFrame =
-    bandedFromShingles(shingles, k, bands)
+    memoized(results, docs, idCol, textCol, ("pairs", k, bands, maxBucket))(
+      banded(sketch(docs, idCol, textCol, k), k, bands)
       .groupBy("band", "bhash")
       .agg(slice(sort_array(collect_list(col("doc_id"))), 1, maxBucket).as("ids"))
       .filter(size(col("ids")) > 1)
@@ -154,50 +226,29 @@ object Dedup {
         "flatten(transform(ids, (x, i) -> transform(slice(ids, i + 2, size(ids)), y -> struct(x AS doc_a, y AS doc_b))))"))
         .as("p"))
       .select(col("p.doc_a").as("doc_a"), col("p.doc_b").as("doc_b"))
-      .distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK)
+      .distinct())
 
   /** Exact shingle-set Jaccard for the candidate pairs, with a
-    * near-dup flag at `threshold`.
+    * near-dup flag at `threshold`: candidate pairs join the sketch's
+    * hash sets twice and the intersection is computed per pair with
+    * array_intersect — |pairs| rows, never Σ|pair shingles|.
     *
-    * Shape: one pass collects the distinct-shingle-HASH set per doc
-    * (ObjectHashAggregate over longs — no sort, no strings), candidate
-    * pairs join that set table twice, and the intersection is computed
-    * per pair with array_intersect. Versus a token-level
-    * pair⋈token⋈token join this touches |pairs| rows instead of
-    * Σ|pair shingles|. Set identity is the 60-bit shingle hash — a
-    * 2⁻⁶⁰-rate collision would merge two shingles; acceptable for
-    * near-dup detection and mirrored exactly by the oracle.
+    * The verified table is memoized like the candidate pairs, per input
+    * and (threshold, k, bands).
     */
-  /** Memo for the verified-pairs table, keyed like [[nearDupComponents]]'
-    * compCache: whether a verify-family query found the transient
-    * shingle / candidate caches warm used to depend on bench ORDER (a
-    * sibling's persist being alive). The memo pins the
-    * localCheckpoint'd verified table — |pairs| rows, KBs at any sane
-    * near-dup rate — per (session, plan, fingerprint, params), so every
-    * later call is order-independent. The chain's transient persists
-    * are still released by nearDupComponents' terminal unpersist.
-    * Session-bound, at most 16 entries.
-    */
-  private case class VerifyKey(
-      session: org.apache.spark.sql.SparkSession,
-      plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan,
-      sourceFp: String, idCol: String, textCol: String,
-      threshold: Double, k: Int, bands: Int)
-  private val verifyCache =
-    graft.Memo.sessionBound[VerifyKey, DataFrame](bound = 16)(identity)
-
   def jaccardVerify(docs: DataFrame, idCol: String, textCol: String,
-      threshold: Double = 0.6, k: Int = 16, bands: Int = 4): DataFrame = {
-    val analyzed =
-      docs.select(col(idCol), col(textCol)).queryExecution.analyzed
-    val key = VerifyKey(docs.sparkSession, analyzed.canonicalized,
-      Similarity.sourceFingerprint(analyzed), idCol, textCol,
-      threshold, k, bands)
-    verifyCache(key)(
-      jaccardFromShingles(persistedShingles(docs, idCol, textCol),
-        threshold, k, bands).localCheckpoint())
-  }
+      threshold: Double = 0.6, k: Int = 16, bands: Int = 4): DataFrame =
+    memoized(results, docs, idCol, textCol, ("verified", threshold, k, bands)) {
+      val sets = sketch(docs, idCol, textCol, k).select(col("doc_id"), col("toks"))
+      val nInter = size(array_intersect(col("sa.toks"), col("sb.toks")))
+      val denom = size(col("sa.toks")) + size(col("sb.toks")) - nInter
+      lshCandidatePairs(docs, idCol, textCol, k, bands)
+        .join(sets.as("sa"), col("doc_a") === col("sa.doc_id"))
+        .join(sets.as("sb"), col("doc_b") === col("sb.doc_id"))
+        .select(col("doc_a"), col("doc_b"),
+          round(nInter.cast("double") / denom, 4).as("jaccard"),
+          (nInter.cast("double") / denom >= threshold).as("is_near_dup"))
+    }
 
   /** Incremental (batch-vs-corpus) near-dup flagging: each NEW doc
     * (rows where `isNew` is true) is checked against the OLD corpus —
@@ -219,23 +270,31 @@ object Dedup {
       isNew: Column, threshold: Double = 0.6, k: Int = 16,
       bands: Int = 4): DataFrame = {
     val flags = docs.select(col(idCol).as("doc_id"), isNew.as("__new"))
-    val shingles = persistedShingles(docs, idCol, textCol)
-    val banded = bandedFromShingles(shingles, k, bands).join(flags, "doc_id")
-    val cand = banded.filter(col("__new")).as("n")
-      .join(banded.filter(!col("__new")).as("o"),
+    val sk = sketch(docs, idCol, textCol, k)
+    val bandRows = banded(sk, k, bands).join(flags, "doc_id")
+    val cand = bandRows.filter(col("__new")).as("n")
+      .join(bandRows.filter(!col("__new")).as("o"),
         col("n.band") === col("o.band") && col("n.bhash") === col("o.bhash"))
       .select(col("n.doc_id").as("new_id"), col("o.doc_id").as("old_id"))
       .distinct()
-    val sets = shingles.groupBy("doc_id").agg(collect_set(col("h")).as("toks"))
+    val sets = sk.select(col("doc_id"), col("toks"))
     val nInter = size(array_intersect(col("sa.toks"), col("sb.toks")))
     val denom = size(col("sa.toks")) + size(col("sb.toks")) - nInter
     val jac = cand
       .join(sets.as("sa"), col("new_id") === col("sa.doc_id"))
       .join(sets.as("sb"), col("old_id") === col("sb.doc_id"))
       .select(col("new_id"), (nInter.cast("double") / denom).as("__j"))
+    verdicts(flags.filter(col("__new")).select(col("doc_id")), jac, threshold)
+  }
+
+  /** One row per batch doc from its candidates' Jaccard values `jac`
+    * (new_id, __j): (doc_id, n_candidates, max_jaccard, is_dup).
+    */
+  private def verdicts(batchIds: DataFrame, jac: DataFrame,
+      threshold: Double): DataFrame = {
     val agg = jac.groupBy("new_id").agg(
       count(lit(1)).as("n_candidates"), max(col("__j")).as("__max_j"))
-    flags.filter(col("__new")).select(col("doc_id"))
+    batchIds
       .join(agg, col("doc_id") === col("new_id"), "left")
       .select(col("doc_id"),
         coalesce(col("n_candidates"), lit(0L)).as("n_candidates"),
@@ -255,10 +314,11 @@ object Dedup {
     *     per-doc hashed shingle sets for exact Jaccard verification of
     *     candidates, again exchange-free on the corpus side.
     *
-    * `buckets` sizes the artifact for the deployment (fixture tests use
-    * 8; a 100-TB corpus wants thousands — bucket count is fixed at
-    * write time, so size it for the corpus you'll grow into). The
-    * signature work is O(corpus) ONCE; every later ingest pays only
+    * Both halves are written from the one [[sketch]]: one write job
+    * each. `buckets` sizes the artifact for the deployment (fixture
+    * tests use 8; a 100-TB corpus wants thousands — bucket count is
+    * fixed at write time, so size it for the corpus you'll grow into).
+    * The signature work is O(corpus) ONCE; every later ingest pays only
     * O(batch) (see [[appendToBandIndex]]).
     */
   def writeBandIndex(docs: DataFrame, idCol: String, textCol: String,
@@ -267,18 +327,15 @@ object Dedup {
     val mode =
       if (append) org.apache.spark.sql.SaveMode.Append
       else org.apache.spark.sql.SaveMode.Overwrite
-    val shingles = shingleHashRows(docs, idCol, textCol)
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    try {
-      bandedFromShingles(shingles, k, bands)
-        .write.mode(mode)
-        .bucketBy(buckets, "band", "bhash").sortBy("band", "bhash")
-        .saveAsTable(s"${table}_bands")
-      shingles.groupBy("doc_id").agg(sort_array(collect_set(col("h"))).as("toks"))
-        .write.mode(mode)
-        .bucketBy(buckets, "doc_id").sortBy("doc_id")
-        .saveAsTable(s"${table}_sets")
-    } finally shingles.unpersist(blocking = false)
+    val sk = sketch(docs, idCol, textCol, k)
+    banded(sk, k, bands)
+      .write.mode(mode)
+      .bucketBy(buckets, "band", "bhash").sortBy("band", "bhash")
+      .saveAsTable(s"${table}_bands")
+    sk.select(col("doc_id"), col("toks"))
+      .write.mode(mode)
+      .bucketBy(buckets, "doc_id").sortBy("doc_id")
+      .saveAsTable(s"${table}_sets")
   }
 
   /** Commit an ingested batch into the band index — append-only, cost
@@ -306,7 +363,7 @@ object Dedup {
     * read + one shuffle per half, amortized over every later batch's
     * saved file-open fan-out.
     */
-  def compactBandIndex(spark: org.apache.spark.sql.SparkSession,
+  def compactBandIndex(spark: SparkSession,
       table: String, target: String): Unit = {
     def half(suffix: String, keys: Seq[String]): Unit = {
       val src = s"$table$suffix"
@@ -331,18 +388,17 @@ object Dedup {
     * census shows mega-buckets absorbing the candidate traffic — and
     * rewrite a fresh artifact at `target`, FROM THE STANDING ARTIFACT
     * alone: the `_sets` half stores every doc's distinct 60-bit
-    * shingle hashes, which is exactly the input the minhash chain
-    * needs (sig_i = min over hashes of h XOR seed_i — distinctness
-    * does not move a min), so no source-corpus re-scan, re-tokenize,
-    * or re-md5 happens. Cost: one read of the sets half + the k cheap
-    * xor-mixes, at any corpus size.
+    * shingle hashes, which is exactly the sketch's input to the
+    * signatures, so no source-corpus re-scan, re-tokenize, or re-md5
+    * happens. Cost: one read of the sets half + the k cheap xor-mixes,
+    * at any corpus size.
     *
     * Bucket counts are derived per half from the SOURCE artifact's own
     * catalog specs (the compact/retrain same-spec convention —
     * never silently re-bucket); `buckets > 0` overrides both to
     * deliberately re-bucket.
     */
-  def retrainBandIndex(spark: org.apache.spark.sql.SparkSession,
+  def retrainBandIndex(spark: SparkSession,
       table: String, target: String, k: Int = 16, bands: Int = 4,
       buckets: Int = 0): Unit = {
     def nb(suffix: String): Int =
@@ -355,8 +411,7 @@ object Dedup {
     // snapshot the sets half (it is both the signature input and the
     // carried-over content, and `target` may equal `table` in place)
     val sets = spark.table(s"${table}_sets").localCheckpoint()
-    val shingles = sets.select(col("doc_id"), explode(col("toks")).as("h"))
-    bandedFromShingles(shingles, k, bands)
+    banded(withSignatures(sets, k), k, bands)
       .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
       .bucketBy(nbBands, "band", "bhash").sortBy("band", "bhash")
       .saveAsTable(s"${target}_bands")
@@ -369,14 +424,15 @@ object Dedup {
 
   /** [[incrementalNearDups]] against the PERSISTED band index — the
     * shape a continuous-ingestion corpus actually runs at 100 TB. The
-    * batch side computes its signatures fresh (O(batch)); the corpus
-    * side is the pre-bucketed artifact, so both joins against it (band
-    * candidates, then shingle-set verification) read the bucketed scan
-    * DIRECTLY into the join — the only Exchanges in the plan are on the
-    * batch/candidate side, never the corpus side. Corpus columns are
-    * aliased (`ob_*` / `set_doc_id`) so plan audits can tell the sides
-    * apart; alias-aware output partitioning preserves the bucket
-    * distribution through the rename.
+    * batch side is the batch's [[sketch]] (O(batch), built once and
+    * read by both joins); the corpus side is the pre-bucketed
+    * artifact, so both joins against it (band candidates, then
+    * shingle-set verification) read the bucketed scan DIRECTLY into the
+    * join — the only Exchanges in the plan are on the batch/candidate
+    * side, never the corpus side. Corpus columns are aliased (`ob_*` /
+    * `set_doc_id`) so plan audits can tell the sides apart;
+    * alias-aware output partitioning preserves the bucket distribution
+    * through the rename.
     *
     * Same contract as [[incrementalNearDups]]: one row per batch doc —
     * (doc_id, n_candidates, max_jaccard, is_dup), zero-candidate docs
@@ -391,92 +447,33 @@ object Dedup {
         col("doc_id").as("old_id"))
     val corpusSets = spark.table(s"${table}_sets")
       .select(col("doc_id").as("set_doc_id"), col("toks").as("old_toks"))
-    // batch shingles recomputed per consumer rather than persisted:
-    // the batch is ingest-sized by definition, and leaving no cache
-    // entries behind matters more here than one extra batch-local scan
-    val shingles = shingleHashRows(batch, idCol, textCol)
-    val cand = bandedFromShingles(shingles, k, bands)
+    val sk = sketch(batch, idCol, textCol, k)
+    val cand = banded(sk, k, bands)
       .join(corpusBands,
         col("band") === col("ob_band") && col("bhash") === col("ob_bhash"))
       .select(col("doc_id").as("new_id"), col("old_id"))
       .distinct()
-    val newSets = shingles.groupBy("doc_id")
-      .agg(collect_set(col("h")).as("new_toks"))
     val nInter = size(array_intersect(col("new_toks"), col("old_toks")))
     val denom = size(col("new_toks")) + size(col("old_toks")) - nInter
     val jac = cand
-      .join(newSets, col("new_id") === col("doc_id"))
+      .join(sk.select(col("doc_id"), col("toks").as("new_toks")),
+        col("new_id") === col("doc_id"))
       .join(corpusSets, col("old_id") === col("set_doc_id"))
       .select(col("new_id"), (nInter.cast("double") / denom).as("__j"))
-    val agg = jac.groupBy("new_id").agg(
-      count(lit(1)).as("n_candidates"), max(col("__j")).as("__max_j"))
-    batch.select(col(idCol).as("doc_id"))
-      .join(agg, col("doc_id") === col("new_id"), "left")
-      .select(col("doc_id"),
-        coalesce(col("n_candidates"), lit(0L)).as("n_candidates"),
-        round(coalesce(col("__max_j"), lit(0.0)), 4).as("max_jaccard"),
-        (coalesce(col("__max_j"), lit(0.0)) >= threshold).as("is_dup"))
+    verdicts(batch.select(col(idCol).as("doc_id")), jac, threshold)
   }
 
-  /** The tokenize+shingle+md5 stream of the whole corpus feeds BOTH the
-    * per-doc set branch and the minhash→LSH pair branch; Spark does
-    * not share the subtree across the two (the partial aggregates
-    * differ, so no exchange reuse). persist() materializes it once —
-    * and because persist registers with the session CacheManager by
-    * canonicalized plan, later queries over the same corpus (the
-    * pipeline + components queries) reuse the same cached stream. The
-    * cached rows are (long, long) — hashing the shingles BEFORE the
-    * cache both shrinks it ~4× vs token strings and means the md5 cost
-    * is paid exactly once per corpus.
-    * The cache lives until [[nearDupComponents]] (the terminal stage of
-    * the dedup pipeline) unpersists it; callers using [[jaccardVerify]]
-    * or [[lshCandidatePairs]] standalone on many distinct corpora
-    * should call [[releaseCaches]] per corpus when done.
+  /** Release `docs`' memoized [[sketch]]es (every k; their checkpoint
+    * blocks go at once) — for a caller that drives the chain over many
+    * distinct inputs in one session and wants the memory back before
+    * the entries age out of the memo's bound. Frames returned earlier
+    * over the same input read the released sketch and must not be
+    * executed again. Releasing an input with no entry is a no-op.
     */
-  private def persistedShingles(docs: DataFrame, idCol: String,
-      textCol: String): DataFrame =
-    shingleHashRows(docs, idCol, textCol).persist(StorageLevel.MEMORY_AND_DISK)
-
-  /** Release every MEMORY_AND_DISK entry the dedup chain persists for
-    * `docs` — the hashed-shingle stream, the candidate pairs, and the
-    * verified pairs — without `clearCache()`-ing the whole session.
-    *
-    * [[nearDupComponents]] does the equivalent internally as the
-    * chain's terminal stage; call this yourself when driving
-    * [[jaccardVerify]] / [[lshCandidatePairs]] standalone across many
-    * distinct corpora (the caches otherwise accumulate for the session
-    * lifetime). Arguments must MATCH the producing calls: the
-    * CacheManager resolves entries by canonicalized plan, and
-    * threshold / k / bands / maxBucket are all part of that plan.
-    * Releasing an entry that was never persisted is a no-op.
-    */
-  def releaseCaches(docs: DataFrame, idCol: String, textCol: String,
-      threshold: Double = 0.6, k: Int = 16, bands: Int = 4,
-      maxBucket: Int = 1000): Unit = {
-    val shingles = shingleHashRows(docs, idCol, textCol)
-    // rebuilding the DataFrames re-registers each plan with the
-    // CacheManager (a no-op for already-cached plans) and unpersist
-    // then drops the entry by canonicalized-plan match
-    jaccardFromShingles(shingles, threshold, k, bands).unpersist(blocking = false)
-    pairsFromShingles(shingles, k, bands, maxBucket).unpersist(blocking = false)
-    shingles.unpersist(blocking = false)
-  }
-
-  private def jaccardFromShingles(shingles: DataFrame, threshold: Double,
-      k: Int, bands: Int): DataFrame = {
-    val sets = shingles
-      .groupBy("doc_id").agg(collect_set(col("h")).as("toks"))
-    val pairs = pairsFromShingles(shingles, k, bands, 1000)
-    val nInter = size(array_intersect(col("sa.toks"), col("sb.toks")))
-    val denom = size(col("sa.toks")) + size(col("sb.toks")) - nInter
-    pairs
-      .join(sets.as("sa"), col("doc_a") === col("sa.doc_id"))
-      .join(sets.as("sb"), col("doc_b") === col("sb.doc_id"))
-      .select(col("doc_a"), col("doc_b"),
-        round(nInter.cast("double") / denom, 4).as("jaccard"),
-        (nInter.cast("double") / denom >= threshold).as("is_near_dup"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-  }
+  def releaseCaches(docs: DataFrame, idCol: String, textCol: String): Unit =
+    memoInput(docs, idCol, textCol).foreach { case (in, _) =>
+      sketches.removeIf(_.in == in)
+    }
 
   /** Connected components over the verified near-duplicate graph:
     * every doc appearing in a near-dup pair gets the MINIMUM doc id
@@ -502,40 +499,19 @@ object Dedup {
     * ids in this engine are longs). The sum runs in DECIMAL(38,0), so
     * it cannot overflow under ANSI mode even for 10^19-scale id domains
     * (38 digits of headroom over any realistic corpus).
+    *
+    * The final label table — model-sized (only docs with a near-dup
+    * edge), already checkpointed — is memoized like the candidate pairs,
+    * per input and (threshold, k, bands, maxIters): three fixture
+    * queries (llm_neardup_components / llm_dedup_keep_best /
+    * llm_dupcluster_sources) read the same labels.
     */
-  /** Memo for the component labels, keyed like Similarity's k-means
-    * codebook cache: canonicalized analyzed plan (exprId-free) + a
-    * (path, length, mtime) fingerprint of every file-source leaf, so a
-    * regenerated fixture invalidates the entry, + the owning session
-    * (reference equality): the value is a localCheckpoint'd DataFrame
-    * pinned to the SparkContext that created it, so a plan-only key
-    * would serve a dead-context entry to a NEW session in the same JVM.
-    * The value is the final label table — model-sized (only docs with a
-    * near-dup edge). The chain costs ~2.5 s uncached and THREE queries
-    * run it (llm_neardup_components / llm_dedup_keep_best /
-    * llm_dupcluster_sources); the memo makes the reuse explicit and
-    * order-independent. Session-bound, at most 16 entries.
-    */
-  private case class CompKey(
-      session: org.apache.spark.sql.SparkSession, // reference identity
-      plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan,
-      sourceFp: String, idCol: String, textCol: String,
-      threshold: Double, k: Int, bands: Int, maxIters: Int)
-  private val compCache =
-    graft.Memo.sessionBound[CompKey, DataFrame](bound = 16)(identity)
-
   def nearDupComponents(docs: DataFrame, idCol: String, textCol: String,
       threshold: Double = 0.6, k: Int = 16, bands: Int = 4,
-      maxIters: Int = 25): DataFrame = {
-    val analyzed =
-      docs.select(col(idCol), col(textCol)).queryExecution.analyzed
-    val key = CompKey(docs.sparkSession, analyzed.canonicalized,
-      Similarity.sourceFingerprint(analyzed), idCol, textCol,
-      threshold, k, bands, maxIters)
-    compCache(key)(
-      computeNearDupComponents(docs, idCol, textCol, threshold, k,
-        bands, maxIters))
-  }
+      maxIters: Int = 25): DataFrame =
+    memoized(results, docs, idCol, textCol,
+        ("components", threshold, k, bands, maxIters), pin = identity)(
+      computeNearDupComponents(docs, idCol, textCol, threshold, k, bands, maxIters))
 
   private def computeNearDupComponents(docs: DataFrame, idCol: String,
       textCol: String, threshold: Double, k: Int, bands: Int,
@@ -544,19 +520,11 @@ object Dedup {
         .isInstanceOf[org.apache.spark.sql.types.NumericType],
       s"nearDupComponents requires a numeric id column; '$idCol' is " +
         s"${docs.schema(idCol).dataType.simpleString} (the convergence check sums labels)")
-    val shingles = persistedShingles(docs, idCol, textCol)
-    val verified = jaccardFromShingles(shingles, threshold, k, bands)
-    val pairs = verified.filter(col("is_near_dup"))
+    val pairs = jaccardVerify(docs, idCol, textCol, threshold, k, bands)
+      .filter(col("is_near_dup"))
     val edges = pairs.select(col("doc_a").as("u"), col("doc_b").as("v"))
       .unionByName(pairs.select(col("doc_b").as("u"), col("doc_a").as("v")))
-      .localCheckpoint() // eager — the upstream caches are consumed here
-    // This is the terminal stage of the dedup chain: release every
-    // cache the chain created (blocking=false: lazy eviction).
-    shingles.unpersist(blocking = false)
-    verified.unpersist(blocking = false)
-    // same canonicalized plan as the chain's cached candidate pairs —
-    // unpersist resolves the entry through the CacheManager
-    pairsFromShingles(shingles, k, bands, 1000).unpersist(blocking = false)
+      .localCheckpoint() // eager — every round reads the edges
     var labels = edges.select(col("u").as("doc")).distinct()
       .withColumn("comp", col("doc"))
       .localCheckpoint()

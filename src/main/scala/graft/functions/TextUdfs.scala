@@ -46,25 +46,23 @@ object TextUdfs {
   val SQL_TOKENIZE =
     "string_split(lower(regexp_replace(text, '[^a-z ]', '', 'g')), ' ')"
 
-  /** 3-token shingles over [[tokenizeCol]] — the minhash unit.
-    * Unigram token SETS are near-universal in a small-vocabulary corpus
-    * (every long doc contains every word), which collapses LSH into
-    * mega-buckets (measured: one bucket held >50% of docs at sf0.1);
-    * shingles make the sets distinctive and kill the bucket skew.
-    * Docs shorter than 3 tokens fall back to one whole-doc shingle
-    * (concat_ws skips the out-of-range nulls on both engines).
-    */
-  def shinglesCol(c: Column): Column = shinglesFromTokens(tokenizeCol(c))
-
-  /** Shingle an ALREADY-MATERIALIZED token-array column. Pass an
-    * attribute reference, not the tokenizer expression itself: a
-    * non-trivial expression inside the transform() lambda is
+  /** 3-token shingles of an ALREADY-MATERIALIZED token-array column —
+    * the minhash unit. Unigram token SETS are near-universal in a
+    * small-vocabulary corpus (every long doc contains every word), which
+    * collapses LSH into mega-buckets (measured: one bucket held >50% of
+    * docs at sf0.1); shingles make the sets distinctive and kill the
+    * bucket skew. Docs shorter than 3 tokens fall back to one whole-doc
+    * shingle (concat_ws skips the out-of-range nulls on both engines;
+    * the reads are `try_element_at`, since ANSI `element_at` throws on
+    * them). Pass an attribute reference, not the tokenizer expression
+    * itself: a non-trivial expression inside the transform() lambda is
     * re-evaluated per element (3 element_at × n shingles × regexp =
     * measured 10× slowdown).
     */
   def shinglesFromTokens(t: Column): Column = {
     import org.apache.spark.sql.functions._
     transform(sequence(lit(1), greatest(size(t) - 2, lit(1))),
-      i => concat_ws(" ", element_at(t, i), element_at(t, i + 1), element_at(t, i + 2)))
+      i => concat_ws(" ", try_element_at(t, i), try_element_at(t, i + 1),
+        try_element_at(t, i + 2)))
   }
 }

@@ -73,8 +73,8 @@ object Llm {
       s"(strpos('0123456789abcdef', substr($h, $p, 1)) - 1) * ${1L << (4 * (15 - p))}")
       .mkString("(", " + ", ")")
 
-  /** DuckDB twin of graft.api.Dedup.shingleHashRows: ONE md5 per
-    * shingle, reduced to a 60-bit long.
+  /** DuckDB twin of the shingle hashes in graft.api.Dedup.sketch: ONE
+    * md5 per shingle, reduced to a 60-bit long.
     */
   private val SQL_SHINGLE_HASHES =
     s"SELECT doc_id, ${SQL_HEX15("md5(token)")} AS h FROM ($SQL_SHINGLE_ROWS)"
@@ -589,7 +589,7 @@ object Llm {
     // (a match on a 2r-row band implies both r-row halves match ⇒
     // fewer bands ⊆ more bands), so recall_vs_finest is exact, not
     // sampled twice. The shingle pass is shared across settings via
-    // the persisted-shingle cache; everything downstream is
+    // the memoized Dedup.sketch; everything downstream is
     // signature-sized. (At 100 TB you tune on a deterministic sample
     // first — the query is shape-identical under any doc_id filter; at
     // fixture scale the full corpus is the interesting measurement:
@@ -711,7 +711,7 @@ object Llm {
     // here long before a global dup rate moves): per source, exact-dup
     // mass (non-canonical members of md5 groups) and near-dup loser
     // mass (doc_b of verified pairs), plus the clean share. Reuses the
-    // exact-group and LSH-verify chains (shared shingle cache); the
+    // exact-group and LSH-verify chains (shared Dedup.sketch); the
     // per-source rollup is one broadcastable join + one aggregate on
     // top of work the pipeline already does.
     Q("llm_dedup_rate_by_source",
@@ -1369,14 +1369,14 @@ object Llm {
     // "B quotes most of A" (containment high one way) from "A and B
     // are siblings" (Jaccard high both ways) — the distinction that
     // decides KEEP-LONGEST vs KEEP-ONE in a dedup policy. Exact
-    // integer set sizes over the shared 60-bit shingle-hash stream;
+    // integer set sizes over the shared Dedup.sketch hash sets;
     // the pair⋈hash⋈hash join is candidate-bounded (pairs come from
     // banded LSH — the all-pairs stage never exists).
     Q("llm_containment_pairs",
       (s, d) => {
         val docs = Tables.documents(s, d)
-        val sh = graft.api.Dedup.shingleHashRows(docs, "doc_id", "text")
-          .distinct().localCheckpoint(eager = false)
+        val sh = graft.api.Dedup.sketch(docs, "doc_id", "text", K)
+          .select(col("doc_id"), explode(col("toks")).as("h"))
         val sz = sh.groupBy("doc_id").agg(count(lit(1)).as("n"))
         val pairs = graft.api.Dedup
           .lshCandidatePairs(docs, "doc_id", "text", K, BANDS)
@@ -1916,10 +1916,8 @@ object Llm {
       (s, d) => {
         val slice = Tables.documents(s, d)
           .filter(col("doc_id") % 20 === 0)
-        val sets = graft.api.Dedup
-          .shingleHashRows(slice, "doc_id", "text")
-          .groupBy("doc_id")
-          .agg(sort_array(collect_set(col("h"))).as("toks"))
+        val sets = graft.api.Dedup.sketch(slice, "doc_id", "text", K)
+          .select(col("doc_id"), col("toks"))
         val a = sets.select(col("doc_id").as("doc_a"),
           col("toks").as("ta"))
         val b = sets.select(col("doc_id").as("doc_b"),
@@ -1940,7 +1938,7 @@ object Llm {
           .agg(count(lit(1)).as("true_pairs"),
             sum(coalesce(col("cand"), lit(0L))).cast("long")
               .as("found_by_lsh"))
-        val out = hits
+        hits
           .crossJoin(broadcast(
             cands.agg(count(lit(1)).as("lsh_candidates"))))
           .crossJoin(broadcast(
@@ -1949,15 +1947,6 @@ object Llm {
             col("found_by_lsh"), col("lsh_candidates"),
             round(col("found_by_lsh").cast("double") /
               col("true_pairs").cast("double"), 4).as("recall"))
-        // lshCandidatePairs persists the slice's candidate table
-        // (MEMORY_AND_DISK inside pairsFromShingles); the SLICE plan
-        // never matches the corpus dedup chain's, so nearDupComponents'
-        // terminal unpersist can't release it. Pin the 1-row result
-        // eagerly, then drop the cache (r12 ADVICE — was a leak per
-        // audited fixture).
-        val pinned = out.localCheckpoint()
-        cands.unpersist(blocking = false)
-        pinned
       },
       Some(s"""WITH sh AS (
               |  SELECT doc_id, h FROM ($SQL_SHINGLE_HASHES)

@@ -100,8 +100,8 @@ object Pipeline {
           (0L, "add", "part_P"), (1L, "remove", "part_P"),
           (1L, "add", "part_P2"))
           .toDF("version", "action", "file")
-          .coalesce(1).write.mode("overwrite").json(s"$tmp/_log")
-        val live = s.read.json(s"$tmp/_log")
+          .coalesce(1).write.mode("overwrite").json(s"$tmp/log")
+        val live = s.read.json(s"$tmp/log")
           .groupBy("file")
           .agg(max_by(col("action"), col("version")).as("last"))
           .filter(col("last") === "add")
@@ -152,8 +152,8 @@ object Pipeline {
           (1L, "remove", "part_P_a"), (1L, "remove", "part_P_b"),
           (1L, "add", "part_P2"))
         log.toDF("version", "action", "file")
-          .coalesce(1).write.mode("overwrite").json(s"$tmp/_log")
-        val logDf = s.read.json(s"$tmp/_log").cache()
+          .coalesce(1).write.mode("overwrite").json(s"$tmp/log")
+        val logDf = s.read.json(s"$tmp/log").cache()
         val out = Seq(0L, 1L).map { v =>
           val live = logDf.filter(col("version") <= v)
             .groupBy("file")
@@ -237,8 +237,8 @@ object Pipeline {
           (0L, "add", "part_P"), (1L, "remove", "part_P"),
           (1L, "add", "part_P_m1"), (1L, "add", "part_ins"))
           .toDF("version", "action", "file")
-          .coalesce(1).write.mode("overwrite").json(s"$tmp/_log")
-        val live = s.read.json(s"$tmp/_log")
+          .coalesce(1).write.mode("overwrite").json(s"$tmp/log")
+        val live = s.read.json(s"$tmp/log")
           .groupBy("file")
           .agg(max_by(col("action"), col("version")).as("last"))
           .filter(col("last") === "add")
@@ -326,8 +326,8 @@ object Pipeline {
           (0L, "add", "part_P"), (1L, "remove", "part_P"),
           (1L, "add", "part_P_m1"), (1L, "add", "part_ins"))
           .toDF("version", "action", "file")
-          .coalesce(1).write.mode("overwrite").json(s"$tmp/_log")
-        val logDf = s.read.json(s"$tmp/_log").cache()
+          .coalesce(1).write.mode("overwrite").json(s"$tmp/log")
+        val logDf = s.read.json(s"$tmp/log").cache()
         def snap(v: Long): org.apache.spark.sql.DataFrame = {
           val live = logDf.filter(col("version") <= v)
             .groupBy("file")
@@ -411,8 +411,8 @@ object Pipeline {
           (1L, "remove", "part_P_a"), (1L, "remove", "part_P_b"),
           (1L, "add", "part_P2"))
           .toDF("version", "action", "file")
-          .coalesce(1).write.mode("overwrite").json(s"$tmp/_log")
-        val live = s.read.json(s"$tmp/_log")
+          .coalesce(1).write.mode("overwrite").json(s"$tmp/log")
+        val live = s.read.json(s"$tmp/log")
           .groupBy("file")
           .agg(max_by(col("action"), col("version")).as("last"))
           .filter(col("last") === "add")
@@ -479,8 +479,8 @@ object Pipeline {
           (1L, "main", "remove", "part_P"), (1L, "main", "add", "part_P2"),
           (2L, "audit", "add", "part_ins"))
           .toDF("version", "branch", "action", "file")
-          .coalesce(1).write.mode("overwrite").json(s"$tmp/_log")
-        val logDf = s.read.json(s"$tmp/_log").cache()
+          .coalesce(1).write.mode("overwrite").json(s"$tmp/log")
+        val logDf = s.read.json(s"$tmp/log").cache()
         val forkV = 0L
         def live(branch: String): Array[String] = logDf
           .filter(

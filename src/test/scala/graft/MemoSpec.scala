@@ -22,6 +22,19 @@ class MemoSpec extends AnyFunSuite {
     finally pool.shutdownNow()
   }
 
+  test("removeIf drops exactly the matching entries") {
+    val memo = Memo[Int, Int](bound = 8)
+    val builds = new AtomicInteger()
+    def get(k: Int) = memo(k) { builds.incrementAndGet(); k }
+    (1 to 6).foreach(get)
+    memo.removeIf(_ % 2 == 0)
+    assert(memo.size == 3)
+    Seq(1, 3, 5).foreach(get)
+    assert(builds.get == 6, "odd keys must still be held")
+    get(2)
+    assert(builds.get == 7, "even keys must have been dropped")
+  }
+
   test("least recently used goes first and the bound holds") {
     val memo = Memo[Int, Int](bound = 3)
     val builds = new AtomicInteger()

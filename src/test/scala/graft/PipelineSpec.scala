@@ -174,19 +174,32 @@ class PipelineSpec extends AnyFunSuite {
     assert(v1.forall(f => root.resolve(f).toFile.exists()))
   }
 
-  test("Dedup.releaseCaches drops exactly the chain's cache entries") {
+  test("Dedup.releaseCaches frees exactly the input's sketch checkpoints") {
     import spark.implicits._
     val docs = Seq(
       (1L, "alpha beta gamma delta epsilon zeta eta theta"),
       (2L, "alpha beta gamma delta epsilon zeta eta theta"),
       (3L, "totally different words forming another document body here")
     ).toDF("id", "body")
+    val sc = spark.sparkContext
+    def pinned = sc.getPersistentRDDs.keySet.toSet
+    def checkpointOf(df: org.apache.spark.sql.DataFrame): Int =
+      df.queryExecution.analyzed.collectLeaves().collectFirst {
+        case l: org.apache.spark.sql.execution.LogicalRDD if pinned(l.rdd.id) => l.rdd.id
+      }.getOrElse(fail("sketch is not checkpointed"))
     spark.catalog.clearCache()
+    val before = pinned
     graft.api.Dedup.jaccardVerify(docs, "id", "body").count()
-    assert(!spark.sharedState.cacheManager.isEmpty,
-      "jaccardVerify should persist chain caches")
+    graft.api.Dedup.minhashSignatures(docs, "id", "body", k = 8).count()
+    val sketches = Seq(16, 8).map(k =>
+      checkpointOf(graft.api.Dedup.sketch(docs, "id", "body", k)))
+    val chain = pinned -- before
+    assert(sketches.forall(chain.contains), s"sketches $sketches not in $chain")
     graft.api.Dedup.releaseCaches(docs, "id", "body")
-    assert(spark.sharedState.cacheManager.isEmpty,
-      "releaseCaches should drop every chain entry")
+    // compared as subsets: the ContextCleaner may free other suites'
+    // unreachable checkpoints at any time
+    assert(sketches.forall(!pinned(_)), "releaseCaches must free both sketches")
+    assert((chain -- sketches).subsetOf(pinned), "and nothing else of the chain")
+    assert(spark.sharedState.cacheManager.isEmpty)
   }
 }

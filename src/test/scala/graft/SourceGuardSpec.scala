@@ -68,4 +68,17 @@ class SourceGuardSpec extends AnyFunSuite {
       _.getFileName.toString == "Artifacts.scala")
     assert(found.isEmpty, found.mkString("\n"))
   }
+
+  test("api/Dedup.scala persists only inside exactSubstringSpans") {
+    val (_, lines) = sources.find(_._1.endsWith("api/Dedup.scala"))
+      .getOrElse(fail("api/Dedup.scala not found"))
+    val start = lines.indexWhere(_.contains("def exactSubstringSpans("))
+    val end = lines.indexWhere(l => l.startsWith("  def ") || l.startsWith("  /**"), start + 1)
+    assert(start >= 0 && end > start)
+    val found = lines.zipWithIndex.collect {
+      case (l, i) if """\b(un)?persist\(""".r.findFirstIn(l).isDefined &&
+          (i < start || i >= end) => s"Dedup.scala:${i + 1}: ${l.trim}"
+    }
+    assert(found.isEmpty, found.mkString("\n"))
+  }
 }

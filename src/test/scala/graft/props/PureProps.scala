@@ -81,6 +81,28 @@ object PureProps extends Properties("graft") {
       e16 <= 0.12 && e64 <= 0.06 && e64 < e16
     }
 
+  /** The shingle rule of graft.functions.ShingleHashes, spelled out:
+    * sliding 3-token windows, or one shingle of every token when there
+    * are fewer than 3.
+    */
+  private def shingles(tokens: Seq[String]): Seq[String] =
+    if (tokens.size < 3) Seq(tokens.mkString(" "))
+    else tokens.sliding(3).map(_.mkString(" ")).toSeq
+
+  private val text: Gen[String] = Gen.frequency(
+    1 -> Gen.asciiPrintableStr,
+    3 -> Gen.listOf(Gen.oneOf('a', 'b', 'q', 'Z', ' ', ' ', '7', '!')).map(_.mkString))
+
+  property("ShingleHashes = top 60 bits of each shingle's md5, in order") =
+    Prop.forAll(text) { s =>
+      val toks = tokenize(s)
+      val arr = new org.apache.spark.sql.catalyst.util.GenericArrayData(
+        toks.map(org.apache.spark.unsafe.types.UTF8String.fromString).toArray[Any])
+      val kernel = graft.functions.ShingleHashes(
+        org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute("t"))
+      kernel.hashes(arr).toLongArray().toSeq == shingles(toks).map(hash60)
+    }
+
   property("identical sets have identical minhash signatures") =
     Prop.forAll(wordSet)(a => minhash(a, 16) == minhash(a, 16))
 

@@ -78,6 +78,8 @@ check("dedup.jaccard_verify", lambda: expect(
 check("dedup.near_dup_components", lambda: expect(
     graft.dedup.near_dup_components(docs, "doc_id", "text").count() >= 0,
     "ran"))
+check("dedup.release_caches", lambda: expect(
+    graft.dedup.release_caches(docs, "doc_id", "text") is None, "ran"))
 check("dedup.simhash", lambda: expect(
     graft.dedup.simhash(docs, "doc_id", "text").count() == n_docs,
     "one simhash per doc"))
