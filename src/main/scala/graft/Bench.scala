@@ -101,10 +101,18 @@ object Bench {
     }
     canary += canarySample() // mid: warm JVM, before the timed window
     chain += chainSample()
+    // Codegen compiles per query, summed over the timed passes: a warm
+    // query that compiles is missing Spark's codegen class cache (see
+    // GraftSession.harnessConf). Queries run one at a time, so the
+    // JVM-wide counter's delta around one belongs to it.
+    val compiles = scala.collection.mutable.Map[String, Long]().withDefaultValue(0L)
+    def compileCount = org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount
     def timedPass(pass: Int): Map[String, Double] = queries.flatMap { case (name, fn) =>
+      val c0 = compileCount
       val t0 = System.nanoTime()
       val ok = try { fn(spark, sfDir).count(); true }
         catch { case e: Throwable => failed(name, s"pass $pass", e); false }
+      compiles(name) += compileCount - c0
       if (ok) Some(name -> (System.nanoTime() - t0) / 1e9) else None
     }
     // N full passes (not N back-to-back runs per query: interleaving
@@ -150,6 +158,9 @@ object Bench {
     }.mkString("{", ",", "}")
     val errors = failures.map { case (k, (_, msg)) => Verify.jsonString(k) + ":" + Verify.jsonString(msg) }
       .mkString("{", ",", "}")
+    // integer counts: the prev-file regexes below never read them
+    val compilesJson = queries.keys.map(k => Verify.jsonString(k) + ":" + compiles(k))
+      .mkString("{", ",", "}")
     val stat = if (repeat > 1) s""","stat":"median_of_$repeat"""" else ""
     // Two lines with DISTINCT metric names (r10, ADVICE): the ~10 kB
     // per-query line is "total_detail" so no line-scanner for
@@ -159,7 +170,7 @@ object Bench {
     // numbers live in the detail line + PERF_data/bench_last.json.
     val canaryJson = canary.mkString("[", ",", "]")
     val chainJson = chain.mkString("[", ",", "]")
-    val line = s"""{"metric":"total_detail","value":$total,"unit":"sec","queries":$qs,"spread":$spread,"canary_s":$canaryJson,"canary_chain_s":$chainJson,"sf":"$sfDir"$stat,"status":$status,"errors":$errors}"""
+    val line = s"""{"metric":"total_detail","value":$total,"unit":"sec","queries":$qs,"spread":$spread,"canary_s":$canaryJson,"canary_chain_s":$chainJson,"sf":"$sfDir"$stat,"status":$status,"errors":$errors,"compiles":$compilesJson}"""
     println(line)
     // Round-over-round regression gate (r10, VERDICT next #2): diff
     // this run against the previous round's persisted file and print
@@ -231,7 +242,7 @@ object Bench {
     // Compare total_min across rounds; the median "value" stays for
     // continuity with r1-r12 history.
     val totalMin = if (qmin.nonEmpty) qmin.values.sum else 0.0
-    println(s"""{"metric":"total","value":$total,"total_min":$totalMin,"unit":"sec","canary_s":$canaryJson,"canary_chain_s":$chainJson,"sf":"$sfDir"$stat,"n_queries":${results.size},"n_errors":${failures.size},"full":"PERF_data/bench_last.json"}""")
+    println(s"""{"metric":"total","value":$total,"total_min":$totalMin,"unit":"sec","canary_s":$canaryJson,"canary_chain_s":$chainJson,"sf":"$sfDir"$stat,"n_queries":${results.size},"n_errors":${failures.size},"compiles":${compiles.values.sum},"full":"PERF_data/bench_last.json"}""")
     // The driver keeps only a ~2 kB tail of stdout, which truncates the
     // per-query map past ~60 queries — persist the complete line so the
     // full history is committable every round (VERDICT r4 item 5).

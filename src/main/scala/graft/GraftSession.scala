@@ -37,15 +37,40 @@ object GraftSession {
   val MetastoreUriKey = "spark.graft.metastore.uri"
 
   /** The confs every session is built from: `local[cpus]` with one
-    * shuffle partition per core, UTC session time, no UI. Bench,
-    * Verify, ExplainProbe and the test session use exactly this list
-    * ([[harness]]); [[builder]] layers the library extras on it.
+    * shuffle partition per core, UTC session time, no UI, and the two
+    * codegen-reuse settings below. Bench, Verify, ExplainProbe and the
+    * test session use exactly this list ([[harness]]); [[builder]]
+    * layers the library extras on it.
+    *
+    * Spark keeps compiled codegen classes in one JVM-wide cache keyed
+    * by (context class loader, generated code); a miss costs a janino
+    * compile of 5-50 ms on the calling thread. Two settings keep a
+    * warm query from missing (counted with
+    * `CodegenMetrics.METRIC_COMPILATION_TIME`, pinned by
+    * CodegenCacheSpec):
+    *  - `spark.sql.codegen.cache.maxEntries=1000` (a static conf, read
+    *    once per JVM when Spark first generates code). The default 100
+    *    is split over 4 Guava segments of 25 that evict on their own. One cold cycle of the three
+    *    `multi_action` perfbench ops (graph_katz, catalog_table_stats,
+    *    stream_stateful_count) compiles 120 classes at sf0.1, so
+    *    rotating them evicted each other's classes: 44-60 recompiles
+    *    per warm cycle, where graph_katz or catalog_table_stats
+    *    looped alone recompiles 0. At 1000 a warm cycle recompiles 0.
+    *  - `spark.sql.artifact.isolation.enabled=false`: each streaming
+    *    query runs in a cloned session with a fresh artifact-isolation
+    *    id, and the executor builds a new session class loader per id,
+    *    so every call of a streaming query missed the cache for its
+    *    task-side classes (13 compiles per stream_stateful_count call,
+    *    whatever the cache size). graft adds no per-session jars or
+    *    files, so isolation buys it nothing.
     */
   def harnessConf(cpus: Int): Seq[(String, String)] = Seq(
     "spark.master" -> s"local[$cpus]",
     "spark.sql.shuffle.partitions" -> cpus.toString,
     "spark.sql.session.timeZone" -> "UTC",
-    "spark.ui.enabled" -> "false")
+    "spark.ui.enabled" -> "false",
+    "spark.sql.codegen.cache.maxEntries" -> "1000",
+    "spark.sql.artifact.isolation.enabled" -> "false")
 
   /** Core count of a harness session: `SPARK_GRAFT_CPUS`, default 4. */
   def harnessCpus: Int = sys.env.get("SPARK_GRAFT_CPUS").fold(4)(_.toInt)

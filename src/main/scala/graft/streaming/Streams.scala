@@ -1,9 +1,11 @@
 package graft.streaming
 
+import java.io.File
 import java.util.concurrent.atomic.AtomicInteger
 
 import graft.Q
 import graft.Ops.{cents, SQL_CENTS}
+import org.apache.commons.io.FileUtils
 import org.apache.spark.sql.{DataFrame, Dataset, Encoders, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout, OutputMode, Trigger}
@@ -130,6 +132,28 @@ object Streams {
       .start()
       .awaitTermination()
 
+  /** Run `sink` until it has processed everything available, then stop
+    * it. Its checkpoint lives in a fresh [[graft.Artifacts.scratch]]
+    * directory, deleted once the query stops: Spark would otherwise
+    * create a `temporary-<uuid>` checkpoint outside graft's root.
+    */
+  private def drain(sink: DataStreamWriter[Row]): Unit = {
+    val cp = graft.Artifacts.scratch("stream_cp")
+    try {
+      val q = sink.option("checkpointLocation", cp).start()
+      try q.processAllAvailable() finally q.stop()
+    } finally FileUtils.deleteQuietly(new File(cp))
+  }
+
+  /** What a foreachBatch sink wrote into `dir/b=<batchId>`, one
+    * directory per batch, read as one frame. Reading `dir` itself
+    * rather than a `b=*` glob spares Spark's sink-metadata probe a
+    * stack trace for the literal glob path; the recursive lookup reads
+    * the batch directories as plain files, with no `b` column.
+    */
+  private def batchDirs(s: SparkSession, dir: String): DataFrame =
+    s.read.option("recursiveFileLookup", "true").parquet(dir)
+
   /** The plain append-mode parquet sink at `root/sink`. */
   private def parquetSink(df: DataFrame, root: String): DataStreamWriter[Row] =
     df.writeStream.format("parquet").option("path", s"$root/sink")
@@ -199,7 +223,8 @@ object Streams {
     * fixture scale (override with `spark.graft.stream.shufflePartitions`
     * — a 1000-executor deployment with millions of state rows per
     * partition wants cores×2, exactly like batch). The session conf is
-    * restored afterwards; each query uses a fresh temp checkpoint, so
+    * restored afterwards; each query checkpoints into a fresh
+    * [[graft.Artifacts.scratch]] directory, deleted once it stops, so
     * no state-compatibility constraint crosses queries.
     *
     * The whole run holds [[runLock]]: the conf flip is session-global, so
@@ -231,10 +256,7 @@ object Streams {
     // sets `spark.sql.streaming.stateStore.providerClass` itself.
     try {
       val name = s"graft_stream_${nameCounter.incrementAndGet()}"
-      val q = df.writeStream.format("memory").queryName(name)
-        .outputMode(mode).start()
-      q.processAllAvailable()
-      q.stop()
+      drain(df.writeStream.format("memory").queryName(name).outputMode(mode))
       s.table(name)
     } finally s.conf.set("spark.sql.shuffle.partitions", prev)
   }
@@ -747,12 +769,12 @@ object Streams {
         // not duplicate — plain mode("append") to one directory would
         // permanently inflate n_pairs/sum_cents and fail the oracle on
         // every later run. Each batch overwrites its own batchId-named
-        // subdirectory; the read globs them back together.
+        // subdirectory; batchDirs reads them back together.
         catchUp(root)(joined.writeStream
           .foreachBatch { (batch: DataFrame, batchId: Long) =>
             batch.write.mode("overwrite").parquet(s"$root/sink/b=$batchId")
           })
-        s.read.parquet(s"$root/sink/b=*")
+        batchDirs(s, s"$root/sink")
           .groupBy((col("user_id") % 10).as("user_bucket"))
           .agg(count(lit(1)).as("n_pairs"),
             sum(col("l_cents") + col("r_cents")).cast("long")
@@ -956,7 +978,7 @@ object Streams {
           .foreachBatch { (batch: DataFrame, batchId: Long) =>
             batch.write.mode("overwrite").parquet(s"$root/sink/b=$batchId")
           })
-        s.read.parquet(s"$root/sink/b=*")
+        batchDirs(s, s"$root/sink")
           .groupBy("user_id")
           .agg(max("n_events").as("n_events"),
             max_by(col("cents"), col("n_events")).as("cents"))
@@ -1000,7 +1022,7 @@ object Streams {
           .foreachBatch { (batch: DataFrame, batchId: Long) =>
             batch.write.mode("overwrite").parquet(s"$root/sink/b=$batchId")
           })
-        s.read.parquet(s"$root/sink/b=*")
+        batchDirs(s, s"$root/sink")
           .groupBy((col("user_id") % 10).as("user_bucket"))
           .agg(count(col("r_cents")).as("n_matched"),
             count(when(col("r_cents").isNull, lit(1))).as("n_unmatched"),
@@ -1068,11 +1090,11 @@ object Streams {
             batch.unpersist()
             ()
           })
-        val fromRaw = s.read.parquet(s"$root/raw/b=*")
+        val fromRaw = batchDirs(s, s"$root/raw")
           .groupBy("event_type")
           .agg(count(lit(1)).as("n_raw"),
             sum("cents").cast("long").as("cents_raw"))
-        val fromAgg = s.read.parquet(s"$root/agg/b=*")
+        val fromAgg = batchDirs(s, s"$root/agg")
           .groupBy("event_type")
           .agg(sum("n").cast("long").as("n_agg"),
             sum("cents").cast("long").as("cents_agg"))
@@ -1092,15 +1114,12 @@ object Streams {
     Q("stream_foreachbatch",
       (s, d) => {
         val outDir = graft.Artifacts.scratch("foreachbatch")
-        val q = eventsStream(s, d)
+        drain(eventsStream(s, d)
           .select(col("event_id"), col("user_id"), col("event_type"), col("value"))
           .writeStream
           .foreachBatch { (batch: DataFrame, _: Long) =>
             batch.write.mode("append").parquet(outDir)
-          }
-          .start()
-        q.processAllAvailable()
-        q.stop()
+          })
         s.read.parquet(outDir).orderBy("event_id")
       },
       // direct oracle: stateless pass-through under exactly-once
@@ -1132,7 +1151,7 @@ object Streams {
             "doc_id", "text", table = corpus)
         }
         val outDir = graft.Artifacts.scratch("stream_dedup")
-        val q = documentsStream(s, d)
+        drain(documentsStream(s, d)
           .filter(col("doc_id") % 10 < 2)
           .writeStream
           .foreachBatch { (batch: DataFrame, _: Long) =>
@@ -1140,10 +1159,7 @@ object Streams {
               .incrementalNearDupsIndexed(batch, "doc_id", "text",
                 corpus)
               .write.mode("append").parquet(outDir)
-          }
-          .start()
-        q.processAllAvailable()
-        q.stop()
+          })
         s.read.parquet(outDir).orderBy("doc_id")
       },
       // direct oracle: each arriving doc's verdict is computed
@@ -1176,16 +1192,13 @@ object Streams {
             graft.Tables.embeddings(s, d).filter(col("vec_id") % 3 =!= 0),
             "vec_id", "embedding", table, 16,
             graft.operators.DataOps.ORACLE_ITERS)
-          val q = embeddingsStream(s, d)
+          drain(embeddingsStream(s, d)
             .filter(col("vec_id") % 3 === 0)
             .writeStream
             .foreachBatch { (batch: DataFrame, _: Long) =>
               graft.api.Similarity.appendToIvfIndex(
                 batch, "vec_id", "embedding", table, cb0)
-            }
-            .start()
-          q.processAllAvailable()
-          q.stop()
+            })
           cb0
         }
         graft.api.Similarity.ivfIndexDrift(s, table, cb)
@@ -1223,16 +1236,13 @@ object Streams {
             graft.Tables.embeddings(s, d).filter(col("vec_id") % 3 =!= 0),
             "vec_id", "embedding", table, 16, 4, 16,
             graft.operators.DataOps.ORACLE_ITERS)
-          val q = embeddingsStream(s, d)
+          drain(embeddingsStream(s, d)
             .filter(col("vec_id") % 3 === 0)
             .writeStream
             .foreachBatch { (batch: DataFrame, _: Long) =>
               graft.api.Similarity.appendToIvfPqIndex(
                 batch, "vec_id", "embedding", table, model._1, model._2)
-            }
-            .start()
-          q.processAllAvailable()
-          q.stop()
+            })
           model
         }
         graft.operators.DataOps.ivfPqDriftAudit(s, table)

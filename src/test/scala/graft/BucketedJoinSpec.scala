@@ -52,7 +52,9 @@ class BucketedJoinSpec extends AnyFunSuite {
       "spark.master" -> "local[4]",
       "spark.sql.shuffle.partitions" -> "4",
       "spark.sql.session.timeZone" -> "UTC",
-      "spark.ui.enabled" -> "false"))
+      "spark.ui.enabled" -> "false",
+      "spark.sql.codegen.cache.maxEntries" -> "1000",
+      "spark.sql.artifact.isolation.enabled" -> "false"))
     assert(GraftSession.harnessConf(32).toMap.apply("spark.sql.shuffle.partitions") == "32")
     // the shared test session is built from harness(4): every pair holds
     val conf = spark.sparkContext.getConf
