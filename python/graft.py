@@ -117,15 +117,17 @@ class dedup:
 
     @staticmethod
     def write_band_index(docs, id_col, text_col, table, k=16, bands=4,
-                         buckets=8, append=False):
+                         buckets=8):
         """Persist the corpus near-dup index as bucketed tables
         (``<table>_bands`` / ``<table>_sets``)."""
         _jvm().graft.api.Dedup.writeBandIndex(
-            docs._jdf, id_col, text_col, table, k, bands, buckets, append)
+            docs._jdf, id_col, text_col, table, k, bands, buckets)
 
     @staticmethod
     def append_to_band_index(batch, id_col, text_col, table, k=16, bands=4,
-                             buckets=8):
+                             buckets=0):
+        """Append a batch to both halves, O(batch). ``buckets<=0`` takes
+        each half's bucket count from its catalog spec."""
         _jvm().graft.api.Dedup.appendToBandIndex(
             batch._jdf, id_col, text_col, table, k, bands, buckets)
 

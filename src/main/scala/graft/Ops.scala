@@ -34,6 +34,16 @@ object Ops {
   def cents(c: Column): Column = (c.cast("decimal(18,2)") * 100).cast("long")
   def SQL_CENTS(x: String): String = s"CAST(CAST($x AS DECIMAL(18,2)) * 100 AS BIGINT)"
 
+  /** The first 15 hex nibbles of the md5 hex string `h` as a BIGINT
+    * polynomial — DuckDB's mirror of Spark's
+    * `conv(substring(h, 1, 15), 16, 10)`, the portable 60-bit hash every
+    * hash-coin oracle uses.
+    */
+  def SQL_HEX15(h: String): String =
+    (1 to 15).map(p =>
+      s"(strpos('0123456789abcdef', substr($h, $p, 1)) - 1) * ${1L << (4 * (15 - p))}")
+      .mkString("(", " + ", ")")
+
   /** Per-row revenue expression (no accumulation: bit-exact both engines).
     * Safe to OUTPUT as a double column; NOT safe to cast to decimal and
     * sum — Spark rounds the double's shortest decimal repr (HALF_UP),

@@ -1,7 +1,7 @@
 package graft.api
 
 import graft.functions.{ShingleHashes, TextUdfs}
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, LogicalPlan}
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.expressions.Window
@@ -294,8 +294,10 @@ object Dedup {
       threshold: Double): DataFrame = {
     val agg = jac.groupBy("new_id").agg(
       count(lit(1)).as("n_candidates"), max(col("__j")).as("__max_j"))
+    // the aggregate is O(batch): broadcast it, so the batch ids are
+    // never shuffled to meet it
     batchIds
-      .join(agg, col("doc_id") === col("new_id"), "left")
+      .join(broadcast(agg), col("doc_id") === col("new_id"), "left")
       .select(col("doc_id"),
         coalesce(col("n_candidates"), lit(0L)).as("n_candidates"),
         round(coalesce(col("__max_j"), lit(0.0)), 4).as("max_jaccard"),
@@ -322,31 +324,41 @@ object Dedup {
     * O(batch) (see [[appendToBandIndex]]).
     */
   def writeBandIndex(docs: DataFrame, idCol: String, textCol: String,
-      table: String, k: Int = 16, bands: Int = 4, buckets: Int = 8,
-      append: Boolean = false): Unit = {
-    val mode =
-      if (append) org.apache.spark.sql.SaveMode.Append
-      else org.apache.spark.sql.SaveMode.Overwrite
-    val sk = sketch(docs, idCol, textCol, k)
-    banded(sk, k, bands)
-      .write.mode(mode)
-      .bucketBy(buckets, "band", "bhash").sortBy("band", "bhash")
-      .saveAsTable(s"${table}_bands")
-    sk.select(col("doc_id"), col("toks"))
-      .write.mode(mode)
-      .bucketBy(buckets, "doc_id").sortBy("doc_id")
-      .saveAsTable(s"${table}_sets")
-  }
+      table: String, k: Int = 16, bands: Int = 4, buckets: Int = 8): Unit =
+    writeHalves(sketch(docs, idCol, textCol, k), k, bands, table,
+      SaveMode.Overwrite, buckets, buckets)
 
   /** Commit an ingested batch into the band index — append-only, cost
     * O(batch): Spark appends new bucket files under the SAME bucket
     * spec, so the artifact stays co-partitionable forever; no corpus
     * rescan, no rewrite. Call after a batch passes
     * [[incrementalNearDupsIndexed]] and is accepted into the corpus.
+    *
+    * `buckets <= 0` (the default) takes each half's count from its own
+    * catalog spec when the half exists (else the write-path default of
+    * 8), so appending to an index written with any bucket count keeps
+    * its layout; a positive count is used as given.
     */
   def appendToBandIndex(batch: DataFrame, idCol: String, textCol: String,
-      table: String, k: Int = 16, bands: Int = 4, buckets: Int = 8): Unit =
-    writeBandIndex(batch, idCol, textCol, table, k, bands, buckets, append = true)
+      table: String, k: Int = 16, bands: Int = 4, buckets: Int = 0): Unit = {
+    def nb(suffix: String): Int = graft.api.Similarity
+      .resolveAppendBuckets(batch.sparkSession, s"$table$suffix", buckets)
+    writeHalves(sketch(batch, idCol, textCol, k), k, bands, table,
+      SaveMode.Append, nb("_bands"), nb("_sets"))
+  }
+
+  /** Both halves of a band index from the sketch frame `sk`. */
+  private def writeHalves(sk: DataFrame, k: Int, bands: Int, table: String,
+      mode: SaveMode, nbBands: Int, nbSets: Int): Unit = {
+    banded(sk, k, bands)
+      .write.mode(mode)
+      .bucketBy(nbBands, "band", "bhash").sortBy("band", "bhash")
+      .saveAsTable(s"${table}_bands")
+    sk.select(col("doc_id"), col("toks"))
+      .write.mode(mode)
+      .bucketBy(nbSets, "doc_id").sortBy("doc_id")
+      .saveAsTable(s"${table}_sets")
+  }
 
   /** Compact the persisted band index — the maintenance op
     * [[appendToBandIndex]]'s continuous-ingestion story accrues toward
@@ -372,7 +384,7 @@ object Dedup {
           s"compactBandIndex: $src has no bucket spec"))
       val snap = spark.table(src).localCheckpoint()
       snap.repartition(nb, keys.map(col): _*)
-        .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
+        .write.mode(SaveMode.Overwrite)
         .bucketBy(nb, keys.head, keys.tail: _*).sortBy(keys.head, keys.tail: _*)
         .saveAsTable(s"$target$suffix")
       graft.Memo.releaseCheckpoint(snap)
@@ -411,14 +423,8 @@ object Dedup {
     // snapshot the sets half (it is both the signature input and the
     // carried-over content, and `target` may equal `table` in place)
     val sets = spark.table(s"${table}_sets").localCheckpoint()
-    banded(withSignatures(sets, k), k, bands)
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .bucketBy(nbBands, "band", "bhash").sortBy("band", "bhash")
-      .saveAsTable(s"${target}_bands")
-    sets
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .bucketBy(nbSets, "doc_id").sortBy("doc_id")
-      .saveAsTable(s"${target}_sets")
+    writeHalves(withSignatures(sets, k), k, bands, target, SaveMode.Overwrite,
+      nbBands, nbSets)
     graft.Memo.releaseCheckpoint(sets)
   }
 

@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.{Ops, Q, Tables}
+import graft.Ops.SQL_HEX15
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -31,15 +32,6 @@ object Aggs {
     s"""CASE WHEN ($j) < 1 THEN 0.0 ELSE
        |list_sum(list_transform(generate_series(1, CAST($j AS INT)),
        |  i -> ln((CAST($m AS DOUBLE) - i + 1.0) / i))) END""".stripMargin
-
-  /** First-15-hex-nibbles→BIGINT polynomial — mirrors Spark's
-    * conv(substr(md5(..),1,15),16,10) exactly (the Pipeline/Llm
-    * SQL_HEX15 device, local copy for this module's oracles).
-    */
-  private def SQL_HEX15_AGGS(h: String): String =
-    (1 to 15).map(p =>
-      s"(strpos('0123456789abcdef', substr($h, $p, 1)) - 1) * ${1L << (4 * (15 - p))}")
-      .mkString("(", " + ", ")")
 
   val queries: Seq[Q] = Seq(
     Q("agg_pricing_summary",
@@ -329,7 +321,7 @@ object Aggs {
       },
       Some(s"""WITH hb AS (
               |  SELECT user_id,
-              |    j, ${SQL_HEX15_AGGS("md5('cms' || CAST(j AS VARCHAR) || ':' || CAST(user_id AS VARCHAR))")} % 256 AS bucket
+              |    j, ${SQL_HEX15("md5('cms' || CAST(j AS VARCHAR) || ':' || CAST(user_id AS VARCHAR))")} % 256 AS bucket
               |  FROM events, unnest(generate_series(0, 3)) t(j)),
               |sketch AS (
               |  SELECT j, bucket, CAST(COUNT(*) AS BIGINT) AS cnt
@@ -1070,9 +1062,6 @@ object Aggs {
       val cdf = Seq("0.36787944117144233", "0.7357588823428847",
         "0.9196986029286058", "0.9810118431238463",
         "0.9963401531726563", "0.9994058151824183")
-      val hex15 = (1 to 15).map(p =>
-        s"(strpos('0123456789abcdef', substr(h, $p, 1)) - 1) * ${1L << (4 * (15 - p))}")
-        .mkString("(", " + ", ")")
       // CAST('…' AS DOUBLE) — the ts_ewma literal device: a bare
       // decimal literal is DECIMAL in DuckDB, not DOUBLE
       val kase = cdf.zipWithIndex
@@ -1088,7 +1077,7 @@ object Aggs {
          |ks AS (
          |  SELECT b, q, $kase AS k FROM (
          |    SELECT b, q,
-         |      CAST($hex15 AS DOUBLE) / CAST(1152921504606846976 AS DOUBLE) AS u
+         |      CAST(${SQL_HEX15("h")} AS DOUBLE) / CAST(1152921504606846976 AS DOUBLE) AS u
          |    FROM (SELECT rid, q, b,
          |      substr(md5('boot:' || CAST(b AS VARCHAR) || ':' || rid), 1, 15) AS h
          |      FROM eb) hh) uu),
@@ -1643,12 +1632,9 @@ object Aggs {
       }
     },
       Some {
-        val hex15 = (1 to 15).map(p =>
-          s"(strpos('0123456789abcdef', substr(md5('dp:' || event_type), $p, 1)) - 1) * ${1L << (4 * (15 - p))}")
-          .mkString("(", " + ", ")")
         s"""WITH g AS (
            |  SELECT event_type, COUNT(*) AS true_n,
-           |    (CAST($hex15 AS DOUBLE) + 0.5) / ${(1L << 60).toDouble} AS u
+           |    (CAST(${SQL_HEX15("md5('dp:' || event_type)")} AS DOUBLE) + 0.5) / ${(1L << 60).toDouble} AS u
            |  FROM events GROUP BY event_type)
            |SELECT event_type,
            |  ROUND(true_n + (-1.0) * sign(u - 0.5)
@@ -3112,7 +3098,7 @@ object Aggs {
       },
       Some(s"""WITH u AS (
               |  SELECT doc_id,
-              |    (CAST(${SQL_HEX15_AGGS("md5('ad:' || CAST(doc_id AS VARCHAR))")} AS DOUBLE) + 0.5)
+              |    (CAST(${SQL_HEX15("md5('ad:' || CAST(doc_id AS VARCHAR))")} AS DOUBLE) + 0.5)
               |      / CAST(1152921504606846976 AS DOUBLE) AS u
               |  FROM documents),
               |r AS (SELECT doc_id, u,
@@ -5381,7 +5367,7 @@ object Aggs {
       }
     },
       Some(s"""WITH h AS (
-              |  SELECT DISTINCT ${SQL_HEX15_AGGS(
+              |  SELECT DISTINCT ${SQL_HEX15(
                    "md5('kmv:' || CAST(o_orderkey AS VARCHAR))")} AS h
               |  FROM orders),
               |topk AS (
@@ -5857,7 +5843,7 @@ object Aggs {
              |  GROUP BY user_id),
              |ut AS (
              |  SELECT *,
-             |    (${SQL_HEX15_AGGS("md5('cuped:' || CAST(user_id AS VARCHAR))")} % 2) = 1 AS t
+             |    (${SQL_HEX15("md5('cuped:' || CAST(user_id AS VARCHAR))")} % 2) = 1 AS t
              |  FROM u),
              |m AS (
              |  SELECT CAST(COUNT(*) AS BIGINT) AS n,
@@ -6076,7 +6062,7 @@ object Aggs {
               |    CASE WHEN h % 5 = 0 THEN (h >> 3) % 3
               |      ELSE n_chars % 3 END AS label
               |  FROM (SELECT doc_id, n_chars,
-              |      ${SQL_HEX15_AGGS("md5('kripp:' || CAST(doc_id AS VARCHAR) || ':' || CAST(rater AS VARCHAR))")} AS h
+              |      ${SQL_HEX15("md5('kripp:' || CAST(doc_id AS VARCHAR) || ':' || CAST(rater AS VARCHAR))")} AS h
               |    FROM r) t),
               |uc AS (
               |  SELECT doc_id, label, CAST(COUNT(*) AS BIGINT) AS nuc

@@ -149,7 +149,8 @@ object Bpe {
   // and b{r} is MATERIALIZED — DuckDB inlines CTEs by default and each
   // round's table is referenced twice (next round's pair counts + the
   // per-round stats), which un-materialized would double the expansion
-  // every round (2^12 scans; the ann_ivfpq_adc lesson).
+  // every round (2^12 scans; the IVF-PQ oracle lesson, see
+  // DataOps.ivfPqCoarseCtes).
   // ---------------------------------------------------------------------
   private def round(r: Int): String = {
     val prev = s"w${r - 1}"

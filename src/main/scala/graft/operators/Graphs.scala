@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.{Q, Tables}
+import graft.Ops.SQL_HEX15
 import graft.api.Graph.CpOps
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -1104,14 +1105,6 @@ object Graphs {
          |SELECT node AS user_id, dist FROM sd$H ORDER BY user_id""".stripMargin
     Q("graph_sssp_weighted", fn, Some(sql))
   }
-
-  /** First-15-hex-nibbles md5 polynomial (the portable hash-coin
-    * device; local mirror of Pipeline's SQL_HEX15).
-    */
-  private def SQL_HEX15(h: String): String =
-    (1 to 15).map(p =>
-      s"(strpos('0123456789abcdef', substr($h, $p, 1)) - 1) * ${1L << (4 * (15 - p))}")
-      .mkString("(", " + ", ")")
 
   /** DETERMINISTIC random walks (3 steps from every node) — the
     * node2vec/DeepWalk sampling stage that feeds graph embeddings. The

@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.{Ops, Q, Tables}
+import graft.Ops.SQL_HEX15
 import graft.functions.TextUdfs
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -64,14 +65,6 @@ object Llm {
     s"""SELECT doc_id, unnest(list_transform(generate_series(1, greatest(len(t)-2, 1)),
        |  i -> concat_ws(' ', t[i], t[i+1], t[i+2]))) AS token
        |FROM (SELECT doc_id, $SQL_TOKENIZE AS t FROM documents)""".stripMargin
-
-  /** First-15-hex-nibbles→BIGINT polynomial (mirrors Spark's
-    * conv(substr(md5,1,15),16,10) exactly).
-    */
-  private def SQL_HEX15(h: String): String =
-    (1 to 15).map(p =>
-      s"(strpos('0123456789abcdef', substr($h, $p, 1)) - 1) * ${1L << (4 * (15 - p))}")
-      .mkString("(", " + ", ")")
 
   /** DuckDB twin of the shingle hashes in graft.api.Dedup.sketch: ONE
     * md5 per shingle, reduced to a 60-bit long.

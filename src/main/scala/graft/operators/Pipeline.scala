@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.{Q, Tables}
-import graft.Ops.{cents, dsum, SQL_CENTS, SQL_DSUM}
+import graft.Ops.{cents, dsum, SQL_CENTS, SQL_DSUM, SQL_HEX15}
 import graft.functions.TextUdfs
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.expressions.Window
@@ -25,17 +25,8 @@ import org.apache.spark.sql.functions._
 object Pipeline {
   import TextUdfs.SQL_TOKENIZE
 
-  /** First-15-hex-nibbles→BIGINT polynomial (mirrors Spark's
-    * conv(substr(md5,1,15),16,10) exactly — same device as the minhash
-    * chain's portable hash).
-    */
-  private def SQL_HEX15(h: String): String =
-    (1 to 15).map(p =>
-      s"(strpos('0123456789abcdef', substr($h, $p, 1)) - 1) * ${1L << (4 * (15 - p))}")
-      .mkString("(", " + ", ")")
-
   /** 60-bit portable hash of `tag || id` in [0, 100) — the sampling
-    * coin. Spark side of [[SQL_HEX15]]'s mirror.
+    * coin. Spark side of [[graft.Ops.SQL_HEX15]]'s mirror.
     */
   private def coin(tag: String, id: Column): Column =
     conv(substring(md5(concat(lit(tag), id.cast("string"))), 1, 15), 16, 10)

@@ -14,7 +14,7 @@ import org.apache.spark.sql.functions._
 object ScalarFns {
 
   /** First-10-hex-nibbles→BIGINT polynomial — 40-bit variant of the
-    * Pipeline/Llm SQL_HEX15 device, mirrors conv(h,16,10) exactly.
+    * Ops.SQL_HEX15 device, mirrors conv(h,16,10) exactly.
     */
   private def SQL_HEX10(h: String): String =
     (1 to 10).map(p =>

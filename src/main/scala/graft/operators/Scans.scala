@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.{Ops, Q, Tables}
+import graft.Ops.SQL_HEX15
 import org.apache.spark.sql.functions._
 
 /** §2.A — scans / sources / catalog collection.
@@ -548,9 +549,7 @@ object Scans {
           expr("bit_xor(h)").as("checksum"))
         .orderBy("o_orderstatus"),
       Some(s"""SELECT o_orderstatus, COUNT(*) AS n_rows,
-              |  bit_xor(${(1 to 15).map(p =>
-                   s"(strpos('0123456789abcdef', substr(h, $p, 1)) - 1) * ${1L << (4 * (15 - p))}")
-                   .mkString("(", " + ", ")")}) AS checksum
+              |  bit_xor(${SQL_HEX15("h")}) AS checksum
               |FROM (
               |  SELECT o_orderstatus,
               |    md5(CAST(o_orderkey AS VARCHAR) || '|' || o_orderstatus

@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.{Q, Tables}
-import graft.Ops.{cents, SQL_CENTS}
+import graft.Ops.{cents, SQL_CENTS, SQL_HEX15}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -4100,10 +4100,6 @@ private object CrostonQ {
             col("n_days").cast("double"), 4).as("naive_rate"))
     },
     Some {
-      def hex15(h: String): String =
-        (1 to 15).map(p =>
-          s"(strpos('0123456789abcdef', substr($h, $p, 1)) - 1) * ${1L << (4 * (15 - p))}")
-          .mkString("(", " + ", ")")
       def wLit(j: Int) = s"CAST('${weights(j)}' AS DOUBLE)"
       def ewma(c: String) = {
         def lagV(j: Int) = if (j == 0) c else s"LAG($c, $j) OVER w"
@@ -4120,7 +4116,7 @@ private object CrostonQ {
          |  SELECT CAST(ts AS DATE) AS day, CAST(COUNT(*) AS BIGINT) AS dm
          |  FROM events
          |  WHERE event_type = 'error'
-         |    AND ${hex15("md5('croston:' || CAST(event_id AS VARCHAR))")}
+         |    AND ${SQL_HEX15("md5('croston:' || CAST(event_id AS VARCHAR))")}
          |      % 20 = 0
          |  GROUP BY 1),
          |spine AS (

@@ -85,6 +85,25 @@ class DedupIndexSpec extends AnyFunSuite {
       "appended docs must be found as exact dups on re-ingest")
   }
 
+  test("appendToBandIndex keeps each half's own bucket count by default") {
+    spark.sql("CREATE DATABASE IF NOT EXISTS graft_buckets")
+    val T4 = "graft_buckets.dedup_idx_b4"
+    Seq("_bands", "_sets").foreach(s => spark.sql(s"DROP TABLE IF EXISTS $T4$s"))
+    graft.api.Dedup.writeBandIndex(
+      docs.filter(col("doc_id") % 10 >= 2), "doc_id", "text", T4, buckets = 4)
+    val sets0 = spark.table(s"${T4}_sets").count()
+    val batch = docs.filter(col("doc_id") % 10 < 2)
+    graft.api.Dedup.appendToBandIndex(batch, "doc_id", "text", T4)
+    Seq("_bands", "_sets").foreach(sfx =>
+      assert(graft.api.Similarity.catalogBuckets(spark, s"$T4$sfx") == Some(4)))
+    assert(spark.table(s"${T4}_sets").count() == sets0 + batch.count())
+    val re = graft.api.Dedup
+      .incrementalNearDupsIndexed(batch, "doc_id", "text", T4)
+      .collect()
+    assert(re.nonEmpty && re.forall(_.getBoolean(3)),
+      "appended docs must be found as exact dups on re-ingest")
+  }
+
   test("retrainBandIndex tightens a skew-injected index from the standing artifact alone") {
     // the decision dedup_index_drift informs, executed (r15): a corpus
     // of near-identical docs (one token varies out of ~80) produces

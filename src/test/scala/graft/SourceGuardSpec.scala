@@ -10,7 +10,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * functions registered and `experimental.extra*` lists written only in
   * GraftSession and GraftExtensions, ExplainProbe is the one dev probe
   * main, memos and fixture keys are built only by Memo and Fixtures, and
-  * on-disk paths and catalog databases only by Artifacts.
+  * on-disk paths and catalog databases only by Artifacts; the shared
+  * oracle SQL devices are each written once.
   */
 class SourceGuardSpec extends AnyFunSuite {
   private val root = Paths.get("src/main/scala")
@@ -80,5 +81,18 @@ class SourceGuardSpec extends AnyFunSuite {
           (i < start || i >= end) => s"Dedup.scala:${i + 1}: ${l.trim}"
     }
     assert(found.isEmpty, found.mkString("\n"))
+  }
+
+  test("oracle SQL devices are written once: Lloyd chain, squared L2, md5 hex") {
+    val bodies = Seq(
+      "ORDER BY md5(CAST(vec_id AS VARCHAR))", // Lloyd init
+      "CAST(SUM(CAST(x AS DECIMAL(38,20))) AS DOUBLE) / COUNT(*)", // exact means
+      "WHERE c_id NOT IN (SELECT DISTINCT cell FROM", // empty-cell carry-over
+      "x -> (x[1] - x[2]) * (x[1] - x[2])", // squared L2
+      "* ${1L << (4 * (15 - p))}") // 15-nibble md5 hex
+    for (b <- bodies) {
+      val found = hits(java.util.regex.Pattern.quote(b), _ => false)
+      assert(found.size == 1, s"$b written ${found.size} times:\n${found.mkString("\n")}")
+    }
   }
 }
