@@ -403,8 +403,9 @@ class graph:
 
     @staticmethod
     def hop_distances(edges, src_col, dst_col, source, max_iters=100):
-        """(node, dist) BFS hop distances from ``source``; unreachable
-        nodes are absent."""
+        """(node, d) BFS hop distances to ``source`` along the edges
+        (``d`` = length of the shortest path node →* source); nodes that
+        cannot reach it are absent."""
         return _wrap(_jvm().graft.api.Graph.hopDistances(
             edges._jdf, src_col, dst_col, int(source), max_iters))
 

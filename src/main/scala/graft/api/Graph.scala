@@ -189,9 +189,6 @@ object Graph {
         val es = e.collect().map(r => (r.getLong(0), r.getLong(1)))
         val comp = tarjanScc(ns, es).toSeq
         val local = sess.createDataFrame(comp).toDF("node", "scc_id")
-        if (sys.env.contains("GRAFT_GRAPH_DEBUG"))
-          println(s"[scc-debug] local tarjan outer=$outer nodes=${ns.length} " +
-            s"edges=${es.length}")
         return if (acc == null) local else acc.unionByName(local)
       }
       // Propagate over a hop-DOUBLED relation r ⊇ e (paths of length
@@ -252,9 +249,6 @@ object Graph {
       remaining = nodes.count()
       eCount = e.count()
       outer += 1
-      if (sys.env.contains("GRAFT_GRAPH_DEBUG"))
-        println(s"[scc-debug] outer=$outer remaining=$remaining " +
-          s"edges=$eCount")
     }
     acc
   }
@@ -398,52 +392,84 @@ object Graph {
       chgB = agg.getLong(1)
       labels = stepped.drop("__chgf", "__chgb")
       rounds += 1
-      if (sys.env.contains("GRAFT_GRAPH_DEBUG"))
-        println(s"[scc-debug]   minlabel-both round=$rounds " +
-          s"chgF=$chgF chgB=$chgB t=${System.nanoTime() / 1000000000L % 100000}")
     }
-    if (sys.env.contains("GRAFT_GRAPH_DEBUG"))
-      println(s"[scc-debug]   minlabel-both rounds=$rounds")
     labels
   }
 
-  /** Single-source hop distances (unweighted BFS) by iterated
-    * relaxation: dist starts at {source → 0} and each round every
-    * node takes min(own, neighbor + 1), until a driver-checked round
-    * neither adds a node nor lowers a distance. Same localCheckpoint-per-round
-    * lineage discipline as [[connectedComponents]]; rounds are bounded
-    * by the source's eccentricity. Returns (node, dist) for REACHABLE
-    * nodes only.
+  /** What a [[frontierWalk]] does at its depth bound. */
+  private[graft] object WalkEnd extends Enumeration {
+    /** Walk every level up to the bound with no per-level probe job:
+      * the exact depth-bounded ball. */
+    val Ball = Value
+    /** Probe each level, stop at the first empty one, truncate at the
+      * bound. */
+    val Truncate = Value
+    /** Probe each level, stop at the first empty one, and throw if the
+      * bound's level is still non-empty: a runaway guard, never a
+      * truncation device. */
+    val Guard = Value
+  }
+
+  /** Multi-source level-synchronous BFS: the one frontier walk behind
+    * [[hopDistances]] and the graph queries' hop distances
+    * ([[spCounts]] keeps its own level, which sums path counts where
+    * this one keeps distinct pairs). `edges` is a two-column (from, to)
+    * frame, `seeds` a (src, node) frame. Each level joins the frontier
+    * to the edges, takes the distinct (src, node) pairs, drops those
+    * already visited by one left-anti join, and checkpoints the result
+    * ([[CpOps.cpReset]]) as the next frontier. Returns (src, node, d):
+    * every node reached from each src, once, at its hop distance
+    * (the seed itself at d = 0).
+    *
+    * Scale shape per level: one frontier⋈edges equi-join, one (src,
+    * node) aggregate and one anti-join, all hash-partitioned on node
+    * ids; state is bounded by |seeds|·n. `depth` bounds the level
+    * count; `end` says whether a level pays a probe job (one RDD count
+    * that also materializes the level's checkpoint) and what reaching
+    * the bound means.
+    */
+  private[graft] def frontierWalk(edges: DataFrame, seeds: DataFrame,
+      depth: Int, end: WalkEnd.Value): DataFrame = {
+    val e = edges.toDF("__u", "__v")
+    var frontier = seeds.toDF("src", "node").cpReset()
+    var visited = frontier.withColumn("d", lit(0L))
+    var level = 0
+    var more = true
+    while (more && level < depth) {
+      level += 1
+      val next = frontier.join(e, col("node") === col("__u"))
+        .select(col("src"), col("__v").as("node")).distinct()
+        .join(visited.select("src", "node"), Seq("src", "node"), "left_anti")
+        .cpReset()
+      more = end == WalkEnd.Ball || next.rdd.count() > 0
+      visited = visited.unionByName(next.withColumn("d", lit(level.toLong)))
+      frontier = next
+    }
+    if (more && end == WalkEnd.Guard)
+      throw new IllegalStateException(
+        s"frontier walk did not converge in $depth levels")
+    visited
+  }
+
+  /** Single-source hop distances (unweighted BFS): d(x) is the length
+    * of the shortest path x →* source ALONG the edges, found by a
+    * [[frontierWalk]] from the source over the reversed edges.
+    * `maxIters` bounds the eccentricity: a source whose walk is still
+    * growing at level `maxIters` throws rather than truncating.
+    * Returns (node, d) for REACHABLE nodes only.
     */
   def hopDistances(edges: DataFrame, srcCol: String, dstCol: String,
       source: Long, maxIters: Int = 100): DataFrame = {
-    val e = edges.select(col(srcCol).as("__u"), col(dstCol).as("__v"))
-    var dist = e.sparkSession.range(1)
-      .select(lit(source).as("node"), lit(0L).as("d")).cpReset()
-    var changed = 1L
-    var rounds = 0
-    while (changed > 0) {
-      if (rounds >= maxIters)
-        throw new IllegalStateException(
-          s"hopDistances did not converge in $maxIters rounds")
-      val relax = e.join(dist, e("__v") === dist("node"))
-        .select(col("__u").as("node"), (col("d") + 1).as("d"))
-      val next = dist.unionByName(relax)
-        .groupBy("node").agg(min("d").as("d")).cpReset()
-      changed = next.as("n")
-        .join(dist.as("o"), col("n.node") === col("o.node"), "left")
-        .filter(col("o.d").isNull || col("n.d") < col("o.d")).count()
-      dist = next
-      rounds += 1
-    }
-    e.unpersist() // dist is checkpoint-materialized, e no longer needed
-    dist
+    val seed = edges.sparkSession.range(1)
+      .select(lit(source).as("src"), lit(source).as("node"))
+    frontierWalk(edges.select(col(dstCol), col(srcCol)), seed, maxIters,
+      WalkEnd.Guard).select("node", "d")
   }
 
   /** Shortest-path COUNTS from one source (σ in Brandes' betweenness
     * notation): level-synchronous BFS where each new level's node
     * accumulates Σ σ(parent) over its frontier in-edges — the path
-    * multiplicity the plain [[hopDistances]] relaxation discards, and
+    * multiplicity the plain [[hopDistances]] walk discards, and
     * the first phase of any betweenness/stress centrality. Counts are
     * exact BIGINTs (path counts through small-world graphs stay far
     * below 2^63 at bounded depth).

@@ -704,6 +704,19 @@ object Similarity {
         round(expr("sq_l2(mv, c_v)"), 4).as("drift"))
   }
 
+  /** The SOURCE table's bucket count from the catalog (DESCRIBE
+    * EXTENDED) — the "same bucket spec" guarantee every compaction
+    * rewrite leans on. Shared with
+    * [[graft.api.Dedup.compactBandIndex]].
+    */
+  private[graft] def catalogBuckets(spark: SparkSession,
+      table: String): Option[Int] =
+    spark.sql(s"DESCRIBE TABLE EXTENDED $table").collect()
+      .collectFirst {
+        case r if r.getString(0).trim == "Num Buckets" =>
+          r.getString(1).trim.toInt
+      }
+
   /** Compact the persisted IVF postings table — the maintenance op a
     * continuously-ingesting index needs: every [[appendToIvfIndex]]
     * delivery adds its own small bucket files, and read amplification
@@ -718,24 +731,11 @@ object Similarity {
     * saved file-open fan-out.
     *
     * `buckets <= 0` (the default) derives the count from the SOURCE
-    * table's own bucket spec (r13 ADVICE: a hard-coded 8 silently
-    * changed the layout of an index written with a non-default count),
-    * so "same bucket spec" holds by construction; pass an explicit
+    * table's own bucket spec (a hard-coded 8 silently changed the
+    * layout of an index written with a non-default count), so "same
+    * bucket spec" holds by construction; pass an explicit
     * positive count only to deliberately re-bucket.
     */
-  /** The SOURCE table's bucket count from the catalog (DESCRIBE
-    * EXTENDED) — the "same bucket spec" guarantee every compaction
-    * rewrite leans on (r13 ADVICE). Shared with
-    * [[graft.api.Dedup.compactBandIndex]].
-    */
-  private[graft] def catalogBuckets(spark: SparkSession,
-      table: String): Option[Int] =
-    spark.sql(s"DESCRIBE TABLE EXTENDED $table").collect()
-      .collectFirst {
-        case r if r.getString(0).trim == "Num Buckets" =>
-          r.getString(1).trim.toInt
-      }
-
   def compactIvfIndex(spark: SparkSession, table: String,
       target: String, buckets: Int = 0): Unit = {
     val nb =

@@ -2,7 +2,7 @@ package graft.operators
 
 import graft.{Q, Tables}
 import graft.Ops.SQL_HEX15
-import graft.api.Graph.CpOps
+import graft.api.Graph.{CpOps, WalkEnd, frontierWalk}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -156,6 +156,39 @@ object Graphs {
       |    ON a.event_type = b.event_type AND a.h = b.h
       |   AND a.user_id < b.user_id),
       |edges AS (SELECT u, v FROM e0 UNION ALL SELECT v AS u, u AS v FROM e0)""".stripMargin
+
+  /** Depth guard of the walks that run to convergence (eccentricity,
+    * bow-tie reachability) and depth bound of their recursive oracles:
+    * it dominates every fixture eccentricity, and a walk still growing
+    * at this level throws rather than truncating. */
+  private[graft] val MaxHops = 64
+
+  /** DuckDB twin of [[graft.api.Graph.frontierWalk]]: a recursive
+    * `walk(src, node, d)` CTE seeded from `seeds(src, node)` at d = 0
+    * and stepping `from` → `to` over `edges` up to `depth` hops. UNION
+    * dedups the (src, node, d) states, so the walk stays bounded by
+    * |seeds|·n·depth rows; a node's hop distance is MIN(d) per (src,
+    * node), taken outside the recursion.
+    */
+  private def sqlWalk(seeds: String, depth: Int, from: String = "u",
+      to: String = "v"): String =
+    s"""walk AS (
+       |  SELECT src, node, CAST(0 AS BIGINT) AS d FROM $seeds
+       |  UNION
+       |  SELECT w.src, e.$to AS node, w.d + 1 AS d
+       |  FROM edges e JOIN walk w ON e.$from = w.node
+       |  WHERE w.d < $depth)""".stripMargin
+
+  /** The 4 smallest node ids as (src, node) walk seeds: the
+    * deterministic source sample of the multi-source BFS queries. It
+    * stays a frame (no driver collect); [[SQL_MIN_SEEDS]] is its twin. */
+  private def minSeeds(e: DataFrame): DataFrame =
+    e.select(col("u")).distinct().orderBy("u").limit(4)
+      .select(col("u").as("src"), col("u").as("node"))
+
+  private val SQL_MIN_SEEDS =
+    """seeds AS (SELECT u AS src, u AS node FROM edges GROUP BY u
+      |  ORDER BY u LIMIT 4)""".stripMargin
 
   /** PageRank (damping 0.85, 5 unrolled iterations) over the
     * co-activity graph. Every node has degree ≥ 1 by construction
@@ -393,11 +426,11 @@ object Graphs {
 
   /** Single-source hop distances from the graph's min user_id (a
     * deterministic source choice; the min is a driver scalar — the
-    * sanctioned model-parameter pattern). BFS-by-relaxation to
-    * convergence on the Spark side; the oracle's recursive walk is
-    * depth-bounded at 64 (≥ any fixture eccentricity — the bound only
-    * needs to dominate the true distances, extra depth adds no rows
-    * after MIN) and takes MIN(d) per node outside the recursion.
+    * sanctioned model-parameter pattern), by
+    * [[graft.api.Graph.hopDistances]]: the frontier walk over the
+    * reversed edges, run to convergence. The oracle walks the reversed
+    * edges too, depth-bounded at [[MaxHops]] (the bound only needs to
+    * dominate the true distances; extra depth adds no rows after MIN).
     * Reachable nodes only.
     */
   private def hopDistanceQuery: Q = {
@@ -410,13 +443,8 @@ object Graphs {
     }
     val sql =
       s"""WITH RECURSIVE $SQL_EDGES,
-         |src AS (SELECT MIN(u) AS s FROM edges),
-         |walk AS (
-         |  SELECT s AS node, CAST(0 AS BIGINT) AS d FROM src
-         |  UNION
-         |  SELECT e.u AS node, w.d + 1 AS d
-         |  FROM edges e JOIN walk w ON e.v = w.node
-         |  WHERE w.d < 64)
+         |seeds AS (SELECT MIN(u) AS src, MIN(u) AS node FROM edges),
+         |${sqlWalk("seeds", MaxHops, from = "v", to = "u")}
          |SELECT node AS user_id, MIN(d) AS hops
          |FROM walk GROUP BY node ORDER BY user_id""".stripMargin
     Q("graph_hop_distance", fn, Some(sql))
@@ -426,7 +454,7 @@ object Graphs {
     * one ([[graft.api.Graph.spCounts]]): hop distance PLUS the number
     * of distinct shortest paths reaching each node, the σ every
     * betweenness/stress centrality needs and `graph_hop_distance`'s
-    * relaxation discards. Exact BIGINT multiplicities. The oracle
+    * walk discards. Exact BIGINT multiplicities. The oracle
     * unrolls 16 BFS levels as CTEs (level-synchronous aggregation
     * cannot live in a recursive CTE's recursive term; a UNION ALL
     * path walk would enumerate paths combinatorially): 16 dominates
@@ -592,55 +620,26 @@ object Graphs {
     Q("graph_ktruss", fn, Some(sql))
   }
 
-  /** Multi-source eccentricity: BATCHED BFS from the 4 smallest node
-    * ids in ONE frontier keyed by (source, node) — s sources cost one
-    * traversal whose per-round join is still a single edges⋈frontier
-    * equi-join (state ≤ s·n, frontier-bounded in practice); per-source
-    * eccentricity = max hop, plus reached-node count. The oracle is
-    * the graph_hop_distance depth-bounded recursive walk with the
-    * source id carried through the UNION dedup (states ≤ s·n·depth).
+  /** Multi-source eccentricity: ONE frontier walk from the 4 smallest
+    * node ids, keyed by (src, node), so 4 sources cost one traversal
+    * whose per-level join is still a single edges⋈frontier equi-join
+    * (state ≤ 4·n); per-source eccentricity = max hop, plus the
+    * reached-node count. The walk runs to convergence under the
+    * [[MaxHops]] guard; the oracle is the same recursive walk.
     */
   private def eccentricityQuery: Q = {
     def fn(s: SparkSession, d: String): DataFrame = {
-      val e = edges(s, d).localCheckpoint()
-      val srcs = e.select(col("u")).distinct().orderBy("u").limit(4)
-        .collect().map(_.getLong(0))  // 4 ids — a model-sized scalar set
-      var frontier = e.sparkSession
-        .createDataFrame(srcs.toSeq.map(Tuple1(_)))
-        .toDF("src")
-        .select(col("src"), col("src").as("node"), lit(0L).as("d"))
-        .localCheckpoint()
-      var acc = frontier
-      var lev = 0L
-      var more = true
-      while (more) {
-        if (lev >= 64)
-          throw new IllegalStateException("eccentricity: depth > 64")
-        lev += 1
-        val next = e.join(frontier, e("u") === frontier("node"))
-          .select(frontier("src"), e("v").as("node"), lit(lev).as("d"))
-          .distinct()
-          .join(acc.select(col("src").as("__s"), col("node").as("__n")),
-            col("src") === col("__s") && col("node") === col("__n"),
-            "left_anti")
-          .cpReset()
-        more = next.limit(1).count() > 0
-        if (more) { acc = acc.unionByName(next).cpReset(); frontier = next }
-      }
-      acc.groupBy(col("src").as("source"))
+      val e = edges(s, d)
+      frontierWalk(e, minSeeds(e), MaxHops, WalkEnd.Guard)
+        .groupBy(col("src").as("source"))
         .agg(max("d").as("eccentricity"),
           (count(lit(1)) - 1).as("n_reached"))
         .orderBy("source")
     }
     val sql =
       s"""WITH RECURSIVE $SQL_EDGES,
-         |srcs AS (SELECT DISTINCT u AS s FROM edges ORDER BY u LIMIT 4),
-         |walk AS (
-         |  SELECT s AS src, s AS node, CAST(0 AS BIGINT) AS d FROM srcs
-         |  UNION
-         |  SELECT w.src, e.v AS node, w.d + 1 AS d
-         |  FROM edges e JOIN walk w ON e.u = w.node
-         |  WHERE w.d < 64)
+         |$SQL_MIN_SEEDS,
+         |${sqlWalk("seeds", MaxHops)}
          |SELECT src AS source, MAX(hops) AS eccentricity,
          |  COUNT(*) - 1 AS n_reached
          |FROM (SELECT src, node, MIN(d) AS hops
@@ -921,79 +920,72 @@ object Graphs {
     Q("graph_modularity", fn, Some(sql))
   }
 
+  /** Radius and root count of the sampled-ball centralities
+    * (graph_harmonic, graph_closeness). Exact all-roots H-ball
+    * distances are Σ_r |frontier_r|·deg work (measured ~10⁸ joined
+    * rows / 6 s at sf0.1 even with delta-BFS dedup), and the term
+    * grows with n·deg^H, which no 100-TB deployment pays. Sampled-root
+    * centrality is the standard production estimate (the HyperBall
+    * alternative trades exactness for sketches); per-root cost is
+    * deg^H with the stop-cell cap, so the total O(K·deg^H) is
+    * independent of corpus scale once the graph saturates.
+    */
+  private val BallHops = 3
+  private val BallRoots = 64
+
+  /** (root, node, dist) for every node within [[BallHops]] hops of
+    * each of the [[BallRoots]] md5-smallest node ids under `tag`, the
+    * root itself excluded: one fixed-depth frontier walk with no
+    * per-level probe job. The root set is deterministic and
+    * data-adaptive; `tag` gives each query its own sample.
+    * [[sqlSampledBall]] is the oracle twin.
+    */
+  private def sampledBall(s: SparkSession, d: String, tag: String): DataFrame = {
+    val e = edges(s, d)
+    val roots = e.select(col("u")).distinct()
+      .orderBy(md5(concat_ws("|", lit(tag), col("u").cast("string"))),
+        col("u"))
+      .limit(BallRoots)
+      .select(col("u").as("src"), col("u").as("node"))
+    frontierWalk(e, roots, BallHops, WalkEnd.Ball)
+      .filter(col("d") > 0)
+      .select(col("src").as("root"), col("node"), col("d").as("dist"))
+  }
+
+  private def sqlSampledBall(tag: String): String =
+    s"""roots AS (
+       |  SELECT u AS src, u AS node FROM (SELECT DISTINCT u FROM edges) n
+       |  ORDER BY md5(concat_ws('|', '$tag', u)), u LIMIT $BallRoots),
+       |${sqlWalk("roots", BallHops)},
+       |ball AS (
+       |  SELECT src AS root, node, MIN(d) AS dist FROM walk
+       |  WHERE src <> node GROUP BY src, node)""".stripMargin
+
   /** Bounded-radius harmonic centrality: HC_H(u) = Σ_{0<d(u,v)≤H} 1/d
-    * with H=3, over K=64 HASH-SAMPLED roots (r13): exact all-roots
-    * H-ball distances are Σ_r |frontier_r|·deg work — measured ~10⁸
-    * joined rows / 6 s at sf0.1 even with delta-BFS dedup, and the
-    * term grows with n·deg^H, which no 100-TB deployment pays.
-    * Sampled-root centrality is the standard production estimate
-    * (the HyperBall alternative trades exactness for sketches); the
-    * root set is the K md5-smallest node ids — deterministic,
-    * data-adaptive, mirrored textually in the oracle. Per-root cost
-    * is deg^H with the stop-cell cap; total O(K·deg^H), corpus-scale
-    * independent once the graph saturates. Determinism: 1/1+1/2+1/3
-    * sums are carried as EXACT integers in the ×6 domain
-    * (hc6 = 6·n1 + 3·n2 + 2·n3); only the reported hc divides down to
-    * double. Oracle: bounded recursive CTE seeded from the same
-    * sampled roots + the same integer form.
+    * with H = [[BallHops]], over the sampled roots of [[sampledBall]].
+    * Determinism: 1/1+1/2+1/3 sums are carried as EXACT integers in
+    * the ×6 domain (hc6 = 6·n1 + 3·n2 + 2·n3); only the reported hc
+    * divides down to double. The oracle walks the same sampled roots
+    * and uses the same integer form.
     */
   private def harmonicQuery: Q = {
-    val H = 3; val K = 64
-    def fn(s: SparkSession, d: String): DataFrame = {
-      val e = edges(s, d)
-      val roots = e.select(col("u")).distinct()
-        .withColumn("__rk", md5(concat_ws("|", lit("hc"),
-          col("u").cast("string"))))
-        .orderBy(col("__rk"), col("u")).limit(K)
-        .select(col("u").as("root"))
-      var reach = e.join(broadcast(roots), e("u") === roots("root"))
-        .select(col("root"), col("v").as("node"))
-        .withColumn("d", lit(1L))
-      var frontier = reach.select(col("root"), col("node"))
-      for (r <- 2 to H) {
-        val step = e.select(col("u").as("__fu"), col("v").as("__fv"))
-        val nxt = frontier.join(step, frontier("node") === step("__fu"))
-          .select(col("root"), col("__fv").as("node"))
-          .distinct()
-          .join(reach.select(col("root"), col("node")),
-            Seq("root", "node"), "left_anti")
-          .withColumn("d", lit(r.toLong))
-          .cpReset()
-        reach = reach.unionByName(nxt)
-        frontier = nxt.select(col("root"), col("node"))
-      }
-      val dist = reach
-        .filter(col("root") =!= col("node"))
-        .groupBy("root", "node").agg(min("d").as("dist"))
-      dist.groupBy("root")
+    def fn(s: SparkSession, d: String): DataFrame =
+      sampledBall(s, d, "hc").groupBy("root")
         .agg(sum(when(col("dist") === 1, 6L).when(col("dist") === 2, 3L)
           .when(col("dist") === 3, 2L).otherwise(0L)).as("hc6"),
           count(lit(1)).as("n_ball"))
         .select(col("root").as("user_id"), col("n_ball"), col("hc6"),
           round(col("hc6").cast("double") / 6.0, 4).as("harmonic"))
         .orderBy("user_id")
-    }
     val sql =
       s"""WITH RECURSIVE $SQL_EDGES,
-         |roots AS (
-         |  SELECT u AS root FROM (SELECT DISTINCT u FROM edges) n
-         |  ORDER BY md5(concat_ws('|', 'hc', u)), u LIMIT $K),
-         |walk AS (
-         |  SELECT r.root, e.v AS node, CAST(1 AS BIGINT) AS d
-         |  FROM edges e JOIN roots r ON e.u = r.root
-         |  UNION
-         |  SELECT w.root, e.v AS node, w.d + 1 AS d
-         |  FROM walk w JOIN edges e ON w.node = e.u
-         |  WHERE w.d < $H),
-         |dist AS (
-         |  SELECT root, node, MIN(d) AS dist FROM walk
-         |  WHERE root <> node GROUP BY root, node)
+         |${sqlSampledBall("hc")}
          |SELECT root AS user_id, COUNT(*) AS n_ball,
          |  CAST(SUM(CASE dist WHEN 1 THEN 6 WHEN 2 THEN 3
          |    WHEN 3 THEN 2 ELSE 0 END) AS BIGINT) AS hc6,
          |  ROUND(CAST(SUM(CASE dist WHEN 1 THEN 6 WHEN 2 THEN 3
          |    WHEN 3 THEN 2 ELSE 0 END) AS DOUBLE) / 6.0, 4) AS harmonic
-         |FROM dist GROUP BY root ORDER BY user_id""".stripMargin
+         |FROM ball GROUP BY root ORDER BY user_id""".stripMargin
     Q("graph_harmonic", fn, Some(sql))
   }
 
@@ -1775,46 +1767,17 @@ object Graphs {
     * of rewarding reciprocals (harmonic tolerates unreachable nodes;
     * WF-closeness normalizes by reach fraction, so a node that
     * reaches few others scores low even if those few are close).
-    * Same H-round frontier-expansion BFS (edge set cached, ball size
-    * bounded by the stop-cell degree cap); |ball|, Σd and N are exact
-    * integers, so the one closing double is deterministic. N comes
-    * from a broadcast scalar aggregate, not a driver collect.
+    * Same sampled H-ball as graph_harmonic ([[sampledBall]]) under its
+    * own tag ('cl' vs 'hc'), so the two queries audit different root
+    * sets; |ball|, Σd and N are exact integers, so the one closing
+    * double is deterministic. N comes from a broadcast scalar
+    * aggregate, not a driver collect.
     */
   private def closenessQuery: Q = {
-    val H = 3; val K = 64
     def fn(s: SparkSession, d: String): DataFrame = {
-      val e = edges(s, d)
-      // same K-sampled-root delta-BFS device as harmonicQuery (r13):
-      // all-roots exact H-balls cost n·deg^H — measured ~10⁸ joined
-      // rows at sf0.1; the md5-smallest-K root sample is the
-      // production estimate, mirrored textually in the oracle. Note
-      // the sample key tag differs from harmonic's ('cl' vs 'hc') so
-      // the two queries audit different root sets.
-      val roots = e.select(col("u")).distinct()
-        .withColumn("__rk", md5(concat_ws("|", lit("cl"),
-          col("u").cast("string"))))
-        .orderBy(col("__rk"), col("u")).limit(K)
-        .select(col("u").as("root"))
-      var reach = e.join(broadcast(roots), e("u") === roots("root"))
-        .select(col("root"), col("v").as("node"))
-        .withColumn("d", lit(1L))
-      var frontier = reach.select(col("root"), col("node"))
-      for (r <- 2 to H) {
-        val step = e.select(col("u").as("__fu"), col("v").as("__fv"))
-        val nxt = frontier.join(step, frontier("node") === step("__fu"))
-          .select(col("root"), col("__fv").as("node"))
-          .distinct()
-          .join(reach.select(col("root"), col("node")),
-            Seq("root", "node"), "left_anti")
-          .withColumn("d", lit(r.toLong))
-          .cpReset()
-        reach = reach.unionByName(nxt)
-        frontier = nxt.select(col("root"), col("node"))
-      }
-      val nN = e.select(col("u")).distinct().agg(count(lit(1)).as("nn"))
-      reach.filter(col("root") =!= col("node"))
-        .groupBy("root", "node").agg(min("d").as("dist"))
-        .groupBy("root")
+      val nN = edges(s, d).select(col("u")).distinct()
+        .agg(count(lit(1)).as("nn"))
+      sampledBall(s, d, "cl").groupBy("root")
         .agg(count(lit(1)).as("n_ball"), sum("dist").as("sum_dist"))
         .crossJoin(broadcast(nN))
         .select(col("root").as("user_id"), col("n_ball"), col("sum_dist"),
@@ -1825,28 +1788,16 @@ object Graphs {
     }
     val sql =
       s"""WITH RECURSIVE $SQL_EDGES,
-         |roots AS (
-         |  SELECT u AS root FROM (SELECT DISTINCT u FROM edges) n
-         |  ORDER BY md5(concat_ws('|', 'cl', u)), u LIMIT $K),
-         |walk AS (
-         |  SELECT r.root, e.v AS node, CAST(1 AS BIGINT) AS d
-         |  FROM edges e JOIN roots r ON e.u = r.root
-         |  UNION
-         |  SELECT w.root, e.v AS node, w.d + 1 AS d
-         |  FROM walk w JOIN edges e ON w.node = e.u
-         |  WHERE w.d < $H),
+         |${sqlSampledBall("cl")},
          |nn AS (SELECT CAST(COUNT(DISTINCT u) AS BIGINT) AS nn FROM edges),
-         |dist AS (
-         |  SELECT root, node, MIN(d) AS dist FROM walk
-         |  WHERE root <> node GROUP BY root, node),
-         |ball AS (
+         |sums AS (
          |  SELECT root, CAST(COUNT(*) AS BIGINT) AS n_ball,
          |    CAST(SUM(dist) AS BIGINT) AS sum_dist
-         |  FROM dist GROUP BY root)
+         |  FROM ball GROUP BY root)
          |SELECT root AS user_id, n_ball, sum_dist,
          |  ROUND((CAST(n_ball AS DOUBLE) / (nn - 1))
          |    * (CAST(n_ball AS DOUBLE) / sum_dist), 6) AS closeness
-         |FROM ball, nn ORDER BY user_id""".stripMargin
+         |FROM sums, nn ORDER BY user_id""".stripMargin
     Q("graph_closeness", fn, Some(sql))
   }
 
@@ -1932,42 +1883,20 @@ object Graphs {
 
   /** Effective diameter (ANF-style sampled estimate): the 90th-
     * percentile shortest-path distance over all pairs reachable from
-    * 4 sampled sources — the eccentricity device's multi-source BFS,
-    * finished with a rank index-pick over the HOP-BOUNDED distance
-    * freq table (p90 never sorts pairs; distances live in a ≤64
-    * domain). Reports mean distance alongside: mean is an exact
-    * rational of two BIGINTs. Source sampling is the standard
-    * all-pairs escape at scale (exact APSP is V·E); the 4 smallest
-    * node ids keep the sample deterministic.
+    * 4 sampled sources — the eccentricity query's frontier walk,
+    * truncated at L = 16 hops, finished with a rank index-pick over
+    * the HOP-BOUNDED distance freq table (p90 never sorts pairs).
+    * Reports mean distance alongside: mean is an exact rational of two
+    * BIGINTs. Source sampling is the standard all-pairs escape at
+    * scale (exact APSP is V·E); the 4 smallest node ids keep the
+    * sample deterministic.
     */
   private def effectiveDiameterQuery: Q = {
     val L = 16
     def fn(s: SparkSession, d: String): DataFrame = {
-      val e = edges(s, d).localCheckpoint()
-      val srcs = e.select(col("u")).distinct().orderBy("u").limit(4)
-        .collect().map(_.getLong(0)) // 4 ids — model-sized scalar set
-      var frontier = e.sparkSession
-        .createDataFrame(srcs.toSeq.map(Tuple1(_))).toDF("src")
-        .select(col("src"), col("src").as("node"), lit(0L).as("d"))
-        .localCheckpoint()
-      var acc = frontier
-      var lev = 0L
-      var more = true
-      while (more && lev < L) {
-        lev += 1
-        val next = e.join(frontier, e("u") === frontier("node"))
-          .select(frontier("src"), e("v").as("node"), lit(lev).as("d"))
-          .distinct()
-          .join(acc.select(col("src").as("__s"), col("node").as("__n")),
-            col("src") === col("__s") && col("node") === col("__n"),
-            "left_anti")
-          .cpReset()
-        more = next.limit(1).count() > 0
-        if (more) {
-          acc = acc.unionByName(next).cpReset(); frontier = next
-        }
-      }
-      val pairs = acc.filter(col("d") > 0)
+      val e = edges(s, d)
+      val pairs = frontierWalk(e, minSeeds(e), L, WalkEnd.Truncate)
+        .filter(col("d") > 0)
       val freq = pairs.groupBy("d").agg(count(lit(1)).as("c"))
       val wCum = org.apache.spark.sql.expressions.Window.orderBy("d")
         .rowsBetween(org.apache.spark.sql.expressions.Window
@@ -1988,24 +1917,12 @@ object Graphs {
             4).as("mean_distance"),
           col("eff_diameter"))
     }
-    val lvls = (1 to L).map { k =>
-      s"""lvl$k AS MATERIALIZED (
-         |  SELECT DISTINCT l.src, e.v AS node
-         |  FROM edges e JOIN lvl${k - 1} l ON e.u = l.node
-         |  WHERE NOT EXISTS (SELECT 1 FROM vis${k - 1} v
-         |    WHERE v.src = l.src AND v.node = e.v)),
-         |vis$k AS MATERIALIZED (SELECT src, node, d FROM vis${k - 1}
-         |  UNION ALL SELECT src, node, CAST($k AS BIGINT) FROM lvl$k)"""
-        .stripMargin
-    }.mkString(",\n")
     val sql =
-      s"""WITH $SQL_EDGES,
-         |srcs AS (SELECT u AS src FROM edges GROUP BY u
-         |  ORDER BY u LIMIT 4),
-         |lvl0 AS (SELECT src, src AS node FROM srcs),
-         |vis0 AS (SELECT src, node, CAST(0 AS BIGINT) AS d FROM lvl0),
-         |$lvls,
-         |pairs AS (SELECT d FROM vis$L WHERE d > 0),
+      s"""WITH RECURSIVE $SQL_EDGES,
+         |$SQL_MIN_SEEDS,
+         |${sqlWalk("seeds", L)},
+         |pairs AS (SELECT MIN(d) AS d FROM walk GROUP BY src, node
+         |  HAVING MIN(d) > 0),
          |freq AS (SELECT d, CAST(COUNT(*) AS BIGINT) AS c
          |  FROM pairs GROUP BY d),
          |tot AS (SELECT CAST(SUM(c) AS BIGINT) AS n_pairs,
@@ -2219,32 +2136,14 @@ object Graphs {
     Q("graph_condensation", fn, Some(sql))
   }
 
-  /** Multi-source reachability over the directed edge list: every node
-    * reachable from the seed set (seed included), frontier-BFS with
-    * per-round localCheckpoint; `reverse` flips the edges (= "reaches
-    * the seed set"). Rounds bounded by the graph's directed diameter.
+  /** Per-(session, events [[graft.Fixtures.key]]) memo for the bow-tie
+    * (node, category) classification: like [[sccLabels]], the two
+    * frontier walks are a derived per-dataset artifact — computed once,
+    * re-aggregated cheaply by every later invocation. Session-bound, at
+    * most 16 entries.
     */
-  private def reachableFrom(seed: DataFrame, dir: DataFrame,
-      reverse: Boolean): DataFrame = {
-    val e =
-      if (reverse) dir.select(col("dv").as("du"), col("du").as("dv"))
-      else dir
-    var reached = seed.localCheckpoint()
-    var added = 1L
-    var rounds = 0
-    while (added > 0) {
-      if (rounds >= 64)
-        throw new IllegalStateException("reachableFrom: >64 BFS rounds")
-      val nxt = e.join(reached, e("du") === reached("node"))
-        .select(col("dv").as("node")).distinct()
-        .join(reached, Seq("node"), "left_anti").cpReset()
-      added = nxt.count()
-      if (added > 0)
-        reached = reached.unionByName(nxt).cpReset()
-      rounds += 1
-    }
-    reached
-  }
+  private val bowtieMemo = graft.Memo.sessionBound[
+    (SparkSession, String), DataFrame](bound = 16)(identity)
 
   /** Bow-tie decomposition (Broder et al. 2000) of the directed
     * co-activity graph: nodes classified GIANT (the largest SCC, ties
@@ -2252,29 +2151,25 @@ object Graphs {
     * from it) / OTHER (tendrils+tubes+disconnected). THE structural
     * census of any web/link corpus — crawl frontier sizing and link-
     * graph quality both read off these four numbers. Composes
-    * [[sccQuery]]'s machinery with two multi-source BFS passes; the
-    * oracle classifies from the same recursive closure.
+    * [[sccQuery]]'s machinery with two frontier walks seeded by the
+    * whole giant SCC (forward: reached from it; over the reversed
+    * edges: reaches it), each run to convergence under the
+    * [[MaxHops]] guard; the oracle classifies from the same recursive
+    * closure.
     */
-  /** Per-(session, events [[graft.Fixtures.key]]) memo for the bow-tie
-    * (node, category) classification: like [[sccLabels]], the two
-    * multi-source BFS fixpoints are a derived per-dataset artifact —
-    * computed once, re-aggregated cheaply by every later invocation.
-    * Session-bound, at most 16 entries.
-    */
-  private val bowtieMemo = graft.Memo.sessionBound[
-    (SparkSession, String), DataFrame](bound = 16)(identity)
-
   private def bowtieQuery: Q = {
     def classify(s: SparkSession, d: String): DataFrame = {
       val dir = directedEdges(s, d).localCheckpoint()
       val scc = sccLabels(s, d)
       val giantId = scc.groupBy("scc_id").agg(count(lit(1)).as("n"))
         .orderBy(col("n").desc, col("scc_id")).head().getLong(0)
-      val giant = scc.filter(col("scc_id") === giantId).select("node")
-      val fwd = reachableFrom(giant, dir, reverse = false)
-        .select(col("node"), lit(1).as("__fwd"))
-      val bwd = reachableFrom(giant, dir, reverse = true)
-        .select(col("node"), lit(1).as("__bwd"))
+      val giant = scc.filter(col("scc_id") === giantId)
+        .select(lit(giantId).as("src"), col("node"))
+      def reached(from: String, to: String, flag: String) =
+        frontierWalk(dir.select(from, to), giant, MaxHops, WalkEnd.Guard)
+          .select(col("node"), lit(1).as(flag))
+      val fwd = reached("du", "dv", "__fwd")
+      val bwd = reached("dv", "du", "__bwd")
       scc
         .join(fwd, Seq("node"), "left").join(bwd, Seq("node"), "left")
         .select(col("node"),

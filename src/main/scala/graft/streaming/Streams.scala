@@ -261,6 +261,20 @@ object Streams {
     } finally s.conf.set("spark.sql.shuffle.partitions", prev)
   }
 
+  /** Run `body` on the RocksDB state store, which transformWithState
+    * requires, and restore the session's prior provider afterwards:
+    * the session is shared, so a provider left behind would move every
+    * stateful stream that runs later onto RocksDB, depending on order.
+    */
+  private def onRocksDb[T](s: SparkSession)(body: => T): T = {
+    val key = "spark.sql.streaming.stateStore.providerClass"
+    val prior = s.conf.getOption(key)
+    s.conf.set(key,
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    try body
+    finally prior.fold(s.conf.unset(key))(s.conf.set(key, _))
+  }
+
   private def tsStr(c: String): org.apache.spark.sql.Column =
     date_format(col(c), "yyyy-MM-dd HH:mm:ss")
 
@@ -513,9 +527,7 @@ object Streams {
     // sum; the modern arbitrary-state surface alongside
     // flatMapGroupsWithState above.
     Q("stream_transformwithstate",
-      (s, d) => {
-        s.conf.set("spark.sql.streaming.stateStore.providerClass",
-          "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+      (s, d) => onRocksDb(s) {
         implicit val longEnc = Encoders.scalaLong
         implicit val tupEnc = Encoders.tuple(Encoders.scalaLong, Encoders.scalaDouble)
         implicit val inEnc = Encoders.tuple(Encoders.scalaLong, Encoders.scalaDouble)
@@ -691,16 +703,6 @@ object Streams {
     Q("stream_tws_catchup",
       (s, d) => {
         val root = graft.Artifacts.path("twsnow", d, "events")
-        // TransformWithState requires the RocksDB provider; the session
-        // is SHARED across the whole bench/verify sweep, so capture the
-        // prior value and restore it after the query terminates —
-        // otherwise every streaming query that runs later
-        // silently inherits a different state-store provider depending
-        // on execution order.
-        val providerKey = "spark.sql.streaming.stateStore.providerClass"
-        val priorProvider = s.conf.getOption(providerKey)
-        s.conf.set(providerKey,
-          "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
         implicit val longEnc = Encoders.scalaLong
         implicit val inEnc = Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong)
         implicit val outEnc = Encoders.tuple(Encoders.scalaLong,
@@ -713,14 +715,10 @@ object Streams {
             org.apache.spark.sql.streaming.TimeMode.None(),
             org.apache.spark.sql.streaming.OutputMode.Update())(outEnc)
           .toDF("user_id", "n_events", "cents")
-        try catchUp(root)(out.writeStream
+        onRocksDb(s)(catchUp(root)(out.writeStream
           .foreachBatch { (batch: DataFrame, _: Long) =>
             batch.write.mode("append").parquet(s"$root/sink")
-          })
-        finally priorProvider match {
-          case Some(v) => s.conf.set(providerKey, v)
-          case None    => s.conf.unset(providerKey)
-        }
+          }))
         s.read.parquet(s"$root/sink")
           .groupBy("user_id")
           .agg(max("n_events").as("n_events"),

@@ -148,6 +148,66 @@ class GraphSpec extends AnyFunSuite {
     assert(!d.contains(100L) && !d.contains(101L))
   }
 
+  test("hopDistances runs along the edge direction: distances TO the source") {
+    import spark.implicits._
+    // one-way chain 0 → 1 → … → 9: every node reaches 9, nothing reaches 0
+    val e = (0L until 9L).map(i => (i, i + 1)).toDF("u", "v")
+    val to9 = graft.api.Graph.hopDistances(e, "u", "v", 9L)
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(to9 == (0L to 9L).map(i => i -> (9L - i)).toMap)
+    val to0 = graft.api.Graph.hopDistances(e, "u", "v", 0L)
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(to0 == Map(0L -> 0L))
+  }
+
+  test("guarded frontier walks throw on a 70-node path instead of truncating") {
+    import spark.implicits._
+    import graft.api.Graph.{WalkEnd, frontierWalk}
+    // eccentricity 69 from node 0: past the 64-level guard of
+    // graph_eccentricity and graph_bowtie, and past a 64-round hopDistances
+    val e = bothDirs((0L until 69L).map(i => (i, i + 1)))
+    val seed = Seq((0L, 0L)).toDF("src", "node")
+    val ex = intercept[IllegalStateException] {
+      frontierWalk(e, seed, graft.operators.Graphs.MaxHops, WalkEnd.Guard)
+    }
+    assert(ex.getMessage.contains("did not converge in 64 levels"))
+    assertThrows[IllegalStateException] {
+      graft.api.Graph.hopDistances(e, "u", "v", 0L, maxIters = 64)
+    }
+    // under the default bound the same walk converges, exact
+    val d = graft.api.Graph.hopDistances(e, "u", "v", 0L)
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(d == (0L to 69L).map(i => i -> i).toMap)
+  }
+
+  test("a fixed-depth frontier walk returns exactly the H-ball of each seed") {
+    import spark.implicits._
+    import graft.api.Graph.{WalkEnd, frontierWalk}
+    // a 12-ring with two chords and a pendant path 12-13-14
+    val und = (0L until 12L).map(i => (i, (i + 1) % 12)) ++
+      Seq((0L, 6L), (3L, 9L), (11L, 12L), (12L, 13L), (13L, 14L))
+    val e = bothDirs(und)
+    val adj = (und ++ und.map(_.swap)).groupBy(_._1)
+      .map { case (k, vs) => k -> vs.map(_._2) }
+    def ball(src: Long, h: Int): Map[Long, Long] = {
+      var dist = Map(src -> 0L)
+      var frontier = Set(src)
+      for (lvl <- 1 to h) {
+        frontier = frontier.flatMap(adj).filterNot(dist.contains)
+        dist ++= frontier.map(_ -> lvl.toLong)
+      }
+      dist
+    }
+    val seeds = Seq((1L, 1L), (14L, 14L)).toDF("src", "node")
+    for (h <- Seq(1, 2, 3)) {
+      val got = frontierWalk(e, seeds, h, WalkEnd.Ball).collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
+      val want = Seq(1L, 14L).flatMap(s => ball(s, h).map { case (n, k) => (s, n, k) })
+      assert(got.length == want.length, s"h=$h: a (src, node) pair repeats")
+      assert(got.toSet == want.toSet, s"h=$h")
+    }
+  }
+
   test("kcore peels a tail down to the clique") {
     // K5 clique (0..4) + a path tail 4-10-11-12: tail degrees ≤2 < 3,
     // so peeling must remove the whole tail (3 cascading rounds) and

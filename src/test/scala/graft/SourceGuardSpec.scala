@@ -11,7 +11,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * GraftSession and GraftExtensions, ExplainProbe is the one dev probe
   * main, memos and fixture keys are built only by Memo and Fixtures, and
   * on-disk paths and catalog databases only by Artifacts; the shared
-  * oracle SQL devices are each written once.
+  * oracle SQL devices and the graph BFS level are each written once.
   */
 class SourceGuardSpec extends AnyFunSuite {
   private val root = Paths.get("src/main/scala")
@@ -94,5 +94,20 @@ class SourceGuardSpec extends AnyFunSuite {
       val found = hits(java.util.regex.Pattern.quote(b), _ => false)
       assert(found.size == 1, s"$b written ${found.size} times:\n${found.mkString("\n")}")
     }
+  }
+
+  test("the graph BFS level is written once and GRAFT_GRAPH_DEBUG is gone") {
+    // a hand-written BFS level: distinct new (src, node) pairs, a
+    // left-anti join against the visited set, a per-level checkpoint
+    val levels = for {
+      (p, lines) <- sources
+      (line, i) <- lines.zipWithIndex if line.contains("\"left_anti\"")
+      if lines.slice(i - 3, i + 1).exists(_.contains(".distinct()"))
+      if lines.slice(i, i + 3).exists(_.contains(".cpReset()"))
+    } yield s"$p:${i + 1}: ${line.trim}"
+    assert(levels.size == 1 && levels.head.contains("api/Graph.scala"),
+      s"BFS level written ${levels.size} times:\n${levels.mkString("\n")}")
+    val debug = hits("GRAFT_GRAPH_DEBUG", _ => false)
+    assert(debug.isEmpty, debug.mkString("\n"))
   }
 }

@@ -60,10 +60,12 @@ class UnoracledQuerySpec extends AnyFunSuite {
 
   test("stream_transformwithstate equals its batch twin (per-user value sum)") {
     val provKey = "spark.sql.streaming.stateStore.providerClass"
-    val prevProv = spark.conf.getOption(provKey)
-    val got = try run("stream_transformwithstate").collect()
+    val prior = spark.conf.getOption(provKey)
+    val got = run("stream_transformwithstate").collect()
       .map(r => r.getLong(0) -> r.getDouble(1)).toMap
-    finally prevProv.fold(spark.conf.unset(provKey))(spark.conf.set(provKey, _))
+    // the query runs on RocksDB and must leave the session's provider
+    // as it found it
+    assert(spark.conf.getOption(provKey) == prior)
     // exact decimal sums: the stream's double fold, rounded to cents,
     // stays within half a cent of them
     val exact = Tables.events(spark, sf)
