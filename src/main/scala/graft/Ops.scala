@@ -1,6 +1,7 @@
 package graft
 
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Determinism helpers shared by every oracle-able query (SURVEY.md §7.4).
@@ -77,4 +78,51 @@ object Ops {
     */
   def dsumExact(c: Column): Column = sum(c).cast("double")
   def SQL_DSUM_EXACT(x: String): String = s"CAST(SUM($x) AS DOUBLE)"
+
+  /** The distinct-value rank device behind every two-sample, rank-sum
+    * and k-group midrank test. `hist` holds one row per distinct `value`
+    * and one integral count column per arm; the result keeps those rows
+    * and columns and adds, all BIGINT:
+    *  - `cnt`, the pooled count of the value;
+    *  - `cum_<arm>`, the arm's inclusive cumulative count (its ECDF
+    *    numerator at the value) and `n_<arm>`, the arm's total;
+    *  - `prev`, the pooled count of smaller values (Σ cum − cnt);
+    *  - `r2 = 2·prev + cnt + 1`, twice the average rank of the value's
+    *    tie block, so rank sums stay exact integers until one division.
+    *
+    * Bound: one unpartitioned window ordered by `value`, so its input
+    * is the histogram, sized by the value domain and never by rows. At
+    * sf0.001/0.01/0.1 that is 389/3,310/13,362 click+view values,
+    * 311/313/523 `n_chars` and 50 quantities (ValueRanksSpec checks
+    * each window's input against its distinct-value count). The window
+    * takes its single partition through a narrow `coalesce(1)`, not a
+    * second exchange, so `hist` should end in its aggregate: only that
+    * aggregate's final, domain-sized stage then runs as one task.
+    */
+  private[graft] def valueRanks(hist: DataFrame, value: String,
+      arms: Seq[String]): DataFrame = {
+    val upTo = Window.orderBy(value)
+      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    val all = upTo.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
+    val cnt = arms.map(col).reduce(_ + _).cast("long").as("cnt")
+    val sums = arms.flatMap(a => Seq(sum(col(a)).over(upTo).as(s"cum_$a"),
+      sum(col(a)).over(all).as(s"n_$a")))
+    hist.coalesce(1).select(col("*") +: cnt +: sums: _*)
+      .withColumn("prev", arms.map(a => col(s"cum_$a")).reduce(_ + _) - col("cnt"))
+      .withColumn("r2", lit(2L) * col("prev") + col("cnt") + lit(1L))
+  }
+  /** `hist` is a table name or a parenthesized query; NULLS FIRST is
+    * Spark's ascending order.
+    */
+  private[graft] def SQL_VALUE_RANKS(hist: String, value: String,
+      arms: Seq[String]): String = {
+    val sums = arms.map(a =>
+      s"CAST(SUM($a) OVER (ORDER BY $value NULLS FIRST ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS cum_$a,\n" +
+        s"    CAST(SUM($a) OVER () AS BIGINT) AS n_$a")
+    s"""SELECT *, 2 * prev + cnt + 1 AS r2 FROM (
+       |  SELECT *, ${arms.map(a => s"cum_$a").mkString(" + ")} - cnt AS prev FROM (
+       |    SELECT *, CAST(${arms.mkString(" + ")} AS BIGINT) AS cnt,
+       |    ${sums.mkString(",\n    ")}
+       |    FROM $hist h) c) p""".stripMargin
+  }
 }

@@ -20,8 +20,8 @@ import org.apache.spark.sql.types.StructType
   *    rewritten file is seen once the fingerprint's TTL lapses, or at
   *    once after [[Fixtures.invalidate]]),
   *  - every `spark.sql.parquet.*` / `spark.sql.legacy.parquet.*` conf
-  *    set on the session (`nanosAsLong`, which [[events]] flips, changes
-  *    the schema of the same file).
+  *    set on the session (`nanosAsLong` changes the schema of the same
+  *    file).
   * It holds at most [[SchemaMemoBound]] schemas, least recently used
   * first out. A schema, not a DataFrame: every load still builds a
   * fresh relation with fresh attribute ids, so a self-join of two loads
@@ -143,21 +143,19 @@ object Tables {
       case _ => df
     }
 
-  /** `events` with `ts` normalized to a proper µs TimestampType column
-    * (FIXTURES.md: Spark 4 refuses TIMESTAMP(NANOS) by default, hence
-    * the `nanosAsLong` escape hatch, harmless for µs fixtures).
+  /** `events` with `ts` normalized to a proper µs TimestampType column.
+    * The session's confs are left alone: a TIMESTAMP(NANOS) fixture
+    * reads only on a session with `nanosAsLong` set (FIXTURES.md; the
+    * library session from [[GraftSession.builder]] sets it).
     */
-  def events(s: SparkSession, d: String): DataFrame = {
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+  def events(s: SparkSession, d: String): DataFrame =
     normalizeEventsTs(table(s, d, "events"))
-  }
 
   /** `events` with `ts` as raw nanosecond epoch longs. For a µs-typed
     * fixture the ns value is derived (×1000, zero sub-µs digits) so
     * callers keep a stable BIGINT contract across fixture versions.
     */
   def eventsRawNanos(s: SparkSession, d: String): DataFrame = {
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val raw = table(s, d, "events")
     raw.schema("ts").dataType match {
       case org.apache.spark.sql.types.LongType => raw

@@ -36,8 +36,11 @@ object Graph {
       // (changed-count / remaining-count) — one driver action per
       // round instead of two. Every iterative loop below runs such an
       // action each round, so laziness never stacks RDD lineage deep.
-      val c = df.localCheckpoint(eager = false)
-      c.sparkSession.createDataFrame(c.rdd, c.schema)
+      // The checkpoint RDD keeps the cut plan's SQL metrics reachable:
+      // dropped, they were garbage-collected before a later job
+      // computed the blocks, and every task of it logged a failed
+      // accumulator update.
+      org.apache.spark.sql.graftbridge.Bridge.lazyCheckpoint(df)
     }
   }
 

@@ -136,104 +136,49 @@ object Ranking {
       .drop("__pid", "__lrn", "__off")
   }
 
-  /** `df` plus `tileCol` = exact `NTILE(tiles)` under `sortCols`
-    * (LongType, 1-based), without a global single-partition window.
-    *
-    * NTILE's front-loaded-remainder rule, applied to the two-pass
-    * global row number: with n rows, q = n div tiles and r = n mod
-    * tiles, the first r tiles hold q+1 rows and the rest hold q — all
-    * integral arithmetic, so this matches the window function
-    * bit-for-bit on any engine.
-    */
-  /** `df` plus `rnCol` = exact 1-based row number under `sortCols`
-    * WITHIN each `groupCols` group — the scale-safe form of
-    * `row_number() OVER (PARTITION BY group ORDER BY …)` when there are
-    * FEW, LARGE groups (5 priority classes over 100 TB = 5 single-task
-    * sorts for the plain window; here every group is split across
-    * `partitions` range buckets and only per-(group, bucket) counts are
-    * prefix-summed). For many small groups the plain window is already
-    * parallel — use it directly.
-    *
-    * Same contract as [[withGlobalRowNumber]]: `sortCols` total within
-    * a group, `bucketBy` numeric + ascending-monotonic + null-free
-    * (defaults to `sortCols.head`). Per-group boundary arrays come from
-    * one `approx_percentile` aggregate (groups × (p−1) doubles —
-    * requires the GROUP COUNT, not the data, to be broadcast-sized).
-    */
   /** Bucket id from the group's broadcast boundary array as a
-    * CODEGEN'D when-chain (r11): the previous `aggregate(bounds, ...)`
-    * higher-order fold evaluates INTERPRETED (~2 µs/element — the
-    * SURVEY §7.10 lesson #2 trap), which at p=32 bounds made the
-    * bucket pass the dominant cost of the grouped devices; `get` is
-    * null-safe out-of-bounds so short boundary arrays (tiny groups,
-    * partitions=1) contribute 0 exactly like the old coalesce fold.
+    * codegen'd when-chain: an `aggregate(bounds, ...)` higher-order
+    * fold evaluates interpreted (~2 µs/element — the SURVEY §7.10
+    * lesson #2 trap), which at p=32 bounds made the bucket pass the
+    * dominant cost of the grouped devices; `get` is null-safe
+    * out-of-bounds so short boundary arrays (tiny groups,
+    * partitions=1) contribute 0.
     */
   private def pidFromBounds(p: Int, firstD: Column): Column =
     (0 until p - 1).foldLeft(lit(0)) { (acc, i) =>
       acc + when(firstD >= get(col("__bounds"), lit(i)), 1).otherwise(0)
     }
 
+  /** `df` plus `rnCol` = exact 1-based row number under `sortCols`
+    * WITHIN each `groupCols` group — the scale-safe form of
+    * `row_number() OVER (PARTITION BY group ORDER BY …)` when there are
+    * FEW, LARGE groups (5 priority classes over 100 TB = 5 single-task
+    * sorts for the plain window). It is [[withGroupedPrefixSum]] with
+    * weight ≡ 1: rn = psum + 1. For many small groups the plain window
+    * is already parallel — use it directly.
+    *
+    * Same contract as [[withGlobalRowNumber]]: `sortCols` total within
+    * a group, `bucketBy` numeric + ascending-monotonic + null-free
+    * (defaults to `sortCols.head`).
+    */
   def withGroupedRowNumber(df: DataFrame, groupCols: Seq[String],
       sortCols: Seq[Column], rnCol: String = "__rn",
-      partitions: Int = 0, bucketBy: Column = null): DataFrame = {
-    val p =
-      if (partitions > 0) partitions
-      else df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32").toInt
-    val firstD = Option(bucketBy).getOrElse(sortCols.head).cast("double")
-    val probs = (1 until p).map(i => i.toDouble / p)
-    val bounds = df.groupBy(groupCols.map(col): _*)
-      .agg(percentile_approx(firstD, array(probs.map(lit): _*), lit(10000))
-        .as("__bounds"))
-    // bucket id from the group's own boundary array — a pure expression
-    // once the tiny bounds table is broadcast-joined in, so every
-    // consumer subtree sees the identical bucketing (the same
-    // reuse-independence argument as withGlobalRowNumber).
-    //
-    // Both joins below MUST be null-safe (<=>): row_number() OVER
-    // (PARTITION BY g …) treats a NULL group key as a regular partition,
-    // but a plain equi-join on groupCols silently DROPS those rows —
-    // the exact mismatch the round-6 advice flagged. The bounds/offsets
-    // tables are renamed (__g_*) so the <=> condition is unambiguous.
-    def renamedG(t: DataFrame, keep: Seq[Column]): DataFrame =
-      t.select(groupCols.map(g => col(g).as(s"__g_$g")) ++ keep: _*)
-    def gMatch(right: DataFrame): Column =
-      groupCols.map(g => col(g) <=> right(s"__g_$g")).reduce(_ && _)
-    val gRenamed = groupCols.map(g => s"__g_$g")
-    val boundsR = renamedG(bounds, Seq(col("__bounds")))
-    val binned = df.join(broadcast(boundsR), gMatch(boundsR))
-      .withColumn("__pid", pidFromBounds(p, firstD))
-      .drop("__bounds").drop(gRenamed: _*)
-    val gCols = groupCols.map(col)
-    val wLocal = Window.partitionBy(gCols :+ col("__pid"): _*)
-      .orderBy(sortCols: _*)
-    val local = binned.withColumn("__lrn",
-      row_number().over(wLocal).cast("long"))
-    // per-(group, bucket) counts → prefix sum within the group; the
-    // window here runs over groups × p rows, never the input
-    val wOff = Window.partitionBy(gCols: _*).orderBy("__pid")
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val offsets = binned.groupBy(gCols :+ col("__pid"): _*)
-      .agg(count(lit(1)).as("__cnt"))
-      .withColumn("__off", coalesce(sum("__cnt").over(wOff), lit(0L)))
-    val offsetsR = renamedG(offsets,
-      Seq(col("__pid").as("__opid"), col("__off")))
-    local.join(broadcast(offsetsR),
-        gMatch(offsetsR) && col("__pid") === col("__opid"))
-      .withColumn(rnCol, col("__lrn") + col("__off"))
-      .drop("__pid", "__lrn", "__opid", "__off").drop(gRenamed: _*)
-  }
+      partitions: Int = 0, bucketBy: Column = null): DataFrame =
+    withGroupedPrefixSum(df, groupCols, sortCols, lit(1L), rnCol, partitions, bucketBy)
+      .withColumn(rnCol, col(rnCol) + 1L)
 
   /** `df` plus `outCol` = exact EXCLUSIVE prefix sum of `weight`
     * under `sortCols` WITHIN each `groupCols` group — the scale-safe
     * form of `SUM(w) OVER (PARTITION BY g ORDER BY … ROWS BETWEEN
     * UNBOUNDED PRECEDING AND 1 PRECEDING)` when there are FEW, LARGE
     * groups (3 return flags over 100 TB = 3 single-task sorts for the
-    * plain window). [[withGroupedRowNumber]] is the weight ≡ 1 special
-    * case (rn = psum + 1); the shape is identical: per-group range
-    * boundaries from one `approx_percentile` aggregate, a local
-    * exclusive prefix sum within each (group, bucket) partition, and
-    * per-(group, bucket) weight totals prefix-summed into offsets —
-    * a groups × p aggregate, never the input.
+    * plain window). Every group is split across `partitions` range
+    * buckets: per-group range boundaries come from one
+    * `approx_percentile` aggregate (groups × (p−1) doubles — requires
+    * the GROUP COUNT, not the data, to be broadcast-sized), a local
+    * exclusive prefix sum runs within each (group, bucket) partition,
+    * and per-(group, bucket) weight totals are prefix-summed into
+    * offsets — a groups × p aggregate, never the input.
     *
     * `weight` must be integral or decimal for the sum to be
     * merge-order exact; `sortCols` must be a total order within a
@@ -252,9 +197,16 @@ object Ranking {
     val bounds = wdf.groupBy(groupCols.map(col): _*)
       .agg(percentile_approx(firstD, array(probs.map(lit): _*), lit(10000))
         .as("__bounds"))
-    // same null-safe-join + rename machinery as withGroupedRowNumber:
-    // NULL group keys are regular partitions, a plain equi-join drops
-    // them
+    // bucket id from the group's own boundary array — a pure expression
+    // once the tiny bounds table is broadcast-joined in, so every
+    // consumer subtree sees the identical bucketing (the same
+    // reuse-independence argument as withGlobalRowNumber).
+    //
+    // Both joins below MUST be null-safe (<=>): a window PARTITION BY g
+    // treats a NULL group key as a regular partition, but a plain
+    // equi-join on groupCols silently DROPS those rows. The
+    // bounds/offsets tables are renamed (__g_*) so the <=> condition is
+    // unambiguous.
     def renamedG(t: DataFrame, keep: Seq[Column]): DataFrame =
       t.select(groupCols.map(g => col(g).as(s"__g_$g")) ++ keep: _*)
     def gMatch(right: DataFrame): Column =
@@ -270,6 +222,8 @@ object Ranking {
       .rowsBetween(Window.unboundedPreceding, -1)
     val local = binned.withColumn("__lps",
       coalesce(sum(col("__w")).over(wLocal), lit(0L)))
+    // per-(group, bucket) totals → prefix sum within the group; the
+    // window here runs over groups × p rows, never the input
     val wOff = Window.partitionBy(gCols: _*).orderBy("__pid")
       .rowsBetween(Window.unboundedPreceding, -1)
     val offsets = binned.groupBy(gCols :+ col("__pid"): _*)
@@ -283,6 +237,15 @@ object Ranking {
       .drop("__pid", "__lps", "__opid", "__off", "__w").drop(gRenamed: _*)
   }
 
+  /** `df` plus `tileCol` = exact `NTILE(tiles)` under `sortCols`
+    * (LongType, 1-based), without a global single-partition window.
+    *
+    * NTILE's front-loaded-remainder rule, applied to the two-pass
+    * global row number: with n rows, q = n div tiles and r = n mod
+    * tiles, the first r tiles hold q+1 rows and the rest hold q — all
+    * integral arithmetic, so this matches the window function
+    * bit-for-bit on any engine.
+    */
   def ntileExact(df: DataFrame, tiles: Int, sortCols: Seq[Column],
       tileCol: String = "__ntile", bucketBy: Column = null): DataFrame = {
     require(tiles > 0, s"tiles must be positive, got $tiles")

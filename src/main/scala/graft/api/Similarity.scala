@@ -153,26 +153,6 @@ object Similarity {
       .withColumnRenamed("__id_a", idCol)
   }
 
-  /** Deterministic Lloyd k-means codebook over the embedding column —
-    * the trained upgrade of [[ivfNeighbors]]' first-k stand-in.
-    *
-    * Engine-portable determinism, piece by piece:
-    *  - init: the k vectors with the smallest `md5(cast(id as string))`
-    *    (a seedless pseudo-random draw both engines compute equally);
-    *  - assignment: nearest centroid by squared L2 accumulated in index
-    *    order, ties broken by lowest centroid id;
-    *  - update: per-cell per-dimension mean — the sum runs in
-    *    DECIMAL(38,20) (order-independent, and double→decimal rounding
-    *    is HALF_UP in both Spark and DuckDB, so even dyadic-tie values
-    *    cast identically), then one double division;
-    *  - empty cells keep their previous centroid.
-    *
-    * Scale shape: each round is one linear scan (assignment is a
-    * codegen'd map against the BROADCAST literal codebook — no join)
-    * plus one (cell, dim)-key aggregation whose result is k×dims rows;
-    * the driver collects only the k×dims codebook per round, which is
-    * the legitimate driver-sized reduce of k-means at any corpus size.
-    */
   /** Trained codebooks memoized per (input plan, source files, k,
     * iters): training is deterministic, so re-deriving it for every
     * query over the same corpus would repeat the Lloyd rounds for
@@ -227,6 +207,26 @@ object Similarity {
     math.max(16, math.min(4096,
       math.round(math.sqrt(corpusSize.toDouble)).toInt))
 
+  /** Deterministic Lloyd k-means codebook over the embedding column —
+    * the trained upgrade of [[ivfNeighbors]]' first-k stand-in.
+    *
+    * Engine-portable determinism, piece by piece:
+    *  - init: the k vectors with the smallest `md5(cast(id as string))`
+    *    (a seedless pseudo-random draw both engines compute equally);
+    *  - assignment: nearest centroid by squared L2 accumulated in index
+    *    order, ties broken by lowest centroid id;
+    *  - update: per-cell per-dimension mean — the sum runs in
+    *    DECIMAL(38,20) (order-independent, and double→decimal rounding
+    *    is HALF_UP in both Spark and DuckDB, so even dyadic-tie values
+    *    cast identically), then one double division;
+    *  - empty cells keep their previous centroid.
+    *
+    * Scale shape: each round is one linear scan (assignment is a
+    * codegen'd map against the BROADCAST literal codebook — no join)
+    * plus one (cell, dim)-key aggregation whose result is k×dims rows;
+    * the driver collects only the k×dims codebook per round, which is
+    * the legitimate driver-sized reduce of k-means at any corpus size.
+    */
   def kmeansCodebook(embs: DataFrame, idCol: String, vecCol: String,
       k: Int = 16, iters: Int = 5): Array[Array[Double]] = {
     val analyzed = embs.select(col(idCol), col(vecCol)).queryExecution.analyzed

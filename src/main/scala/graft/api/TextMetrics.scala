@@ -136,22 +136,6 @@ object TextMetrics {
         expr("array_min(transform(__grams, g -> md5(g)))").as("fingerprint"),
         expr("size(array_distinct(__grams))").cast("long").as("n_distinct_grams"))
 
-  /** Split each document into overlapping token-window chunks — the
-    * standard context-window preparation stage for training and
-    * retrieval corpora (chunk = `chunkTokens` tokens, next chunk starts
-    * `stride` tokens later, so consecutive chunks overlap by
-    * `chunkTokens - stride`). The final chunk may be shorter; documents
-    * tokenizing to nothing are dropped.
-    *
-    * Emits one row per (doc, chunk): `chunk_idx` (0-based), `n_tokens`,
-    * and the chunk text rejoined with single spaces.
-    *
-    * Scale shape: tokenize is per-row expression work, and the explode
-    * multiplies rows by ~n_tokens/stride — output-proportional, the
-    * same cost any chunker must pay. No shuffle at all: the whole job
-    * is scan → generate → project, so it pipelines into whatever
-    * grouping or write follows.
-    */
   /** fastText-style hashed linear text scorer: each token hashes (first
     * two md5 hex chars → 0..255) into one of `weights.length` buckets
     * and the document's score is the MEAN bucket weight, folded over
@@ -182,6 +166,22 @@ object TextMetrics {
         (col("__raw") >= 0.0).as("keep_label"))
   }
 
+  /** Split each document into overlapping token-window chunks — the
+    * standard context-window preparation stage for training and
+    * retrieval corpora (chunk = `chunkTokens` tokens, next chunk starts
+    * `stride` tokens later, so consecutive chunks overlap by
+    * `chunkTokens - stride`). The final chunk may be shorter; documents
+    * tokenizing to nothing are dropped.
+    *
+    * Emits one row per (doc, chunk): `chunk_idx` (0-based), `n_tokens`,
+    * and the chunk text rejoined with single spaces.
+    *
+    * Scale shape: tokenize is per-row expression work, and the explode
+    * multiplies rows by ~n_tokens/stride — output-proportional, the
+    * same cost any chunker must pay. No shuffle at all: the whole job
+    * is scan → generate → project, so it pipelines into whatever
+    * grouping or write follows.
+    */
   def chunkDocuments(docs: DataFrame, idCol: String, textCol: String,
       chunkTokens: Int = 40, stride: Int = 30): DataFrame = {
     require(stride > 0, s"stride must be positive, got $stride")

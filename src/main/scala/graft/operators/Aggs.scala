@@ -2,7 +2,7 @@ package graft.operators
 
 import graft.{Ops, Q, Tables}
 import graft.Ops.SQL_HEX15
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -32,6 +32,24 @@ object Aggs {
     s"""CASE WHEN ($j) < 1 THEN 0.0 ELSE
        |list_sum(list_transform(generate_series(1, CAST($j AS INT)),
        |  i -> ln((CAST($m AS DOUBLE) - i + 1.0) / i))) END""".stripMargin
+
+  /** [[Ops.valueRanks]] over the event-value histogram of the two arms
+    * every two-sample events test compares: `a` counts clicks, `b`
+    * views (so the arm totals are `n_a` and `n_b`).
+    */
+  private[operators] def clickViewRanks(s: SparkSession, d: String): DataFrame =
+    valueRanks(Tables.events(s, d)
+      .filter(col("event_type").isin("click", "view"))
+      .groupBy("value")
+      .agg(sum(when(col("event_type") === "click", 1L).otherwise(0L)).as("a"),
+        sum(when(col("event_type") === "view", 1L).otherwise(0L)).as("b")),
+      "value", Seq("a", "b"))
+  private[operators] val SQL_CLICK_VIEW_RANKS: String = SQL_VALUE_RANKS(
+    """(SELECT value,
+      |      SUM(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END) AS a,
+      |      SUM(CASE WHEN event_type = 'view' THEN 1 ELSE 0 END) AS b
+      |    FROM events WHERE event_type IN ('click', 'view')
+      |    GROUP BY value)""".stripMargin, "value", Seq("a", "b"))
 
   val queries: Seq[Q] = Seq(
     Q("agg_pricing_summary",
@@ -797,83 +815,39 @@ object Aggs {
 
     // Two-sample Kolmogorov–Smirnov statistic (click vs view event
     // values): D = max |F1 - F2| over observed points, computed in
-    // EXACT INTEGER form — per distinct value the cumulative counts
-    // (ca, cb), maximized as |ca·n2 − cb·n1| (a bigint), divided only
-    // at the end — so the statistic is partitioning- and
-    // engine-independent by construction. Shape: one value-keyed
-    // aggregate + one running-sum window + a scalar max; the window
-    // carries two longs of state.
+    // EXACT INTEGER form on the value-rank device: per distinct value
+    // the cumulative counts (cum_a, cum_b), maximized as
+    // |cum_a·n_b − cum_b·n_a| (a bigint), divided only at the end — so
+    // the statistic is partitioning- and engine-independent by
+    // construction. At 100 TB the standard move is KS over pre-binned
+    // values, which drops into the same shape with
+    // `width_bucket(value, …)` as the histogram key.
     Q("stat_ks_test",
-      (s, d) => {
-        val ev = Tables.events(s, d)
-          .filter(col("event_type").isin("click", "view"))
-        val pts = ev.groupBy("value")
-          .agg(sum(when(col("event_type") === "click", 1L).otherwise(0L)).as("an"),
-            sum(when(col("event_type") === "view", 1L).otherwise(0L)).as("bn"))
-        // The ordered running sum rides on the DISTINCT-value aggregate
-        // (6.6k rows at sf0.01), not the event stream — at 100 TB the
-        // standard move is KS over pre-binned values, which drops into
-        // the same shape with `width_bucket(value, …)` as the group key.
-        val w = Window.orderBy("value")
-          .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        val wAll = Window
-          .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-        pts
-          .withColumn("ca", sum("an").over(w))
-          .withColumn("cb", sum("bn").over(w))
-          .withColumn("n_a", sum("an").over(wAll))
-          .withColumn("n_b", sum("bn").over(wAll))
-          .groupBy("n_a", "n_b")
-          .agg(max(abs(col("ca") * col("n_b") - col("cb") * col("n_a")))
-            .as("d_num"))
-          .select(col("n_a"), col("n_b"), col("d_num"),
-            round(col("d_num").cast("double") /
-              (col("n_a") * col("n_b")).cast("double"), 6).as("d_stat"))
-      },
-      Some("""WITH pts AS (
-             |  SELECT value,
-             |    SUM(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END) AS an,
-             |    SUM(CASE WHEN event_type = 'view' THEN 1 ELSE 0 END) AS bn
-             |  FROM events WHERE event_type IN ('click', 'view')
-             |  GROUP BY value),
-             |cum AS (
-             |  SELECT an, bn,
-             |    SUM(an) OVER (ORDER BY value
-             |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS ca,
-             |    SUM(bn) OVER (ORDER BY value
-             |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cb
-             |  FROM pts),
-             |tot AS (SELECT SUM(an) AS n_a, SUM(bn) AS n_b FROM pts)
-             |SELECT CAST(t.n_a AS BIGINT) AS n_a, CAST(t.n_b AS BIGINT) AS n_b,
-             |  CAST(MAX(ABS(c.ca * t.n_b - c.cb * t.n_a)) AS BIGINT) AS d_num,
-             |  ROUND(CAST(MAX(ABS(c.ca * t.n_b - c.cb * t.n_a)) AS DOUBLE)
-             |    / CAST(t.n_a * t.n_b AS DOUBLE), 6) AS d_stat
-             |FROM cum c, tot t GROUP BY t.n_a, t.n_b""".stripMargin)),
+      (s, d) => clickViewRanks(s, d)
+        .groupBy("n_a", "n_b")
+        .agg(max(abs(col("cum_a") * col("n_b") - col("cum_b") * col("n_a")))
+          .as("d_num"))
+        .select(col("n_a"), col("n_b"), col("d_num"),
+          round(col("d_num").cast("double") /
+            (col("n_a") * col("n_b")).cast("double"), 6).as("d_stat")),
+      Some(s"""WITH r AS ($SQL_CLICK_VIEW_RANKS)
+             |SELECT n_a, n_b,
+             |  MAX(ABS(cum_a * n_b - cum_b * n_a)) AS d_num,
+             |  ROUND(CAST(MAX(ABS(cum_a * n_b - cum_b * n_a)) AS DOUBLE)
+             |    / CAST(n_a * n_b AS DOUBLE), 6) AS d_stat
+             |FROM r GROUP BY n_a, n_b""".stripMargin)),
 
     // Mann–Whitney U (click vs view): rank-sum in EXACT DOUBLED-
-    // INTEGER form — per distinct value the click rows occupy ranks
-    // [prev+1, prev+cnt], so twice their average-rank sum is
-    // an·(2·prev + cnt + 1), an integer; U×2 = R1×2 − n1(n1+1) stays
-    // integer until the final /2.0. The normal-approximation z (no tie
-    // correction — documented large-sample form) uses only division
-    // and IEEE-exact sqrt in textually mirrored order, so no rounding
-    // is needed anywhere. Same distinct-value-aggregate shape (and
-    // 100-TB pre-binning note) as stat_ks_test.
+    // INTEGER form — the click rows at a value hold the tie block's
+    // doubled midrank r2, so twice their rank sum R1 is Σ a·r2, an
+    // integer; U×2 = R1×2 − n1(n1+1) stays integer until the final
+    // /2.0. The normal-approximation z (no tie correction — documented
+    // large-sample form) uses only division and IEEE-exact sqrt in
+    // textually mirrored order, so no rounding is needed anywhere.
     Q("stat_mannwhitney",
       (s, d) => {
-        val pts = Tables.events(s, d)
-          .filter(col("event_type").isin("click", "view"))
-          .groupBy("value")
-          .agg(sum(when(col("event_type") === "click", 1L).otherwise(0L)).as("an"),
-            sum(when(col("event_type") === "view", 1L).otherwise(0L)).as("bn"))
-        val wPrev = Window.orderBy("value")
-          .rowsBetween(Window.unboundedPreceding, -1)
-        val r = pts
-          .withColumn("prev",
-            coalesce(sum(col("an") + col("bn")).over(wPrev), lit(0L)))
-          .agg(sum("an").as("n_a"), sum("bn").as("n_b"),
-            sum(col("an") * (lit(2L) * col("prev") + col("an") + col("bn") + lit(1L)))
-              .as("r1x2"))
+        val r = clickViewRanks(s, d)
+          .groupBy("n_a", "n_b").agg(sum(col("a") * col("r2")).as("r1x2"))
         val u2 = col("r1x2") - col("n_a") * (col("n_a") + lit(1L))
         val ud = u2.cast("double") / lit(2.0)
         val mu = (col("n_a") * col("n_b")).cast("double") / lit(2.0)
@@ -882,19 +856,9 @@ object Aggs {
         r.select(col("n_a"), col("n_b"), ud.as("u_stat"),
           ((ud - mu) / sig).as("z"))
       },
-      Some("""WITH pts AS (
-             |  SELECT value,
-             |    SUM(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END) AS an,
-             |    SUM(CASE WHEN event_type = 'view' THEN 1 ELSE 0 END) AS bn
-             |  FROM events WHERE event_type IN ('click', 'view')
-             |  GROUP BY value),
-             |r AS (
-             |  SELECT CAST(SUM(an) AS BIGINT) AS n_a, CAST(SUM(bn) AS BIGINT) AS n_b,
-             |    CAST(SUM(an * (2 * COALESCE(prev, 0) + an + bn + 1)) AS BIGINT) AS r1x2
-             |  FROM (SELECT an, bn,
-             |      SUM(an + bn) OVER (ORDER BY value
-             |        ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS prev
-             |    FROM pts) t)
+      Some(s"""WITH r AS (
+             |  SELECT n_a, n_b, CAST(SUM(a * r2) AS BIGINT) AS r1x2
+             |  FROM ($SQL_CLICK_VIEW_RANKS) v GROUP BY n_a, n_b)
              |SELECT n_a, n_b,
              |  CAST(r1x2 - n_a * (n_a + 1) AS DOUBLE) / 2.0 AS u_stat,
              |  (CAST(r1x2 - n_a * (n_a + 1) AS DOUBLE) / 2.0
@@ -2201,36 +2165,26 @@ object Aggs {
     // Kruskal–Wallis H (one-way rank ANOVA): does document length
     // differ across the 5 languages? Rank-based sibling of stat_anova_f
     // (no normality assumption) and the k-group extension of
-    // stat_mannwhitney — same DISTINCT-VALUE-AGGREGATE shape: one
-    // groupBy(n_chars) collapses the corpus to its value histogram,
-    // one global window yields each value's preceding cumulative count,
-    // and every group's DOUBLED rank-sum Σ c_g·(2·prev + cnt + 1) stays
-    // BIGINT-exact (average rank of a tie block is (2·prev+cnt+1)/2).
-    // The five per-lang terms R²/(4n) are folded in the WRITTEN lang
-    // order (ewma device) so both engines add identical doubles; the
-    // tie correction Σ(t³−t)/(N³−N) is pure integer arithmetic. At
-    // 100 TB the value histogram (distinct doc lengths) is the only
-    // shuffled stream — model-sized next to the corpus.
+    // stat_mannwhitney: the value-rank device over the n_chars
+    // histogram with one arm per language, so every group's DOUBLED
+    // rank-sum Σ c_g·r2 stays BIGINT-exact. The five per-lang terms
+    // R²/(4n) are folded in the WRITTEN lang order (ewma device) so
+    // both engines add identical doubles; the tie correction
+    // Σ(t³−t)/(N³−N) is pure integer arithmetic. At 100 TB the value
+    // histogram (distinct doc lengths) is the only shuffled stream —
+    // model-sized next to the corpus.
     Q("stat_kruskal_wallis", {
       val LANGS = Seq("en", "es", "zh", "de", "fr")
       (s, d) => {
-        val histCols = LANGS.map(l =>
-          sum(when(col("lang") === l, 1L).otherwise(0L)).as(s"c_$l")) :+
-          count(lit(1)).as("cnt")
-        val hist = Tables.documents(s, d)
-          .groupBy("n_chars")
-          .agg(histCols.head, histCols.tail: _*)
-        val wPrev = Window.orderBy("n_chars")
-          .rowsBetween(Window.unboundedPreceding, -1)
-        val ranked = hist.withColumn("prev",
-          coalesce(sum("cnt").over(wPrev), lit(0L)))
-        val aggCols = LANGS.flatMap(l => Seq(
-          sum(col(s"c_$l") * (lit(2L) * col("prev") + col("cnt") + lit(1L)))
-            .as(s"r2_$l"),
-          sum(col(s"c_$l")).as(s"n_$l"))) :+
+        val hist = Tables.documents(s, d).groupBy("n_chars").agg(
+          sum(when(col("lang") === LANGS.head, 1L).otherwise(0L)).as(LANGS.head),
+          LANGS.tail.map(l => sum(when(col("lang") === l, 1L).otherwise(0L)).as(l)): _*)
+        val aggCols = LANGS.map(l => sum(col(l) * col("r2")).as(s"r2_$l")) :+
           sum("cnt").as("n") :+
           sum(col("cnt") * col("cnt") * col("cnt") - col("cnt")).as("ties")
-        val agg = ranked.agg(aggCols.head, aggCols.tail: _*)
+        val agg = valueRanks(hist, "n_chars", LANGS)
+          .groupBy(LANGS.map(l => col(s"n_$l")): _*)
+          .agg(aggCols.head, aggCols.tail: _*)
         val nD = col("n").cast("double")
         val terms = LANGS.map { l =>
           when(col(s"n_$l") > 0,
@@ -2250,26 +2204,20 @@ object Aggs {
       Some {
         val LANGS = Seq("en", "es", "zh", "de", "fr")
         val condCols = LANGS.map(l =>
-          s"SUM(CASE WHEN lang = '$l' THEN 1 ELSE 0 END) AS c_$l")
+          s"SUM(CASE WHEN lang = '$l' THEN 1 ELSE 0 END) AS $l")
           .mkString(", ")
-        val aggCols = LANGS.map(l =>
-          s"SUM(c_$l * (2 * prev + cnt + 1)) AS r2_$l, SUM(c_$l) AS n_$l")
-          .mkString(",\n             |    ")
+        val nCols = LANGS.map(l => s"n_$l").mkString(", ")
         val terms = LANGS.map(l =>
           s"CASE WHEN n_$l > 0 THEN CAST(r2_$l * r2_$l AS DOUBLE) / (4.0 * CAST(n_$l AS DOUBLE)) ELSE 0.0 END")
           .mkString("\n             |      + ")
-        s"""WITH hist AS (
-           |  SELECT n_chars, $condCols, COUNT(*) AS cnt
-           |  FROM documents GROUP BY n_chars),
-           |ranked AS (
-           |  SELECT *, COALESCE(SUM(cnt) OVER (ORDER BY n_chars
-           |    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS prev
-           |  FROM hist),
-           |agg AS (
-           |  SELECT $aggCols,
+        s"""WITH agg AS (
+           |  SELECT $nCols,
+           |    ${LANGS.map(l => s"SUM($l * r2) AS r2_$l").mkString(", ")},
            |    CAST(SUM(cnt) AS BIGINT) AS n,
            |    CAST(SUM(cnt * cnt * cnt - cnt) AS BIGINT) AS ties
-           |  FROM ranked)
+           |  FROM (${SQL_VALUE_RANKS(s"(SELECT n_chars, $condCols FROM documents GROUP BY n_chars)",
+             "n_chars", LANGS)}) r
+           |  GROUP BY $nCols)
            |SELECT n, CAST(${LANGS.size - 1} AS BIGINT) AS df,
            |  ROUND(12.0 / (CAST(n AS DOUBLE) * (CAST(n AS DOUBLE) + 1.0))
            |    * ($terms)
@@ -4484,8 +4432,8 @@ object Aggs {
     // at the same quantity? The distribution-free two-way twin of
     // stat_kruskal_wallis that only needs counts above/below the
     // GRAND median. l_quantity lives on a 50-value integer domain, so
-    // the grand (lower) median comes from a cumulative count over the
-    // ≤50-row value table (value-domain-bounded window, NOT a data
+    // the grand (lower) median comes from the value-rank device's
+    // cumulative count over the ≤50-row value table (NOT a data
     // sort — the stat_gini doctrine), and the 2×k table is one more
     // pass of exact BIGINT counts; rows AT the median drop (classic
     // Mood). Per-flag χ² terms are per-row closed forms over exact
@@ -4498,12 +4446,8 @@ object Aggs {
           .groupBy(col("l_returnflag").as("f"),
             col("l_quantity").cast("long").as("q"))
           .agg(count(lit(1)).as("n"))
-        val wq = Window.orderBy("q")
-          .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        val dist = cells.groupBy("q").agg(sum("n").as("nq"))
-        val med = dist.withColumn("cum", sum("nq").over(wq))
-          .crossJoin(broadcast(dist.agg(sum("nq").as("tn"))))
-          .filter(col("cum") * 2 >= col("tn"))
+        val med = valueRanks(cells.groupBy("q").agg(sum("n").as("nq")), "q", Seq("nq"))
+          .filter(col("cum_nq") * 2 >= col("n_nq"))
           .agg(min("q").as("med"))
         val tab = cells.crossJoin(broadcast(med))
           .groupBy("f")
@@ -4540,18 +4484,15 @@ object Aggs {
             round(col("chi2"), 6).as("chi2"), col("df"))
           .orderBy("l_returnflag")
       },
-      Some("""WITH cells AS (
+      Some(s"""WITH cells AS (
              |  SELECT l_returnflag AS f, CAST(l_quantity AS BIGINT) AS q,
              |    CAST(COUNT(*) AS BIGINT) AS n
              |  FROM lineitem GROUP BY 1, 2),
              |dist AS (
              |  SELECT q, CAST(SUM(n) AS BIGINT) AS nq FROM cells GROUP BY 1),
              |med AS (
-             |  SELECT MIN(q) AS med FROM (
-             |    SELECT q, SUM(nq) OVER (ORDER BY q
-             |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum
-             |    FROM dist), (SELECT SUM(nq) AS tn FROM dist)
-             |  WHERE cum * 2 >= tn),
+             |  SELECT MIN(q) AS med FROM (${SQL_VALUE_RANKS("dist", "q", Seq("nq"))}) r
+             |  WHERE cum_nq * 2 >= n_nq),
              |tab AS (
              |  SELECT f, MAX(med) AS med,
              |    CAST(SUM(CASE WHEN q > med THEN n ELSE 0 END) AS BIGINT)
@@ -5536,9 +5477,9 @@ object Aggs {
     // Scale shape: d/g/Δ reduce from ONE group aggregate over exact
     // integer cents (the stat_welch_ttest device — scale-invariant, so
     // the /100 never happens); Cliff's δ avoids the n1·n2 pair blowup
-    // via the distinct-value prefix trick (stat_mannwhitney's): per
-    // value v, #(click pairs won) = an_v · Σ_{u<v} bn_u, all exact
-    // BIGINT sums, and lt = n1·n2 − gt − eq needs no second window.
+    // on the value-rank device: per value v, #(click pairs won) =
+    // a_v · (cum_b − b)_v, the views below v, all exact BIGINT sums,
+    // and lt = n1·n2 − gt − eq needs no second window.
     Q("stat_effect_sizes",
       (s, d) => {
         val base = Tables.events(s, d)
@@ -5551,18 +5492,9 @@ object Aggs {
           .select(col("n").as("n1"), col("sc").as("s1"), col("qc").as("q1"))
         val b = m.filter(col("event_type") === "view")
           .select(col("n").as("n2"), col("sc").as("s2"), col("qc").as("q2"))
-        // distinct-value prefix device (exact integers, no pair join)
-        val pts = base.groupBy("value")
-          .agg(sum(when(col("event_type") === "click", 1L).otherwise(0L))
-            .as("an"),
-            sum(when(col("event_type") === "view", 1L).otherwise(0L))
-              .as("bn"))
-        val wPrev = Window.orderBy("value")
-          .rowsBetween(Window.unboundedPreceding, -1)
-        val cf = pts
-          .withColumn("prevb", coalesce(sum("bn").over(wPrev), lit(0L)))
-          .agg(sum(col("an") * col("prevb")).as("gt"),
-            sum(col("an") * col("bn")).as("eq"))
+        val cf = clickViewRanks(s, d)
+          .agg(sum(col("a") * (col("cum_b") - col("b"))).as("gt"),
+            sum(col("a") * col("b")).as("eq"))
         def svar(n: String, sc: String, qc: String) =
           (col(n).cast("double") * col(qc).cast("double") -
             col(sc).cast("double") * col(sc).cast("double")) /
@@ -5606,19 +5538,10 @@ object Aggs {
              |    (SELECT n FROM m WHERE event_type = 'view') AS n2,
              |    (SELECT s FROM m WHERE event_type = 'view') AS s2,
              |    (SELECT q FROM m WHERE event_type = 'view') AS q2),
-             |pts AS (
-             |  SELECT value,
-             |    SUM(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END) AS an,
-             |    SUM(CASE WHEN event_type = 'view' THEN 1 ELSE 0 END) AS bn
-             |  FROM x GROUP BY value),
              |cf AS (
-             |  SELECT CAST(SUM(an * prevb) AS BIGINT) AS gt,
-             |    CAST(SUM(an * bn) AS BIGINT) AS eq
-             |  FROM (SELECT an, bn,
-             |      COALESCE(SUM(bn) OVER (ORDER BY value
-             |        ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-             |        AS prevb
-             |    FROM pts) t),
+             |  SELECT CAST(SUM(a * (cum_b - b)) AS BIGINT) AS gt,
+             |    CAST(SUM(a * b) AS BIGINT) AS eq
+             |  FROM ($SQL_CLICK_VIEW_RANKS) v),
              |e AS (
              |  SELECT *,
              |    (CAST(n1 AS DOUBLE) * CAST(q1 AS DOUBLE)

@@ -624,19 +624,6 @@ object DataOps {
     Q("ann_ivf_cells", fn, Some(sql))
   }
 
-  /** IVF ANN over a TRAINED deterministic k-means codebook (probe=1):
-    * md5-ranked init, 5 Lloyd rounds with decimal-exact means, then the
-    * same cell-blocked top-k search as ann_ivf_cells. The DuckDB twin
-    * unrolls the 5 training rounds as CTEs and reproduces every
-    * determinism device (HALF_UP double→decimal cast, first-min
-    * tie-break, empty-cell carry-over).
-    */
-  /** Builder shared by ann_ivf_trained (probes=1) and
-    * ann_ivf_multiprobe (probes=2): same trained codebook (memoized in
-    * graft.api.Similarity, so the 5 Lloyd rounds run once per corpus),
-    * different query-side fan-out. In the oracle, `afinal` (rn=1) is
-    * the index side and `aprobe` (rn ≤ probes) the query side.
-    */
   // ORACLE-COST dial: every query sharing the unrolled k-means CTE
   // chain pays DuckDB for each Lloyd round — the 13-query family was
   // ~10 min of an oracle sweep at ITERS=5. The declared-query variants
@@ -647,6 +634,17 @@ object DataOps {
   // unaffected, only the DuckDB bill.
   private[graft] val ORACLE_ITERS = 2
 
+  /** IVF ANN over a TRAINED deterministic k-means codebook: md5-ranked
+    * init, Lloyd rounds with decimal-exact means, then the same
+    * cell-blocked top-k search as ann_ivf_cells. Builder shared by
+    * ann_ivf_trained (probes=1) and ann_ivf_multiprobe (probes=2): same
+    * trained codebook (memoized in graft.api.Similarity, so the Lloyd
+    * rounds run once per corpus), different query-side fan-out. The
+    * DuckDB twin unrolls the training rounds as CTEs and reproduces
+    * every determinism device (HALF_UP double→decimal cast, first-min
+    * tie-break, empty-cell carry-over); `afinal` (rn=1) is the index
+    * side and `aprobe` (rn ≤ probes) the query side.
+    */
   private def ivfTrainedQ(name: String, probes: Int,
       labelCol: Option[String] = None, autoK: Boolean = false,
       negLabel: Boolean = false, iters: Int = ORACLE_ITERS): Q = {

@@ -52,20 +52,6 @@ object Graphs {
     */
   private val SampleCellUsers = 5
 
-  /** One direction (u < v) of the distinct co-activity edge set.
-    *
-    * TWO shuffles, not five (r11): one groupBy to the cell level
-    * collecting the distinct user set in-row (collect_set dedups
-    * repeat visits), cap + expand the ≤ C(12,2)=66 pairs WITHIN the
-    * row, then one pair-level distinct. The previous shape (distinct
-    * (u,e,h) → cell count → join → (e,h) self-join → distinct) paid
-    * five exchanges for the same rows and was the shared fixed cost
-    * of all 27 graph queries. Per-row memory is the cell's distinct
-    * user count — bounded in practice by the cap's target (crowded
-    * cells are dropped right after aggregation); if a pathological
-    * fan-in cell (≫10⁶ users) were possible upstream, reintroduce a
-    * count pre-pass before collecting.
-    */
   /** Per-(session, events [[graft.Fixtures.key]], tag) memo of the
     * derived pair graph: the 2-shuffle cellPairs build is the shared
     * FIXED COST of all the graph queries (~2.6 s at sf0.1, PERF.md
@@ -116,9 +102,18 @@ object Graphs {
           .as("us"))
       .filter(size(col("us")) >= 2)
 
-  /** Shared cell→pair expansion: groupBy (event_type, h), sample the
+  /** One direction (u < v) of the distinct co-activity edge set, the
+    * shared cell→pair expansion: groupBy (event_type, h), sample the
     * distinct user set ([[cellUserArrays]]), emit in-row (u<v)
-    * pairs, dedup across cells. The C(k,2) expansion is posexplode +
+    * pairs, dedup across cells.
+    *
+    * TWO shuffles, not five: one groupBy to the cell level collecting
+    * the distinct user set in-row (collect_set dedups repeat visits),
+    * cap + expand the ≤ C(12,2)=66 pairs WITHIN the row, then one
+    * pair-level distinct. The previous shape (distinct (u,e,h) → cell
+    * count → join → (e,h) self-join → distinct) paid five exchanges for
+    * the same rows and was the shared fixed cost of all 27 graph
+    * queries. The C(k,2) expansion is posexplode +
     * slice + explode — ALL native generators/expressions, no lambdas
     * in the per-pair path: the original nested `transform(…, slice(…))`
     * HOF form evaluated interpreted per element (PERF.md round-10
@@ -1329,6 +1324,15 @@ object Graphs {
     Q("graph_hits", fn, Some(sql))
   }
 
+  /** Per-(session, events [[graft.Fixtures.key]]) memo for the finished
+    * Borůvka forest: the MST is a fixed artifact of the corpus exactly
+    * like the SCC label table — every bench pass re-ran the ~8-round
+    * claim/contract loop (9.5 s at sf0.1) for a bit-identical 149-row
+    * tree. Session-bound, at most 16 entries.
+    */
+  private val mstMemo = graft.Memo.sessionBound[
+    (SparkSession, String), DataFrame](bound = 16)(identity)
+
   /** Borůvka maximum-affinity spanning forest — each round every
     * component claims its best incident cross-edge (max shared-cell
     * affinity, i.e. min cost = −shared) and the claimed edges contract
@@ -1347,15 +1351,6 @@ object Graphs {
     * every round: claim (MATERIALIZED), contract (a recursive
     * walk per round — the graph_components device), relabel.
     */
-  /** Per-(session, events [[graft.Fixtures.key]]) memo for the finished
-    * Borůvka forest: the MST is a fixed artifact of the corpus exactly
-    * like the SCC label table — every bench pass re-ran the ~8-round
-    * claim/contract loop (9.5 s at sf0.1) for a bit-identical 149-row
-    * tree. Session-bound, at most 16 entries.
-    */
-  private val mstMemo = graft.Memo.sessionBound[
-    (SparkSession, String), DataFrame](bound = 16)(identity)
-
   private def mstQuery: Q = {
     val ROUNDS = 12
     def fn(s: SparkSession, d: String): DataFrame = {

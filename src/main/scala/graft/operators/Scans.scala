@@ -439,8 +439,6 @@ object Scans {
 
     Q("catalog_table_stats",
       (s, d) => {
-        // events carries a ns timestamp; allow it before schema inference.
-        s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
         Tables.names
           .map(n => Tables.table(s, d, n)
             .select(count(lit(1)).as("row_count"))
@@ -456,7 +454,6 @@ object Scans {
     // differently; ScanSpec asserts the expected inventory instead.
     Q("catalog_column_inventory",
       (s, d) => {
-        s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
         val rows = Tables.names.flatMap { n =>
           Tables.table(s, d, n).schema.fields.zipWithIndex.map {
             case (f, i) => (n, f.name, f.dataType.simpleString, i.toLong)

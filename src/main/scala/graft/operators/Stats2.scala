@@ -1,6 +1,8 @@
 package graft.operators
 
 import graft.{Q, Tables}
+import graft.Ops.{SQL_VALUE_RANKS, valueRanks}
+import graft.operators.Aggs.{SQL_CLICK_VIEW_RANKS, clickViewRanks}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -345,59 +347,25 @@ object Stats2 {
     // invariant sibling of stat_ks_test: V = D⁺ + D⁻ instead of
     // max|D|, equally sensitive in the tails and at the median, and THE
     // two-sample test for circular/periodic data (hour-of-day, phase).
-    // Same exact-integer device as the KS query: on the distinct-value
-    // aggregate, D⁺ and D⁻ numerators are max(ca·n_b − cb·n_a) and its
-    // negation — all BIGINTs until one final mirrored division. Same
-    // 100-TB pre-binning note as stat_ks_test (width_bucket as the
-    // group key drops into the identical shape).
+    // Same exact-integer device as the KS query: on the value-rank
+    // device, D⁺ and D⁻ numerators are max(cum_a·n_b − cum_b·n_a) and
+    // its negation — all BIGINTs until one final mirrored division.
     Q("stat_kuiper_test",
-      (s, d) => {
-        val pts = Tables.events(s, d)
-          .filter(col("event_type").isin("click", "view"))
-          .groupBy("value")
-          .agg(sum(when(col("event_type") === "click", 1L).otherwise(0L)).as("an"),
-            sum(when(col("event_type") === "view", 1L).otherwise(0L)).as("bn"))
-        val w = Window.orderBy("value")
-          .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        val wAll = Window
-          .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-        pts
-          .withColumn("ca", sum("an").over(w))
-          .withColumn("cb", sum("bn").over(w))
-          .withColumn("n_a", sum("an").over(wAll))
-          .withColumn("n_b", sum("bn").over(wAll))
-          .groupBy("n_a", "n_b")
-          .agg(greatest(max(col("ca") * col("n_b") - col("cb") * col("n_a")),
-            lit(0L)).as("dplus_num"),
-            greatest(max(col("cb") * col("n_a") - col("ca") * col("n_b")),
-              lit(0L)).as("dminus_num"))
-          .select(col("n_a"), col("n_b"),
-            (col("dplus_num") + col("dminus_num")).as("v_num"),
-            round((col("dplus_num") + col("dminus_num")).cast("double") /
-              (col("n_a") * col("n_b")).cast("double"), 6).as("v_stat"))
-      },
-      Some("""WITH pts AS (
-             |  SELECT value,
-             |    SUM(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END) AS an,
-             |    SUM(CASE WHEN event_type = 'view' THEN 1 ELSE 0 END) AS bn
-             |  FROM events WHERE event_type IN ('click', 'view')
-             |  GROUP BY value),
-             |cum AS (
-             |  SELECT an, bn,
-             |    SUM(an) OVER (ORDER BY value
-             |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS ca,
-             |    SUM(bn) OVER (ORDER BY value
-             |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cb
-             |  FROM pts),
-             |tot AS (SELECT SUM(an) AS n_a, SUM(bn) AS n_b FROM pts),
-             |m AS (
-             |  SELECT CAST(t.n_a AS BIGINT) AS n_a,
-             |    CAST(t.n_b AS BIGINT) AS n_b,
-             |    CAST(GREATEST(MAX(c.ca * t.n_b - c.cb * t.n_a), 0)
-             |      AS BIGINT) AS dplus_num,
-             |    CAST(GREATEST(MAX(c.cb * t.n_a - c.ca * t.n_b), 0)
-             |      AS BIGINT) AS dminus_num
-             |  FROM cum c, tot t GROUP BY t.n_a, t.n_b)
+      (s, d) => clickViewRanks(s, d)
+        .groupBy("n_a", "n_b")
+        .agg(greatest(max(col("cum_a") * col("n_b") - col("cum_b") * col("n_a")),
+          lit(0L)).as("dplus_num"),
+          greatest(max(col("cum_b") * col("n_a") - col("cum_a") * col("n_b")),
+            lit(0L)).as("dminus_num"))
+        .select(col("n_a"), col("n_b"),
+          (col("dplus_num") + col("dminus_num")).as("v_num"),
+          round((col("dplus_num") + col("dminus_num")).cast("double") /
+            (col("n_a") * col("n_b")).cast("double"), 6).as("v_stat")),
+      Some(s"""WITH m AS (
+             |  SELECT n_a, n_b,
+             |    GREATEST(MAX(cum_a * n_b - cum_b * n_a), 0) AS dplus_num,
+             |    GREATEST(MAX(cum_b * n_a - cum_a * n_b), 0) AS dminus_num
+             |  FROM ($SQL_CLICK_VIEW_RANKS) r GROUP BY n_a, n_b)
              |SELECT n_a, n_b,
              |  dplus_num + dminus_num AS v_num,
              |  ROUND(CAST(dplus_num + dminus_num AS DOUBLE)
@@ -407,29 +375,17 @@ object Stats2 {
     // Cliff's delta (click vs view) — the nonparametric EFFECT SIZE the
     // Mann-Whitney z cannot give (z grows with n; δ does not):
     // δ = P(X>Y) − P(X<Y) = 2U/(n₁n₂) − 1, computed from the same
-    // exact doubled-integer rank-sum device as stat_mannwhitney, so
-    // every term is a BIGINT until the single mirrored division. The
+    // exact doubled-integer rank sum as stat_mannwhitney, so every
+    // term is a BIGINT until the single mirrored division. The
     // conventional |δ| magnitude bands (Romano et al. 2006: 0.147 /
     // 0.33 / 0.474) label the row — the "is this shift practically
     // meaningful" readout an A/B dashboard pairs with the p-value.
     Q("stat_cliffs_delta",
       (s, d) => {
-        val pts = Tables.events(s, d)
-          .filter(col("event_type").isin("click", "view"))
-          .groupBy("value")
-          .agg(sum(when(col("event_type") === "click", 1L).otherwise(0L)).as("an"),
-            sum(when(col("event_type") === "view", 1L).otherwise(0L)).as("bn"))
-        val wPrev = Window.orderBy("value")
-          .rowsBetween(Window.unboundedPreceding, -1)
-        val r = pts
-          .withColumn("prev",
-            coalesce(sum(col("an") + col("bn")).over(wPrev), lit(0L)))
-          .agg(sum("an").as("n_a"), sum("bn").as("n_b"),
-            sum(col("an") * (lit(2L) * col("prev") + col("an") + col("bn") + lit(1L)))
-              .as("r1x2"))
-        // u2 = 2U; δ = (2U − n_a·n_b)/(n_a·n_b)... careful: δ =
-        // 2U/(n₁n₂) − 1 = (u2 − 2·n₁n₂)·... u2 here is 2U, so
-        // δ = (u2 − n₁n₂)/(n₁n₂) exactly — integers until the division
+        val r = clickViewRanks(s, d)
+          .groupBy("n_a", "n_b").agg(sum(col("a") * col("r2")).as("r1x2"))
+        // u2 = 2U, so δ = (u2 − n₁n₂)/(n₁n₂) exactly — integers until
+        // the division
         val u2 = col("r1x2") - col("n_a") * (col("n_a") + lit(1L))
         val dnum = u2 - col("n_a") * col("n_b")
         val delta = dnum.cast("double") /
@@ -441,26 +397,11 @@ object Stats2 {
             .when(abs(delta) < 0.474, "medium")
             .otherwise("large").as("magnitude"))
       },
-      Some("""WITH pts AS (
-             |  SELECT value,
-             |    SUM(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END) AS an,
-             |    SUM(CASE WHEN event_type = 'view' THEN 1 ELSE 0 END) AS bn
-             |  FROM events WHERE event_type IN ('click', 'view')
-             |  GROUP BY value),
-             |r AS (
-             |  SELECT CAST(SUM(an) AS BIGINT) AS n_a,
-             |    CAST(SUM(bn) AS BIGINT) AS n_b,
-             |    CAST(SUM(an * (2 * COALESCE(prev, 0) + an + bn + 1))
-             |      AS BIGINT) AS r1x2
-             |  FROM (SELECT an, bn,
-             |      SUM(an + bn) OVER (ORDER BY value
-             |        ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS prev
-             |    FROM pts) t),
-             |m AS (
+      Some(s"""WITH m AS (
              |  SELECT n_a, n_b,
-             |    CAST(r1x2 - n_a * (n_a + 1) - n_a * n_b AS DOUBLE)
+             |    CAST(SUM(a * r2) - n_a * (n_a + 1) - n_a * n_b AS DOUBLE)
              |      / CAST(n_a * n_b AS DOUBLE) AS delta_raw
-             |  FROM r)
+             |  FROM ($SQL_CLICK_VIEW_RANKS) r GROUP BY n_a, n_b)
              |SELECT n_a, n_b, ROUND(delta_raw, 6) AS delta,
              |  CASE WHEN ABS(delta_raw) < 0.147 THEN 'negligible'
              |    WHEN ABS(delta_raw) < 0.33 THEN 'small'
@@ -748,24 +689,20 @@ object Stats2 {
              |FROM m""".stripMargin)),
 
     // Dunn's post-hoc test after Kruskal–Wallis, from the BOUNDED
-    // quantity domain's frequency table (the stat_spearman device):
-    // global doubled midranks 2r̄ᵥ = 2·cumbᵥ + cntᵥ + 1 stay exact
-    // integers, per-flag doubled rank sums Sᵢ = Σᵥ cnt_iv·2r̄ᵥ are
-    // exact, the tie term Σ(t³−t) is exact, and each pairwise
-    // z = (R̄ᵢ−R̄ⱼ)/√((N(N+1)/12 − T/(12(N−1)))·(1/nᵢ+1/nⱼ)) is one
-    // closed-form double per flag pair. Everything after the single
-    // fact aggregate is domain-sized (≤ flags×50 cells, 3 pairs).
+    // quantity domain's frequency table: the value-rank device's pooled
+    // doubled midranks r2ᵥ = 2·prevᵥ + cntᵥ + 1 stay exact integers and
+    // join back to their (flag, q) cells, per-flag doubled rank sums
+    // Sᵢ = Σᵥ cnt_iv·r2ᵥ are exact, the tie term Σ(t³−t) is exact, and
+    // each pairwise z = (R̄ᵢ−R̄ⱼ)/√((N(N+1)/12 − T/(12(N−1)))·(1/nᵢ+1/nⱼ))
+    // is one closed-form double per flag pair. Everything after the
+    // single fact aggregate is domain-sized (≤ flags×50 cells, 3 pairs).
     Q("stat_dunn_test",
       (s, d) => {
         val fq = Tables.lineitem(s, d)
           .groupBy(col("l_returnflag").as("f"), col("l_quantity").as("q"))
           .agg(count(lit(1)).as("cnt"))
           .localCheckpoint()
-        val byV = fq.groupBy("q").agg(sum("cnt").as("cv"))
-          .withColumn("cumb", coalesce(sum("cv").over(
-            Window.orderBy("q").rowsBetween(Window.unboundedPreceding, -1)),
-            lit(0L)))
-          .withColumn("r2", col("cumb") * 2 + col("cv") + 1)
+        val byV = valueRanks(fq.groupBy("q").agg(sum("cnt").as("cv")), "q", Seq("cv"))
         val perF = fq.join(byV.select("q", "r2"), "q")
           .groupBy("f")
           .agg(sum("cnt").cast("long").as("ng"),
@@ -794,18 +731,13 @@ object Stats2 {
             }, 4).as("dunn_z"))
           .orderBy("flag_a", "flag_b")
       },
-      Some("""WITH fq AS (
+      Some(s"""WITH fq AS (
              |  SELECT l_returnflag AS f, l_quantity AS q, COUNT(*) AS cnt
              |  FROM lineitem GROUP BY 1, 2),
-             |byv AS (
-             |  SELECT q, SUM(cnt) AS cv,
-             |    2 * COALESCE(SUM(SUM(cnt)) OVER (ORDER BY q
-             |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-             |      + SUM(cnt) + 1 AS r2
-             |  FROM fq GROUP BY q),
+             |byv AS (${SQL_VALUE_RANKS("(SELECT q, SUM(cnt) AS cv FROM fq GROUP BY q)", "q", Seq("cv"))}),
              |perf AS (
-             |  SELECT f, CAST(SUM(cnt) AS BIGINT) AS ng,
-             |    SUM(CAST(cnt AS DECIMAL(18,0))
+             |  SELECT f, CAST(SUM(fq.cnt) AS BIGINT) AS ng,
+             |    SUM(CAST(fq.cnt AS DECIMAL(18,0))
              |      * CAST(r2 AS DECIMAL(18,0))) AS s2r
              |  FROM fq JOIN byv USING (q) GROUP BY f),
              |scal AS (
@@ -1983,35 +1915,19 @@ object Stats2 {
     // whole-distribution companion to stat_ks_test's max deviation
     // (CvM integrates the squared ECDF gap, so spread-out drift that
     // never breaches KS's single max still registers). The statistic
-    // is EXACT INTEGER algebra end to end: per distinct value,
-    // cnt·(ca·n₂ − cb·n₁)² accumulates as DECIMAL(38,0) (the square
-    // alone reaches ~10¹⁶ at sf0.1 — BIGINT sums would overflow at
-    // 100 TB), divided once at the end by n₁n₂(n₁+n₂)². Same
-    // value-keyed aggregate + running-sum window as KS.
+    // is EXACT INTEGER algebra end to end on the value-rank device:
+    // per distinct value, cnt·(cum_a·n_b − cum_b·n_a)² accumulates as
+    // DECIMAL(38,0) (the square alone reaches ~10¹⁶ at sf0.1 — BIGINT
+    // sums would overflow at 100 TB), divided once at the end by
+    // n_a·n_b·(n_a+n_b)².
     Q("stat_cvm_test",
       (s, d) => {
-        val pts = Tables.events(s, d)
-          .filter(col("event_type").isin("click", "view"))
-          .groupBy("value")
-          .agg(sum(when(col("event_type") === "click", 1L).otherwise(0L))
-            .as("an"),
-            sum(when(col("event_type") === "view", 1L).otherwise(0L))
-              .as("bn"))
-        val w = Window.orderBy("value")
-          .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        val wAll = Window.rowsBetween(Window.unboundedPreceding,
-          Window.unboundedFollowing)
-        pts
-          .withColumn("ca", sum("an").over(w))
-          .withColumn("cb", sum("bn").over(w))
-          .withColumn("n_a", sum("an").over(wAll))
-          .withColumn("n_b", sum("bn").over(wAll))
+        val gap = (col("cum_a") * col("n_b") - col("cum_b") * col("n_a"))
+          .cast("decimal(38,0)")
+        clickViewRanks(s, d)
           .groupBy("n_a", "n_b")
-          .agg(sum(((col("an") + col("bn")).cast("decimal(38,0)") *
-            ((col("ca") * col("n_b") - col("cb") * col("n_a")))
-              .cast("decimal(38,0)") *
-            ((col("ca") * col("n_b") - col("cb") * col("n_a")))
-              .cast("decimal(38,0)")).cast("decimal(38,0)")).as("num"))
+          .agg(sum((col("cnt").cast("decimal(38,0)") * gap * gap)
+            .cast("decimal(38,0)")).as("num"))
           .select(col("n_a"), col("n_b"),
             round(col("num").cast("double") /
               (col("n_a").cast("double") * col("n_b").cast("double") *
@@ -2019,31 +1935,12 @@ object Stats2 {
                 (col("n_a") + col("n_b")).cast("double")), 6)
               .as("cvm_t"))
       },
-      Some("""WITH pts AS (
-             |  SELECT value,
-             |    SUM(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END)
-             |      AS an,
-             |    SUM(CASE WHEN event_type = 'view' THEN 1 ELSE 0 END)
-             |      AS bn
-             |  FROM events WHERE event_type IN ('click', 'view')
-             |  GROUP BY value),
-             |cum AS (
-             |  SELECT an, bn,
-             |    SUM(an) OVER (ORDER BY value
-             |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-             |      AS ca,
-             |    SUM(bn) OVER (ORDER BY value
-             |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-             |      AS cb
-             |  FROM pts),
-             |tot AS (SELECT CAST(SUM(an) AS BIGINT) AS n_a,
-             |  CAST(SUM(bn) AS BIGINT) AS n_b FROM pts),
-             |m AS (
+      Some(s"""WITH m AS (
              |  SELECT n_a, n_b,
-             |    SUM(CAST(an + bn AS DECIMAL(38,0))
-             |      * CAST(ca * n_b - cb * n_a AS DECIMAL(38,0))
-             |      * CAST(ca * n_b - cb * n_a AS DECIMAL(38,0))) AS num
-             |  FROM cum, tot GROUP BY n_a, n_b)
+             |    SUM(CAST(cnt AS DECIMAL(38,0))
+             |      * CAST(cum_a * n_b - cum_b * n_a AS DECIMAL(38,0))
+             |      * CAST(cum_a * n_b - cum_b * n_a AS DECIMAL(38,0))) AS num
+             |  FROM ($SQL_CLICK_VIEW_RANKS) r GROUP BY n_a, n_b)
              |SELECT n_a, n_b,
              |  ROUND(CAST(num AS DOUBLE)
              |    / (CAST(n_a AS DOUBLE) * CAST(n_b AS DOUBLE)

@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.{Q, Tables}
+import graft.Ops.{SQL_VALUE_RANKS, valueRanks}
 import graft.functions.TextUdfs
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -1513,61 +1514,42 @@ object TextAnalysis {
     // keepers above droppers?", the evaluation every learned/heuristic
     // quality filter ships with. AUC ≡ the Mann–Whitney probability,
     // so it is computed EXACTLY from tie-averaged ranks kept integer
-    // by doubling (2·avg_rank = 2·min_rank + tie−1, the
-    // stat_kruskal_wallis device): AUC = (Σ₂ranks₊ − n₊(n₊+1)) /
-    // (2·n₊·n₋), one mirrored division at the end. One rank window
-    // over the integer score; the corpus pass is the only
-    // data-proportional stage.
+    // by doubling: the value-rank device over the histogram of the
+    // integer score q ∈ [0, 10000] with arms pos and neg gives each
+    // score's doubled midrank r2, and AUC = (Σ pos·r2 − n₊(n₊+1)) /
+    // (2·n₊·n₋), one mirrored division at the end. The corpus pass is
+    // the only data-proportional stage; the rank window runs over the
+    // distinct scores.
     Q("llm_quality_auc",
       (s, d) => {
-        val q10k = floor((lit(0.4) *
-          least(size(col("t")).cast("double") / 50.0, lit(1.0)) +
-          lit(0.4) * (lit(1.0) -
-            size(filter(col("t"), x => x.isInCollection(STOP)))
-              .cast("double") / size(col("t"))) +
-          lit(0.2) * least((col("nl").cast("double") / size(col("t"))) / 8.0,
-            lit(1.0))) * 10000.0 + 0.5).cast("long")
-        val scored = Tables.documents(s, d)
-          .select(col("doc_id"), col("n_chars"),
-            TextUdfs.tokenizeCol(col("text")).as("t"),
-            length(regexp_replace(lower(col("text")), "[^a-z]", ""))
-              .as("nl"))
-          .withColumn("q", q10k)
-          .withColumn("pos", (col("n_chars") >= 200).cast("long"))
-          .select("doc_id", "q", "pos")
-        val ranked = scored
-          .withColumn("minrank", rank().over(Window.orderBy("q")))
-          .withColumn("tie", count(lit(1)).over(
-            Window.partitionBy("q")))
-          .withColumn("r2", lit(2L) * col("minrank") + col("tie") - 1)
-        ranked.agg(
-            sum("pos").as("n_pos"),
-            (count(lit(1)) - sum("pos")).as("n_neg"),
-            sum(col("pos") * col("r2")).as("s2"))
+        val hist = graft.api.TextMetrics
+          .quality(Tables.documents(s, d), "doc_id", "text", STOP)
+          .select(floor(col("quality") * 10000.0 + 0.5).cast("long").as("q"),
+            (col("n_chars") >= 200).cast("long").as("pos"))
+          .groupBy("q")
+          .agg(sum("pos").as("pos"), sum(lit(1L) - col("pos")).as("neg"))
+        valueRanks(hist, "q", Seq("pos", "neg"))
+          .groupBy("n_pos", "n_neg")
+          .agg(sum(col("pos") * col("r2")).as("s2"))
           .select(col("n_pos"), col("n_neg"),
             ((col("s2") - col("n_pos") * (col("n_pos") + 1)).cast("double") /
               (lit(2L) * col("n_pos") * col("n_neg")).cast("double"))
               .as("auc"))
       },
-      Some(s"""WITH scored AS (
-              |  SELECT doc_id,
-              |    CAST(floor((0.4 * least(CAST(len(t) AS DOUBLE) / 50.0, 1.0)
+      Some(s"""WITH hist AS (
+              |  SELECT q, SUM(pos) AS pos, SUM(1 - pos) AS neg FROM (
+              |    SELECT CAST(floor((0.4 * least(CAST(len(t) AS DOUBLE) / 50.0, 1.0)
               |      + 0.4 * (1.0 - CAST(len(list_filter(t, x -> x IN ($SQL_STOP))) AS DOUBLE) / len(t))
               |      + 0.2 * least((CAST(n_letters AS DOUBLE) / len(t)) / 8.0, 1.0)) * 10000.0 + 0.5) AS BIGINT) AS q,
-              |    CASE WHEN n_chars >= 200 THEN 1 ELSE 0 END AS pos
-              |  FROM (SELECT doc_id, n_chars, $SQL_TOKENIZE AS t,
-              |        length(regexp_replace(lower(text), '[^a-z]', '', 'g')) AS n_letters
-              |        FROM documents) x),
-              |ranked AS (
-              |  SELECT pos,
-              |    2 * RANK() OVER (ORDER BY q)
-              |      + COUNT(*) OVER (PARTITION BY q) - 1 AS r2
-              |  FROM scored),
+              |      CASE WHEN n_chars >= 200 THEN 1 ELSE 0 END AS pos
+              |    FROM (SELECT n_chars, $SQL_TOKENIZE AS t,
+              |          length(regexp_replace(lower(text), '[^a-z]', '', 'g')) AS n_letters
+              |          FROM documents) x) y
+              |  GROUP BY q),
               |m AS (
-              |  SELECT CAST(SUM(pos) AS BIGINT) AS n_pos,
-              |    CAST(COUNT(*) - SUM(pos) AS BIGINT) AS n_neg,
-              |    CAST(SUM(pos * r2) AS BIGINT) AS s2
-              |  FROM ranked)
+              |  SELECT n_pos, n_neg, CAST(SUM(pos * r2) AS BIGINT) AS s2
+              |  FROM (${SQL_VALUE_RANKS("hist", "q", Seq("pos", "neg"))}) r
+              |  GROUP BY n_pos, n_neg)
               |SELECT n_pos, n_neg,
               |  CAST(s2 - n_pos * (n_pos + 1) AS DOUBLE)
               |    / CAST(2 * n_pos * n_neg AS DOUBLE) AS auc

@@ -166,7 +166,6 @@ object Streams {
     * whatever that schema says (ns-long or µs NTZ fixture).
     */
   private def eventsStream(s: SparkSession, d: String): DataFrame = {
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val dir = stageDir(d, "events")
     val physical = graft.Tables.parquetSchema(s, dir)
     graft.Tables.normalizeEventsTs(s.readStream.schema(physical).parquet(dir))

@@ -11,7 +11,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * GraftSession and GraftExtensions, ExplainProbe is the one dev probe
   * main, memos and fixture keys are built only by Memo and Fixtures, and
   * on-disk paths and catalog databases only by Artifacts; the shared
-  * oracle SQL devices and the graph BFS level are each written once.
+  * oracle SQL devices, the graph BFS level and the distinct-value rank
+  * device are each written once; no doc comment is stacked on another.
   */
 class SourceGuardSpec extends AnyFunSuite {
   private val root = Paths.get("src/main/scala")
@@ -109,5 +110,47 @@ class SourceGuardSpec extends AnyFunSuite {
       s"BFS level written ${levels.size} times:\n${levels.mkString("\n")}")
     val debug = hits("GRAFT_GRAPH_DEBUG", _ => false)
     assert(debug.isEmpty, debug.mkString("\n"))
+  }
+
+  test("the distinct-value rank device is written once per engine") {
+    // stat_spearman keeps its per-flag midranks on Ranking's bucketed
+    // prefix sum; every other midrank and cumulative count over a value
+    // histogram goes through Ops.valueRanks / Ops.SQL_VALUE_RANKS
+    def inSpearman(p: Path, i: Int): Boolean = {
+      val lines = sources.find(_._1 == p).get._2
+      val start = lines.lastIndexWhere(_.contains("Q(\""), i)
+      start >= 0 && lines(start).contains("Q(\"stat_spearman\"")
+    }
+    val texts = Seq(
+      "Spark doubled midrank" ->
+        ("""(lit\(2L?\)|\b2L?)\s*\*\s*col\("\w+"\)(\s*\+\s*col\("\w+"\))+\s*[+-]\s*(lit\()?1L?\b""" +
+          """|col\("\w+"\)\s*\*\s*2\s*\+\s*col\("\w+"\)\s*\+\s*1\b"""),
+      "DuckDB doubled midrank" -> """\b2 \* (COALESCE\(|RANK\(|prev\b)""",
+      "Spark cumulative count" -> """Window\.orderBy\((value|"value"|"n_chars"|"q")\)""",
+      "DuckDB cumulative count" ->
+        """OVER \(ORDER BY (\$value|value|n_chars|q)\s*(NULLS FIRST\s*)?(ROWS|\)|$)""")
+    for ((what, pattern) <- texts) {
+      val re = pattern.r
+      val found = for {
+        (p, lines) <- sources
+        (line, i) <- lines.zipWithIndex
+        if re.findFirstIn(line).isDefined && !inSpearman(p, i)
+      } yield s"$p:${i + 1}: ${line.trim}"
+      assert(found.size == 1 && found.head.contains("graft/Ops.scala"),
+        s"$what written ${found.size} times:\n${found.mkString("\n")}")
+    }
+  }
+
+  test("no doc comment is stacked directly on another") {
+    // scaladoc attaches only the last of two stacked blocks to the
+    // declaration below; the first documents nothing
+    val stacked = for {
+      (p, lines) <- sources
+      (line, i) <- lines.zipWithIndex if line.trim.startsWith("/**")
+      end = lines.indexWhere(_.contains("*/"), i)
+      next = lines.indexWhere(_.trim.nonEmpty, end + 1)
+      if next >= 0 && lines(next).trim.startsWith("/**")
+    } yield s"$p:${i + 1}: doc block followed by another at line ${next + 1}"
+    assert(stacked.isEmpty, stacked.mkString("\n"))
   }
 }

@@ -98,12 +98,30 @@ class TablesSchemaSpec extends AnyFunSuite {
       assert(Tables.table(spark, dir, "events").schema("ts").dataType == LongType)
       spark.conf.set(key, "false")
       assert(refused(), "the nanosAsLong schema must not be served without it")
+      spark.conf.set(key, "true")
       val ev = Tables.events(spark, dir)
       assert(ev.schema("ts").dataType == TimestampType)
       assert(ev.select(expr("unix_micros(ts)")).as[Long].head() == 1700000000123456L)
     } finally prev match {
       case Some(v) => spark.conf.set(key, v)
       case None => spark.conf.unset(key)
+    }
+  }
+
+  test("events loaders and queries leave nanosAsLong unset on the caller's session") {
+    val key = "spark.sql.legacy.parquet.nanosAsLong"
+    val fresh = spark.newSession()
+    fresh.conf.unset(key)
+    val d = TestSpark.sf0001
+    val calls: Seq[(String, () => Any)] = Seq(
+      "Tables.events" -> (() => Tables.events(fresh, d).head()),
+      "Tables.eventsRawNanos" -> (() => Tables.eventsRawNanos(fresh, d).head())) ++
+      Seq("catalog_table_stats", "catalog_column_inventory", "stream_stateful_count")
+        .map(q => q -> (() => SparkEntry.queries(q)(fresh, d).collect()))
+    calls.foreach { case (name, call) =>
+      call()
+      val set = fresh.conf.getAll.get(key)
+      assert(set.isEmpty, s"$name set $key on the caller's session")
     }
   }
 
