@@ -421,8 +421,11 @@ class ranking:
     """graft.api.Ranking — scale-safe global/grouped row numbers and NTILE.
 
     ``sort_cols`` are pyspark Columns forming a total order;
-    ``bucket_by`` (optional Column) must be ascending-monotonic in that
-    order (pass ``-col`` for a descending first sort column).
+    ``bucket_by`` (optional Column) must be numeric and
+    ascending-monotonic in that order (pass ``-col`` for a descending
+    first sort column). Each call runs one small eager Spark job (the
+    range-bucket boundaries, groups x (partitions - 1) doubles) and
+    raises at the call if ``bucket_by`` is not numeric.
     """
 
     @staticmethod

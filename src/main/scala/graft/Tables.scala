@@ -83,34 +83,10 @@ object Tables {
     val p = df.sparkSession.sparkContext.defaultParallelism
     // Split probe: df.rdd instantiates a throwaway physical plan just
     // to count the scan's splits — a one-time driver cost of a few ms
-    // per query (r16 ADVICE; accepted knowingly: the probe plan is a
+    // per query (accepted knowingly: the probe plan is a
     // bare column-pruned scan, and no cheaper public API exposes the
     // split count before execution).
     if (df.rdd.getNumPartitions < p) df.repartition(p) else df
-  }
-
-  /** [[balanced]] for a frame with MULTIPLE consumers: when the scan
-    * is under-split, the balancing exchange is additionally cut behind
-    * a LAZY localCheckpoint so every consumer reads the repartitioned
-    * blocks instead of re-executing the RoundRobin subtree per branch
-    * (a bare balanced frame consumed four times stamped four full-fact
-    * exchanges into stat_spearman's plan). On a well-split source this
-    * returns the scan untouched — no checkpoint; consumers re-scan the
-    * column-pruned parquet, the cheaper move at any scale.
-    *
-    * Use it only on a domain- or projection-bounded frame (a few
-    * narrow columns, or a small table): an under-split but LARGE
-    * source — a single gzip landing file — would be pinned whole in
-    * block-manager memory/disk by the checkpoint. And a local
-    * checkpoint is not reliable storage: its blocks live on the
-    * executors that computed them and its lineage is cut, so losing an
-    * executor fails the consumers instead of recomputing.
-    */
-  def balancedShared(df: DataFrame): DataFrame = {
-    val p = df.sparkSession.sparkContext.defaultParallelism
-    if (df.rdd.getNumPartitions < p)
-      df.repartition(p).localCheckpoint(eager = false)
-    else df
   }
 
   def region(s: SparkSession, d: String): DataFrame    = table(s, d, "region")

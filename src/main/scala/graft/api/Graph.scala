@@ -480,8 +480,10 @@ object Graph {
     * Scale shape: one edges⋈frontier equi-join + one dst-keyed SUM +
     * one anti-join against the visited set per level; rounds =
     * eccentricity of the source (≤ ~log n on small-world graphs).
-    * Each level is localCheckpoint'd (the Borůvka lineage-cap
-    * device); the driver sees only per-level counts.
+    * Each level is checkpointed ([[CpOps.cpReset]]) and probed by one
+    * RDD count that also materializes it, so the visited set is a lazy
+    * union of materialized levels (the [[frontierWalk]] discipline);
+    * the driver sees only per-level counts.
     */
   def spCounts(edges: DataFrame, srcCol: String, dstCol: String,
       source: Long, maxIters: Int = 64): DataFrame = {
@@ -490,7 +492,6 @@ object Graph {
       .select(lit(source).as("node"), lit(1L).as("paths"))
       .cpReset()
     var acc = frontier.select(col("node"), lit(0L).as("d"), col("paths"))
-      .cpReset()
     var level = 0L
     var more = true
     while (more) {
@@ -504,15 +505,13 @@ object Graph {
         .join(acc.select(col("node").as("__seen")),
           col("node") === col("__seen"), "left_anti")
         .cpReset()
-      more = next.limit(1).count() > 0
+      more = next.rdd.count() > 0
       if (more) {
         acc = acc.unionByName(
           next.select(col("node"), lit(level).as("d"), col("paths")))
-          .cpReset()
         frontier = next
       }
     }
-    e.unpersist()
     acc
   }
 
@@ -690,7 +689,7 @@ object Graph {
 
   /** Deterministic two-level ordered double sum — the HUB-SAFE
     * replacement for the "collect the whole group as one sorted list
-    * and fold it" device (round-7 verdict Next #4). A single-list fold
+    * and fold it" device. A single-list fold
     * is bit-deterministic but materializes each group's entire
     * neighborhood in ONE row; on a power-law graph a hub's in-edge
     * list is unbounded. Here values are folded inside fixed-size
@@ -725,4 +724,23 @@ object Graph {
         lit(0.0).cast("double"),
         (acc, x) => acc + x.getField("__partial")).as(out))
   }
+
+  /** DuckDB twin of [[orderedChunkedSum]]: the same two-level summation
+    * tree over the rows of the query `src` — chunk = (ROW_NUMBER() by
+    * `ord` within `key`) div `chunk`, fold `value` inside each chunk in
+    * `ord` order, then fold the partials in chunk order — so the two
+    * engines produce the identical IEEE sum. `key` may name several
+    * columns ("u, v"). Returns one row per key: (`key`, `out`).
+    */
+  private[graft] def SQL_ORDERED_CHUNKED_SUM(src: String, key: String,
+      ord: String, value: String, out: String, chunk: Int): String =
+    s"""SELECT $key, list_sum(list(partial ORDER BY chunk)) AS $out
+       |FROM (
+       |  SELECT $key, chunk, list_sum(list($value ORDER BY $ord)) AS partial
+       |  FROM (
+       |    SELECT *,
+       |      (ROW_NUMBER() OVER (PARTITION BY $key ORDER BY $ord) - 1) // $chunk AS chunk
+       |    FROM ($src) src)
+       |  GROUP BY $key, chunk)
+       |GROUP BY $key""".stripMargin
 }

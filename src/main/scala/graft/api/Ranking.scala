@@ -4,32 +4,39 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-/** Scale-safe global ranking primitives.
+/** Scale-safe global and per-group ranking primitives.
   *
   * A global `row_number()`/`ntile()` window over an unpartitioned frame
   * funnels EVERY row through one window partition — the classic
-  * single-task sort that stops scaling at ~10⁸ rows. The primitives
-  * here produce the exact same numbers with a range-bucketed two-pass
-  * shape instead:
+  * single-task sort that stops scaling at ~10⁸ rows; a window
+  * partitioned by a few-valued group key is a few such sorts. Every
+  * primitive here produces the exact same numbers from one
+  * range-bucketed two-pass body ([[bucketedPrefixSum]]), parameterized
+  * by the group columns (none for a global rank):
   *
-  *   1. bucket every row by WHERE its first sort-key value falls in a
-  *      set of range boundaries (computed once, up front, as a tiny
-  *      `approx_percentile` aggregate — see the in-method note on why
-  *      NOT `repartitionByRange`),
-  *   2. a per-bucket local `row_number` (windows partitioned by the
-  *      bucket id, so every sort is partition-local),
-  *   3. per-bucket row counts prefix-summed into offsets — a
-  *      bucket-count-sized aggregate (≤ a few thousand rows at any
-  *      scale) that is broadcast back, so global rank = offset + local
-  *      rank.
+  *   1. bounds: ONE eager driver job per call, `groupBy(groups)` →
+  *      `percentile_approx` boundaries plus the numeric-guard and NULL
+  *      counts, collected — groups × (p−1) doubles, so the GROUP COUNT
+  *      (not the data) must be broadcast-sized;
+  *   2. bucket id `__pid`: [[graft.functions.BucketIndex]] over those
+  *      boundaries baked in as literals (a null-safe CASE over the
+  *      collected group keys when grouped), so every consumer subtree
+  *      buckets every row identically, whether or not the plan reuses
+  *      one exchange between them (NOT `repartitionByRange` +
+  *      `spark_partition_id()`: its RangePartitioner samples per
+  *      physical RDD, so un-reused branches could disagree and the
+  *      row number gained duplicates and gaps — caught by
+  *      export_zorder_layout's oracle);
+  *   3. a local exclusive prefix sum within each (group, bucket)
+  *      partition, plus per-(group, bucket) weight totals prefix-summed
+  *      into offsets — a groups × p aggregate broadcast back, never the
+  *      input — so prefix sum = offset + local sum.
   *
-  * The only single-partition work is the prefix sum over the per-bucket
-  * counts — O(buckets) rows, driver-trivial forever. The result is
-  * EXACT (not approximate): boundary placement affects only how rows
-  * are grouped, never their global rank, when the sort key is total
-  * (pass a unique tiebreak column, same rule as SURVEY §7.4). Boundary
-  * quality affects only balance — a skewed first column degrades to
-  * fewer effective buckets, never to wrong ranks.
+  * The result is EXACT (not approximate): boundary placement affects
+  * only how rows are grouped, never their rank, when the sort key is
+  * total (pass a unique tiebreak column, same rule as SURVEY §7.4).
+  * Boundary quality affects only balance — a skewed first column
+  * degrades to fewer effective buckets, never to wrong ranks.
   */
 object Ranking {
 
@@ -37,8 +44,7 @@ object Ranking {
 
   /** `df` plus `rnCol` = exact 1-based global row number under
     * `sortCols`, and `nCol` = the total row count (both LongType).
-    * Range-bucketed two-pass; see object doc. `sortCols` must be a
-    * total order (include a unique tiebreak).
+    * `sortCols` must be a total order (include a unique tiebreak).
     *
     * `bucketBy` drives the bucketing and must be a numeric expression
     * that is ASCENDING-monotonic in the `sortCols` ordering (rows that
@@ -47,107 +53,13 @@ object Ranking {
     * plain ascending first column; for a descending first column pass
     * its negation (see `win_ntile_buckets`).
     *
-    * Note: runs one small Spark job eagerly (the boundary aggregate)
-    * when called.
+    * Runs one small Spark job eagerly (the bounds) when called.
     */
   def withGlobalRowNumber(df: DataFrame, sortCols: Seq[Column],
       rnCol: String = "__rn", nCol: String = "__n",
-      partitions: Int = 0, bucketBy: Column = null): DataFrame = {
-    val p =
-      if (partitions > 0) partitions
-      else df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32").toInt
-    // __pid is the range-bucket id, computed as a PURE EXPRESSION over
-    // boundaries collected once on the driver. It must NOT come from
-    // repartitionByRange + spark_partition_id(): this DataFrame is
-    // consumed by two plan branches below (local ranks, bucket counts),
-    // exchange reuse between them is an optimization rather than a
-    // guarantee (diverging column pruning defeats it), and
-    // RangePartitioner seeds its reservoir sample with the physical RDD
-    // id — so un-reused branches can see DIFFERENT boundaries, local
-    // ranks against one bucketing and offsets against another, and the
-    // "global" row number silently gains duplicates and gaps (caught by
-    // export_zorder_layout's oracle). A literal boundary array is
-    // identical in every subtree by construction; it is (p-1) doubles —
-    // model-parameter-sized, the IVF-codebook precedent.
-    val rawBucket = Option(bucketBy).getOrElse(sortCols.head)
-    // try_cast, not cast: under ANSI a malformed (e.g. string) bucket
-    // value would throw a bare CAST_INVALID_INPUT from deep inside the
-    // boundary aggregate; try_cast turns it into a NULL the guard below
-    // counts and reports as the actual caller error (pass a numeric
-    // bucketBy). The guard proves castfail == 0, so try_cast ≡ cast on
-    // every row that reaches the bucket expression.
-    val firstD = rawBucket.try_cast("double")
-    val bounds: Seq[Double] =
-      if (p <= 1) Seq.empty
-      else {
-        val probs = (1 until p).map(i => i.toDouble / p)
-        // Alongside the boundaries, count the rows whose bucket value is
-        // non-null but casts to NULL — a string first sort column does
-        // exactly this, every row lands in bucket 0, and the API
-        // silently recreates the single-task global sort it exists to
-        // remove. That is a caller error; fail loudly (round-6 advice).
-        val row = df.select(
-          percentile_approx(firstD, array(probs.map(lit): _*), lit(10000)).as("b"),
-          count(when(firstD.isNull && rawBucket.isNotNull, 1)).as("castfail"),
-          count(when(firstD.isNull, 1)).as("nulls")).head()
-        require(row.getLong(1) == 0L,
-          s"withGlobalRowNumber: bucketBy (default sortCols.head) must be " +
-            s"numeric — ${row.getLong(1)} row(s) have a non-null value that " +
-            s"casts to NULL. Every row would fall into one range bucket, " +
-            s"recreating the single-task global sort. Pass a numeric bucketBy.")
-        if (row.getLong(2) > 0L)
-          log.warn(s"withGlobalRowNumber: bucketBy is NULL on ${row.getLong(2)} " +
-            s"row(s); they bucket FIRST, which is exact only for an ascending " +
-            s"nulls-first sort — for a descending first column, nulls order " +
-            s"last but bucket first, yielding wrong ranks. Pass a null-free " +
-            s"bucketBy (e.g. coalesce to a sentinel).")
-        if (row.isNullAt(0)) Seq.empty
-        else row.getSeq[Double](0).toSeq
-      }
-    // Native binary-search bucket id: O(1) codegen size in p (the
-    // fold-of-whens it replaces was p−1 additions deep — round-6
-    // advice) and O(log p) per row. NOT the `aggregate(lit(bounds), …)`
-    // HOF — see BucketIndex's scaladoc for the lambda-references
-    // constraint-inference trap that form trips at this exact self-join.
-    val pidExpr =
-      if (bounds.isEmpty) lit(0)
-      else {
-        import org.apache.spark.sql.graftbridge.Bridge
-        Bridge.column(
-          graft.functions.BucketIndex(Bridge.expression(firstD), bounds.toArray))
-      }
-    val binned = df.withColumn("__pid", pidExpr)
-    val wLocal = Window.partitionBy("__pid").orderBy(sortCols: _*)
-    val local = binned.withColumn("__lrn", row_number().over(wLocal).cast("long"))
-    // per-bucket counts → exclusive prefix sum; ≤ p rows, so the
-    // unpartitioned window here is over a driver-trivial aggregate, not
-    // the input (the whole point of the two-pass shape)
-    val wOff = Window.orderBy("__pid").rowsBetween(Window.unboundedPreceding, -1)
-    val wAll = Window.partitionBy()
-    val offsets = binned.groupBy("__pid").agg(count(lit(1)).as("__cnt"))
-      .withColumn("__off", coalesce(sum("__cnt").over(wOff), lit(0L)))
-      .withColumn(nCol, sum("__cnt").over(wAll))
-      .select(col("__pid"), col("__off"), col(nCol))
-    local.join(broadcast(offsets), "__pid")
-      .withColumn(rnCol, col("__lrn") + col("__off"))
-      // __off must not leak: a second ranking call on this output
-      // (e.g. ts_rfm_segmentation's chained ntileExact scores) would
-      // hit AMBIGUOUS_REFERENCE on its own __off
-      .drop("__pid", "__lrn", "__off")
-  }
-
-  /** Bucket id from the group's broadcast boundary array as a
-    * codegen'd when-chain: an `aggregate(bounds, ...)` higher-order
-    * fold evaluates interpreted (~2 µs/element — the SURVEY §7.10
-    * lesson #2 trap), which at p=32 bounds made the bucket pass the
-    * dominant cost of the grouped devices; `get` is null-safe
-    * out-of-bounds so short boundary arrays (tiny groups,
-    * partitions=1) contribute 0.
-    */
-  private def pidFromBounds(p: Int, firstD: Column): Column =
-    (0 until p - 1).foldLeft(lit(0)) { (acc, i) =>
-      acc + when(firstD >= get(col("__bounds"), lit(i)), 1).otherwise(0)
-    }
+      partitions: Int = 0, bucketBy: Column = null): DataFrame =
+    bucketedPrefixSum(df, Nil, sortCols, lit(1L), rnCol, Some(nCol),
+      partitions, bucketBy).withColumn(rnCol, col(rnCol) + 1L)
 
   /** `df` plus `rnCol` = exact 1-based row number under `sortCols`
     * WITHIN each `groupCols` group — the scale-safe form of
@@ -172,69 +84,112 @@ object Ranking {
     * form of `SUM(w) OVER (PARTITION BY g ORDER BY … ROWS BETWEEN
     * UNBOUNDED PRECEDING AND 1 PRECEDING)` when there are FEW, LARGE
     * groups (3 return flags over 100 TB = 3 single-task sorts for the
-    * plain window). Every group is split across `partitions` range
-    * buckets: per-group range boundaries come from one
-    * `approx_percentile` aggregate (groups × (p−1) doubles — requires
-    * the GROUP COUNT, not the data, to be broadcast-sized), a local
-    * exclusive prefix sum runs within each (group, bucket) partition,
-    * and per-(group, bucket) weight totals are prefix-summed into
-    * offsets — a groups × p aggregate, never the input.
+    * plain window).
     *
     * `weight` must be integral or decimal for the sum to be
     * merge-order exact; `sortCols` must be a total order within a
     * group; `bucketBy` numeric + ascending-monotonic + null-free
-    * (defaults to `sortCols.head`).
+    * (defaults to `sortCols.head`). Runs one small Spark job eagerly
+    * (the bounds) when called.
     */
   def withGroupedPrefixSum(df: DataFrame, groupCols: Seq[String],
       sortCols: Seq[Column], weight: Column, outCol: String = "__psum",
-      partitions: Int = 0, bucketBy: Column = null): DataFrame = {
+      partitions: Int = 0, bucketBy: Column = null): DataFrame =
+    bucketedPrefixSum(df, groupCols, sortCols, weight, outCol, None,
+      partitions, bucketBy)
+
+  /** The one two-pass body (see object doc): `df` plus `outCol`, the
+    * exclusive prefix sum of `weight` within each `groupCols` group,
+    * and, when `totalCol` is set, that group's weight total.
+    */
+  private def bucketedPrefixSum(df: DataFrame, groupCols: Seq[String],
+      sortCols: Seq[Column], weight: Column, outCol: String,
+      totalCol: Option[String], partitions: Int, bucketBy: Column): DataFrame = {
+    import org.apache.spark.sql.graftbridge.Bridge
     val p =
       if (partitions > 0) partitions
       else df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32").toInt
-    val firstD = Option(bucketBy).getOrElse(sortCols.head).cast("double")
-    val probs = (1 until p).map(i => i.toDouble / p)
-    val wdf = df.withColumn("__w", weight)
-    val bounds = wdf.groupBy(groupCols.map(col): _*)
-      .agg(percentile_approx(firstD, array(probs.map(lit): _*), lit(10000))
-        .as("__bounds"))
-    // bucket id from the group's own boundary array — a pure expression
-    // once the tiny bounds table is broadcast-joined in, so every
-    // consumer subtree sees the identical bucketing (the same
-    // reuse-independence argument as withGlobalRowNumber).
-    //
-    // Both joins below MUST be null-safe (<=>): a window PARTITION BY g
-    // treats a NULL group key as a regular partition, but a plain
-    // equi-join on groupCols silently DROPS those rows. The
-    // bounds/offsets tables are renamed (__g_*) so the <=> condition is
-    // unambiguous.
-    def renamedG(t: DataFrame, keep: Seq[Column]): DataFrame =
-      t.select(groupCols.map(g => col(g).as(s"__g_$g")) ++ keep: _*)
-    def gMatch(right: DataFrame): Column =
-      groupCols.map(g => col(g) <=> right(s"__g_$g")).reduce(_ && _)
-    val gRenamed = groupCols.map(g => s"__g_$g")
-    val boundsR = renamedG(bounds, Seq(col("__bounds")))
-    val binned = wdf.join(broadcast(boundsR), gMatch(boundsR))
-      .withColumn("__pid", pidFromBounds(p, firstD))
-      .drop("__bounds").drop(gRenamed: _*)
     val gCols = groupCols.map(col)
+    val rawBucket = Option(bucketBy).getOrElse(sortCols.head)
+    // try_cast, not cast: under ANSI a malformed (e.g. string) bucket
+    // value would throw a bare CAST_INVALID_INPUT from deep inside the
+    // bounds job; try_cast turns it into a NULL the guard below counts
+    // and reports as the actual caller error. The guard proves
+    // castfail == 0, so try_cast ≡ cast on every row that is bucketed.
+    val firstD = rawBucket.try_cast("double")
+    val probs = (1 until p).map(i => i.toDouble / p)
+    // A string bucket column casts to NULL on every row, every row
+    // lands in bucket 0, and the call silently recreates the
+    // single-task sort it exists to remove: a caller error, so fail.
+    val guards = Seq(
+      count(when(firstD.isNull && rawBucket.isNotNull, 1)).as("__castfail"),
+      count(when(firstD.isNull, 1)).as("__nulls"))
+    val bounds =
+      if (p <= 1) Nil
+      else Seq(percentile_approx(firstD, array(probs.map(lit): _*), lit(10000)).as("__bounds"))
+    val rows = df.groupBy(gCols: _*).agg(guards.head, guards.tail ++ bounds: _*).collect()
+    val castfail = rows.map(_.getAs[Long]("__castfail")).sum
+    require(castfail == 0L,
+      s"Ranking: bucketBy (default sortCols.head) must be numeric — " +
+        s"$castfail row(s) have a non-null value that casts to NULL. Every " +
+        s"row would fall into one range bucket, recreating the single-task " +
+        s"sort. Pass a numeric bucketBy.")
+    val nulls = rows.map(_.getAs[Long]("__nulls")).sum
+    if (nulls > 0L)
+      log.warn(s"Ranking: bucketBy is NULL on $nulls row(s); they bucket " +
+        s"FIRST, which is exact only for an ascending nulls-first sort — " +
+        s"for a descending first column, nulls order last but bucket " +
+        s"first, yielding wrong ranks. Pass a null-free bucketBy (e.g. " +
+        s"coalesce to a sentinel).")
+    // each group's boundaries as a literal; a group whose bucket
+    // values are all NULL has none and stays in bucket 0
+    val arms = rows.toSeq.flatMap { r =>
+      if (p <= 1 || r.isNullAt(r.fieldIndex("__bounds"))) None
+      else Some(gCols.zipWithIndex.map { case (g, i) => g <=> lit(r.get(i)) }
+        .foldLeft(lit(true))(_ && _) -> typedLit(r.getAs[Seq[Double]]("__bounds")))
+    }
+    val pid =
+      if (arms.isEmpty) lit(0)
+      else {
+        val boundsExpr =
+          if (gCols.isEmpty) arms.head._2
+          else arms.tail.foldLeft(when(arms.head._1, arms.head._2)) {
+            case (c, (m, b)) => c.when(m, b)
+          }
+        Bridge.column(graft.functions.BucketIndex(
+          Bridge.expression(firstD), Bridge.expression(boundsExpr)))
+      }
+    val binned = df.withColumn("__w", weight).withColumn("__pid", pid)
     val wLocal = Window.partitionBy(gCols :+ col("__pid"): _*)
       .orderBy(sortCols: _*)
       .rowsBetween(Window.unboundedPreceding, -1)
     val local = binned.withColumn("__lps",
       coalesce(sum(col("__w")).over(wLocal), lit(0L)))
-    // per-(group, bucket) totals → prefix sum within the group; the
-    // window here runs over groups × p rows, never the input
+    // per-(group, bucket) totals → prefix sum within the group; these
+    // windows run over groups × p rows, never the input
     val wOff = Window.partitionBy(gCols: _*).orderBy("__pid")
       .rowsBetween(Window.unboundedPreceding, -1)
     val offsets = binned.groupBy(gCols :+ col("__pid"): _*)
-      .agg(sum(col("__w")).as("__bw"))
-      .withColumn("__off", coalesce(sum("__bw").over(wOff), lit(0L)))
-    val offsetsR = renamedG(offsets,
-      Seq(col("__pid").as("__opid"), col("__off")))
-    local.join(broadcast(offsetsR),
-        gMatch(offsetsR) && col("__pid") === col("__opid"))
+      .agg(sum(col("__w")).as("__cnt"))
+      .withColumn("__off", coalesce(sum("__cnt").over(wOff), lit(0L)))
+      .withColumn("__tot", sum("__cnt").over(Window.partitionBy(gCols: _*)))
+      // renamed (__g_*, __opid) so the join condition is unambiguous;
+      // it must be null-safe (<=>): a window PARTITION BY g treats a
+      // NULL group key as a regular partition, but a plain equi-join
+      // on groupCols silently DROPS those rows
+      .select(groupCols.map(g => col(g).as(s"__g_$g")) ++
+        Seq(col("__pid").as("__opid"), col("__off"), col("__tot")): _*)
+    val joined = local.join(broadcast(offsets),
+      groupCols.foldLeft(col("__pid") === col("__opid")) { (c, g) =>
+        c && (col(g) <=> col(s"__g_$g"))
+      })
+    totalCol.fold(joined)(n => joined.withColumn(n, col("__tot")))
       .withColumn(outCol, col("__lps") + col("__off"))
-      .drop("__pid", "__lps", "__opid", "__off", "__w").drop(gRenamed: _*)
+      // the scratch columns must not leak: a second ranking call on
+      // this output (e.g. ts_rfm_segmentation's chained ntileExact
+      // scores) would hit AMBIGUOUS_REFERENCE on its own __off
+      .drop(Seq("__w", "__pid", "__lps", "__opid", "__off", "__tot") ++
+        groupCols.map(g => s"__g_$g"): _*)
   }
 
   /** `df` plus `tileCol` = exact `NTILE(tiles)` under `sortCols`

@@ -1328,81 +1328,40 @@ object Aggs {
     // Spearman rank correlation (tie-corrected: Pearson on average
     // ranks) between quantity and price per return flag. The ranks are
     // NOT computed by a per-row window sort: average rank of value v is
-    // derived from the per-(group, value) frequency table, and the
-    // cum_before prefix sum over that table runs through
-    // Ranking.withGroupedPrefixSum (r10, VERDICT next #1), NOT a
-    // window partitioned by the 3-value flag key — distinct prices
-    // approach the row count at scale, so a per-flag window would be
-    // 3 single-task sorts over ~n rows; the grouped device splits
-    // every flag across all range buckets and prefix-sums only
-    // (groups × buckets) weight totals (the stat_gini shape with
-    // weight = cnt). Doubled average rank 2·r̄ = 2·cum_before + cnt + 1
-    // stays an exact BIGINT (no .5 halves), the Pearson moments
-    // accumulate as DECIMAL — associative-exact at any partitioning
-    // (the stat_corr_matrix device) — and only the final closed-form
-    // ratio drops to double behind ROUND(…,4). At 100 TB: two
-    // bucketed frequency-table prefix sums, two rank joins, one hash
-    // aggregate.
+    // derived from the per-(group, value) frequency table. The price
+    // table's prefix sum runs through Ranking.withGroupedPrefixSum, not
+    // a per-flag window: distinct prices approach the row count at
+    // scale, so that window would be 3 single-task sorts over ~n rows.
+    // Doubled average rank 2·r̄ = 2·cum_before + cnt + 1 stays an exact BIGINT
+    // (no .5 halves), the Pearson moments accumulate as DECIMAL —
+    // associative-exact at any partitioning (the stat_corr_matrix
+    // device) — and only the final closed-form ratio drops to double
+    // behind ROUND(…,4). At 100 TB: two column-pruned fact scans, one
+    // domain-sized quantity window, one bucketed price prefix sum, one
+    // hash aggregate.
     Q("stat_spearman",
       (s, d) => {
         // 18,0 not 38,0: DuckDB decimal multiply needs p1+p2 ≤ 38, and
         // doubled ranks are ≤ ~2·rows so 18 digits is ample headroom.
         def dec(c: Column) = c.cast("decimal(18,0)")
-        // TWO cheap fact scans, ZERO fact-sized shuffles (r12 verdict
-        // Next #3 — the former (flag, quantity, price) cell pre-
-        // aggregate barely reduced, so materializing it was a full-
-        // fact shuffle + checkpoint that existed only to make "one
-        // scan" true; at 100 TB re-scanning 3 parquet columns is far
-        // cheaper than shuffling the whole fact). Pass 1 builds the
-        // DOMAIN-bounded (flag, quantity) freq table with map-side
-        // combine (the shuffle carries ~flags × 50 rows per task);
-        // pass 2 aggregates raw rows straight to (flag, price) cells.
-        // balance the single-split scan ONCE into a lazily
-        // checkpointed frame (r16 verdict #1: the bare balanced frame
-        // was re-executed by every consumer — the freq collect plus
-        // the cells aggregate's three downstream branches — stamping
-        // FOUR full-fact RoundRobin exchanges into the plan and making
-        // this the slowest query in the bench, 2.7 → 4.4 s). The lazy
-        // cut materializes on the freq collect below and every later
-        // branch reads the checkpointed 32-way blocks, so exactly one
-        // exchange balances the scan (guide §2.4 exchange sharing). On
-        // a well-split source balancedShared passes the scan through
-        // untouched — no checkpoint, consumers re-scan the 3 pruned
-        // parquet columns.
-        val fact = Tables.balancedShared(Tables.lineitem(s, d)
+        // Two plain column-pruned scans, zero fact-sized shuffles beyond
+        // the price-cell aggregate: re-scanning 3 parquet columns is
+        // cheaper than shuffling or checkpointing the whole fact.
+        val fact = Tables.lineitem(s, d)
           .select(col("l_returnflag"), col("l_quantity"),
-            col("l_extendedprice")))
-        // Quantity ranks computed DRIVER-SIDE (r11): the freq table is
-        // bounded by the DOMAIN (flags × ~50 integral quantities) at
-        // any corpus scale, so collecting it is the same model-sized
-        // collect the BPE merge table uses. One tiny aggregate job,
-        // one in-driver prefix-sum loop, broadcast back.
-        val fq = fact
+            col("l_extendedprice"))
+        // Quantity ranks: the (flag, quantity) frequency table is bounded
+        // by the DOMAIN (3 flags × 50 integral quantities = 150 rows at
+        // any scale), so its per-flag window is model-sized; it is
+        // broadcast into the price-cell aggregate.
+        val wq = Window.partitionBy("l_returnflag").orderBy("l_quantity")
+          .rowsBetween(Window.unboundedPreceding, -1)
+        val rq = fact
           .groupBy(col("l_returnflag"), col("l_quantity"))
           .agg(count(lit(1)).as("cnt"))
-        val fqSchema = fq.schema
-        val fqRows = fq.collect() // ≤ flags × |quantity domain| rows
-        def qnum(r: org.apache.spark.sql.Row): Double = r.get(1) match {
-          case b: java.math.BigDecimal => b.doubleValue
-          case n: Number => n.doubleValue
-          case other => throw new IllegalStateException(
-            s"l_quantity not numeric: $other")
-        }
-        val rqRows: Seq[org.apache.spark.sql.Row] =
-          fqRows.groupBy(_.get(0)).toSeq.flatMap { case (_, rs) =>
-            var cum = 0L
-            rs.sortBy(qnum).map { r =>
-              val cnt = r.getLong(2)
-              val r2 = 2 * cum + cnt + 1
-              cum += cnt
-              org.apache.spark.sql.Row(r.get(0), r.get(1), r2)
-            }
-          }
-        val rq = s.createDataFrame(
-          s.sparkContext.parallelize(rqRows, 1),
-          org.apache.spark.sql.types.StructType(fqSchema.fields.take(2) :+
-            org.apache.spark.sql.types.StructField("r2_q",
-              org.apache.spark.sql.types.LongType)))
+          .select(col("l_returnflag"), col("l_quantity"),
+            (coalesce(sum("cnt").over(wq), lit(0L)) * 2 + col("cnt") + 1)
+              .as("r2_q"))
         // Price cells straight from the raw fact: broadcast-join the
         // quantity ranks (map-side, no shuffle), aggregate to
         // (flag, price) carrying the x-moment partials. The ONLY
@@ -1410,12 +1369,10 @@ object Aggs {
         // aggregate's shuffle, and it carries distinct-(flag, price)
         // cells, which saturate at the price domain as the corpus
         // grows. The grouped-prefix-sum device consumes this frame
-        // THREE times (range bounds, local sums, bucket offsets), so
-        // the aggregate is cut behind a lazy checkpoint — without it
-        // each consumer re-runs the join + hash aggregate and
-        // re-shuffles the full cell table (census: 3 × ~7 MB at
-        // sf0.1; the cell table is domain-bounded at any scale, so
-        // the checkpoint stays model-sized).
+        // THREE times (bounds job, local sums, bucket offsets), so
+        // the aggregate is cut behind a lazy checkpoint that the bounds
+        // job materializes — without it each consumer re-runs the join
+        // + hash aggregate and re-shuffles the full cell table.
         val cells = fact
           .join(broadcast(rq), Seq("l_returnflag", "l_quantity"))
           .groupBy(col("l_returnflag"), col("l_extendedprice"))

@@ -2,7 +2,7 @@ package graft.operators
 
 import graft.{Q, Tables}
 import graft.Ops.SQL_HEX15
-import graft.api.Graph.{CpOps, WalkEnd, frontierWalk}
+import graft.api.Graph.{CpOps, SQL_ORDERED_CHUNKED_SUM, WalkEnd, frontierWalk}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -197,8 +197,9 @@ object Graphs {
     */
   private def pagerankQuery: Q = {
     val ITERS = 5
-    // Hub-safe fold chunk (round-7 verdict Next #4): contributions are
-    // summed via Graph.orderedChunkedSum — fold inside fixed-size
+    // Hub-safe fold chunk: contributions are summed via
+    // Graph.orderedChunkedSum (the oracle via its DuckDB twin
+    // SQL_ORDERED_CHUNKED_SUM) — fold inside fixed-size
     // chunks of the source-id order, then fold the chunk partials in
     // chunk order — so per-row state is max(CHUNK, ceil(deg/CHUNK))
     // instead of the whole in-neighborhood (unbounded on the power-law
@@ -233,26 +234,17 @@ object Graphs {
       ranks.select(col("node").as("user_id"), col("rank"))
         .orderBy("user_id")
     }
-    // mirrors orderedChunkedSum: chunk = source-rank div CHUNK, fold
-    // inside chunks in u order, fold partials in chunk order — the
-    // identical two-level summation tree, so IEEE-exact cross-engine
-    def iter(k: Int): String =
+    def iter(k: Int): String = {
+      val sums = SQL_ORDERED_CHUNKED_SUM(
+        s"""SELECT e.v AS node, e.u AS u, r.rank / CAST(r.deg AS DOUBLE) AS c
+           |FROM edges e JOIN r${k - 1} r ON e.u = r.node""".stripMargin,
+        "node", "u", "c", "sc", CHUNK)
       s"""r$k AS (
          |  SELECT d.node, d.deg,
          |    0.15e0 / CAST(n.n AS DOUBLE) + 0.85e0 * s.sc AS rank
-         |  FROM (
-         |    SELECT node, list_sum(list(partial ORDER BY chunk)) AS sc
-         |    FROM (
-         |      SELECT node, chunk, list_sum(list(c ORDER BY u)) AS partial
-         |      FROM (
-         |        SELECT e.v AS node, e.u AS u,
-         |          r.rank / CAST(r.deg AS DOUBLE) AS c,
-         |          (ROW_NUMBER() OVER (PARTITION BY e.v ORDER BY e.u) - 1)
-         |            // $CHUNK AS chunk
-         |        FROM edges e JOIN r${k - 1} r ON e.u = r.node)
-         |      GROUP BY node, chunk)
-         |    GROUP BY node) s
+         |  FROM ($sums) s
          |  JOIN deg d ON s.node = d.node, nn n)""".stripMargin
+    }
     val sql =
       s"""WITH $SQL_EDGES,
          |deg AS (SELECT u AS node, CAST(COUNT(*) AS BIGINT) AS deg
@@ -717,8 +709,12 @@ object Graphs {
         .orderBy(col("aa").desc, col("u"), col("v"))
         .limit(20)
     }
-    // mirrors orderedChunkedSum (w is unique per pair, so ORDER BY w is
-    // the same total order the Spark rank uses)
+    // w is unique per pair, so ORDER BY w is the same total order the
+    // Spark rank uses
+    val sums = SQL_ORDERED_CHUNKED_SUM(
+      """SELECT cn.u, cn.v, cn.w, 1e0 / ln(CAST(deg.deg AS DOUBLE)) AS x
+        |FROM cn JOIN deg ON cn.w = deg.u""".stripMargin,
+      "u, v", "w", "x", "aa", CHUNK)
     val sql =
       s"""WITH $SQL_EDGES,
          |deg AS (SELECT u, CAST(COUNT(*) AS BIGINT) AS deg
@@ -728,17 +724,7 @@ object Graphs {
          |  FROM e0 p
          |  JOIN edges ea ON ea.u = p.u
          |  JOIN edges eb ON eb.u = p.v AND eb.v = ea.v),
-         |sc AS (
-         |  SELECT cn.u, cn.v, cn.w, 1e0 / ln(CAST(deg.deg AS DOUBLE)) AS x,
-         |    (ROW_NUMBER() OVER (PARTITION BY cn.u, cn.v ORDER BY cn.w) - 1)
-         |      // $CHUNK AS chunk
-         |  FROM cn JOIN deg ON cn.w = deg.u),
-         |l1 AS (
-         |  SELECT u, v, chunk, list_sum(list(x ORDER BY w)) AS partial
-         |  FROM sc GROUP BY u, v, chunk),
-         |l2 AS (
-         |  SELECT u, v, list_sum(list(partial ORDER BY chunk)) AS aa
-         |  FROM l1 GROUP BY u, v),
+         |l2 AS ($sums),
          |cnt AS (SELECT u, v, COUNT(*) AS n_common FROM cn GROUP BY u, v)
          |SELECT cnt.u, cnt.v, cnt.n_common, l2.aa
          |FROM cnt JOIN l2 USING (u, v)
@@ -1209,7 +1195,7 @@ object Graphs {
     * graph (u→v, u<v: each pair once, so hub and authority roles are
     * asymmetric and the two scores genuinely differ). The update is
     * SIMULTANEOUS (Jacobi — power iteration on the block matrix
-    * [[0, A], [Aᵀ, 0]]; r14 verdict Next #4): both lattices advance
+    * [[0, A], [Aᵀ, 0]]): both lattices advance
     * off the SAME previous frontier — a(k) from h(k−1) AND h(k) from
     * a(k−1) — exactly like `directedMinLabelBoth`'s fused fixpoints,
     * so each round is ONE checkpointed (node, ar, hr) frame instead of
@@ -1281,37 +1267,24 @@ object Graphs {
     // SIMULTANEOUS update: hr$k reads a${k-1} (not a$k) — both
     // lattices advance off the same previous frontier, mirroring the
     // fused Scala loop exactly.
-    def round(k: Int): String =
+    def round(k: Int): String = {
+      val aSums = SQL_ORDERED_CHUNKED_SUM(
+        s"SELECT e.v AS node, e.u AS u, h.h AS c FROM e0 e JOIN h${k - 1} h ON e.u = h.node",
+        "node", "u", "c", "sc", CHUNK)
+      val hSums = SQL_ORDERED_CHUNKED_SUM(
+        s"SELECT e.u AS node, e.v AS v, a.a AS c FROM e0 e JOIN a${k - 1} a ON e.v = a.node",
+        "node", "v", "c", "sc", CHUNK)
       s"""ar$k AS MATERIALIZED (
          |  SELECT n.node, COALESCE(s.sc, 0e0) AS ar
-         |  FROM nodes n LEFT JOIN (
-         |    SELECT node, list_sum(list(partial ORDER BY chunk)) AS sc
-         |    FROM (
-         |      SELECT node, chunk, list_sum(list(c ORDER BY u)) AS partial
-         |      FROM (
-         |        SELECT e.v AS node, e.u AS u, h.h AS c,
-         |          (ROW_NUMBER() OVER (PARTITION BY e.v ORDER BY e.u) - 1)
-         |            // $CHUNK AS chunk
-         |        FROM e0 e JOIN h${k - 1} h ON e.u = h.node)
-         |      GROUP BY node, chunk)
-         |    GROUP BY node) s ON n.node = s.node),
+         |  FROM nodes n LEFT JOIN ($aSums) s ON n.node = s.node),
          |hr$k AS MATERIALIZED (
          |  SELECT n.node, COALESCE(s.sc, 0e0) AS hr
-         |  FROM nodes n LEFT JOIN (
-         |    SELECT node, list_sum(list(partial ORDER BY chunk)) AS sc
-         |    FROM (
-         |      SELECT node, chunk, list_sum(list(c ORDER BY v)) AS partial
-         |      FROM (
-         |        SELECT e.u AS node, e.v AS v, a.a AS c,
-         |          (ROW_NUMBER() OVER (PARTITION BY e.u ORDER BY e.v) - 1)
-         |            // $CHUNK AS chunk
-         |        FROM e0 e JOIN a${k - 1} a ON e.v = a.node)
-         |      GROUP BY node, chunk)
-         |    GROUP BY node) s ON n.node = s.node),
+         |  FROM nodes n LEFT JOIN ($hSums) s ON n.node = s.node),
          |a$k AS MATERIALIZED (SELECT node, ar / (SELECT MAX(ar) FROM ar$k) AS a
          |        FROM ar$k),
          |h$k AS MATERIALIZED (SELECT node, hr / (SELECT MAX(hr) FROM hr$k) AS h
          |        FROM hr$k)""".stripMargin
+    }
     val sql =
       s"""WITH $SQL_EDGES,
          |nodes AS (SELECT u AS node FROM e0 UNION SELECT v AS node FROM e0),

@@ -7,7 +7,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-/** §2.L (round-11 waves) — classical-test depth: variance homogeneity,
+/** §2.L — classical-test depth: variance homogeneity,
   * rank post-hoc, ordered-alternative trend, and paired-categorical
   * symmetry. House rules throughout: exact integer/decimal moments for
   * as long as algebra allows, doubles only behind the final
@@ -22,13 +22,14 @@ object Stats2 {
     * fact, then everything downstream is day-count-sized (≤ a few
     * thousand rows per DECADE of data) so global-order windows and
     * even pairwise self-joins on it are honest at any corpus scale.
+    * `SQL_DAILY` is its DuckDB twin.
     */
-  private def daily(s: SparkSession, d: String): DataFrame =
+  private[operators] def daily(s: SparkSession, d: String): DataFrame =
     Tables.events(s, d)
       .groupBy(to_date(col("ts")).as("day"))
       .agg(count(lit(1)).as("c"))
 
-  private val SQL_DAILY =
+  private[operators] val SQL_DAILY =
     "SELECT CAST(ts AS DATE) AS day, COUNT(*) AS c FROM events GROUP BY 1"
 
 

@@ -2249,23 +2249,18 @@ object TextAnalysis {
       ranks.select(col("node").as("word"), col("wdeg"), col("rank"))
         .orderBy(col("rank").desc, col("word")).limit(15)
     }
-    def iter(k: Int): String =
+    def iter(k: Int): String = {
+      val sums = graft.api.Graph.SQL_ORDERED_CHUNKED_SUM(
+        s"""SELECT e.v AS node, e.u AS u,
+           |  r.rank * CAST(e.w AS DOUBLE) / CAST(r.wdeg AS DOUBLE) AS c
+           |FROM edges e JOIN r${k - 1} r ON e.u = r.node""".stripMargin,
+        "node", "u", "c", "sc", CHUNK)
       s"""r$k AS (
          |  SELECT d.node, d.wdeg,
          |    0.15e0 / CAST(n.n AS DOUBLE) + 0.85e0 * s.sc AS rank
-         |  FROM (
-         |    SELECT node, list_sum(list(partial ORDER BY chunk)) AS sc
-         |    FROM (
-         |      SELECT node, chunk, list_sum(list(c ORDER BY u)) AS partial
-         |      FROM (
-         |        SELECT e.v AS node, e.u AS u,
-         |          r.rank * CAST(e.w AS DOUBLE) / CAST(r.wdeg AS DOUBLE) AS c,
-         |          (ROW_NUMBER() OVER (PARTITION BY e.v ORDER BY e.u) - 1)
-         |            // $CHUNK AS chunk
-         |        FROM edges e JOIN r${k - 1} r ON e.u = r.node)
-         |      GROUP BY node, chunk)
-         |    GROUP BY node) s
+         |  FROM ($sums) s
          |  JOIN deg d ON s.node = d.node, nn n)""".stripMargin
+    }
     val sql =
       s"""WITH toks AS (
          |  SELECT $SQL_TOKENIZE AS t FROM documents),

@@ -4630,8 +4630,8 @@ private object HoltWintersQ {
             |ORDER BY h""".stripMargin))
 }
 
-/** Round-10 wave 17 — classical time-series diagnostics on the
-  * calendar-bounded daily event-count series. Every statistic is a
+/** Classical time-series diagnostics on the calendar-bounded daily
+  * event-count series ([[Stats2.daily]]). Every statistic is a
   * closed form over EXACT integer moment sums (counts, lag products,
   * signed block sums), so the final double trees are bit-identical
   * across engines; the only fact-table work is one linear groupBy to
@@ -4641,15 +4641,7 @@ private object Wave17Q {
   import org.apache.spark.sql.{DataFrame, SparkSession}
   import org.apache.spark.sql.expressions.Window
   import org.apache.spark.sql.functions._
-
-  /** One linear pass: daily event counts (30-day fixture calendar). */
-  private def daily(s: SparkSession, d: String): DataFrame =
-    graft.Tables.events(s, d)
-      .groupBy(to_date(col("ts")).as("day"))
-      .agg(count(lit(1)).as("c"))
-
-  private val SQL_DAILY =
-    "SELECT CAST(ts AS DATE) AS day, COUNT(*) AS c FROM events GROUP BY 1"
+  import Stats2.{SQL_DAILY, daily}
 
   /** Augmented-Dickey-Fuller (lag-0 DF form): regress Δy_t on y_{t−1}
     * with intercept; t(γ) vs the −2.86 5% constant-case critical

@@ -1,12 +1,21 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.catalyst.plans.physical.RoundRobinPartitioning
+import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+import org.apache.spark.sql.execution.window.WindowExec
+import org.apache.spark.sql.graftbridge.Bridge
+import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Round-5 plan audit helper: prints formatted plans of the newest
   * queries so shuffle/broadcast shapes are reviewable in test output.
   * Assertions live in PlanSpec; this is the audit trail.
   */
-class PlanAuditSpec extends AnyFunSuite {
+class PlanAuditSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
   lazy val spark = TestSpark.spark
 
   test("audit: newest round-5/6 queries have no scan-all/nested-loop surprises") {
@@ -183,22 +192,49 @@ class PlanAuditSpec extends AnyFunSuite {
     }
   }
 
-  test("stat_spearman: no single-partition-per-group window in the executed plan") {
-    // r10 (VERDICT next #1): the cum_before prefix sums must run
-    // through the range-bucketed device — every window in the plan
-    // must involve the __pid bucket id (either partitioned by
-    // (group, __pid) for the local sums, or ordered by __pid over the
-    // groups × p offsets aggregate). A windowspec that mentions the
-    // flag key but no __pid would be the 3-single-task-sort shape
-    // this round removed.
-    val p = SparkEntry.queries("stat_spearman")(spark, TestSpark.sf0001)
-      .queryExecution.executedPlan.toString
-    val specs = p.linesIterator.filter(_.contains("windowspecdefinition")).toSeq
-    assert(specs.nonEmpty, "expected window specs in the spearman plan")
-    specs.foreach { l =>
-      assert(l.contains("__pid"),
-        s"window not bucket-scoped (single partition per group):\n$l")
+  /** Builds and collects `name` at sf0.001 and returns the executed
+    * plan of every SQL action it ran: eager jobs inside the query
+    * function, checkpoints and the final collect.
+    */
+  private def executedPlans(name: String): Seq[SparkPlan] = {
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
+    val listener = new QueryExecutionListener {
+      def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        plans.add(qe.executedPlan)
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
     }
+    spark.listenerManager.register(listener)
+    try {
+      SparkEntry.queries(name)(spark, TestSpark.sf0001).collect()
+      Bridge.waitListenerBusEmpty(spark)
+    } finally spark.listenerManager.unregister(listener)
+    plans.asScala.toSeq
+  }
+
+  test("stat_spearman: one domain-sized quantity window, bucketed price ranks, <= 1 RoundRobin") {
+    // The price midranks run over the row-sized (flag, price) cells, so
+    // every window over them must involve the __pid bucket id (local
+    // sums partitioned by (flag, __pid), offsets ordered by __pid). The
+    // one other window is the per-flag quantity prefix sum, whose input
+    // is the (flag, quantity) frequency table: 3 flags × 50 quantities
+    // = 150 rows at any scale. The fact is read through plain
+    // column-pruned scans, so no more than one RoundRobin exchange may
+    // balance it.
+    val plans = executedPlans("stat_spearman")
+    val windows = plans.flatMap(p => collect(p) { case w: WindowExec => w })
+    def bucketed(w: WindowExec): Boolean =
+      (w.partitionSpec ++ w.orderSpec).exists(_.references.exists(_.name == "__pid"))
+    val other = windows.filterNot(bucketed)
+    assert(windows.exists(bucketed), s"expected bucket-scoped windows:\n${plans.mkString("\n")}")
+    assert(other.size == 1 &&
+        other.head.orderSpec.exists(_.references.exists(_.name == "l_quantity")),
+      s"expected exactly one non-bucketed window, ordered by l_quantity:\n${other.mkString("\n")}")
+    assert(PlanRows.into(other.head.child) == 150L,
+      s"quantity window input ${PlanRows.into(other.head.child)} rows, expected 150")
+    val roundRobin = plans.flatMap(p => collect(p) {
+      case e: ShuffleExchangeExec if e.outputPartitioning.isInstanceOf[RoundRobinPartitioning] => e
+    })
+    assert(roundRobin.size <= 1, s"${roundRobin.size} RoundRobin exchanges:\n${roundRobin.mkString("\n")}")
   }
 
   test("lorenz/wilcoxon/anderson-darling: corpus-proportional ranks ride the bucketed device") {

@@ -142,6 +142,39 @@ class RankingSpec extends AnyFunSuite {
       "row numbers must be an exact permutation of 1..n")
   }
 
+  test("grouped rank stays a per-group permutation when consumer branches prune differently") {
+    // The grouped form of the test above: the boundaries come from one
+    // eager bounds job and are baked in as literals (a CASE over the
+    // collected group keys), so both consumer subtrees bucket every row
+    // identically — including a NULL group key's rows.
+    val keyed = Tables.orders(spark, TestSpark.sf0001)
+      .select(col("o_orderkey"), (col("o_custkey") % 256).as("x"),
+        (col("o_orderkey") % 199).as("z"),
+        when(col("o_orderkey") % 5 === 0, lit(null: java.lang.Long))
+          .otherwise(col("o_orderkey") % 3).as("g"))
+    val byGroup = graft.api.Ranking
+      .withGroupedRowNumber(keyed, Seq("g"), Seq(col("z"), col("o_orderkey")),
+        partitions = 7)
+      .select(col("g"), col("__rn")).collect()
+      .groupBy(r => Option(r.get(0))).map { case (g, rs) => g -> rs.map(_.getLong(1)).sorted }
+    assert(byGroup.size == 4 && byGroup.contains(None), byGroup.keys)
+    byGroup.foreach { case (g, rns) =>
+      assert(rns.toSeq == (1L to rns.length).toSeq,
+        s"group $g: row numbers must be an exact permutation of 1..n")
+    }
+  }
+
+  test("withGroupedPrefixSum rejects a non-numeric bucket column at the call") {
+    // the bounds job runs inside the call, so the guard fires before
+    // the caller runs any action on the result
+    val ex = intercept[IllegalArgumentException] {
+      graft.api.Ranking.withGroupedPrefixSum(Tables.orders(spark, TestSpark.sf0001),
+        Seq("o_orderpriority"), Seq(col("o_orderstatus"), col("o_orderkey")),
+        lit(1L), partitions = 5)
+    }
+    assert(ex.getMessage.contains("numeric"), ex.getMessage)
+  }
+
   test("win_ntile_buckets plans no full-input global window") {
     val df = SparkEntry.queries("win_ntile_buckets")(spark, TestSpark.sf0001)
     val p = df.queryExecution.executedPlan.toString

@@ -11,8 +11,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * GraftSession and GraftExtensions, ExplainProbe is the one dev probe
   * main, memos and fixture keys are built only by Memo and Fixtures, and
   * on-disk paths and catalog databases only by Artifacts; the shared
-  * oracle SQL devices, the graph BFS level and the distinct-value rank
-  * device are each written once; no doc comment is stacked on another.
+  * oracle SQL devices, the graph BFS level, the distinct-value rank
+  * device and the range-bucketed rank body are each written once; no
+  * doc comment is stacked on another.
   */
 class SourceGuardSpec extends AnyFunSuite {
   private val root = Paths.get("src/main/scala")
@@ -90,7 +91,8 @@ class SourceGuardSpec extends AnyFunSuite {
       "CAST(SUM(CAST(x AS DECIMAL(38,20))) AS DOUBLE) / COUNT(*)", // exact means
       "WHERE c_id NOT IN (SELECT DISTINCT cell FROM", // empty-cell carry-over
       "x -> (x[1] - x[2]) * (x[1] - x[2])", // squared L2
-      "* ${1L << (4 * (15 - p))}") // 15-nibble md5 hex
+      "* ${1L << (4 * (15 - p))}", // 15-nibble md5 hex
+      "list_sum(list(partial ORDER BY chunk))") // ordered chunked sum
     for (b <- bodies) {
       val found = hits(java.util.regex.Pattern.quote(b), _ => false)
       assert(found.size == 1, s"$b written ${found.size} times:\n${found.mkString("\n")}")
@@ -113,9 +115,10 @@ class SourceGuardSpec extends AnyFunSuite {
   }
 
   test("the distinct-value rank device is written once per engine") {
-    // stat_spearman keeps its per-flag midranks on Ranking's bucketed
-    // prefix sum; every other midrank and cumulative count over a value
-    // histogram goes through Ops.valueRanks / Ops.SQL_VALUE_RANKS
+    // stat_spearman keeps its per-flag midranks (Ranking's bucketed
+    // prefix sum over prices, a per-flag window over quantities); every
+    // other midrank and cumulative count over a value histogram goes
+    // through Ops.valueRanks / Ops.SQL_VALUE_RANKS
     def inSpearman(p: Path, i: Int): Boolean = {
       val lines = sources.find(_._1 == p).get._2
       val start = lines.lastIndexWhere(_.contains("Q(\""), i)
@@ -139,6 +142,15 @@ class SourceGuardSpec extends AnyFunSuite {
       assert(found.size == 1 && found.head.contains("graft/Ops.scala"),
         s"$what written ${found.size} times:\n${found.mkString("\n")}")
     }
+  }
+
+  test("the range-bucketed rank has one body: one bounds job, no when-chain, no balancedShared") {
+    val (_, ranking) = sources.find(_._1.endsWith("api/Ranking.scala"))
+      .getOrElse(fail("api/Ranking.scala not found"))
+    val bounds = ranking.count(_.contains("percentile_approx("))
+    assert(bounds == 1, s"percentile_approx( written $bounds times in api/Ranking.scala")
+    val found = hits("""pidFromBounds|balancedShared""", _ => false)
+    assert(found.isEmpty, found.mkString("\n"))
   }
 
   test("no doc comment is stacked directly on another") {

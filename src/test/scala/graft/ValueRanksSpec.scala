@@ -1,9 +1,7 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.execution.SparkPlan
-import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanHelper, QueryStageExec}
-import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.window.WindowExec
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -17,27 +15,13 @@ class ValueRanksSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
   private lazy val spark = TestSpark.spark
   private val d = TestSpark.sf0001
 
-  /** Row count flowing into `p`: the first node at or below it that
-    * counts its output rows.
-    */
-  private def rowsInto(p: SparkPlan): Long = p match {
-    case q: QueryStageExec => rowsInto(q.plan)
-    case r: ReusedExchangeExec => rowsInto(r.child)
-    case _ => p.metrics.get("numOutputRows") match {
-      case Some(m) => m.value
-      case None =>
-        assert(p.children.size == 1, s"no row count below ${p.nodeName}")
-        rowsInto(p.children.head)
-    }
-  }
-
   /** Executes `df` and returns the input row count of each of its
     * unpartitioned windows.
     */
   private def unpartitionedWindowInputs(df: DataFrame): Seq[Long] = {
     df.collect()
     collect(df.queryExecution.executedPlan) {
-      case w: WindowExec if w.partitionSpec.isEmpty => rowsInto(w.child)
+      case w: WindowExec if w.partitionSpec.isEmpty => PlanRows.into(w.child)
     }
   }
 
