@@ -211,7 +211,7 @@ class PlanAuditSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     plans.asScala.toSeq
   }
 
-  test("stat_spearman: one domain-sized quantity window, bucketed price ranks, <= 1 RoundRobin") {
+  test("stat_spearman: one 150-row quantity window, bucketed price ranks") {
     // The price midranks run over the row-sized (flag, price) cells, so
     // every window over them must involve the __pid bucket id (local
     // sums partitioned by (flag, __pid), offsets ordered by __pid). The
